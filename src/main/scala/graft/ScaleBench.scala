@@ -639,7 +639,6 @@ object ScaleBench {
         graft.ext.RetrievalIndexStore.build(
           corpus.filter(pmod(col("doc_id"), lit(16)) === 0),
           "doc_id", "text", path)
-        graft.ext.StoreMaintenance.enableStoreGenerations("retrieval", path)
         (1 to 15).foreach { k =>
           graft.ext.RetrievalIndexStore.append(
             corpus.filter(pmod(col("doc_id"), lit(16)) === k),

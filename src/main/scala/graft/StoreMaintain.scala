@@ -12,26 +12,22 @@ import graft.ext.StoreMaintenance
   *   run_main.sh graft.StoreMaintain retrieval <storePath>
   *   run_main.sh graft.StoreMaintain release   <storePath>
   *   run_main.sh graft.StoreMaintain enable    <kind> <storePath>
-  *   run_main.sh graft.StoreMaintain snapshot  <kind> <storePath>
   *   run_main.sh graft.StoreMaintain fold      <kind> <storePath>
   *   run_main.sh graft.StoreMaintain vacuum    <kind> <storePath> <keepGens>
   *
   * `audit` prints the footer-only health inventory (zero data read —
-  * the WHEN); the store kinds run the corresponding compaction (the
-  * crash-recoverable swap; re-running after any kill is the repair)
-  * and print one JSON line per artifact with the before/after
-  * arithmetic plus the wall seconds — the line an operator's log
-  * retention actually wants.
+  * the WHEN); the store kinds run the corresponding compaction and
+  * print one JSON line per artifact with the before/after arithmetic
+  * plus the wall seconds — the line an operator's log retention
+  * actually wants. `enable` adopts a store directory written without
+  * a snapshot chain (idempotent: a no-op on any store a `build`
+  * wrote).
   *
-  * Concurrency contract: on a NON-generational store the compaction
-  * swap parks-and-replaces the live artifact directory, so run this
-  * CLI QUIESCED — no concurrent readers or second maintenance
-  * process (a reader in the two-rename window hits ENOENT). A store
-  * whose artifacts carry a [[graft.ext.StoreGenerations]] chain
-  * (`StoreGenerations.enable`) compacts ONLINE instead: readers keep
-  * resolving their pinned generation while the compacted one
-  * publishes, and only [[graft.ext.StoreGenerations.vacuum]] retires
-  * bytes — the single-writer contract then covers writers only. */
+  * Concurrency contract: every store is snapshotted from its build,
+  * so compaction is ONLINE — readers keep resolving their pinned
+  * snapshot while the compacted generations publish under one new
+  * snapshot, and only `vacuum` retires bytes. The single-writer
+  * contract covers maintenance and the plain append paths. */
 object StoreMaintain {
 
   /** Minimal JSON string escaping — paths can carry quotes or
@@ -48,15 +44,14 @@ object StoreMaintain {
   private val Usage =
     "usage: StoreMaintain audit <artifactDir>... | " +
       "<sig|vector|retrieval|release> <storePath> | " +
-      "enable <kind> <storePath> | snapshot <kind> <storePath> | " +
+      "enable <kind> <storePath> | " +
       "fold <kind> <storePath> | " +
       "vacuum <kind> <storePath> <keepGens>"
 
   def main(args: Array[String]): Unit = {
     // per-subcommand arity up front: a short invocation dies with the
     // usage line, never an ArrayIndexOutOfBoundsException
-    val arity = Map("audit" -> 2, "enable" -> 3, "snapshot" -> 3,
-      "fold" -> 3, "vacuum" -> 4,
+    val arity = Map("audit" -> 2, "enable" -> 3, "fold" -> 3, "vacuum" -> 4,
       "sig" -> 2, "vector" -> 2, "retrieval" -> 2, "release" -> 2)
     require(args.nonEmpty && arity.contains(args(0)) &&
       args.length >= arity(args(0)), Usage)
@@ -72,18 +67,13 @@ object StoreMaintain {
               s""""bytes_per_file":${r.getLong(4)}}""")
           }
       case "enable" =>
-        StoreMaintenance.enableStoreGenerations(args(1), args(2))
-        println(s"""{"enabled":${jstr(args(2))},"kind":${jstr(args(1))}}""")
-      case "snapshot" =>
         val gen = graft.ext.StoreSnapshots.enable(args(1), args(2))
-        println(s"""{"snapshotted":${jstr(args(2))},"kind":${jstr(args(1))},"gen":$gen}""")
+        println(s"""{"enabled":${jstr(args(2))},"kind":${jstr(args(1))},"gen":$gen}""")
       case "fold" =>
         // adopt pending file-level commits (concurrent writers'
         // batches) into the artifact chains without compacting —
         // the standalone face of what every compaction does first
         val gen = graft.ext.StoreSnapshots.fold(args(1), args(2))
-          .getOrElse(sys.error(
-            s"${args(2)} has no store snapshot chain — nothing to fold"))
         println(s"""{"folded":${jstr(args(2))},"kind":${jstr(args(1))},"gen":$gen}""")
       case "vacuum" =>
         val (nf, nm) = StoreMaintenance.vacuumStore(args(1), args(2),
@@ -100,9 +90,6 @@ object StoreMaintain {
           case "release"   => StoreMaintenance.compactReleaseStore(spark, path)
           case other => sys.error(s"unknown store kind: $other")
         }
-        // a snapshotted store's readers resolve through the store
-        // manifest: pin the post-compaction generations so they see it
-        graft.ext.StoreSnapshots.commitIfSnapshotted(kind, path)
         val sec = (System.nanoTime() - t0) / 1e9
         reports.foreach { r =>
           println(s"""{"artifact":${jstr(r.artifact)},"files_before":${r.filesBefore},""" +

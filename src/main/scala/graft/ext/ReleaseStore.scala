@@ -49,6 +49,11 @@ import org.apache.spark.sql.functions._
   * batch probes today's — the loop closes. Every shuffle is
   * batch-sized or a broadcast probe into one store scan.
   *
+  * The release store is ONE snapshot chain at `<path>`: the `sig/`
+  * member's bands and sets are artifacts of the release snapshot, so
+  * every probe resolves urls, hashes and the signature index through
+  * one pin, and every fold publishes one release snapshot.
+  *
   * Gate `q_incr_release` checks the batch ledger against a DuckDB
   * oracle that replays the full release chain to its kept set and
   * frozen models, then the batch chain DIRECTLY (no store) — the
@@ -62,9 +67,9 @@ object ReleaseStore {
     * INPUT with url/lang/source; ledger = the release's per-doc
     * dispositions). One pass per store member; the sig build is the
     * same two aggregations the direct incremental route pays PER
-    * ingest run. */
+    * ingest run. Ends by publishing release snapshot 0 (a rebuild
+    * starts a fresh chain). */
   def build(corpus: DataFrame, ledger: DataFrame, path: String): Unit = {
-    StoreSnapshots.invalidate(path) // a rebuild starts un-snapshotted
     val kept = corpus.join(
       ledger.filter(col("disposition") === "kept").select("doc_id"),
       Seq("doc_id")).select("doc_id", "text")
@@ -79,7 +84,8 @@ object ReleaseStore {
     // the five store members are independent derivations over corpus/
     // ledger — overlap their builds/writes (guide §2.6 via Par)
     Par.run(
-      () => SignatureStore.build(kept, "doc_id", "text", s"$path/sig"),
+      () => SignatureStore.writeArtifacts(kept, "doc_id", "text",
+        s"$path/sig"),
       () => corpus.select(UrlOps.normalize(col("url")).as("norm_url"))
         .distinct()
         .write.mode(SaveMode.Overwrite).parquet(s"$path/urls.parquet"),
@@ -92,6 +98,7 @@ object ReleaseStore {
       () => TextOps.langProfiles(clean, "text", "lang")
         .select(col("__lang").as("lang"), col("__prof").as("prof"))
         .write.mode(SaveMode.Overwrite).parquet(s"$path/profiles.parquet"))
+    StoreSnapshots.start("release", path)
   }
 
   /** Release N+1 from release N's store + one raw batch
@@ -113,10 +120,9 @@ object ReleaseStore {
     *
     * `canonicalBatch = Some((batchId, runTag))`: the STREAMING fold —
     * every i6 write lands as one canonical `[r<tag>-]gb<batchId>`
-    * file per artifact ([[StoreGenerations.landCanonical]]; requires
-    * chains on sig bands/sets + urls/hashes — `StoreMaintain enable
-    * release <path>`), so a replayed micro-batch overwrites its own
-    * bytes and commits nothing: the whole daily loop becomes
+    * file per artifact ([[StoreGenerations.landCanonical]]), so a
+    * replayed micro-batch overwrites its own bytes and commits
+    * nothing: the whole daily loop becomes
     * exactly-once per micro-batch, the merge-sink argument applied to
     * the release store. The probe/route stages are reads and are
     * replay-idempotent by construction. */
@@ -132,11 +138,10 @@ object ReleaseStore {
     // --- i1: seen-URL probe + within-batch url keeper -------------
     val nb = batch.withColumn("__nu", UrlOps.normalize(col("url")))
       .localCheckpoint()
-    // generation-aware store probes through ONE resolver: a chained
-    // store's readers hold a pinned file list, so an in-band
-    // compaction (autoMaintain) never disturbs a probe already
-    // planned; on a snapshotted store, urls/hashes/sig all resolve
-    // from the SAME snapshot (and the frozen quality models verify)
+    // store probes through ONE resolver: readers hold a pinned file
+    // list, so an in-band compaction (autoMaintain) never disturbs a
+    // probe already planned; urls/hashes/sig all resolve from the
+    // SAME snapshot (and the frozen quality models verify)
     val rd = StoreSnapshots.reader(spark, path)
     val seenUrls = rd(s"$path/urls.parquet")
       .join(broadcast(nb.select(col("__nu").as("norm_url")).distinct()),
@@ -301,15 +306,13 @@ object ReleaseStore {
             nb.select(md5(col("text")).as("h")).distinct(),
             s"$path/hashes.parquet", batchId, runTag))
         SignatureStore.commitCanonicalChains(s"$path/sig")
-        StoreSnapshots.commitIfSnapshotted("sig", s"$path/sig")
         StoreGenerations.commitAppend(s"$path/urls.parquet")
         StoreGenerations.commitAppend(s"$path/hashes.parquet")
-        StoreSnapshots.commitIfSnapshotted("release", path)
-        autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(spark,
-          StoreMaintenance.artifactsOf("release", path), am,
-          snapshot = Some(("release", path))))
+        StoreSnapshots.commit("release", path)
+        autoMaintain.foreach(am =>
+          StoreMaintenance.maintainIfNeeded(spark, "release", path, am))
       case None =>
-        SignatureStore.append(fin.select("doc_id", "text"),
+        SignatureStore.appendChains(fin.select("doc_id", "text"),
           "doc_id", "text", s"$path/sig")
         nb.select(col("__nu").as("norm_url")).distinct()
           .write.mode(SaveMode.Append).parquet(s"$path/urls.parquet")
@@ -319,12 +322,11 @@ object ReleaseStore {
         StoreGenerations.commitAppend(s"$path/hashes.parquet")
         // store-level atomic commit: tomorrow's probes see today's
         // fold across sig/urls/hashes all at once, never partially
-        StoreSnapshots.commitIfSnapshotted("release", path)
+        StoreSnapshots.commit("release", path)
         // in-band lifecycle knob (see SignatureStore.append): a daily
         // loop with autoMaintain set needs no external compaction tick
-        autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(spark,
-          StoreMaintenance.artifactsOf("release", path), am,
-          snapshot = Some(("release", path))))
+        autoMaintain.foreach(am =>
+          StoreMaintenance.maintainIfNeeded(spark, "release", path, am))
     }
 
     CorpusRelease.Bundle(ledger, packs, shards, card, manifest)

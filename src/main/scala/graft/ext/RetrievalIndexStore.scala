@@ -142,12 +142,13 @@ object RetrievalIndexStore {
     * recall on documents that would have accumulated their score
     * from many weak term hits; the win is a per-token bound on what
     * any future query scans — the flat-at-any-scale serving index.
-    * Default MaxValue = no pruning = bit-equal to the direct chain. */
+    * Default MaxValue = no pruning = bit-equal to the direct chain.
+    * Ends by publishing store snapshot 0 (a rebuild starts a fresh
+    * chain). */
   def build(corpus: DataFrame, idCol: String, textCol: String,
             path: String, tokBuckets: Int = 256,
             maxPostingsPerToken: Int = Int.MaxValue,
             positional: Boolean = false): Unit = {
-    StoreSnapshots.invalidate(path) // a rebuild starts un-snapshotted
     val spark = corpus.sparkSession
     import spark.implicits._
     val (post, positions) = derive(corpus, idCol, textCol, tokBuckets,
@@ -181,6 +182,7 @@ object RetrievalIndexStore {
         .mode(SaveMode.Overwrite).parquet(s"$path/positions.parquet")),
       () => Seq(tokBuckets).toDF("tok_buckets").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$path/params.parquet"))
+    StoreSnapshots.start("retrieval", path)
   }
 
   // Positional postings artifact: (doc_id, pos, tok, tok_bucket) —
@@ -233,8 +235,7 @@ object RetrievalIndexStore {
     // commitAppend on those artifacts would adopt them alongside the
     // retry's rows (double-publish). This window existed per-artifact
     // before the overlap; it now spans the batch. A failed append
-    // therefore requires a vacuum (or artifact recovery) before a
-    // retry — same posture as a crashed non-generational append.
+    // therefore requires a vacuum before a retry.
     // Exactly-once ingest loops use [[appendCanonical]], whose
     // deterministic per-batch names make the retry overwrite its own
     // bytes instead.
@@ -256,25 +257,23 @@ object RetrievalIndexStore {
     StoreGenerations.commitAppend(s"$path/stats.parquet")
     if (positional)
       StoreGenerations.commitAppend(s"$path/positions.parquet")
-    // the store-level atomic commit point: on a snapshotted store a
-    // reader between the per-artifact commits above keeps resolving
-    // the previous snapshot — new postings are never scored against
-    // stale document frequencies (all-old or all-new)
-    StoreSnapshots.commitIfSnapshotted("retrieval", path)
+    // the store-level atomic commit point: a reader between the
+    // per-artifact commits above keeps resolving the previous
+    // snapshot — new postings are never scored against stale
+    // document frequencies (all-old or all-new)
+    StoreSnapshots.commit("retrieval", path)
     // in-band lifecycle knob — see SignatureStore.append
-    autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(spark,
-      StoreMaintenance.artifactsOf("retrieval", path), am,
-      snapshot = Some(("retrieval", path))))
+    autoMaintain.foreach(am =>
+      StoreMaintenance.maintainIfNeeded(spark, "retrieval", path, am))
   }
 
   /** REPLAY-SAFE append for a STREAMING ingest — exactly-once store
     * state from idempotence ([[StoreGenerations]] canonical landing:
     * one `gb<batchId>` file per bucket dir for the bucketed artifacts
     * and one per batch for stats; a replayed batch overwrites its own
-    * files and commits nothing). Requires chains on every accreting
-    * artifact (`StoreMaintain enable retrieval <path>`). Same
-    * derivation as [[append]] — per-doc facts under the store's
-    * bucket fn, df/stats as delta rows readers sum. */
+    * files and commits nothing). Same derivation as [[append]] —
+    * per-doc facts under the store's bucket fn, df/stats as delta
+    * rows readers sum. */
   /** CONCURRENT append — the BM25 sibling of
     * [[SignatureStore.appendOwn]], and the store the file-level
     * snapshot commit exists for: the batch's postings, df deltas,
@@ -283,18 +282,12 @@ object RetrievalIndexStore {
     * ([[StoreSnapshots.commitOwnStore]]) publishes all of them as a
     * snapshot — a reader can never score the batch's postings against
     * document frequencies that don't include them (all-old or
-    * all-new, per writer, however many writers race). Requires a
-    * snapshotted store; maintenance's [[StoreSnapshots.fold]] later
-    * adopts the files into the chains. Returns the published snapshot
-    * generation. */
+    * all-new, per writer, however many writers race). Maintenance's
+    * [[StoreSnapshots.fold]] later adopts the files into the chains.
+    * Returns the published snapshot generation. */
   def appendOwn(incoming: DataFrame, idCol: String, textCol: String,
                 path: String, writerTag: String): Long = {
-    val spark = incoming.sparkSession
-    require(StoreSnapshots.isSnapshotted(path),
-      s"concurrent multi-artifact append needs store snapshots on $path " +
-        "(StoreSnapshots.enable first) — the snapshot manifest is the " +
-        "lone commit point that keeps postings, df, and stats atomic")
-    val tokBuckets = params(spark, path)
+    val tokBuckets = params(incoming.sparkSession, path)
     val (post, positions) = derive(incoming, idCol, textCol, tokBuckets,
       hasPositions(path))
     val landed = Seq.newBuilder[(String, Seq[String])]
@@ -336,7 +329,7 @@ object RetrievalIndexStore {
     StoreGenerations.commitAppend(s"$path/stats.parquet")
     if (positional)
       StoreGenerations.commitAppend(s"$path/positions.parquet")
-    StoreSnapshots.commitIfSnapshotted("retrieval", path)
+    StoreSnapshots.commit("retrieval", path)
   }
 
   /** Exact-phrase top-k against the STORED positional index (build
@@ -386,8 +379,8 @@ object RetrievalIndexStore {
   def query(spark: SparkSession, path: String, queries: DataFrame,
             queryIdCol: String, termsCol: String, k: Int,
             asOf: Option[Long] = None): DataFrame = {
-    // resolve FIRST: on a snapshotted store this verifies the frozen
-    // seeds (params) loudly before any scan plans. `asOf` = store-
+    // resolve FIRST: the pin verifies the frozen seeds (params)
+    // loudly before any scan plans. `asOf` = store-
     // level time travel: answer from snapshot `asOf`'s mutually-
     // consistent artifact generations (historical postings scored
     // with the HISTORICAL df and (N, T)) — within the vacuum keep
@@ -408,11 +401,11 @@ object RetrievalIndexStore {
     val qtoks = qterms.select("tok").distinct()
     // candidate postings = probed buckets ∩ query tokens; checkpoint
     // so dfreq and the score join share one scan
-    // generation-aware reads through ONE resolver: on a snapshotted
-    // store, postings/df/stats all resolve from the SAME snapshot —
-    // a batch's new postings are never scored against the previous
-    // generation's df/(N,T) however the reader interleaves with an
-    // in-flight append (bucket-dir pruning kept via basePath)
+    // reads through ONE resolver: postings/df/stats all resolve from
+    // the SAME snapshot — a batch's new postings are never scored
+    // against the previous generation's df/(N,T) however the reader
+    // interleaves with an in-flight append (bucket-dir pruning kept
+    // via basePath)
     val post = rd(s"$path/postings.parquet")
       .filter(col("tok_bucket").isin(buckets: _*))
       .join(broadcast(qtoks), Seq("tok"))

@@ -74,10 +74,20 @@ object SignatureStore {
 
   /** Build (or rebuild — overwrite) the store from the current index.
     * One signature pass and one shingle-set pass over the corpus; both
-    * are the same aggregations the direct route pays PER RUN. */
+    * are the same aggregations the direct route pays PER RUN. Ends by
+    * publishing store snapshot 0 (a rebuild starts a fresh chain). */
   def build(index: DataFrame, idCol: String, textCol: String, path: String,
             shingleN: Int = 3, numHashes: Int = 8): Unit = {
-    StoreSnapshots.invalidate(path) // a rebuild starts un-snapshotted
+    writeArtifacts(index, idCol, textCol, path, shingleN, numHashes)
+    StoreSnapshots.start("sig", path)
+  }
+
+  /** [[build]]'s artifact writes alone — the release store builds its
+    * `sig/` member through this, under the release's own chain. */
+  private[ext] def writeArtifacts(index: DataFrame, idCol: String,
+                                  textCol: String, path: String,
+                                  shingleN: Int = 3, numHashes: Int = 8)
+      : Unit = {
     val spark = index.sparkSession
     import spark.implicits._
     // the three artifacts are independent derivations — overlap their
@@ -105,11 +115,11 @@ object SignatureStore {
     * guarantees the batch's ids are new — the store has no dedup of
     * its own (same contract as the direct route's id-disjointness).
     *
-    * On a [[StoreGenerations]]-enabled store each artifact publishes
-    * the next generation after its write (readers never see a
-    * half-appended batch's files mixed into an older pin).
-    * `autoMaintain` is the in-band lifecycle knob (the store-side
-    * mirror of the merge sink's `maintainEvery`): consult the
+    * Each artifact publishes its next generation after its write,
+    * and one store snapshot then pins both (readers never see a
+    * half-appended batch). `autoMaintain` is the in-band lifecycle
+    * knob (the store-side mirror of the merge sink's
+    * `maintainEvery`): consult the
     * filesystem-metadata trigger after the fold and compact+vacuum
     * exactly the artifacts whose file count crossed the ratio.
     *
@@ -128,6 +138,20 @@ object SignatureStore {
              path: String,
              autoMaintain: Option[StoreMaintenance.AutoMaintain] = None)
       : Unit = {
+    appendChains(incoming, idCol, textCol, path)
+    // the store-level atomic commit point: readers keep resolving the
+    // previous snapshot's (bands, sets) pair until BOTH artifact
+    // commits are pinned together here
+    StoreSnapshots.commit("sig", path)
+    autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(
+      incoming.sparkSession, "sig", path, am))
+  }
+
+  /** [[append]]'s writes and artifact chain commits, without the
+    * store snapshot commit — the release store's fold commits its own
+    * snapshot over its `sig/` member. */
+  private[ext] def appendChains(incoming: DataFrame, idCol: String,
+                                textCol: String, path: String): Unit = {
     val spark = incoming.sparkSession
     val (shingleN, numHashes) = params(spark, path)
     // overlap the two independent artifact WRITES (guide §2.6); the
@@ -139,18 +163,11 @@ object SignatureStore {
         .write.mode(SaveMode.Append).parquet(s"$path/sets.parquet"))
     StoreGenerations.commitAppend(s"$path/bands.parquet")
     StoreGenerations.commitAppend(s"$path/sets.parquet")
-    // the store-level atomic commit point: on a snapshotted store,
-    // readers keep resolving the previous snapshot's (bands, sets)
-    // pair until BOTH artifact commits above are pinned together here
-    StoreSnapshots.commitIfSnapshotted("sig", path)
-    autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(spark,
-      StoreMaintenance.artifactsOf("sig", path), am,
-      snapshot = Some(("sig", path))))
   }
 
   /** CONCURRENT append — any number of writers fold verified batches
-    * into the store AT ONCE, on a SNAPSHOTTED store: the batch's
-    * bands and sets land privately in both artifacts
+    * into the store AT ONCE: the batch's bands and sets land
+    * privately in both artifacts
     * ([[StoreGenerations.landOwn]] — chains untouched, files
     * invisible), then ONE file-level snapshot commit
     * ([[StoreSnapshots.commitOwnStore]]) publishes them atomically
@@ -163,12 +180,7 @@ object SignatureStore {
     * generation. */
   def appendOwn(incoming: DataFrame, idCol: String, textCol: String,
                 path: String, writerTag: String): Long = {
-    val spark = incoming.sparkSession
-    require(StoreSnapshots.isSnapshotted(path),
-      s"concurrent multi-artifact append needs store snapshots on $path " +
-        "(StoreSnapshots.enable first) — the snapshot manifest is the " +
-        "lone commit point that keeps bands and sets atomic")
-    val (shingleN, numHashes) = params(spark, path)
+    val (shingleN, numHashes) = params(incoming.sparkSession, path)
     val bands = StoreGenerations.landOwn(
       bandsOf(incoming, idCol, textCol, shingleN, numHashes),
       s"$path/bands.parquet", writerTag)
@@ -184,15 +196,14 @@ object SignatureStore {
     * state from idempotence ([[StoreGenerations.landCanonical]]: one
     * canonical `gb<batchId>` file per artifact per batch, adopted by
     * the generation chains; a replayed batch overwrites its own files
-    * and commits nothing). Requires chains on bands + sets
-    * (`StoreMaintain enable sig <path>`). The batch's bands/sets
-    * derive under the STORE's config, same as [[append]]. */
+    * and commits nothing). The batch's bands/sets derive under the
+    * STORE's config, same as [[append]]. */
   def appendCanonical(incoming: DataFrame, idCol: String, textCol: String,
                       path: String, batchId: Long,
                       runTag: String = ""): Unit = {
     stageCanonicalWrites(incoming, idCol, textCol, path, batchId, runTag)
     commitCanonicalChains(path)
-    StoreSnapshots.commitIfSnapshotted("sig", path)
+    StoreSnapshots.commit("sig", path)
   }
 
   /** [[appendCanonical]]'s WRITE phase alone — the composed release
@@ -237,18 +248,17 @@ object SignatureStore {
              maxBucketSize: Int = Int.MaxValue,
              broadcastBatch: Boolean = true,
              resolve: Option[String => DataFrame] = None): DataFrame = {
-    // resolve FIRST: on a snapshotted store this verifies the frozen
-    // seeds (params) loudly before any scan plans
+    // resolve FIRST: the pin verifies the frozen seeds (params)
+    // loudly before any scan plans
     val rd = resolve.getOrElse(StoreSnapshots.reader(spark, path))
     val (shingleN, numHashes) = params(spark, path)
     val mark = if (broadcastBatch) (df: DataFrame) => broadcast(df)
                else identity[DataFrame] _
     val bN = bandsOf(incoming, idCol, textCol, shingleN, numHashes)
       .withColumnRenamed("doc_id", "new_id")
-    // generation-aware: a chained store's probe resolves a pinned
-    // file list, so maintenance can compact concurrently. ONE
-    // resolver for bands AND sets: on a snapshotted store both come
-    // from the same snapshot (a candidate id surfaced by the band
+    // the probe resolves a pinned file list, so maintenance can
+    // compact concurrently. ONE resolver for bands AND sets: both
+    // come from the same snapshot (a candidate id surfaced by the band
     // probe always has its verification set — mixed generations
     // could silently drop a pair). `resolve` lets a composed caller
     // (the release loop) thread ITS store-level pin through.

@@ -3,30 +3,28 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** GENERATION CHAIN for a persisted store's artifact directories —
-  * the piece that turns [[StoreMaintenance]]'s crash-safe compaction
-  * into an ONLINE compaction: readers keep resolving a pinned
-  * generation's file list while maintenance publishes the next one,
-  * and bytes retire only when [[vacuum]]'s keep window passes them.
+  * the layer under [[StoreSnapshots]] that makes every store write
+  * ONLINE: readers resolve a pinned generation's file list while an
+  * append or a compaction publishes the next one, and bytes retire
+  * only when [[vacuum]]'s keep window passes them.
   *
   * This is the manifest-chain machinery the streaming merge-sink
   * table already ships ([[graft.streaming.StreamingOps]]: `tableAt` /
-  * `publishManifest` / `vacuumManifests`), applied to the index-store
-  * artifacts the maintenance CLI hits on a live cadence. Without it,
-  * the two-rename swap in [[StoreMaintenance.compactArtifact]]
-  * requires a QUIESCED store: between `move(dir, retired)` and
-  * `move(scratch, dir)` the live directory does not exist, and a
-  * long-running query holding the old file list loses its files at
-  * the final delete. With a chain, compaction only ever ADDS files
-  * and a manifest — nothing a live reader references moves or dies
-  * until the vacuum retires generations beyond the keep window.
+  * `publishManifest` / `vacuumManifests`), applied to each accreting
+  * artifact of the four stores. Every store's `build` starts the
+  * chain of each artifact at generation 0 (through
+  * [[StoreSnapshots]]); appends publish N+1 = N + the landed files,
+  * compactions publish N+1 = the compacted files. Nothing a live
+  * reader references moves or dies until the vacuum retires
+  * generations beyond the keep window.
   *
   * Layout: `<artifactDir>/_manifests/gen=<N>` is a text file listing
   * the parquet paths that constitute the artifact at generation N
   * (absolute paths, same format as the merge-sink table's). The
   * underscore prefix keeps the chain invisible to Spark's file
-  * listing, so a non-generational reader of the plain directory is
-  * unaffected by `enable` until the first compaction diverges the
-  * chain from the directory inventory.
+  * listing. An artifact without a chain is not a store this code
+  * built: [[read]] and every commit fail loudly on it
+  * (`StoreMaintain enable` adopts such a directory).
   *
   * Contracts:
   *  - SINGLE WRITER: appends and compactions on one artifact
@@ -39,9 +37,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - READERS ARE FREE: any number, any time; a reader holds the
   *    file list of the generation it resolved, which survives every
   *    compaction and every vacuum within the keep window.
-  *  - Spark's `SaveMode.Overwrite` on the directory (a store
-  *    rebuild) deletes the chain with the bytes — a rebuilt store
-  *    starts non-generational until [[enable]]d again.
+  *  - A store rebuild overwrites the directory and then restarts
+  *    the chain at generation 0 ([[restart]]).
   *
   * Reference behavior context: the reference re-reads its corpus per
   * run (no persisted derived state); generation-pinned store reads
@@ -49,7 +46,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * serving. */
 object StoreGenerations {
 
-  /** Basename pattern of files a generational compaction minted —
+  /** Basename pattern of files a compaction minted —
     * [[commitAppend]] must not adopt a crashed compaction's
     * unpublished output as "appended rows" (they duplicate rows the
     * live generation already carries). */
@@ -63,9 +60,6 @@ object StoreGenerations {
   // conditional-create (see graft.sources.ManifestIO)
   private def io(dir: String): graft.sources.ManifestIO =
     graft.sources.ManifestIO.forPath(dir)
-
-  /** Whether the artifact carries a generation chain. */
-  def isGenerational(dir: String): Boolean = gens(dir).nonEmpty
 
   private def gens(dir: String): Seq[Long] =
     io(dir).list(manifestsDir(dir))
@@ -106,7 +100,7 @@ object StoreGenerations {
   def filesAt(dir: String, gen: Long): Option[Seq[String]] =
     gens(dir).filter(_ <= gen).lastOption.map(g => readManifest(dir, g))
 
-  /** The CURRENT generation's file list (None = non-generational). */
+  /** The CURRENT generation's file list (None = no chain). */
   def currentFiles(dir: String): Option[Seq[String]] =
     gens(dir).lastOption.map(g => readManifest(dir, g))
 
@@ -126,13 +120,20 @@ object StoreGenerations {
   }
 
   /** Start the chain: generation 0 = the directory's current parquet
-    * inventory. Idempotent (an already-generational artifact keeps
+    * inventory. Idempotent (an already-chained artifact keeps
     * its chain). Returns the current generation. */
   def enable(dir: String): Long = currentGen(dir).getOrElse {
     val files = visibleParquet(dir)
     require(files.nonEmpty, s"nothing to version under $dir")
     publish(dir, 0L, files)
     0L
+  }
+
+  /** [[enable]] after dropping every older generation — a store
+    * rebuild's step: the rebuild replaced every file they name. */
+  private[ext] def restart(dir: String): Long = {
+    gens(dir).foreach(g => io(dir).delete(s"${manifestsDir(dir)}/gen=$g"))
+    enable(dir)
   }
 
   private def canon(s: String): String =
@@ -142,19 +143,24 @@ object StoreGenerations {
   private def referenced(dir: String): Set[String] =
     gens(dir).flatMap(g => readManifest(dir, g)).map(canon).toSet
 
-  /** Read the artifact: the current generation's file list when a
-    * chain exists (with `basePath` so bucket-partition directories
-    * keep yielding their partition column and partition pruning),
-    * the plain directory otherwise. */
+  private def load(spark: SparkSession, dir: String,
+                   files: Seq[String]): DataFrame = {
+    // publish refuses empty lists, so an empty generation means a
+    // corrupted chain
+    require(files.nonEmpty, s"empty manifest under $dir — corrupted chain")
+    spark.read.option("basePath", dir).parquet(files: _*)
+  }
+
+  private[ext] def noChain(dir: String) = new IllegalStateException(
+    s"$dir has no generation chain — every store build starts one; " +
+      "adopt a store written without one with `StoreMaintain enable`")
+
+  /** Read the artifact at its current generation (with `basePath`
+    * so bucket-partition directories keep yielding their partition
+    * column and partition pruning). Fails loudly on an artifact
+    * without a chain. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    currentFiles(dir) match {
-      case Some(files) if files.nonEmpty =>
-        spark.read.option("basePath", dir).parquet(files: _*)
-      case Some(_) => throw new IllegalStateException(
-        s"empty manifest under $dir — publish requires non-empty " +
-          "file lists, so an empty generation means a corrupted chain")
-      case None => spark.read.parquet(dir)
-    }
+    load(spark, dir, currentFiles(dir).getOrElse(throw noChain(dir)))
 
   /** Generation-pinned read with the vacuum contract enforced LOUDLY
     * (the store face of the merge-sink table's `tableAt`): a pin
@@ -162,17 +168,11 @@ object StoreGenerations {
     * names; a pin the vacuum has passed fails here with a clear
     * error, never a partial read of surviving files. */
   def readAt(spark: SparkSession, dir: String, gen: Long): DataFrame =
-    filesAt(dir, gen) match {
-      case Some(files) if files.nonEmpty =>
-        spark.read.option("basePath", dir).parquet(files: _*)
-      case Some(_) => throw new IllegalStateException(
-        s"empty manifest under $dir — publish requires non-empty " +
-          "file lists, so an empty generation means a corrupted chain")
-      case None => throw new IllegalStateException(
+    load(spark, dir, filesAt(dir, gen).getOrElse(
+      throw new IllegalStateException(
         s"no generation <= $gen survives under $dir: the pin is " +
           "outside the vacuum keep window (or the artifact has no " +
-          "chain) — re-pin to a kept generation")
-    }
+          "chain) — re-pin to a kept generation")))
 
   /** Fold a completed append's files into the chain: publish
     * generation N+1 = generation N's list + every parquet file on
@@ -183,26 +183,24 @@ object StoreGenerations {
     * empty batch, or a REPLAYED batch whose canonical files the
     * chain already adopted — no generation is published (the commit
     * is already on the chain; this is what makes a replayed
-    * streaming append a no-op rather than generation churn). No-op
-    * (None) on a non-generational artifact, so append paths call
-    * this unconditionally. */
-  def commitAppend(dir: String): Option[Long] =
-    currentGen(dir).map { cur =>
-      val ref = referenced(dir)
-      val fresh = visibleParquet(dir)
-        .filterNot(p => ref.contains(canon(p)))
-        .filterNot { p =>
-          val name = p.substring(p.lastIndexOf('/') + 1)
-          CompactName.findFirstIn(name).isDefined ||
-            OwnName.findFirstIn(name).isDefined
-        }
-      if (fresh.isEmpty) cur
-      else {
-        val next = cur + 1
-        publish(dir, next, currentFiles(dir).get ++ fresh)
-        next
+    * streaming append a no-op rather than generation churn).
+    * Returns the current generation. */
+  def commitAppend(dir: String): Long = {
+    val cur = currentGen(dir).getOrElse(throw noChain(dir))
+    val ref = referenced(dir)
+    val fresh = visibleParquet(dir)
+      .filterNot(p => ref.contains(canon(p)))
+      .filterNot { p =>
+        val name = p.substring(p.lastIndexOf('/') + 1)
+        CompactName.findFirstIn(name).isDefined ||
+          OwnName.findFirstIn(name).isDefined
       }
+    if (fresh.isEmpty) cur
+    else {
+      publish(dir, cur + 1, currentFiles(dir).get ++ fresh)
+      cur + 1
     }
+  }
 
   /** Basename pattern of files a CONCURRENT writer landed via
     * [[landOwn]]/[[landOwnBucketed]] — owned by exactly one
@@ -249,9 +247,7 @@ object StoreGenerations {
     }
     var attempt = 0
     while (true) {
-      val cur = currentGen(dir).getOrElse(sys.error(
-        s"$dir has no generation chain — concurrent appends need one " +
-          "(StoreGenerations.enable first)"))
+      val cur = currentGen(dir).getOrElse(throw noChain(dir))
       val fresh = mine.filterNot(referenced(dir))
       if (fresh.isEmpty) return cur // replay: the whole batch is on the chain
       require(fresh.length == mine.length,
@@ -282,8 +278,6 @@ object StoreGenerations {
   def landOwn(df: DataFrame, dir: String, writerTag: String): Seq[String] = {
     require(writerTag.matches("[A-Za-z0-9]+"),
       s"writer tag must be alphanumeric, got '$writerTag'")
-    require(isGenerational(dir),
-      s"concurrent append needs a generation chain on $dir")
     val scratch = s"$dir.__own_$writerTag${uuid8()}"
     df.write.mode("overwrite").parquet(scratch)
     val landed = graft.sources.Layout.listParquet(scratch).map { p =>
@@ -305,8 +299,6 @@ object StoreGenerations {
                       writerTag: String): Seq[String] = {
     require(writerTag.matches("[A-Za-z0-9]+"),
       s"writer tag must be alphanumeric, got '$writerTag'")
-    require(isGenerational(dir),
-      s"concurrent append needs a generation chain on $dir")
     val scratch = s"$dir.__own_$writerTag${uuid8()}"
     df.repartition(org.apache.spark.sql.functions.col(bucketCol))
       .write.partitionBy(bucketCol).mode("overwrite").parquet(scratch)
@@ -350,7 +342,7 @@ object StoreGenerations {
   }
 
   /** Land a micro-batch's rows as ONE canonical file in a FLAT
-    * generational artifact (`<dir>/[r<tag>-]gb<batchId>.parquet`, see
+    * artifact (`<dir>/[r<tag>-]gb<batchId>.parquet`, see
     * [[canonicalName]]) and commit — the replay-safe streaming-append
     * primitive: a replayed batch overwrites its own file
     * (REPLACE_EXISTING; nothing else ever carries its name — batch id
@@ -364,7 +356,7 @@ object StoreGenerations {
   def landCanonical(df: DataFrame, dir: String, batchId: Long,
                     runTag: String = ""): Long = {
     stageCanonical(df, dir, batchId, runTag)
-    commitAppend(dir).get
+    commitAppend(dir)
   }
 
   /** [[landCanonical]]'s WRITE phase alone (land the canonical file,
@@ -375,9 +367,6 @@ object StoreGenerations {
     * canonical file. */
   private[ext] def stageCanonical(df: DataFrame, dir: String,
                                   batchId: Long, runTag: String): Unit = {
-    require(isGenerational(dir),
-      s"streaming append needs a generation chain on $dir — without " +
-        "one a replayed micro-batch would double its rows")
     val scratch = s"$dir.__append_b$batchId"
     df.coalesce(1).write.mode("overwrite").parquet(scratch)
     val files = graft.sources.Layout.listParquet(scratch)
@@ -402,16 +391,13 @@ object StoreGenerations {
                             bucketCol: String, batchId: Long,
                             runTag: String = ""): Long = {
     stageCanonicalBucketed(df, dir, bucketCol, batchId, runTag)
-    commitAppend(dir).get
+    commitAppend(dir)
   }
 
   /** [[stageCanonical]] for a bucket-partitioned artifact. */
   private[ext] def stageCanonicalBucketed(df: DataFrame, dir: String,
                                           bucketCol: String, batchId: Long,
                                           runTag: String): Unit = {
-    require(isGenerational(dir),
-      s"streaming append needs a generation chain on $dir — without " +
-        "one a replayed micro-batch would double its rows")
     val scratch = s"$dir.__append_b$batchId"
     df.repartition(org.apache.spark.sql.functions.col(bucketCol))
       .write.partitionBy(bucketCol).mode("overwrite").parquet(scratch)

@@ -3,8 +3,9 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Maintenance for the persisted index stores ([[SignatureStore]],
-  * [[VectorIndexStore]], [[RetrievalIndexStore]]): fold the parquet
+/** Maintenance for the persisted stores ([[SignatureStore]],
+  * [[VectorIndexStore]], [[RetrievalIndexStore]], [[ReleaseStore]]),
+  * all of which run in the one snapshotted mode: fold the parquet
   * files their append-only ingest accretes back into a fresh-build
   * layout, verify from footers + bounded invariants, and retire the
   * superseded bytes — the same compact-then-vacuum lifecycle the
@@ -36,30 +37,19 @@ import org.apache.spark.sql.functions._
   *    (cell_buckets / tok_buckets) is how a deployment sizes buckets
   *    to begin with.
   *
-  * PROMOTION has two modes, picked per artifact by whether the
-  * directory carries a [[StoreGenerations]] chain:
-  *
-  *  - Non-generational (the default): two-phase, crash-recoverable
-  *    directory swap (single maintenance writer, QUIESCED store —
-  *    no concurrent readers): the compacted copy builds in
-  *    `<dir>.__compact`, is verified (footer inventory + the
-  *    artifact's bounded invariant), marked `_GRAFT_VERIFIED`, and
-  *    only then swapped in by two directory renames with the old
-  *    bytes parked at `<dir>.__retired` until the final delete. A
-  *    crash anywhere leaves a state [[recoverArtifact]] repairs;
-  *    [[compactArtifact]] runs recovery first, so re-running after
-  *    any crash is the repair.
-  *
-  *  - Generational ([[StoreGenerations.enable]]d): ONLINE promotion —
-  *    the verified scratch files move INTO the artifact directory
-  *    under deterministic generation-stamped names and generation
-  *    N+1 publishes their list (no-clobber). Nothing a live reader
-  *    references moves or dies: a reader holding generation N's file
-  *    list completes correctly THROUGH the compaction, and the
-  *    superseded bytes retire only when [[StoreGenerations.vacuum]]'s
-  *    keep window passes them. A crash anywhere leaves only
-  *    unreferenced files (re-running overwrites its own dead output;
-  *    the vacuum sweeps whatever remains) — no recovery step at all.
+  * PROMOTION is ONLINE: the compacted copy builds in
+  * `<dir>.__compact`, is verified (footer inventory + the artifact's
+  * bounded invariant), then its files move INTO the artifact
+  * directory under deterministic generation-stamped names and
+  * generation N+1 of the artifact's [[StoreGenerations]] chain
+  * publishes their list (no-clobber); the store-level compaction
+  * calls then commit one [[StoreSnapshots]] snapshot pinning the
+  * compacted generations. Nothing a live reader references moves or
+  * dies: a reader holding a pinned snapshot completes correctly
+  * THROUGH the compaction, and the superseded bytes retire only when
+  * [[vacuumStore]]'s keep window passes them. A crash anywhere leaves
+  * only unreferenced files (re-running overwrites its own dead
+  * output; the vacuum sweeps whatever remains) — no recovery step.
   *
   * Reference behavior context: the reference re-reads its corpus per
   * run (no persisted derived state to maintain); this lifecycle is
@@ -83,8 +73,8 @@ object StoreMaintenance {
     * mirror of the merge sink's `maintainEvery`): after an ingest
     * fold, any artifact whose live file count exceeds `ratio` × its
     * fresh-build ideal (one file per populated bucket; bytes /
-    * `targetBytes` for flat artifacts) compacts in-band, and — when
-    * the artifact is generational — vacuums beyond `keepGens`. The
+    * `targetBytes` for flat artifacts) compacts in-band, and the
+    * store vacuums beyond `keepGens` snapshots. The
     * trigger reads filesystem metadata only (file names + sizes):
     * zero data, zero footers, so a no-op tick costs microseconds. */
   final case class AutoMaintain(ratio: Double = 3.0,
@@ -106,8 +96,6 @@ object StoreMaintenance {
       : ArtifactSpec = ArtifactSpec(dir, bucketCol, fold, invariant)
 
   private def scratchOf(dir: String) = s"$dir.__compact"
-  private def retiredOf(dir: String) = s"$dir.__retired"
-  private val Marker = "_GRAFT_VERIFIED"
 
   private def exists(p: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(p))
@@ -124,36 +112,6 @@ object StoreMaintenance {
     }
   }
 
-  private def move(from: String, to: String): Unit =
-    java.nio.file.Files.move(java.nio.file.Paths.get(from),
-      java.nio.file.Paths.get(to))
-
-  /** Repair an artifact directory after a crashed NON-generational
-    * [[compactArtifact]]. Returns the action taken: "clean" (live dir
-    * intact — stale scratch/retired leftovers deleted),
-    * "rolled_forward" (verified scratch promoted to live),
-    * "rolled_back" (retired bytes restored). Idempotent;
-    * [[compactArtifact]] calls it on entry. (A GENERATIONAL
-    * compaction needs no recovery: a crash leaves only unreferenced
-    * files, which re-running overwrites and the vacuum sweeps.) */
-  def recoverArtifact(dir: String): String = {
-    val scratch = scratchOf(dir); val retired = retiredOf(dir)
-    if (exists(dir)) {
-      deleteTree(scratch); deleteTree(retired); "clean"
-    } else if (exists(s"$scratch/$Marker")) {
-      // crashed between the two swap renames (or before the retire
-      // delete): the scratch passed verification, promote it
-      move(scratch, dir); deleteTree(retired); "rolled_forward"
-    } else if (exists(retired)) {
-      // crashed after parking the live dir but before a verified
-      // scratch could replace it (verification marker absent means
-      // the scratch cannot be trusted): restore the old bytes
-      deleteTree(scratch); move(retired, dir); "rolled_back"
-    } else {
-      require(false, s"$dir missing with no recoverable state"); ""
-    }
-  }
-
   /** Compact one artifact directory in place (see class doc).
     *
     * `bucketCol` — Some(c): the directory is `partitionBy(c)` laid out
@@ -167,24 +125,18 @@ object StoreMaintenance {
     * which is only correct for identity folds; folding callers pass
     * the sums their readers take).
     *
-    * Promotion mode (swap vs online generation publish) follows the
-    * artifact: see the class doc. */
+    * Publishes the artifact's next generation only; the store-level
+    * calls below commit the snapshot that makes it visible. */
   def compactArtifact(spark: SparkSession, dir: String,
                       bucketCol: Option[String],
                       fold: DataFrame => DataFrame = rowIdentity,
                       invariant: DataFrame => DataFrame = countInvariant,
                       targetBytes: Long = 128L << 20): ArtifactReport = {
-    val generational = StoreGenerations.isGenerational(dir)
-    if (generational) deleteTree(scratchOf(dir)) // stale scratch only
-    else recoverArtifact(dir)
-    val srcFiles =
-      if (generational) StoreGenerations.currentFiles(dir).get
-      else graft.sources.Layout.listParquet(dir)
-    require(srcFiles.nonEmpty, s"nothing to compact under $dir")
     val scratch = scratchOf(dir)
-    val src =
-      if (generational) StoreGenerations.read(spark, dir)
-      else spark.read.parquet(dir)
+    deleteTree(scratch) // a dead attempt's unverified output
+    val srcFiles = StoreGenerations.currentFiles(dir)
+      .getOrElse(throw StoreGenerations.noChain(dir))
+    val src = StoreGenerations.read(spark, dir)
     val before = invariant(src).collect().toSeq
     val rowsBefore = graft.sources.Layout
       .parquetFileStatsFiles(spark, srcFiles)
@@ -235,40 +187,31 @@ object StoreMaintenance {
     val rowsAfter = graft.sources.Layout
       .parquetFileStatsFiles(spark, outFiles)
       .agg(sum("n_rows")).collect()(0).getLong(0)
-    if (generational) {
-      // ONLINE promotion: move the verified scratch files INTO the
-      // live directory under deterministic generation-stamped names
-      // (REPLACE_EXISTING overwrites only this compaction's own dead
-      // prior attempt — the names embed the target generation, and
-      // nothing references them until the publish below), then
-      // publish their list as the next generation. Readers pinned to
-      // any surviving generation are untouched; old bytes retire at
-      // the next StoreGenerations.vacuum.
-      val gen = StoreGenerations.currentGen(dir).get + 1
-      val rxb = bucketCol.map(c =>
-        (java.util.regex.Pattern.quote(s"$c=") + "(-?\\d+)/").r)
-      val moved = outFiles.sorted.zipWithIndex.map { case (p, i) =>
-        val tgt = rxb.flatMap(_.findFirstMatchIn(p)) match {
-          case Some(m) =>
-            s"$dir/${bucketCol.get}=${m.group(1)}/gen$gen-c.parquet"
-          case None => s"$dir/gen$gen-p$i.parquet"
-        }
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(tgt).getParent)
-        java.nio.file.Files.move(java.nio.file.Paths.get(p),
-          java.nio.file.Paths.get(tgt),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        tgt
+    // move the verified scratch files INTO the live directory under
+    // deterministic generation-stamped names (REPLACE_EXISTING
+    // overwrites only this compaction's own dead prior attempt — the
+    // names embed the target generation, and nothing references them
+    // until the publish below), then publish their list as the next
+    // generation. Readers pinned to any surviving generation are
+    // untouched; old bytes retire at the next vacuum.
+    val gen = StoreGenerations.currentGen(dir).get + 1
+    val rxb = bucketCol.map(c =>
+      (java.util.regex.Pattern.quote(s"$c=") + "(-?\\d+)/").r)
+    val moved = outFiles.sorted.zipWithIndex.map { case (p, i) =>
+      val tgt = rxb.flatMap(_.findFirstMatchIn(p)) match {
+        case Some(m) =>
+          s"$dir/${bucketCol.get}=${m.group(1)}/gen$gen-c.parquet"
+        case None => s"$dir/gen$gen-p$i.parquet"
       }
-      StoreGenerations.publish(dir, gen, moved)
-      deleteTree(scratch)
-    } else {
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(s"$scratch/$Marker"))
-      move(dir, retiredOf(dir))
-      move(scratch, dir)
-      deleteTree(retiredOf(dir)) // the vacuum: superseded bytes retire
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(tgt).getParent)
+      java.nio.file.Files.move(java.nio.file.Paths.get(p),
+        java.nio.file.Paths.get(tgt),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      tgt
     }
+    StoreGenerations.publish(dir, gen, moved)
+    deleteTree(scratch)
     ArtifactReport(dir, srcFiles.length.toLong, outFiles.length.toLong,
       rowsBefore, rowsAfter)
   }
@@ -304,82 +247,79 @@ object StoreMaintenance {
     }.toDF("artifact", "n_files", "bytes", "rows", "bytes_per_file")
   }
 
-  /** The in-band maintenance tick ([[AutoMaintain]]): compact — and,
-    * on generational artifacts, vacuum — exactly the artifacts whose
-    * live file count crossed ratio × ideal. Returns the reports of
-    * what actually compacted (usually empty — that is the point of a
+  /** The in-band maintenance tick ([[AutoMaintain]]) for the store
+    * at `path` (`kind` ∈ sig | vector | retrieval | release): adopt
+    * pending file-level commits ([[StoreSnapshots.fold]]), compact
+    * exactly the artifacts whose live file count crossed ratio ×
+    * ideal, then — when anything compacted — commit ONE snapshot
+    * pinning the post-compaction generations and vacuum
+    * snapshot-aware beyond `keepGens`. Returns the reports of what
+    * actually compacted (usually empty — that is the point of a
     * threshold). The trigger is pure filesystem metadata; sizing the
     * flat ideal uses file lengths, not footers, so a quiet tick
-    * launches zero Spark jobs.
-    *
-    * `snapshot = Some((kind, storePath))`: when the store carries a
-    * [[StoreSnapshots]] chain, a tick that compacted anything commits
-    * ONE new store snapshot pinning the post-compaction generations,
-    * then vacuums snapshot-aware (artifact generations any surviving
-    * snapshot pins are kept, whatever the per-artifact keep window
-    * says) — the per-artifact vacuum below would otherwise retire
-    * generations a kept snapshot still names. */
-  def maintainIfNeeded(spark: SparkSession, specs: Seq[ArtifactSpec],
-                       am: AutoMaintain,
-                       snapshot: Option[(String, String)] = None)
-      : Seq[ArtifactReport] = {
-    val snapped = snapshot.filter { case (_, p) =>
-      StoreSnapshots.isSnapshotted(p) }
-    // adopt pending file-level commits (concurrent writers' batches)
-    // into the chains FIRST: the trigger below counts chain files,
-    // and compaction folds chain files — unfolded d-entries would be
+    * launches zero Spark jobs. */
+  def maintainIfNeeded(spark: SparkSession, kind: String, path: String,
+                       am: AutoMaintain): Seq[ArtifactReport] = {
+    // fold FIRST: the trigger below counts chain files, and
+    // compaction folds chain files — unfolded d-entries would be
     // invisible to both (maintenance runs exclusively, so nothing
     // lands while this folds)
-    snapped.foreach { case (kind, p) => StoreSnapshots.fold(kind, p) }
-    val reports = specs.flatMap { s =>
-      if (!exists(s.dir)) None
-      else {
-        val files = StoreGenerations.currentFiles(s.dir)
-          .getOrElse(graft.sources.Layout.listParquet(s.dir))
-        val ideal = s.bucketCol match {
-          case Some(_) =>
-            // fresh-build bound: one file per POPULATED bucket dir
-            math.max(1L,
-              files.map(p => p.substring(0, p.lastIndexOf('/')))
-                .distinct.length.toLong)
-          case None =>
-            val bytes = files.map(p => java.nio.file.Files.size(
-              java.nio.file.Paths.get(p))).sum
-            math.max(1L, (bytes + am.targetBytes - 1) / am.targetBytes)
-        }
-        if (files.length <= am.ratio * ideal) None
-        else {
-          val r = compact(spark, s, am.targetBytes)
-          if (snapped.isEmpty && StoreGenerations.isGenerational(s.dir))
-            StoreGenerations.vacuum(s.dir, am.keepGens)
-          Some(r)
-        }
+    StoreSnapshots.fold(kind, path)
+    val reports = artifactsOf(kind, path).flatMap { s =>
+      val files = StoreGenerations.currentFiles(s.dir)
+        .getOrElse(throw StoreGenerations.noChain(s.dir))
+      val ideal = s.bucketCol match {
+        case Some(_) =>
+          // fresh-build bound: one file per POPULATED bucket dir
+          math.max(1L,
+            files.map(p => p.substring(0, p.lastIndexOf('/')))
+              .distinct.length.toLong)
+        case None =>
+          val bytes = files.map(p => java.nio.file.Files.size(
+            java.nio.file.Paths.get(p))).sum
+          math.max(1L, (bytes + am.targetBytes - 1) / am.targetBytes)
       }
+      if (files.length <= am.ratio * ideal) None
+      else Some(compact(spark, s, am.targetBytes))
     }
-    if (reports.nonEmpty) snapped.foreach { case (kind, p) =>
-      StoreSnapshots.commit(kind, p)
-      StoreSnapshots.vacuum(kind, p, am.keepGens)
+    if (reports.nonEmpty) {
+      StoreSnapshots.commit(kind, path)
+      StoreSnapshots.vacuum(kind, path, am.keepGens)
     }
     reports
   }
 
-  /** [[StoreGenerations.enable]] on every accreting artifact of a
-    * store (`kind` ∈ sig | vector | retrieval | release) — the
-    * opt-in that makes its compactions online. */
+  /** Adopt a store directory written without a chain
+    * ([[StoreSnapshots.enable]]) — a no-op on any store a `build`
+    * wrote, since every build starts its chain. */
   def enableStoreGenerations(kind: String, path: String): Unit =
-    artifactsOf(kind, path).foreach(s => StoreGenerations.enable(s.dir))
+    StoreSnapshots.enable(kind, path)
 
-  /** [[StoreGenerations.vacuum]] across a store's accreting
-    * artifacts; returns (files deleted, manifests deleted) summed.
-    * On a [[StoreSnapshots]]-enabled store, routes through the
-    * snapshot-aware vacuum so no kept snapshot's pins retire. */
+  /** Snapshot-aware vacuum of the store ([[StoreSnapshots.vacuum]]):
+    * keep the newest `keepGens` snapshots and every artifact
+    * generation they pin; returns (files deleted, manifests deleted)
+    * summed. */
   def vacuumStore(kind: String, path: String, keepGens: Int): (Int, Int) =
-    if (StoreSnapshots.isSnapshotted(path))
-      StoreSnapshots.vacuum(kind, path, keepGens)
-    else artifactsOf(kind, path)
-      .filter(s => StoreGenerations.isGenerational(s.dir))
-      .map(s => StoreGenerations.vacuum(s.dir, keepGens))
-      .foldLeft((0, 0)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    StoreSnapshots.vacuum(kind, path, keepGens)
+
+  /** Compact every artifact of the store at `path` and commit the
+    * snapshot that publishes the result: pending file-level commits
+    * fold first, the artifacts compact concurrently and
+    * independently (each directory is its own unit — overlapped via
+    * Par, guide §2.6), and ONE snapshot then pins every compacted
+    * generation. A crash before the commit leaves the previous
+    * snapshot live (compacted generations published but unpinned);
+    * re-running resumes (already-compacted artifacts fold to
+    * themselves). */
+  private def compactStore(spark: SparkSession, kind: String, path: String,
+                           targetBytes: Long = 128L << 20)
+      : Seq[ArtifactReport] = {
+    StoreSnapshots.fold(kind, path)
+    val reports = Par.map(artifactsOf(kind, path).map(s =>
+      () => compact(spark, s, targetBytes)))
+    StoreSnapshots.commit(kind, path)
+    reports
+  }
 
   private[graft] def artifactsOf(kind: String, path: String)
       : Seq[ArtifactSpec] = kind match {
@@ -405,13 +345,8 @@ object StoreMaintenance {
 
   def compactSignatureStore(spark: SparkSession, path: String,
                             targetBytes: Long = 128L << 20)
-      : Seq[ArtifactReport] = {
-    StoreSnapshots.fold("sig", path) // adopt pending file-level commits
-    // artifacts compact independently (each directory is its own
-    // crash-recovery unit) — overlap them (guide §2.6 via Par)
-    Par.map(sigArtifacts(path).map(s =>
-      () => compact(spark, s, targetBytes)))
-  }
+      : Seq[ArtifactReport] =
+    compactStore(spark, "sig", path, targetBytes)
 
   /** [[VectorIndexStore]] artifacts: codes (cell-bucketed, row-
     * preserving — the layout probe-time pruning keys on is preserved
@@ -421,10 +356,8 @@ object StoreMaintenance {
     spec(s"$path/codes.parquet", Some("cell_bucket")))
 
   def compactVectorIndexStore(spark: SparkSession, path: String)
-      : Seq[ArtifactReport] = {
-    StoreSnapshots.fold("vector", path) // adopt pending file-level commits
-    vectorArtifacts(path).map(s => compact(spark, s))
-  }
+      : Seq[ArtifactReport] =
+    compactStore(spark, "vector", path)
 
   /** [[ReleaseStore]] artifacts: the three the daily loop APPENDS
     * to — the signature index (bands/sets) plus the seen-url /
@@ -444,10 +377,8 @@ object StoreMaintenance {
         invariant = _.agg(countDistinct("h").as("n_hashes"))))
 
   def compactReleaseStore(spark: SparkSession, path: String)
-      : Seq[ArtifactReport] = {
-    StoreSnapshots.fold("release", path) // adopt pending file-level commits
-    Par.map(releaseArtifacts(path).map(s => () => compact(spark, s)))
-  }
+      : Seq[ArtifactReport] =
+    compactStore(spark, "release", path)
 
   /** [[RetrievalIndexStore]] artifacts: postings (token-bucketed,
     * row-preserving), df (token-bucketed, delta rows SUMMED into one
@@ -457,13 +388,13 @@ object StoreMaintenance {
     * preserving). The invariants pin exactly what scoring consumes:
     * Σdf and the distinct token count for df; ΣN and ΣT for stats.
     *
-    * The store's 3–4 artifacts compact CONCURRENTLY (Par, r16) and
-    * INDEPENDENTLY: a crash mid-way leaves a mixed-compaction
-    * store — harmless (compaction is physical-only per artifact, the
-    * fold preserves what readers consume, and each directory is
-    * independently recoverable), and re-running the store-level call
-    * resumes: already-compacted artifacts fold to themselves
-    * (idempotent), an interrupted one repairs via its own recovery,
+    * The store's 3–4 artifacts compact CONCURRENTLY and
+    * INDEPENDENTLY: a crash mid-way leaves some artifacts with an
+    * unpinned compacted generation and the previous snapshot live —
+    * harmless (compaction is physical-only per artifact, and the fold
+    * preserves what readers consume), and re-running the store-level
+    * call resumes: already-compacted artifacts fold to themselves
+    * (idempotent), an interrupted one overwrites its dead scratch,
     * the rest compact fresh. */
   private def retrievalArtifacts(path: String): Seq[ArtifactSpec] = {
     val base = Seq(
@@ -485,8 +416,6 @@ object StoreMaintenance {
   }
 
   def compactRetrievalIndexStore(spark: SparkSession, path: String)
-      : Seq[ArtifactReport] = {
-    StoreSnapshots.fold("retrieval", path) // adopt pending file-level commits
-    Par.map(retrievalArtifacts(path).map(s => () => compact(spark, s)))
-  }
+      : Seq[ArtifactReport] =
+    compactStore(spark, "retrieval", path)
 }

@@ -31,6 +31,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *       a concurrent writer's landed file, read IN ADDITION to the
   *       artifact's pinned generation — see [[commitOwnStore]])
   *
+  * The release store keeps ONE chain at its root: its `sig/` member's
+  * bands and sets are artifacts of the release snapshot (there is no
+  * chain at `sig/`), so a release probe resolves urls, hashes and the
+  * signature index through one pin.
+  *
   * The `f` entries inventory the store's FROZEN artifacts — the seed
   * files an append never touches (params, trained centroids/codebook,
   * the release store's quality models). They were previously outside
@@ -50,9 +55,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    generation (plus file-level entries) one snapshot names; those
   *    survive any vacuum that keeps the snapshot ([[vacuum]] pins
   *    them).
-  *  - OPT-IN: a store without `_store_manifests` behaves exactly as
-  *    before (per-artifact current-generation reads) — every
-  *    pre-existing gate is unchanged by construction.
+  *  - ALWAYS ON: every store's `build` ends by publishing snapshot
+  *    0 ([[start]]; a rebuild restarts the chain at 0), and every
+  *    append, fold and compaction ends with a snapshot commit. There
+  *    is no un-snapshotted store mode: every read resolves through a
+  *    [[Pin]]. A store directory written without a chain is adopted
+  *    once with [[enable]] (`StoreMaintain enable`).
   *
   * Reference behavior context: the reference re-reads its corpus per
   * run (no persisted derived state); cross-artifact snapshot isolation
@@ -76,9 +84,6 @@ object StoreSnapshots {
       .flatMap(n => "^gen=(\\d+)$".r.findFirstMatchIn(n)
         .map(_.group(1).toLong))
       .sorted
-
-  /** Whether the store carries a snapshot chain. */
-  def isSnapshotted(path: String): Boolean = gens(path).nonEmpty
 
   /** The newest published snapshot generation, if any. */
   def currentGen(path: String): Option[Long] = gens(path).lastOption
@@ -122,10 +127,8 @@ object StoreSnapshots {
       .map(_.dir).filter(exists)
     require(chained.nonEmpty, s"no artifacts under $path for kind $kind")
     val aLines = chained.map { dir =>
-      val gen = StoreGenerations.currentGen(dir).getOrElse(
-        sys.error(s"$dir has no generation chain — snapshotting needs " +
-          "chains on every accreting artifact (StoreSnapshots.enable " +
-          "establishes them)"))
+      val gen = StoreGenerations.currentGen(dir)
+        .getOrElse(throw StoreGenerations.noChain(dir))
       s"a\t${rel(path, dir)}\t$gen"
     }
     val fLines = frozenOf(kind, path).filter(exists).flatMap { fdir =>
@@ -164,23 +167,30 @@ object StoreSnapshots {
           "a snapshot only pins the store's current state)")
   }
 
-  /** Drop the snapshot chain (every store manifest) — called by each
-    * store's `build`: an overwrite deletes the per-artifact chains the
-    * snapshots pin, so the rebuilt store starts UN-SNAPSHOTTED until
-    * [[enable]]d again — the store-level face of the contract the
-    * artifact chains document for `SaveMode.Overwrite` (a stale
-    * snapshot over fresh artifacts would otherwise fail every commit
-    * with a missing-chain error). */
-  def invalidate(path: String): Unit =
-    gens(path).foreach(g => io(path).delete(s"${mdir(path)}/gen=$g"))
+  private def noChain(path: String) = new IllegalStateException(
+    s"$path has no store snapshot chain — every store build starts " +
+      "one; adopt a store written without one with `StoreMaintain enable`")
 
-  /** Start the snapshot chain: establish per-artifact chains on every
-    * accreting artifact (idempotent), then publish snapshot 0 pinning
-    * each at its current generation plus the frozen inventory.
-    * Idempotent; returns the current snapshot generation. */
+  /** Start the store's chain at snapshot 0 — the last step of every
+    * store's `build`. The rebuild replaced every file the old chains
+    * name, so the old snapshots and artifact generations are dropped,
+    * every accreting artifact restarts its chain at its fresh
+    * inventory, and snapshot 0 pins those plus the frozen seeds. */
+  private[ext] def start(kind: String, path: String): Unit = {
+    gens(path).foreach(g => io(path).delete(s"${mdir(path)}/gen=$g"))
+    StoreMaintenance.artifactsOf(kind, path)
+      .foreach(s => StoreGenerations.restart(s.dir))
+    publish(path, 0L, entries(kind, path))
+  }
+
+  /** Adopt a store directory written without a snapshot chain: chain
+    * every accreting artifact (keeping any chain it already has) and
+    * publish snapshot 0. Idempotent — a no-op on any store a `build`
+    * wrote. Returns the current snapshot generation. */
   def enable(kind: String, path: String): Long =
     currentGen(path).getOrElse {
-      StoreMaintenance.enableStoreGenerations(kind, path)
+      StoreMaintenance.artifactsOf(kind, path)
+        .foreach(s => StoreGenerations.enable(s.dir))
       publish(path, 0L, entries(kind, path))
       0L
     }
@@ -207,9 +217,7 @@ object StoreSnapshots {
   def commit(kind: String, path: String): Long = {
     var attempt = 0
     while (true) {
-      val cur = currentGen(path).getOrElse(
-        sys.error(s"$path has no store snapshot chain — StoreSnapshots" +
-          ".enable first"))
+      val cur = currentGen(path).getOrElse(throw noChain(path))
       val lines = entries(kind, path)
       val unchanged = io(path).read(s"${mdir(path)}/gen=$cur")
         .contains(lines.mkString("\n"))
@@ -225,11 +233,6 @@ object StoreSnapshots {
     }
     sys.error("unreachable")
   }
-
-  /** [[commit]] when the store is snapshotted, no-op otherwise — the
-    * unconditional call every append path makes. */
-  def commitIfSnapshotted(kind: String, path: String): Option[Long] =
-    if (isSnapshotted(path)) Some(commit(kind, path)) else None
 
   /** FILE-LEVEL store commit — the multi-writer append primitive for
     * MULTI-ARTIFACT stores, where per-chain commits cannot work
@@ -278,9 +281,7 @@ object StoreSnapshots {
     }
     var attempt = 0
     while (true) {
-      val cur = currentGen(path).getOrElse(sys.error(
-        s"$path has no store snapshot chain — concurrent multi-artifact " +
-          "appends need one (StoreSnapshots.enable first)"))
+      val cur = currentGen(path).getOrElse(throw noChain(path))
       val content = io(path).read(s"${mdir(path)}/gen=$cur").getOrElse(
         throw new IllegalStateException(
           s"store snapshot gen=$cur under $path vanished mid-commit"))
@@ -306,7 +307,7 @@ object StoreSnapshots {
       mine.foreach { case (d, _) =>
         require(pinnedChainFiles.contains(d),
           s"$d is not pinned by the current store snapshot of $path — " +
-            "the artifact did not exist at enable time (re-commit the " +
+            "the artifact did not exist when it committed (re-commit the " +
             "store to adopt it before concurrent appends)")
       }
       try {
@@ -324,27 +325,26 @@ object StoreSnapshots {
   /** Adopt every pending file-level commit into its artifact's chain
     * and publish the snapshot that retires the `d` lines — run from
     * the EXCLUSIVE maintenance path before compaction/vacuum, so
-    * those only ever see ordinary chained files. No-op (returns the
-    * current generation) when nothing is pending or the store is not
-    * snapshotted. */
-  def fold(kind: String, path: String): Option[Long] =
-    currentGen(path).map { cur =>
-      val content = io(path).read(s"${mdir(path)}/gen=$cur").getOrElse("")
-      val pending = content.split("\n", -1).toSeq
-        .filter(_.startsWith("d\t"))
-        .map { l =>
-          val Array(_, rDir, rFile) = l.split("\t", 3)
-          (s"$path/$rDir", s"$path/$rFile")
-        }
-        .groupBy(_._1).map { case (d, fs) => d -> fs.map(_._2) }
-      if (pending.isEmpty) cur
-      else {
-        pending.foreach { case (dir, files) =>
-          StoreGenerations.commitOwn(dir, files)
-        }
-        commit(kind, path) // entries() drops the now-chain-covered d lines
+    * those only ever see ordinary chained files. Returns the current
+    * generation (unchanged when nothing is pending). */
+  def fold(kind: String, path: String): Long = {
+    val cur = currentGen(path).getOrElse(throw noChain(path))
+    val content = io(path).read(s"${mdir(path)}/gen=$cur").getOrElse("")
+    val pending = content.split("\n", -1).toSeq
+      .filter(_.startsWith("d\t"))
+      .map { l =>
+        val Array(_, rDir, rFile) = l.split("\t", 3)
+        (s"$path/$rDir", s"$path/$rFile")
       }
+      .groupBy(_._1).map { case (d, fs) => d -> fs.map(_._2) }
+    if (pending.isEmpty) cur
+    else {
+      pending.foreach { case (dir, files) =>
+        StoreGenerations.commitOwn(dir, files)
+      }
+      commit(kind, path) // entries() drops the now-chain-covered d lines
     }
+  }
 
   /** One resolved snapshot: every chained artifact's pinned
     * generation, seeds verified. Readers hold a Pin for the duration
@@ -384,11 +384,8 @@ object StoreSnapshots {
     * every frozen-seed entry (existence + size) LOUDLY, before any
     * scan. One listing + one manifest read + seed stats — driver-side,
     * kilobytes. */
-  def pin(spark: SparkSession, path: String): Pin = {
-    val gen = currentGen(path).getOrElse(
-      sys.error(s"$path has no store snapshot chain"))
-    pinAt(spark, path, gen)
-  }
+  def pin(spark: SparkSession, path: String): Pin =
+    pinAt(spark, path, currentGen(path).getOrElse(throw noChain(path)))
 
   /** [[pin]] at an explicit snapshot generation (time travel within
     * the vacuum keep window — same contract as the chain layer's
@@ -417,37 +414,31 @@ object StoreSnapshots {
           throw new IllegalStateException(
             s"seed file missing at resolve time: $p (inventoried by " +
               s"store snapshot gen=$gen) — the store's frozen artifact " +
-              "was deleted or moved; rebuild or re-enable the store")
+              "was deleted or moved; rebuild the store")
         val now = java.nio.file.Files.size(java.nio.file.Paths.get(p))
         if (now != sz.toLong)
           throw new IllegalStateException(
             s"seed file modified at resolve time: $p is $now bytes, " +
               s"snapshot gen=$gen inventoried ${sz.toLong} — frozen " +
-              "artifacts must not change outside a rebuild; re-enable " +
-              "the store to adopt the new seed")
+              "artifacts must not change outside a rebuild")
       case _ => ()
     }
     new Pin(spark, path, gen, pins, dFiles)
   }
 
-  /** The read hook every store face uses: a snapshot-pinned resolver
-    * when the store carries a chain (ONE pin per face call — all
-    * artifacts mutually consistent), the per-artifact current read
-    * otherwise (pre-snapshot behavior, bit-identical). */
-  def reader(spark: SparkSession, path: String): String => DataFrame =
-    if (isSnapshotted(path)) {
-      val p = pin(spark, path)
-      dir => p.read(dir)
-    } else dir => StoreGenerations.read(spark, dir)
+  /** The read hook every store face uses: ONE pin per face call, so
+    * every artifact it reads is mutually consistent. */
+  def reader(spark: SparkSession, path: String): String => DataFrame = {
+    val p = pin(spark, path)
+    dir => p.read(dir)
+  }
 
   /** [[reader]] pinned to an EXPLICIT snapshot generation — store-level
     * TIME TRAVEL: every artifact resolves at the generation snapshot
     * `gen` pinned (mutually consistent by construction — for BM25 that
     * means the historical postings score against the HISTORICAL df and
     * (N, T), not today's), seeds verified, and a vacuumed generation
-    * fails loudly at resolve ([[pinAt]]'s contract). Requires a
-    * snapshotted store: per-artifact chains alone have no cross-
-    * artifact generation mapping to travel along. */
+    * fails loudly at resolve ([[pinAt]]'s contract). */
   def readerAt(spark: SparkSession, path: String,
                gen: Long): String => DataFrame = {
     val p = pinAt(spark, path, gen)
@@ -463,7 +454,7 @@ object StoreSnapshots {
   def vacuum(kind: String, path: String, keepGens: Int): (Int, Int) = {
     require(keepGens >= 1, "must keep at least one snapshot")
     val all = gens(path)
-    require(all.nonEmpty, s"no store snapshots under $path")
+    if (all.isEmpty) throw noChain(path)
     val (drop, keep) = all.splitAt(math.max(0, all.length - keepGens))
     val keptLines = keep.flatMap { g =>
       io(path).read(s"${mdir(path)}/gen=$g").getOrElse("")
@@ -487,8 +478,7 @@ object StoreSnapshots {
       }
       .groupBy(_._1).map { case (d, fs) => d -> fs.map(_._2).toSet }
     val (nf, nm) = StoreMaintenance.artifactsOf(kind, path)
-      .map(_.dir).filter(StoreGenerations.isGenerational)
-      .map(d => StoreGenerations.vacuumKeeping(d, 1,
+      .map(_.dir).map(d => StoreGenerations.vacuumKeeping(d, 1,
         pinned.getOrElse(canon(d), Set.empty),
         dPinned.getOrElse(canon(d), Set.empty)))
       .foldLeft((0, 0)) { case ((a, b), (c, e)) => (a + c, b + e) }

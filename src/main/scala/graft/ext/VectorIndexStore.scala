@@ -85,7 +85,6 @@ object VectorIndexStore {
                         codebook: DataFrame, numSub: Int, subDim: Int,
                         cellBuckets: Int,
                         preAssigned: Option[DataFrame]): Unit = {
-    StoreSnapshots.invalidate(path) // a rebuild starts un-snapshotted
     val spark = corpus.sparkSession
     import spark.implicits._
     // bucket-keyed repartition before the partitionBy write: off the
@@ -118,6 +117,8 @@ object VectorIndexStore {
         .repartition(col("cell_bucket"))
         .write.partitionBy("cell_bucket").mode(SaveMode.Overwrite)
         .parquet(s"$path/codes.parquet"))
+    // a (re)build starts a fresh chain at store snapshot 0
+    StoreSnapshots.start("vector", path)
   }
 
   /** The index config — 1 row, driver-side (bounded-collect class). */
@@ -151,16 +152,14 @@ object VectorIndexStore {
       .write.partitionBy("cell_bucket").mode(SaveMode.Append)
       .parquet(s"$path/codes.parquet")
     StoreGenerations.commitAppend(s"$path/codes.parquet")
-    StoreSnapshots.commitIfSnapshotted("vector", path)
-    autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(spark,
-      StoreMaintenance.artifactsOf("vector", path), am,
-      snapshot = Some(("vector", path))))
+    StoreSnapshots.commit("vector", path)
+    autoMaintain.foreach(am =>
+      StoreMaintenance.maintainIfNeeded(spark, "vector", path, am))
   }
 
   /** REPLAY-SAFE append for a STREAMING ingest — exactly-once store
     * state from idempotence, the merge-sink argument applied to the
-    * vector store. Requires a [[StoreGenerations]] chain on the codes
-    * artifact: the batch encodes under the frozen geometry into a
+    * vector store: the batch encodes under the frozen geometry into a
     * batch-scratch, lands as ONE canonical file per populated bucket
     * (`cell_bucket=X/gb<batchId>.parquet` — the bucket-clustered
     * repartition guarantees one file per bucket, enforced), and the
@@ -176,10 +175,6 @@ object VectorIndexStore {
                       runTag: String = ""): Unit = {
     val spark = newVectors.sparkSession
     val codes = s"$path/codes.parquet"
-    require(StoreGenerations.isGenerational(codes),
-      s"streaming append needs a generation chain on $codes " +
-        "(StoreGenerations.enable / StoreMaintain enable) — without " +
-        "one a replayed micro-batch would double its rows")
     val (numSub, subDim, cellBuckets) = params(spark, path)
     StoreGenerations.landCanonicalBucketed(
       encode(newVectors, idCol, vecCol,
@@ -187,7 +182,7 @@ object VectorIndexStore {
         stored(spark, path, "codebook", idCol, vecCol),
         numSub, subDim, cellBuckets),
       codes, "cell_bucket", batchId, runTag)
-    StoreSnapshots.commitIfSnapshotted("vector", path)
+    StoreSnapshots.commit("vector", path)
   }
 
   /** CONCURRENT append — any number of writers fold batches into the
@@ -203,7 +198,7 @@ object VectorIndexStore {
     * on the winner's generation, so every surviving generation differs
     * from its parent by exactly one writer's whole batch — no torn
     * batches, no double adoption, pinned readers untouched. The
-    * snapshot commit (when enabled) retries the same way; it pins
+    * snapshot commit retries the same way; it pins
     * current state, so losing that race just means pinning a newer
     * consistent state. Caller guarantees new ids, as for [[append]].
     * Returns the codes-chain generation this writer's commit
@@ -212,9 +207,6 @@ object VectorIndexStore {
                 path: String, writerTag: String): Long = {
     val spark = newVectors.sparkSession
     val codes = s"$path/codes.parquet"
-    require(StoreGenerations.isGenerational(codes),
-      s"concurrent append needs a generation chain on $codes " +
-        "(StoreGenerations.enable / StoreMaintain enable)")
     val (numSub, subDim, cellBuckets) = params(spark, path)
     val landed = StoreGenerations.landOwnBucketed(
       encode(newVectors, idCol, vecCol,
@@ -223,7 +215,7 @@ object VectorIndexStore {
         numSub, subDim, cellBuckets),
       codes, "cell_bucket", writerTag)
     val gen = StoreGenerations.commitOwn(codes, landed)
-    StoreSnapshots.commitIfSnapshotted("vector", path)
+    StoreSnapshots.commit("vector", path)
     gen
   }
 
@@ -239,8 +231,8 @@ object VectorIndexStore {
     * rebuild IS a fresh build over base + appends, so its output is
     * bit-identical to one (spec-pinned), and the layout config
     * (num_sub, sub_dim, cell_buckets) carries over from the store.
-    * Overwrites the store; a generation chain, like any rebuild's,
-    * starts fresh (re-enable after). */
+    * Overwrites the store; like any rebuild, it starts a fresh chain
+    * at store snapshot 0. */
   def rebuild(corpus: DataFrame, idCol: String, vecCol: String,
               path: String, k: Int, iters: Int): Unit = {
     rebuildReturning(corpus, idCol, vecCol, path, k, iters)
@@ -395,7 +387,7 @@ object VectorIndexStore {
       .write.partitionBy("cell_bucket").mode(SaveMode.Append)
       .parquet(s"$path/codes.parquet")
     StoreGenerations.commitAppend(s"$path/codes.parquet")
-    StoreSnapshots.commitIfSnapshotted("vector", path)
+    StoreSnapshots.commit("vector", path)
     if (batchMean > factor * cal) {
       // re-calibrate from the rebuild's OWN checkpointed assignment —
       // value-identical to calibrate(corpus, ...) over the rebuilt
@@ -420,8 +412,8 @@ object VectorIndexStore {
   def query(spark: SparkSession, path: String, queries: DataFrame,
             idCol: String, vecCol: String, k: Int, nprobe: Int,
             asOf: Option[Long] = None): DataFrame = {
-    // resolve FIRST: on a snapshotted store this verifies the frozen
-    // seeds (centroids/codebook/params) loudly before any scan plans.
+    // resolve FIRST: the pin verifies the frozen seeds
+    // (centroids/codebook/params) loudly before any scan plans.
     // `asOf` = store-level time travel (StoreSnapshots.readerAt):
     // the codes resolve at the generation snapshot `asOf` pinned —
     // the index as it stood at that commit, frozen geometry verified
@@ -449,9 +441,9 @@ object VectorIndexStore {
       .select("__cell").distinct()
       .collect().map(_.getLong(0)).sorted
     val buckets = probedCells.map(_ % cellBuckets).distinct
-    // generation-aware read: a chained store's probe resolves a
-    // pinned file list (bucket-dir partition pruning preserved via
-    // basePath), so compaction never blocks queries
+    // the probe resolves a pinned file list (bucket-dir partition
+    // pruning preserved via basePath), so compaction never blocks
+    // queries
     val codes = rd(s"$path/codes.parquet")
       .filter(col("cell_bucket").isin(buckets: _*) &&
         col("cell").isin(probedCells: _*))

@@ -806,7 +806,6 @@ object StarQueries {
     val corpus = d.filter(col("doc_id") >= 20)
     graft.ext.RetrievalIndexStore.build(
       corpus.filter(col("doc_id") % 7 =!= 0), "doc_id", "text", store)
-    graft.ext.StoreMaintenance.enableStoreGenerations("retrieval", store)
     val staged = java.nio.file.Files.createTempDirectory("q_stream_bm25i")
     val ckpt = java.nio.file.Files.createTempDirectory("q_stream_bm25i_ck")
     try {
@@ -843,8 +842,6 @@ object StarQueries {
     val store = s"/tmp/graft_sigstore_si_$tail"
     val d = Tables.documents(spark, dir).select("doc_id", "text")
     graft.ext.SignatureStore.build(d, "doc_id", "text", store)
-    graft.ext.StoreGenerations.enable(s"$store/bands.parquet")
-    graft.ext.StoreGenerations.enable(s"$store/sets.parquet")
     val waves = d.filter(col("doc_id") % 13 === 0)
       .select((col("doc_id") + 600000).as("doc_id"),
         concat(col("text"), lit(" graftincr end")).as("text"))
@@ -891,7 +888,6 @@ object StarQueries {
       cands.filter(col("vec_id") % 5 =!= 2), "vec_id", "embedding",
       path, cents, residualCb, numSub = graft.queries.ExtQueries.PqSub,
       subDim = graft.queries.ExtQueries.PqDim)
-    graft.ext.StoreGenerations.enable(s"$path/codes.parquet")
     val staged = java.nio.file.Files.createTempDirectory("q_stream_anni")
     val ckpt = java.nio.file.Files.createTempDirectory("q_stream_anni_ck")
     try {

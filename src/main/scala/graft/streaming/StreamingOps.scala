@@ -732,8 +732,7 @@ object StreamingOps {
     * nothing — the daily release loop, exactly-once, as a stream.
     * [[runSigIngestSink]] is the fold alone; this is the loop.
     *
-    * Requires chains on the release store's accreting artifacts
-    * (`StoreMaintain enable release <path>`). `benchmark` is the
+    * `benchmark` is the
     * static decon reference. `onBatch` receives each micro-batch's
     * bundle (ledger/packs/shards/card/manifest) — the delta artifacts
     * a deployment lands wherever its training pipeline reads; the

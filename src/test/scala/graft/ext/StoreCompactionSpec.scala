@@ -9,8 +9,8 @@ import graft.TestSpark
 /** Store compaction must be INVISIBLE in every answer (physical
   * rewrite, identical relational content — including the BM25 store's
   * delta-summing folds) and must actually shrink the file inventory
-  * the appends accreted; the two-phase swap must be recoverable from
-  * every crash window. */
+  * the appends accreted; a crash between or inside artifact
+  * compactions must heal on re-run. */
 class StoreCompactionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -18,8 +18,9 @@ class StoreCompactionSpec extends AnyFunSuite {
   private def docs: DataFrame =
     graft.sources.Tables.documents(spark, dir).select("doc_id", "text")
 
+  /** The artifact's LIVE file count (its current generation). */
   private def nFiles(d: String): Int =
-    graft.sources.Layout.listParquet(d).length
+    StoreGenerations.currentFiles(d).get.length
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
@@ -66,18 +67,19 @@ class StoreCompactionSpec extends AnyFunSuite {
         slice(TextOps.tokens(col("text")), 1, 3).as("terms"))
     val before = rows(RetrievalIndexStore.query(spark, store, probes,
       "query_id", "terms", k = 5))
-    val dfBefore = rows(spark.read.parquet(s"$store/df.parquet")
+    val dfBefore = rows(StoreGenerations.read(spark, s"$store/df.parquet")
       .groupBy("tok").agg(sum("df").as("df")))
     StoreMaintenance.compactRetrievalIndexStore(spark, store)
     assert(rows(RetrievalIndexStore.query(spark, store, probes,
       "query_id", "terms", k = 5)) == before && before.nonEmpty)
     // the fold left ONE df row per token with the same sums, and one
     // stats row carrying the same (N, T)
-    val dfTable = spark.read.parquet(s"$store/df.parquet")
+    val dfTable = StoreGenerations.read(spark, s"$store/df.parquet")
     assert(dfTable.groupBy("tok").count()
       .filter(col("count") > 1).count() == 0)
     assert(rows(dfTable.groupBy("tok").agg(sum("df").as("df"))) == dfBefore)
-    assert(spark.read.parquet(s"$store/stats.parquet").count() == 1)
+    assert(StoreGenerations.read(spark, s"$store/stats.parquet")
+      .count() == 1)
   }
 
   test("vector store: probed-cell pruning still keys on the preserved bucket layout") {
@@ -105,8 +107,8 @@ class StoreCompactionSpec extends AnyFunSuite {
       "vec_id", "embedding", k = 3, nprobe = 2)) == before
       && before.nonEmpty)
     assert(reports.head.rowsAfter == reports.head.rowsBefore)
-    // one file per cell-bucket directory after compaction
-    val buckets = graft.sources.Layout.listParquet(s"$store/codes.parquet")
+    // one live file per cell-bucket directory after compaction
+    val buckets = StoreGenerations.currentFiles(s"$store/codes.parquet").get
       .flatMap("cell_bucket=(\\d+)/".r.findFirstMatchIn(_).map(_.group(1)))
     assert(buckets.distinct.length == buckets.length)
     assert(buckets.length < fBefore)
@@ -132,10 +134,10 @@ class StoreCompactionSpec extends AnyFunSuite {
     StoreMaintenance.compactRetrievalIndexStore(spark, store)
     assert(rows(RetrievalIndexStore.phraseQuery(spark, store, q,
       "query_id", "t1", "t2", k = 3)) == direct)
-    // compaction covered the positional artifact too (one file per
-    // populated bucket dir)
-    val posFiles = graft.sources.Layout
-      .listParquet(s"$store/positions.parquet")
+    // compaction covered the positional artifact too (one live file
+    // per populated bucket dir)
+    val posFiles = StoreGenerations
+      .currentFiles(s"$store/positions.parquet").get
       .flatMap("tok_bucket=(\\d+)/".r.findFirstMatchIn(_).map(_.group(1)))
     assert(posFiles.distinct.length == posFiles.length)
   }
@@ -166,13 +168,14 @@ class StoreCompactionSpec extends AnyFunSuite {
               (col("doc_id") + off).cast("string"))).as("url"))
     Seq(a, b).foreach(p => ReleaseStore.incrementalRelease(spark, p,
       batch(50000L, 5, " graftday1"), bench))
-    val urlRowsBefore = spark.read.parquet(s"$b/urls.parquet").count()
+    val urlRowsBefore =
+      StoreGenerations.read(spark, s"$b/urls.parquet").count()
     val reports = StoreMaintenance.compactReleaseStore(spark, b)
     // the urls fold dropped the duplicate member rows day 1 appended
     val urls = reports.find(_.artifact.endsWith("urls.parquet")).get
     assert(urls.rowsAfter < urlRowsBefore)
-    assert(spark.read.parquet(s"$b/urls.parquet").distinct().count()
-      == urls.rowsAfter)
+    assert(StoreGenerations.read(spark, s"$b/urls.parquet").distinct()
+      .count() == urls.rowsAfter)
     // day 2 (fold-free measurement face): the compacted store must
     // route every disposition exactly like the un-compacted twin
     def ledgerOf(p: String): Set[(Long, String)] =
@@ -182,45 +185,6 @@ class StoreCompactionSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getString(1))).toSet
     val la = ledgerOf(a)
     assert(la == ledgerOf(b) && la.nonEmpty)
-  }
-
-  test("crash recovery: every swap window rolls to a consistent state") {
-    import java.nio.file.{Files, Paths}
-    val spark2 = spark
-    import spark2.implicits._
-    def mk(path: String, n: Int): Unit =
-      (1 to n).toDF("x").write.mode("overwrite").parquet(path)
-    val base = "/tmp/graft_cptspec_crash"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    // window A: crash between the two renames — live dir gone, scratch
-    // verified -> roll FORWARD (scratch content becomes live)
-    val a = s"$base/a.parquet"
-    mk(s"$a.__compact", 3)
-    Files.createFile(Paths.get(s"$a.__compact/_GRAFT_VERIFIED"))
-    assert(StoreMaintenance.recoverArtifact(a) == "rolled_forward")
-    assert(spark.read.parquet(a).count() == 3)
-    // window B: crash after parking live, before scratch verified ->
-    // roll BACK (old bytes restored, unverified scratch discarded)
-    val b = s"$base/b.parquet"
-    mk(s"$b.__retired", 4)
-    mk(s"$b.__compact", 1) // no marker: cannot be trusted
-    assert(StoreMaintenance.recoverArtifact(b) == "rolled_back")
-    assert(spark.read.parquet(b).count() == 4)
-    assert(!Files.exists(Paths.get(s"$b.__compact")))
-    // window C: live dir intact, stale leftovers from a dead attempt
-    val c = s"$base/c.parquet"
-    mk(c, 5); mk(s"$c.__compact", 2); mk(s"$c.__retired", 2)
-    assert(StoreMaintenance.recoverArtifact(c) == "clean")
-    assert(spark.read.parquet(c).count() == 5)
-    assert(!Files.exists(Paths.get(s"$c.__compact")) &&
-      !Files.exists(Paths.get(s"$c.__retired")))
-    // compactArtifact itself runs recovery on entry: window A again,
-    // then a normal compaction proceeds from the healed state
-    val e = s"$base/e.parquet"
-    mk(e, 7)
-    mk(s"$e.__compact", 1)
-    val r = StoreMaintenance.compactArtifact(spark, e, None)
-    assert(r.rowsAfter == 7L && spark.read.parquet(e).count() == 7)
   }
 
   test("footer audit prices the accretion and the compaction's reversal") {
@@ -280,7 +244,11 @@ class StoreCompactionSpec extends AnyFunSuite {
     StoreMaintenance.compactRetrievalIndexStore(spark, store)
     assert(rows(RetrievalIndexStore.query(spark, store, probes,
       "query_id", "terms", k = 5)) == expected)
-    assert(spark.read.parquet(s"$store/stats.parquet").count() == 1)
+    assert(StoreGenerations.read(spark, s"$store/stats.parquet")
+      .count() == 1)
+    // once the vacuum retires the superseded generations, the disk
+    // holds one df file per populated bucket dir
+    StoreMaintenance.vacuumStore("retrieval", store, 1)
     val dfFiles = graft.sources.Layout.listParquet(s"$store/df.parquet")
       .flatMap("tok_bucket=(\\d+)/".r.findFirstMatchIn(_).map(_.group(1)))
     assert(dfFiles.distinct.length == dfFiles.length)
@@ -315,7 +283,7 @@ class StoreCompactionSpec extends AnyFunSuite {
       Some("tok_bucket"))
     // kill #2: the NEXT run died inside the df artifact's compaction
     // BEFORE verification — an unverified scratch directory is on
-    // disk (the state recoverArtifact's "clean" window repairs)
+    // disk (the dead attempt the next compaction overwrites)
     val deadScratch = s"$store/df.parquet.__compact"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(deadScratch))
@@ -327,15 +295,26 @@ class StoreCompactionSpec extends AnyFunSuite {
     // a reader lists)
     assert(rows(RetrievalIndexStore.query(spark, store, probes,
       "query_id", "terms", k = 5)) == expQ)
-    // ONE re-run heals everything: recovery sweeps the dead scratch,
+    // ONE re-run heals everything: the dead scratch is overwritten,
     // the compacted artifact folds to itself, the rest compact fresh
     StoreMaintenance.compactRetrievalIndexStore(spark, store)
     assert(rows(RetrievalIndexStore.query(spark, store, probes,
       "query_id", "terms", k = 5)) == expQ)
     assert(rows(RetrievalIndexStore.phraseQuery(spark, store,
       phrases, "query_id", "t1", "t2", k = 5)) == expP)
-    // FULLY-compacted state: one file per populated bucket dir on
-    // every bucketed artifact, one stats file, zero crash leftovers
+    // FULLY-compacted state: one live file per populated bucket dir
+    // on every bucketed artifact and one live stats file; once the
+    // vacuum retires the superseded generations the disk holds
+    // exactly that, with zero crash leftovers
+    Seq("postings", "df", "positions").foreach { a =>
+      val per = StoreGenerations.currentFiles(s"$store/$a.parquet").get
+        .groupBy(p => p.substring(0, p.lastIndexOf('/')))
+      assert(per.values.forall(_.length == 1),
+        s"$a not fully compacted: ${per.view.mapValues(_.length).toMap}")
+    }
+    assert(StoreGenerations.currentFiles(s"$store/stats.parquet")
+      .get.length == 1)
+    StoreMaintenance.vacuumStore("retrieval", store, 1)
     Seq("postings", "df", "positions").foreach { a =>
       val per = graft.sources.Layout.listParquet(s"$store/$a.parquet")
         .groupBy(p => p.substring(0, p.lastIndexOf('/')))
@@ -347,8 +326,6 @@ class StoreCompactionSpec extends AnyFunSuite {
     Seq("postings", "df", "stats", "positions").foreach { a =>
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
         s"$store/$a.parquet.__compact")), s"$a scratch leftover")
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
-        s"$store/$a.parquet.__retired")), s"$a retired leftover")
     }
   }
 }

@@ -194,43 +194,27 @@ abstract class StoreGenerationsBehavior(tag: String, objectStore: Boolean)
       "doc_id", "text"))
     // ratio just above the current fragmentation: no-op
     val calm = StoreMaintenance.AutoMaintain(ratio = nLive + 1.0)
-    assert(StoreMaintenance.maintainIfNeeded(spark,
-      StoreMaintenance.artifactsOf("sig", store), calm).isEmpty)
+    assert(StoreMaintenance.maintainIfNeeded(spark, "sig", store,
+      calm).isEmpty)
     assert(StoreGenerations.currentFiles(bands).get.length == nLive)
     // tiny-store ideal is 1 file; ratio below the fragmentation: fires
     val eager = StoreMaintenance.AutoMaintain(ratio = math.max(1.0,
       nLive - 1.0))
-    val reports = StoreMaintenance.maintainIfNeeded(spark,
-      StoreMaintenance.artifactsOf("sig", store), eager)
+    val reports = StoreMaintenance.maintainIfNeeded(spark, "sig", store,
+      eager)
     assert(reports.exists(_.artifact == bands))
     assert(StoreGenerations.currentFiles(bands).get.length < nLive)
     assert(rows(SignatureStore.ingest(spark, store, batch,
       "doc_id", "text")) == expected)
     // compacted to ideal: the same eager ratio is now a no-op
-    assert(StoreMaintenance.maintainIfNeeded(spark,
-      StoreMaintenance.artifactsOf("sig", store), eager).isEmpty)
+    assert(StoreMaintenance.maintainIfNeeded(spark, "sig", store,
+      eager).isEmpty)
     // the APPEND-side knob: another wave with autoMaintain set keeps
     // the store at fresh-build file counts with zero external ticks
     SignatureStore.append(batch, "doc_id", "text", store,
       autoMaintain = Some(StoreMaintenance.AutoMaintain(ratio = 2.0)))
     val nAfter = StoreGenerations.currentFiles(bands).get.length
     assert(nAfter <= 2 * 1 + 1, s"self-maintained store at $nAfter files")
-  }
-
-  test("non-generational stores keep the quiesced swap path " +
-      "bit-for-bit (no chain, no manifests)") {
-    val store = fresh("/tmp/graft_genspec_plain")
-    val d = docs
-    SignatureStore.build(d.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", store)
-    SignatureStore.append(d.filter(col("doc_id") % 2 === 1),
-      "doc_id", "text", store)
-    val expected = rows(SignatureStore.ingest(spark, store, batch,
-      "doc_id", "text"))
-    StoreMaintenance.compactSignatureStore(spark, store)
-    assert(!StoreGenerations.isGenerational(s"$store/bands.parquet"))
-    assert(rows(SignatureStore.ingest(spark, store, batch,
-      "doc_id", "text")) == expected)
   }
 }
 

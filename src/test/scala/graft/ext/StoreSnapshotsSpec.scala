@@ -12,7 +12,9 @@ import graft.TestSpark
   * post-commit query sees all-new; frozen seed files verify at
   * resolve time (missing/modified fails loudly BEFORE any scan);
   * snapshot-aware vacuum keeps every artifact generation a surviving
-  * snapshot pins; and the whole protocol runs unchanged on the
+  * snapshot pins; every build publishes snapshot 0 (a rebuild
+  * restarts the chain) and every library compaction publishes its
+  * own snapshot; and the whole protocol runs unchanged on the
   * object-store manifest transport. */
 abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     extends AnyFunSuite {
@@ -116,6 +118,104 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     assert(after == direct,
       "post-commit the store must answer as the extended corpus")
     assert(after != base, "the batch shifts at least one ranking")
+  }
+
+  test("library compaction publishes its snapshot: after a keep-1 " +
+      "vacuum readers resolve only compacted files, answers unchanged") {
+    val path = fresh("/tmp/graft_snapspec_cpt")
+    RetrievalIndexStore.build(corpus, "doc_id", "text", path)
+    RetrievalIndexStore.append(batchB, "doc_id", "text", path)
+    val before = rows(RetrievalIndexStore.query(spark, path, queries,
+      "query_id", "terms", k = 5))
+    assert(before.nonEmpty)
+    StoreMaintenance.compactRetrievalIndexStore(spark, path)
+    StoreMaintenance.vacuumStore("retrieval", path, 1)
+    // the current pin names the compacted generation: every file it
+    // resolves carries the compaction's gen<N>- stamp
+    val files = StoreSnapshots.reader(spark, path)(
+      s"$path/postings.parquet").inputFiles
+    assert(files.nonEmpty &&
+      files.forall(f => "/gen\\d+-[^/]*$".r.findFirstIn(f).isDefined),
+      files.mkString(", "))
+    assert(rows(RetrievalIndexStore.query(spark, path, queries,
+      "query_id", "terms", k = 5)) == before)
+  }
+
+  test("every store kind is at snapshot 0 right after build; a rebuild " +
+      "restarts the chain and asOf = 0 answers the rebuilt contents") {
+    val e = graft.sources.Tables.embeddings(spark, dir)
+      .select("vec_id", "embedding")
+    val cands = e.filter(col("vec_id") >= 20)
+    val cents = cands.filter(col("vec_id") % 7 === 0)
+    val qs = e.filter(col("vec_id") < 20)
+    val probe = docs.filter(col("doc_id") % 13 === 0)
+      .select((col("doc_id") + 600000).as("doc_id"),
+        concat(col("text"), lit(" snapend")).as("text"))
+    val relDocs = graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"),
+        concat(lit("https://ex.example/d/"), col("doc_id").cast("string"))
+          .as("url"))
+    def half(df: DataFrame, id: String, h: Int) = df.filter(col(id) % 2 === h)
+    // per kind: build over half h, one append (the chain moves past
+    // 0), and the answer the store gives AS OF snapshot 0
+    case class Kind(name: String, build: (String, Int) => Unit,
+                    grow: String => Unit, at0: String => Set[Seq[Any]])
+    val kinds = Seq(
+      Kind("sig",
+        (p, h) => SignatureStore.build(half(docs, "doc_id", h),
+          "doc_id", "text", p),
+        p => SignatureStore.append(probe, "doc_id", "text", p),
+        p => rows(SignatureStore.ingest(spark, p, probe, "doc_id", "text",
+          resolve = Some(StoreSnapshots.readerAt(spark, p, 0L))))),
+      Kind("retrieval",
+        (p, h) => RetrievalIndexStore.build(half(corpus, "doc_id", h),
+          "doc_id", "text", p),
+        p => RetrievalIndexStore.append(batchB, "doc_id", "text", p),
+        p => rows(RetrievalIndexStore.query(spark, p, queries,
+          "query_id", "terms", k = 5, asOf = Some(0L)))),
+      Kind("vector",
+        (p, h) => VectorIndexStore.build(half(cands, "vec_id", h),
+          "vec_id", "embedding", p, cents, cents,
+          numSub = 8, subDim = 8, cellBuckets = 16),
+        p => VectorIndexStore.append(
+          qs.select((col("vec_id") + 900000).as("vec_id"), col("embedding")),
+          "vec_id", "embedding", p),
+        p => rows(VectorIndexStore.query(spark, p, qs, "vec_id",
+          "embedding", k = 3, nprobe = 3, asOf = Some(0L)))),
+      Kind("release",
+        (p, h) => {
+          val d = half(relDocs, "doc_id", h)
+          ReleaseStore.build(d,
+            d.select(col("doc_id"), lit("kept").as("disposition")), p)
+        },
+        // the fold's signature step under the release's one chain
+        p => {
+          SignatureStore.appendChains(probe, "doc_id", "text", s"$p/sig")
+          StoreSnapshots.commit("release", p)
+        },
+        p => {
+          val rd = StoreSnapshots.readerAt(spark, p, 0L)
+          rows(rd(s"$p/urls.parquet")) ++
+            rows(rd(s"$p/sig/sets.parquet").select("doc_id"))
+        }))
+    kinds.foreach { k =>
+      val path = fresh(s"/tmp/graft_snapspec_rebuild_${k.name}")
+      val twin = fresh(s"/tmp/graft_snapspec_rebuild_${k.name}_twin")
+      k.build(twin, 1)
+      k.build(path, 0)
+      // no enable call anywhere: the build itself published snapshot 0
+      assert(StoreSnapshots.currentGen(path).contains(0L), k.name)
+      val old = k.at0(path)
+      k.grow(path)
+      assert(StoreSnapshots.currentGen(path).contains(1L), k.name)
+      k.build(path, 1)
+      assert(StoreSnapshots.currentGen(path).contains(0L),
+        s"${k.name}: a rebuild restarts the chain at 0")
+      val rebuilt = k.at0(path)
+      assert(rebuilt == k.at0(twin) && rebuilt.nonEmpty, k.name)
+      assert(rebuilt != old,
+        s"${k.name}: snapshot 0 still answers the old build")
+    }
   }
 
   test("sig store: bands committed without sets stays invisible until " +
