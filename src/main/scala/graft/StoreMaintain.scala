@@ -26,8 +26,9 @@ import graft.ext.StoreMaintenance
   * Concurrency contract: every store is snapshotted from its build,
   * so compaction is ONLINE — readers keep resolving their pinned
   * snapshot while the compacted generations publish under one new
-  * snapshot, and only `vacuum` retires bytes. The single-writer
-  * contract covers maintenance and the plain append paths. */
+  * snapshot, and only `vacuum` retires bytes. Maintenance runs
+  * exclusively; appends may race each other (one conditional
+  * snapshot create per append). */
 object StoreMaintain {
 
   /** Minimal JSON string escaping — paths can carry quotes or

@@ -120,9 +120,9 @@ object ReleaseStore {
     *
     * `canonicalBatch = Some((batchId, runTag))`: the STREAMING fold —
     * every i6 write lands as one canonical `[r<tag>-]gb<batchId>`
-    * file per artifact ([[StoreGenerations.landCanonical]]), so a
-    * replayed micro-batch overwrites its own bytes and commits
-    * nothing: the whole daily loop becomes
+    * file per artifact ([[StoreGenerations.land]]), so a replayed
+    * micro-batch overwrites its own bytes and commits nothing: the
+    * whole daily loop becomes
     * exactly-once per micro-batch, the merge-sink argument applied to
     * the release store. The probe/route stages are reads and are
     * replay-idempotent by construction. */
@@ -289,44 +289,26 @@ object ReleaseStore {
     // --- fold the batch into the store: survivors join the released
     // index, every batch url/hash joins the seen filters — the NEXT
     // batch probes today's ----------------------------------------
-    if (foldBatch) canonicalBatch match {
-      case Some((batchId, runTag)) =>
-        // overlap the fold's four artifact WRITES (sig bands+sets,
-        // urls, hashes — independent derivations over fin/nb, each a
-        // tiny batch-sized job whose fixed cost dominates; guide
-        // §2.6); the chain commits keep their documented order after
-        Par.run(
-          () => SignatureStore.stageCanonicalWrites(
-            fin.select("doc_id", "text"), "doc_id", "text",
-            s"$path/sig", batchId, runTag),
-          () => StoreGenerations.stageCanonical(
-            nb.select(col("__nu").as("norm_url")).distinct(),
-            s"$path/urls.parquet", batchId, runTag),
-          () => StoreGenerations.stageCanonical(
-            nb.select(md5(col("text")).as("h")).distinct(),
-            s"$path/hashes.parquet", batchId, runTag))
-        SignatureStore.commitCanonicalChains(s"$path/sig")
-        StoreGenerations.commitAppend(s"$path/urls.parquet")
-        StoreGenerations.commitAppend(s"$path/hashes.parquet")
-        StoreSnapshots.commit("release", path)
-        autoMaintain.foreach(am =>
-          StoreMaintenance.maintainIfNeeded(spark, "release", path, am))
-      case None =>
-        SignatureStore.appendChains(fin.select("doc_id", "text"),
-          "doc_id", "text", s"$path/sig")
-        nb.select(col("__nu").as("norm_url")).distinct()
-          .write.mode(SaveMode.Append).parquet(s"$path/urls.parquet")
-        StoreGenerations.commitAppend(s"$path/urls.parquet")
-        nb.select(md5(col("text")).as("h")).distinct()
-          .write.mode(SaveMode.Append).parquet(s"$path/hashes.parquet")
-        StoreGenerations.commitAppend(s"$path/hashes.parquet")
-        // store-level atomic commit: tomorrow's probes see today's
-        // fold across sig/urls/hashes all at once, never partially
-        StoreSnapshots.commit("release", path)
-        // in-band lifecycle knob (see SignatureStore.append): a daily
-        // loop with autoMaintain set needs no external compaction tick
-        autoMaintain.foreach(am =>
-          StoreMaintenance.maintainIfNeeded(spark, "release", path, am))
+    if (foldBatch) {
+      // one landing of the fold's four artifacts (sig bands+sets, urls,
+      // hashes — independent derivations over fin/nb, each a tiny
+      // batch-sized job whose fixed cost dominates, so they overlap;
+      // guide §2.6), then ONE store commit: tomorrow's probes see
+      // today's fold across sig/urls/hashes all at once, never partially
+      val landed = Par.map(Seq[() => Map[String, Seq[String]]](
+        () => SignatureStore.land(fin.select("doc_id", "text"),
+          "doc_id", "text", s"$path/sig", canonicalBatch),
+        () => Map(s"$path/urls.parquet" -> StoreGenerations.land(
+          nb.select(col("__nu").as("norm_url")).distinct(),
+          s"$path/urls.parquet", None, canonicalBatch)),
+        () => Map(s"$path/hashes.parquet" -> StoreGenerations.land(
+          nb.select(md5(col("text")).as("h")).distinct(),
+          s"$path/hashes.parquet", None, canonicalBatch)))).reduce(_ ++ _)
+      StoreSnapshots.commitLanded("release", path, landed)
+      // in-band lifecycle knob (see SignatureStore.append): a daily
+      // loop with autoMaintain set needs no external compaction tick
+      autoMaintain.foreach(am =>
+        StoreMaintenance.maintainIfNeeded(spark, "release", path, am))
     }
 
     CorpusRelease.Bundle(ledger, packs, shards, card, manifest)

@@ -215,11 +215,23 @@ object RetrievalIndexStore {
     * re-truncated against the resident top-N (that would mean
     * rewriting resident buckets per batch); the cap re-applies at the
     * next rebuild — the same snapshot-until-rebuild posture as the
-    * vector index's frozen geometry. df stays exact either way. */
+    * vector index's frozen geometry. df stays exact either way.
+    *
+    * The one append route (see [[SignatureStore.append]]): postings,
+    * df deltas, the stats row and — on a positional store — positions
+    * land in their artifacts ([[StoreGenerations.land]]), then ONE
+    * conditional snapshot create publishes exactly those files
+    * ([[StoreSnapshots.commitLanded]]). A reader can never score the
+    * batch's postings against document frequencies that don't include
+    * them (all-old or all-new, however many writers race), and a
+    * failed append's leftovers are never published — a plain retry
+    * converges. `batch = Some((batchId, runTag))` lands under the
+    * canonical per-batch names, the replay-safe streaming form.
+    * Returns the store snapshot generation that carries the batch. */
   def append(incoming: DataFrame, idCol: String, textCol: String,
              path: String,
-             autoMaintain: Option[StoreMaintenance.AutoMaintain] = None)
-      : Unit = {
+             autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
+             batch: Option[(Long, String)] = None): Long = {
     val spark = incoming.sparkSession
     val tokBuckets = params(spark, path)
     // a positional store stays positional: the batch's positions land
@@ -227,109 +239,24 @@ object RetrievalIndexStore {
     // appended docs exactly as built ones (per-doc facts — no
     // cross-doc state to reconcile, same as the scored postings); the
     // positions and postings share ONE tokenize pass (derive).
-    // All four artifact WRITES are independent — overlap them (guide
-    // §2.6); the chain commits keep their documented order below.
-    // FAILURE WINDOW (disclosed): if any one write fails, Par rethrows
-    // after all settle and NO chain commits run — the other artifacts'
-    // completed-but-uncommitted part files stay on disk, and the next
-    // commitAppend on those artifacts would adopt them alongside the
-    // retry's rows (double-publish). This window existed per-artifact
-    // before the overlap; it now spans the batch. A failed append
-    // therefore requires a vacuum before a retry.
-    // Exactly-once ingest loops use [[appendCanonical]], whose
-    // deterministic per-batch names make the retry overwrite its own
-    // bytes instead.
-    val positional = hasPositions(path)
     val (post, positions) = derive(incoming, idCol, textCol, tokBuckets,
-      positional)
-    Par.run(
-      () => bucketed(post).write.partitionBy("tok_bucket")
-        .mode(SaveMode.Append).parquet(s"$path/postings.parquet"),
-      () => bucketed(dfOf(post)).write.partitionBy("tok_bucket")
-        .mode(SaveMode.Append).parquet(s"$path/df.parquet"),
-      () => statsOf(post).coalesce(1)
-        .write.mode(SaveMode.Append).parquet(s"$path/stats.parquet"),
-      () => positions.foreach(p => bucketed(p)
-        .write.partitionBy("tok_bucket")
-        .mode(SaveMode.Append).parquet(s"$path/positions.parquet")))
-    StoreGenerations.commitAppend(s"$path/postings.parquet")
-    StoreGenerations.commitAppend(s"$path/df.parquet")
-    StoreGenerations.commitAppend(s"$path/stats.parquet")
-    if (positional)
-      StoreGenerations.commitAppend(s"$path/positions.parquet")
-    // the store-level atomic commit point: a reader between the
-    // per-artifact commits above keeps resolving the previous
-    // snapshot — new postings are never scored against stale
-    // document frequencies (all-old or all-new)
-    StoreSnapshots.commit("retrieval", path)
+      hasPositions(path))
+    def landIn(artifact: String, df: DataFrame, bucketCol: Option[String]) =
+      () => s"$path/$artifact" ->
+        StoreGenerations.land(df, s"$path/$artifact", bucketCol, batch)
+    val tb = Some("tok_bucket")
+    // the artifact landings are independent — overlap them (guide
+    // §2.6); the one commit follows once every file has landed
+    val landed = Par.map(Seq(
+      landIn("postings.parquet", post, tb),
+      landIn("df.parquet", dfOf(post), tb),
+      landIn("stats.parquet", statsOf(post).coalesce(1), None)) ++
+      positions.map(landIn("positions.parquet", _, tb))).toMap
+    val gen = StoreSnapshots.commitLanded("retrieval", path, landed)
     // in-band lifecycle knob — see SignatureStore.append
     autoMaintain.foreach(am =>
       StoreMaintenance.maintainIfNeeded(spark, "retrieval", path, am))
-  }
-
-  /** REPLAY-SAFE append for a STREAMING ingest — exactly-once store
-    * state from idempotence ([[StoreGenerations]] canonical landing:
-    * one `gb<batchId>` file per bucket dir for the bucketed artifacts
-    * and one per batch for stats; a replayed batch overwrites its own
-    * files and commits nothing). Same derivation as [[append]] —
-    * per-doc facts under the store's bucket fn, df/stats as delta
-    * rows readers sum. */
-  /** CONCURRENT append — the BM25 sibling of
-    * [[SignatureStore.appendOwn]], and the store the file-level
-    * snapshot commit exists for: the batch's postings, df deltas,
-    * stats row (and positions on a positional store) land privately
-    * in their artifacts, then ONE conditional create
-    * ([[StoreSnapshots.commitOwnStore]]) publishes all of them as a
-    * snapshot — a reader can never score the batch's postings against
-    * document frequencies that don't include them (all-old or
-    * all-new, per writer, however many writers race). Maintenance's
-    * [[StoreSnapshots.fold]] later adopts the files into the chains.
-    * Returns the published snapshot generation. */
-  def appendOwn(incoming: DataFrame, idCol: String, textCol: String,
-                path: String, writerTag: String): Long = {
-    val tokBuckets = params(incoming.sparkSession, path)
-    val (post, positions) = derive(incoming, idCol, textCol, tokBuckets,
-      hasPositions(path))
-    val landed = Seq.newBuilder[(String, Seq[String])]
-    landed += s"$path/postings.parquet" -> StoreGenerations.landOwnBucketed(
-      post, s"$path/postings.parquet", "tok_bucket", writerTag)
-    landed += s"$path/df.parquet" -> StoreGenerations.landOwnBucketed(
-      dfOf(post), s"$path/df.parquet", "tok_bucket", writerTag)
-    landed += s"$path/stats.parquet" -> StoreGenerations.landOwn(
-      statsOf(post).coalesce(1), s"$path/stats.parquet", writerTag)
-    positions.foreach(p =>
-      landed += s"$path/positions.parquet" ->
-        StoreGenerations.landOwnBucketed(
-          p, s"$path/positions.parquet", "tok_bucket", writerTag))
-    StoreSnapshots.commitOwnStore("retrieval", path, landed.result().toMap)
-  }
-
-  def appendCanonical(incoming: DataFrame, idCol: String, textCol: String,
-                      path: String, batchId: Long,
-                      runTag: String = ""): Unit = {
-    val spark = incoming.sparkSession
-    val tokBuckets = params(spark, path)
-    val positional = hasPositions(path)
-    val (post, positions) = derive(incoming, idCol, textCol, tokBuckets,
-      positional)
-    // overlap the canonical STAGE writes (guide §2.6 — each is a tiny
-    // batch-sized job whose fixed cost dominates); the chain commits
-    // keep their documented order below, after every write has landed
-    Par.run(
-      () => StoreGenerations.stageCanonicalBucketed(post,
-        s"$path/postings.parquet", "tok_bucket", batchId, runTag),
-      () => StoreGenerations.stageCanonicalBucketed(dfOf(post),
-        s"$path/df.parquet", "tok_bucket", batchId, runTag),
-      () => StoreGenerations.stageCanonical(statsOf(post),
-        s"$path/stats.parquet", batchId, runTag),
-      () => positions.foreach(p => StoreGenerations.stageCanonicalBucketed(
-        p, s"$path/positions.parquet", "tok_bucket", batchId, runTag)))
-    StoreGenerations.commitAppend(s"$path/postings.parquet")
-    StoreGenerations.commitAppend(s"$path/df.parquet")
-    StoreGenerations.commitAppend(s"$path/stats.parquet")
-    if (positional)
-      StoreGenerations.commitAppend(s"$path/positions.parquet")
-    StoreSnapshots.commit("retrieval", path)
+    gen
   }
 
   /** Exact-phrase top-k against the STORED positional index (build

@@ -115,122 +115,52 @@ object SignatureStore {
     * guarantees the batch's ids are new — the store has no dedup of
     * its own (same contract as the direct route's id-disjointness).
     *
-    * Each artifact publishes its next generation after its write,
-    * and one store snapshot then pins both (readers never see a
-    * half-appended batch). `autoMaintain` is the in-band lifecycle
-    * knob (the store-side mirror of the merge sink's
-    * `maintainEvery`): consult the
-    * filesystem-metadata trigger after the fold and compact+vacuum
-    * exactly the artifacts whose file count crossed the ratio.
+    * The one append route: the batch's bands and sets land in both
+    * artifacts ([[land]]), then ONE conditional snapshot create names
+    * exactly those files across both ([[StoreSnapshots
+    * .commitLanded]]) — a reader pins the whole batch or none of it
+    * (bands always with their verification sets), and nothing the
+    * append did not land is ever published. Any number of writers may
+    * append at once: a lost race re-bases on the winner's snapshot.
     *
-    * SINGLE WRITER on THIS path — this append's consistency unit
-    * spans TWO chains (bands and sets must cover the same doc set, or
-    * a band-probe candidate loses its verification set), and
-    * per-chain commits — however each one is made, CAS included — can
-    * interleave across writers so that a store-level snapshot taken
-    * between them pins a torn cross-artifact state. CONCURRENT
-    * writers therefore commit through the snapshot manifest itself as
-    * the lone commit point ([[appendOwn]] →
-    * [[StoreSnapshots.commitOwnStore]]: one conditional create names
-    * the writer's files across ALL artifacts), never through the
-    * chains. */
+    * `batch = Some((batchId, runTag))` is the replay-safe STREAMING
+    * form: the files land under the canonical `[r<tag>-]gb<batchId>`
+    * names, so a replayed micro-batch overwrites its own bytes and
+    * publishes nothing ([[StoreGenerations.land]]). `autoMaintain` is
+    * the in-band lifecycle knob (the store-side mirror of the merge
+    * sink's `maintainEvery`): consult the filesystem-metadata trigger
+    * after the commit and compact+vacuum exactly the artifacts whose
+    * file count crossed the ratio. Returns the store snapshot
+    * generation that carries the batch. */
   def append(incoming: DataFrame, idCol: String, textCol: String,
              path: String,
-             autoMaintain: Option[StoreMaintenance.AutoMaintain] = None)
-      : Unit = {
-    appendChains(incoming, idCol, textCol, path)
-    // the store-level atomic commit point: readers keep resolving the
-    // previous snapshot's (bands, sets) pair until BOTH artifact
-    // commits are pinned together here
-    StoreSnapshots.commit("sig", path)
+             autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
+             batch: Option[(Long, String)] = None): Long = {
+    val gen = StoreSnapshots.commitLanded("sig", path,
+      land(incoming, idCol, textCol, path, batch))
     autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(
       incoming.sparkSession, "sig", path, am))
+    gen
   }
 
-  /** [[append]]'s writes and artifact chain commits, without the
-    * store snapshot commit — the release store's fold commits its own
-    * snapshot over its `sig/` member. */
-  private[ext] def appendChains(incoming: DataFrame, idCol: String,
-                                textCol: String, path: String): Unit = {
-    val spark = incoming.sparkSession
-    val (shingleN, numHashes) = params(spark, path)
-    // overlap the two independent artifact WRITES (guide §2.6); the
-    // chain commits keep their documented order below, after both
-    Par.run(
-      () => bandsOf(incoming, idCol, textCol, shingleN, numHashes)
-        .write.mode(SaveMode.Append).parquet(s"$path/bands.parquet"),
-      () => setsOf(incoming, idCol, textCol, shingleN)
-        .write.mode(SaveMode.Append).parquet(s"$path/sets.parquet"))
-    StoreGenerations.commitAppend(s"$path/bands.parquet")
-    StoreGenerations.commitAppend(s"$path/sets.parquet")
-  }
-
-  /** CONCURRENT append — any number of writers fold verified batches
-    * into the store AT ONCE: the batch's bands and sets land
-    * privately in both artifacts
-    * ([[StoreGenerations.landOwn]] — chains untouched, files
-    * invisible), then ONE file-level snapshot commit
-    * ([[StoreSnapshots.commitOwnStore]]) publishes them atomically
-    * across both artifacts — a reader pins the whole batch or none of
-    * it (bands always with their verification sets), a lost race
-    * re-bases on the winner's snapshot and retries, and the exclusive
-    * maintenance path's [[StoreSnapshots.fold]] later adopts the
-    * files into the chains. Same derivation and id-disjointness
-    * contract as [[append]]. Returns the published snapshot
-    * generation. */
-  def appendOwn(incoming: DataFrame, idCol: String, textCol: String,
-                path: String, writerTag: String): Long = {
+  /** [[append]]'s landing alone — bands and sets land (their two
+    * independent writes overlap, guide §2.6), nothing is committed.
+    * The release store's fold lands its `sig/` member through this and
+    * commits it together with its own artifacts. Returns artifact
+    * directory → landed files. */
+  private[ext] def land(incoming: DataFrame, idCol: String,
+                        textCol: String, path: String,
+                        batch: Option[(Long, String)])
+      : Map[String, Seq[String]] = {
     val (shingleN, numHashes) = params(incoming.sparkSession, path)
-    val bands = StoreGenerations.landOwn(
-      bandsOf(incoming, idCol, textCol, shingleN, numHashes),
-      s"$path/bands.parquet", writerTag)
-    val sets = StoreGenerations.landOwn(
-      setsOf(incoming, idCol, textCol, shingleN),
-      s"$path/sets.parquet", writerTag)
-    StoreSnapshots.commitOwnStore("sig", path, Map(
-      s"$path/bands.parquet" -> bands,
-      s"$path/sets.parquet" -> sets))
-  }
-
-  /** REPLAY-SAFE append for a STREAMING ingest — exactly-once store
-    * state from idempotence ([[StoreGenerations.landCanonical]]: one
-    * canonical `gb<batchId>` file per artifact per batch, adopted by
-    * the generation chains; a replayed batch overwrites its own files
-    * and commits nothing). The batch's bands/sets derive under the
-    * STORE's config, same as [[append]]. */
-  def appendCanonical(incoming: DataFrame, idCol: String, textCol: String,
-                      path: String, batchId: Long,
-                      runTag: String = ""): Unit = {
-    stageCanonicalWrites(incoming, idCol, textCol, path, batchId, runTag)
-    commitCanonicalChains(path)
-    StoreSnapshots.commit("sig", path)
-  }
-
-  /** [[appendCanonical]]'s WRITE phase alone — the composed release
-    * fold ([[ReleaseStore.incrementalRelease]]) overlaps these stage
-    * writes with its other artifacts' (guide §2.6) and then commits
-    * every chain in the documented order. The two artifact writes are
-    * themselves independent and overlap here. */
-  private[ext] def stageCanonicalWrites(incoming: DataFrame, idCol: String,
-                                        textCol: String, path: String,
-                                        batchId: Long, runTag: String)
-      : Unit = {
-    val spark = incoming.sparkSession
-    val (shingleN, numHashes) = params(spark, path)
-    Par.run(
-      () => StoreGenerations.stageCanonical(
+    val Seq(bands, sets) = Par.map(Seq(
+      () => StoreGenerations.land(
         bandsOf(incoming, idCol, textCol, shingleN, numHashes),
-        s"$path/bands.parquet", batchId, runTag),
-      () => StoreGenerations.stageCanonical(
+        s"$path/bands.parquet", None, batch),
+      () => StoreGenerations.land(
         setsOf(incoming, idCol, textCol, shingleN),
-        s"$path/sets.parquet", batchId, runTag))
-  }
-
-  /** The chain commits matching [[stageCanonicalWrites]], in the
-    * documented order (bands, then sets). */
-  private[ext] def commitCanonicalChains(path: String): Unit = {
-    StoreGenerations.commitAppend(s"$path/bands.parquet")
-    StoreGenerations.commitAppend(s"$path/sets.parquet")
+        s"$path/sets.parquet", None, batch)))
+    Map(s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets)
   }
 
   /** The daily check: near-dups of `incoming` against the STORE

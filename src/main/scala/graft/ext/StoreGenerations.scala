@@ -6,17 +6,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the layer under [[StoreSnapshots]] that makes every store write
   * ONLINE: readers resolve a pinned generation's file list while an
   * append or a compaction publishes the next one, and bytes retire
-  * only when [[vacuum]]'s keep window passes them.
+  * only when the store vacuum's keep window ([[StoreSnapshots
+  * .vacuum]]) passes them.
   *
   * This is the manifest-chain machinery the streaming merge-sink
   * table already ships ([[graft.streaming.StreamingOps]]: `tableAt` /
   * `publishManifest` / `vacuumManifests`), applied to each accreting
   * artifact of the four stores. Every store's `build` starts the
   * chain of each artifact at generation 0 (through
-  * [[StoreSnapshots]]); appends publish N+1 = N + the landed files,
-  * compactions publish N+1 = the compacted files. Nothing a live
-  * reader references moves or dies until the vacuum retires
-  * generations beyond the keep window.
+  * [[StoreSnapshots]]); appends publish N+1 = N + exactly the files
+  * the append landed, compactions publish N+1 = the compacted files.
+  * Nothing a live reader references moves or dies until the vacuum
+  * retires generations beyond the keep window.
+  *
+  * Appends land their files with ONE helper, [[land]]
+  * (writer-unique or batch-canonical names, nothing committed), and
+  * commit them by name ([[commitOwn]], under the store snapshot's
+  * [[StoreSnapshots.commitLanded]]). No commit adopts files by
+  * scanning the directory, so a crashed append's leftovers are never
+  * published — they stay unreferenced until the vacuum sweeps them.
   *
   * Layout: `<artifactDir>/_manifests/gen=<N>` is a text file listing
   * the parquet paths that constitute the artifact at generation N
@@ -27,13 +35,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`StoreMaintain enable` adopts such a directory).
   *
   * Contracts:
-  *  - SINGLE WRITER: appends and compactions on one artifact
-  *    serialize (the store contract); a lost race surfaces loudly
-  *    through the no-clobber generation publish, never as silent
-  *    last-writer-wins (the merge sink's guarded publish — an atomic
-  *    conditional create via [[graft.sources.ManifestIO]]: `link(2)`
-  *    on POSIX, a conditional PUT on an object store; the chain
-  *    protocol assumes nothing POSIX-specific).
+  *  - WRITERS: any number of appenders; each commit names its exact
+  *    file set and re-bases on a lost race ([[commitOwn]]). The
+  *    generation publish is no-clobber — an atomic conditional create
+  *    via [[graft.sources.ManifestIO]] (`link(2)` on POSIX, a
+  *    conditional PUT on an object store; the chain protocol assumes
+  *    nothing POSIX-specific) — so a race is never silent
+  *    last-writer-wins. Compaction and vacuum stay exclusive.
   *  - READERS ARE FREE: any number, any time; a reader holds the
   *    file list of the generation it resolved, which survives every
   *    compaction and every vacuum within the keep window.
@@ -45,12 +53,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are what a 100 TB deployment adds so maintenance never blocks
   * serving. */
 object StoreGenerations {
-
-  /** Basename pattern of files a compaction minted —
-    * [[commitAppend]] must not adopt a crashed compaction's
-    * unpublished output as "appended rows" (they duplicate rows the
-    * live generation already carries). */
-  private[ext] val CompactName = "^gen\\d+-".r
 
   private def manifestsDir(dir: String) = s"$dir/_manifests"
 
@@ -80,12 +82,11 @@ object StoreGenerations {
     * .Layout.listParquet]] minus any file under a path segment
     * starting with `_` or `.` (Spark's hidden-path convention,
     * mirroring what `spark.read.parquet(dir)` ignores). [[enable]]
-    * and [[commitAppend]] inventory through this, never the raw
-    * listing: a crashed `SaveMode.Append` leaves task-attempt
-    * part files under `_temporary/`, which Spark's own directory
-    * reader hides — adopting them as "freshly appended" would
-    * publish duplicated/partial rows into the chain. */
-  private def visibleParquet(dir: String): Seq[String] = {
+    * and the snapshots' frozen-seed inventory list through this,
+    * never the raw listing: a crashed write leaves task-attempt part
+    * files under `_temporary/`, which Spark's own directory reader
+    * hides. */
+  private[ext] def visibleParquet(dir: String): Seq[String] = {
     val base = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
     graft.sources.Layout.listParquet(dir).filterNot { p =>
       val rel = base.relativize(
@@ -136,12 +137,18 @@ object StoreGenerations {
     enable(dir)
   }
 
-  private def canon(s: String): String =
+  private[ext] def canon(s: String): String =
     java.nio.file.Paths.get(s).toAbsolutePath.normalize.toString
 
-  /** Every file any surviving manifest references (canonicalized). */
-  private def referenced(dir: String): Set[String] =
-    gens(dir).flatMap(g => readManifest(dir, g)).map(canon).toSet
+  /** Every file any surviving generation up to `upTo` references
+    * (canonicalized) — the files the chain has ADOPTED by then. A
+    * compaction rewrites an adopted file's rows under a new name, so
+    * membership in the current list alone cannot tell adopted from
+    * not-yet-adopted; the generation that adopted it can. */
+  private[ext] def referenced(dir: String,
+                              upTo: Long = Long.MaxValue): Set[String] =
+    gens(dir).filter(_ <= upTo).flatMap(g => readManifest(dir, g))
+      .map(canon).toSet
 
   private def load(spark: SparkSession, dir: String,
                    files: Seq[String]): DataFrame = {
@@ -174,66 +181,24 @@ object StoreGenerations {
           "outside the vacuum keep window (or the artifact has no " +
           "chain) — re-pin to a kept generation")))
 
-  /** Fold a completed append's files into the chain: publish
-    * generation N+1 = generation N's list + every parquet file on
-    * disk no surviving manifest references (the files the append
-    * just wrote), EXCLUDING [[CompactName]]-stamped files (a crashed
-    * compaction's unpublished output duplicates live rows; the
-    * vacuum retires it). When nothing unreferenced is found — an
-    * empty batch, or a REPLAYED batch whose canonical files the
-    * chain already adopted — no generation is published (the commit
-    * is already on the chain; this is what makes a replayed
-    * streaming append a no-op rather than generation churn).
-    * Returns the current generation. */
-  def commitAppend(dir: String): Long = {
-    val cur = currentGen(dir).getOrElse(throw noChain(dir))
-    val ref = referenced(dir)
-    val fresh = visibleParquet(dir)
-      .filterNot(p => ref.contains(canon(p)))
-      .filterNot { p =>
-        val name = p.substring(p.lastIndexOf('/') + 1)
-        CompactName.findFirstIn(name).isDefined ||
-          OwnName.findFirstIn(name).isDefined
-      }
-    if (fresh.isEmpty) cur
-    else {
-      publish(dir, cur + 1, currentFiles(dir).get ++ fresh)
-      cur + 1
-    }
-  }
-
-  /** Basename pattern of files a CONCURRENT writer landed via
-    * [[landOwn]]/[[landOwnBucketed]] — owned by exactly one
-    * [[commitOwn]] call. The adopt-everything [[commitAppend]] path
-    * must never fold them in: between a concurrent writer's land and
-    * its commit they are in-flight private state, and adopting half
-    * of another writer's batch is exactly the torn visibility the
-    * exact-file-set commit exists to rule out. */
-  private[ext] val OwnName = "^w[A-Za-z0-9]*-u[0-9a-f]{8}\\.parquet$".r
-
-  /** OPTIMISTIC-CONCURRENCY commit of an EXACT file set — the
-    * multi-writer append primitive (the Iceberg commit model applied
-    * to an artifact chain): publish generation N+1 = the current
-    * list + precisely `files` (this writer's fully-landed data
+  /** OPTIMISTIC-CONCURRENCY commit of an EXACT file set (the Iceberg
+    * commit model applied to an artifact chain): publish generation
+    * N+1 = the current list + precisely `files` (fully-landed data
     * files), and when the conditional create loses the race to
     * another writer, RE-BASE on the winner's generation and retry —
     * each surviving generation then differs from its parent by
-    * exactly one writer's whole batch, so no reader ever observes a
-    * torn batch and no file is adopted twice (already-referenced
-    * files are filtered on every attempt, which also makes a replay
-    * of the same commit a no-op).
+    * exactly one commit's whole file set, and no file is adopted
+    * twice (already-referenced files are filtered on every attempt,
+    * which also makes a replay of the same commit a no-op).
     *
-    * This lifts the single-WRITER bound to single-accreting-artifact
-    * stores (the vector store's codes chain, the merge-sink table):
-    * any number of appenders land privately ([[landOwn]]) and race
-    * their commits here. Multi-ARTIFACT appends (sig bands+sets,
-    * BM25 postings+df+stats) keep the single-writer contract — their
-    * consistency unit spans chains, and interleaved per-chain commits
-    * could pin a torn cross-artifact state however each chain
-    * commits. MAINTENANCE stays exclusive as documented ([[vacuum]]
-    * deletes unreferenced files, which a landed-uncommitted batch
-    * is; the store maintenance cadence already serializes against
-    * writers). */
+    * Every store append ends here: [[StoreSnapshots.commitLanded]]
+    * publishes the writer's landed files in one store snapshot, then
+    * adopts them into each artifact's chain through this call, so
+    * [[read]]/[[currentFiles]] see the batch at once. A commit names
+    * its files, so nothing it did not land is ever adopted: a crashed
+    * append's leftovers stay unreferenced until the vacuum sweeps
+    * them. MAINTENANCE stays exclusive ([[vacuumKeeping]] deletes
+    * unreferenced files, which a landed-uncommitted batch is). */
   def commitOwn(dir: String, files: Seq[String],
                 maxAttempts: Int = 16): Long = {
     require(files.nonEmpty, s"commitOwn with no files under $dir")
@@ -242,7 +207,7 @@ object StoreGenerations {
     mine.foreach { p =>
       require(p.startsWith(base + "/"),
         s"commitOwn file outside the artifact: $p is not under $dir")
-      require(java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
+      require(exists(p),
         s"commitOwn file does not exist (land before committing): $p")
     }
     var attempt = 0
@@ -254,8 +219,7 @@ object StoreGenerations {
         s"commitOwn batch under $dir is PARTIALLY referenced " +
           s"(${mine.length - fresh.length}/${mine.length} files already " +
           "on the chain) — a foreign commit adopted part of this batch; " +
-          "mixing commitAppend-path writers with commitOwn writers on " +
-          "one artifact breaks the exact-batch contract")
+          "one landed batch must be committed by exactly one commit")
       try {
         publish(dir, cur + 1, currentFiles(dir).get ++ fresh)
         return cur + 1
@@ -268,62 +232,8 @@ object StoreGenerations {
     sys.error("unreachable")
   }
 
-  /** Land a concurrent writer's batch as private files in a FLAT
-    * artifact: write to a writer-scoped scratch, move in under
-    * `w<tag>-u<uuid8>` names (no-replace — the names are unique, and
-    * [[commitAppend]] ignores the `w…-u…` pattern), return the landed
-    * paths for [[commitOwn]]. Until that commit the files are
-    * unreferenced: invisible to every chain reader, swept by a vacuum
-    * (which maintenance runs exclusively) if the writer dies. */
-  def landOwn(df: DataFrame, dir: String, writerTag: String): Seq[String] = {
-    require(writerTag.matches("[A-Za-z0-9]+"),
-      s"writer tag must be alphanumeric, got '$writerTag'")
-    val scratch = s"$dir.__own_$writerTag${uuid8()}"
-    df.write.mode("overwrite").parquet(scratch)
-    val landed = graft.sources.Layout.listParquet(scratch).map { p =>
-      val tgt = java.nio.file.Paths.get(
-        s"$dir/w$writerTag-u${uuid8()}.parquet")
-      java.nio.file.Files.move(java.nio.file.Paths.get(p), tgt)
-      tgt.toString
-    }
-    deleteTree(scratch)
-    landed
-  }
-
-  /** [[landOwn]] for a BUCKET-PARTITIONED artifact: the batch lands
-    * as one private file per POPULATED bucket directory (the
-    * bucket-clustered repartition guarantees one scratch file per
-    * bucket — enforced), preserving the partition keys probe-time
-    * pruning needs. Same private-until-commit contract. */
-  def landOwnBucketed(df: DataFrame, dir: String, bucketCol: String,
-                      writerTag: String): Seq[String] = {
-    require(writerTag.matches("[A-Za-z0-9]+"),
-      s"writer tag must be alphanumeric, got '$writerTag'")
-    val scratch = s"$dir.__own_$writerTag${uuid8()}"
-    df.repartition(org.apache.spark.sql.functions.col(bucketCol))
-      .write.partitionBy(bucketCol).mode("overwrite").parquet(scratch)
-    val rx = (java.util.regex.Pattern.quote(s"$bucketCol=") +
-      "(-?\\d+)/").r
-    val landed = graft.sources.Layout.listParquet(scratch)
-      .flatMap(p => rx.findFirstMatchIn(p).map(m => (m.group(1), p)))
-      .groupBy(_._1)
-      .map { case (bucket, files) =>
-        require(files.length == 1,
-          s"bucket $bucket holds ${files.length} scratch files; the " +
-            "bucket-clustered write guarantees one — not renaming")
-        val tgt = java.nio.file.Paths.get(
-          s"$dir/$bucketCol=$bucket/w$writerTag-u${uuid8()}.parquet")
-        java.nio.file.Files.createDirectories(tgt.getParent)
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(files.head._2), tgt)
-        tgt.toString
-      }.toSeq
-    deleteTree(scratch)
-    landed
-  }
-
-  private def uuid8(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+  private def uuid(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
 
   /** The canonical base name of a landed batch's file:
     * `gb<batchId>` when no run tag is supplied, `r<tag>-gb<batchId>`
@@ -341,86 +251,72 @@ object StoreGenerations {
     if (runTag.isEmpty) s"gb$batchId" else s"r$runTag-gb$batchId"
   }
 
-  /** Land a micro-batch's rows as ONE canonical file in a FLAT
-    * artifact (`<dir>/[r<tag>-]gb<batchId>.parquet`, see
-    * [[canonicalName]]) and commit — the replay-safe streaming-append
-    * primitive: a replayed batch overwrites its own file
-    * (REPLACE_EXISTING; nothing else ever carries its name — batch id
-    * AND run tag pin the identity) and its commit finds nothing
-    * unreferenced, so the chain — and every pinned reader — is
-    * untouched. A mid-batch crash leaves only an unreferenced file the
-    * replay overwrites. Micro-batches are small by definition, so one
-    * file per batch IS the fresh-build landing (the auto-maintenance
-    * ratio still bounds the long-run count). Returns the chain
-    * generation. */
-  def landCanonical(df: DataFrame, dir: String, batchId: Long,
-                    runTag: String = ""): Long = {
-    stageCanonical(df, dir, batchId, runTag)
-    commitAppend(dir)
-  }
-
-  /** [[landCanonical]]'s WRITE phase alone (land the canonical file,
-    * commit nothing) — multi-artifact canonical appends overlap the
-    * per-artifact stage writes from a small driver pool (guide §2.6)
-    * and then run the chain commits sequentially in their documented
-    * order. Same replay contract: a replayed batch overwrites its own
-    * canonical file. */
-  private[ext] def stageCanonical(df: DataFrame, dir: String,
-                                  batchId: Long, runTag: String): Unit = {
-    val scratch = s"$dir.__append_b$batchId"
-    df.coalesce(1).write.mode("overwrite").parquet(scratch)
-    val files = graft.sources.Layout.listParquet(scratch)
-    require(files.length <= 1,
-      s"coalesce(1) landed ${files.length} files under $scratch")
-    files.foreach { p =>
-      java.nio.file.Files.move(java.nio.file.Paths.get(p),
-        java.nio.file.Paths.get(
-          s"$dir/${canonicalName(batchId, runTag)}.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** LAND a batch in an artifact directory without committing it —
+    * the first step of every store append (land → one conditional
+    * snapshot create → adopt, [[StoreSnapshots.commitLanded]]). The
+    * batch writes to a scratch directory beside the artifact, then
+    * each file moves in:
+    *  - `batch = None`: under a writer-unique `u<uuid>` name
+    *    (no-replace — no other writer can hold it);
+    *  - `batch = Some((batchId, runTag))`: under the canonical
+    *    `[r<tag>-]gb<batchId>` name ([[canonicalName]]) with
+    *    REPLACE_EXISTING — the replay-safe streaming landing: a
+    *    replayed micro-batch overwrites its own bytes and its commit
+    *    finds them already published. One file per populated bucket
+    *    (enforced), or one `coalesce(1)` file for a flat artifact.
+    * `bucketCol = Some(c)`: the artifact is `partitionBy(c)` laid out;
+    * the batch clusters on `c` first, so every bucket directory gets
+    * one file and probe-time partition pruning keeps working.
+    * Returns the landed paths. Until a commit names them the files
+    * are invisible to every reader: a crashed append leaves only
+    * unreferenced files, which no later commit adopts and the vacuum
+    * sweeps. */
+  def land(df: DataFrame, dir: String, bucketCol: Option[String],
+           batch: Option[(Long, String)]): Seq[String] = {
+    val name = batch.map { case (b, tag) => canonicalName(b, tag) }
+    val scratch = s"$dir.__land_${name.getOrElse(uuid())}"
+    val clustered = bucketCol match {
+      case Some(c) => df.repartition(org.apache.spark.sql.functions.col(c))
+      case None => if (name.isDefined) df.coalesce(1) else df
     }
-    deleteTree(scratch)
-  }
-
-  /** [[landCanonical]] for a BUCKET-PARTITIONED artifact: the batch
-    * lands as one canonical `[r<tag>-]gb<batchId>.parquet` per
-    * POPULATED bucket directory (the bucket-clustered repartition
-    * guarantees one scratch file per bucket — enforced), preserving
-    * the layout probe-time partition pruning keys on. Same
-    * replay/crash/run-tag contract as the flat form. */
-  def landCanonicalBucketed(df: DataFrame, dir: String,
-                            bucketCol: String, batchId: Long,
-                            runTag: String = ""): Long = {
-    stageCanonicalBucketed(df, dir, bucketCol, batchId, runTag)
-    commitAppend(dir)
-  }
-
-  /** [[stageCanonical]] for a bucket-partitioned artifact. */
-  private[ext] def stageCanonicalBucketed(df: DataFrame, dir: String,
-                                          bucketCol: String, batchId: Long,
-                                          runTag: String): Unit = {
-    val scratch = s"$dir.__append_b$batchId"
-    df.repartition(org.apache.spark.sql.functions.col(bucketCol))
-      .write.partitionBy(bucketCol).mode("overwrite").parquet(scratch)
-    val rx = (java.util.regex.Pattern.quote(s"$bucketCol=") +
-      "(-?\\d+)/").r
-    graft.sources.Layout.listParquet(scratch)
-      .flatMap(p => rx.findFirstMatchIn(p).map(m => (m.group(1), p)))
-      .groupBy(_._1)
-      .foreach { case (bucket, files) =>
-        require(files.length == 1,
-          s"bucket $bucket holds ${files.length} scratch files; the " +
-            "bucket-clustered write guarantees one — not renaming")
-        val tgt = java.nio.file.Paths.get(
-          s"$dir/$bucketCol=$bucket/${canonicalName(batchId, runTag)}.parquet")
-        java.nio.file.Files.createDirectories(tgt.getParent)
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(files.head._2), tgt,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    bucketCol.fold(clustered.write)(clustered.write.partitionBy(_))
+      .mode("overwrite").parquet(scratch)
+    val root = java.nio.file.Paths.get(scratch)
+    // group by the file's directory under the scratch: "" for a flat
+    // artifact, "<bucketCol>=<v>/" per bucket
+    val landed = graft.sources.Layout.listParquet(scratch)
+      .groupBy(p => Option(root.relativize(java.nio.file.Paths.get(p))
+        .getParent).fold("")(_.toString + "/"))
+      .toSeq.flatMap { case (sub, files) =>
+        name match {
+          case Some(n) =>
+            require(files.length == 1,
+              s"${files.length} scratch files under $scratch/$sub; a " +
+                "canonical landing writes one — not renaming")
+            Seq(moveIn(files.head, s"$dir/$sub$n.parquet", replace = true))
+          case None =>
+            files.map(p =>
+              moveIn(p, s"$dir/${sub}u${uuid()}.parquet", replace = false))
+        }
       }
     deleteTree(scratch)
+    landed.sorted
   }
 
-  private def deleteTree(p: String): Unit = {
+  private def moveIn(from: String, to: String, replace: Boolean): String = {
+    val tgt = java.nio.file.Paths.get(to)
+    java.nio.file.Files.createDirectories(tgt.getParent)
+    if (replace)
+      java.nio.file.Files.move(java.nio.file.Paths.get(from), tgt,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    else java.nio.file.Files.move(java.nio.file.Paths.get(from), tgt)
+    tgt.toString
+  }
+
+  private[ext] def exists(p: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(p))
+
+  private[ext] def deleteTree(p: String): Unit = {
     val root = java.nio.file.Paths.get(p)
     if (java.nio.file.Files.exists(root)) {
       val it = java.nio.file.Files.walk(root)
@@ -432,22 +328,17 @@ object StoreGenerations {
     }
   }
 
-  /** Retire generations beyond the newest `keepGens` and every
-    * parquet file under the artifact no kept manifest references —
-    * including dead compaction scratch output. Keeps at least one
-    * generation; returns (files deleted, manifests deleted). Same
-    * single-writer cadence as the merge-sink vacuum: run it from the
-    * maintenance path, not concurrently with a reader pinned older
-    * than the kept window. */
-  def vacuum(dir: String, keepGens: Int): (Int, Int) =
-    vacuumKeeping(dir, keepLatest = keepGens, alsoKeep = Set.empty)
-
-  /** [[vacuum]] with an EXTERNAL pin set: keep the newest `keepLatest`
-    * generations PLUS every generation in `alsoKeep`, and never delete
-    * a file in `alsoKeepFiles` — the hooks [[StoreSnapshots]] uses so
-    * a store-level manifest's pinned artifact generations AND its
-    * file-level commit entries (a concurrent writer's batch the chain
-    * has not folded in yet) survive any per-artifact vacuum cadence. */
+  /** Retire generations beyond the newest `keepLatest` — except every
+    * generation in `alsoKeep` — and every parquet file under the
+    * artifact that no kept manifest references and `alsoKeepFiles`
+    * does not name: dead compaction output, a crashed append's
+    * leftovers. Keeps at least one generation; returns (files
+    * deleted, manifests deleted). Only [[StoreSnapshots.vacuum]] calls
+    * this, passing what its surviving snapshots pin: right after an
+    * append a store snapshot pins the artifact's PREVIOUS generation
+    * plus the append's `d` files, so a vacuum blind to the snapshots
+    * would break the current pin. Maintenance cadence: run it
+    * exclusively, like the merge-sink vacuum. */
   private[ext] def vacuumKeeping(dir: String, keepLatest: Int,
                                  alsoKeep: Set[Long],
                                  alsoKeepFiles: Set[String] = Set.empty)

@@ -97,20 +97,7 @@ object StoreMaintenance {
 
   private def scratchOf(dir: String) = s"$dir.__compact"
 
-  private def exists(p: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(p))
-
-  private def deleteTree(p: String): Unit = {
-    val root = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      } finally it.close()
-    }
-  }
+  import StoreGenerations.{deleteTree, exists}
 
   /** Compact one artifact directory in place (see class doc).
     *
@@ -126,7 +113,9 @@ object StoreMaintenance {
     * the sums their readers take).
     *
     * Publishes the artifact's next generation only; the store-level
-    * calls below commit the snapshot that makes it visible. */
+    * calls below commit the snapshot that makes it visible. Run it
+    * through them: they fold and commit the store first, which
+    * retires the `d` lines of the appends this compaction rewrites. */
   def compactArtifact(spark: SparkSession, dir: String,
                       bucketCol: Option[String],
                       fold: DataFrame => DataFrame = rowIdentity,
@@ -261,9 +250,10 @@ object StoreMaintenance {
   def maintainIfNeeded(spark: SparkSession, kind: String, path: String,
                        am: AutoMaintain): Seq[ArtifactReport] = {
     // fold FIRST: the trigger below counts chain files, and
-    // compaction folds chain files — unfolded d-entries would be
-    // invisible to both (maintenance runs exclusively, so nothing
-    // lands while this folds)
+    // compaction rewrites chain files — an append a dead writer never
+    // adopted would be invisible to both, and the fold's commit
+    // retires the d-entries the chains already cover (maintenance
+    // runs exclusively, so nothing lands while this folds)
     StoreSnapshots.fold(kind, path)
     val reports = artifactsOf(kind, path).flatMap { s =>
       val files = StoreGenerations.currentFiles(s.dir)

@@ -8,18 +8,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[StoreGenerations]] gives each artifact directory its own chain,
   * which makes every artifact independently consistent — but a
   * multi-artifact append ([[RetrievalIndexStore.append]]: postings,
-  * THEN df, THEN stats, THEN positions) publishes three or four
-  * generations in sequence, and a reader issuing `query()` between
-  * the postings commit and the df commit scores the new batch's
+  * df, stats, positions) moves three or four chains, and a reader
+  * resolving the chains one by one could score the new batch's
   * postings against the PREVIOUS generation's document frequencies.
   * BM25's exactness argument ("df over the pruned scan is exact for
   * every query token") silently assumes the artifacts are mutually
   * consistent; nothing below this layer enforces it. This is the
   * merge-sink pattern applied one level up: the sink publishes ONE
   * manifest per batch naming every file of the table — the store
-  * publishes ONE snapshot per append naming every ARTIFACT'S
-  * GENERATION, and the query faces resolve all artifacts through one
-  * pinned snapshot: all-old or all-new, never mixed.
+  * publishes ONE snapshot per append naming every artifact's
+  * generation plus the append's exact files, and the query faces
+  * resolve all artifacts through one pinned snapshot: all-old or
+  * all-new, never mixed.
   *
   * Layout: `<storePath>/_store_manifests/gen=<S>` — same no-clobber
   * conditional-create publish as every other chain (via
@@ -28,8 +28,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   a <tab> <relArtifactDir> <tab> <artifactGen>   (chained artifact)
   *   f <tab> <relFilePath>    <tab> <bytes>         (frozen/seed file)
   *   d <tab> <relArtifactDir> <tab> <relFilePath>   (file-level commit:
-  *       a concurrent writer's landed file, read IN ADDITION to the
-  *       artifact's pinned generation — see [[commitOwnStore]])
+  *       an append's landed file, read IN ADDITION to the artifact's
+  *       pinned generation — see [[commitOwnStore]])
   *
   * The release store keeps ONE chain at its root: its `sig/` member's
   * bands and sets are artifacts of the release snapshot (there is no
@@ -45,12 +45,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * time and fails loudly naming the seed, before any Spark job runs.
   *
   * Contracts:
-  *  - WRITERS: the plain append paths (chain commits + [[commit]])
-  *    remain single-writer per store; CONCURRENT appenders go through
-  *    [[commitOwnStore]] (multi-artifact, file-level entries) or
-  *    [[StoreGenerations.commitOwn]] (single-accreting-artifact) —
-  *    any number may race; a lost publish race re-bases and retries.
-  *    MAINTENANCE (compaction, [[fold]], vacuum) stays exclusive.
+  *  - WRITERS: every append takes ONE route, [[commitLanded]]: land
+  *    the batch's files ([[StoreGenerations.land]] — writer-unique or
+  *    batch-canonical names), publish exactly those files across all
+  *    the store's artifacts in ONE conditional create
+  *    ([[commitOwnStore]]; a lost race re-bases, a replay is a no-op),
+  *    then adopt them into each artifact chain
+  *    ([[StoreGenerations.commitOwn]]). Any number of appenders may
+  *    race; a single writer is the case with no race. MAINTENANCE
+  *    (compaction, [[fold]], vacuum) stays exclusive; its next
+  *    [[commit]] retires the `d` lines the chains already cover.
   *  - READERS ARE FREE: a [[Pin]] resolves every artifact at the
   *    generation (plus file-level entries) one snapshot names; those
   *    survive any vacuum that keeps the snapshot ([[vacuum]] pins
@@ -72,8 +76,7 @@ object StoreSnapshots {
   private def io(path: String): graft.sources.ManifestIO =
     graft.sources.ManifestIO.forPath(path)
 
-  private def canon(s: String): String =
-    java.nio.file.Paths.get(s).toAbsolutePath.normalize.toString
+  import StoreGenerations.{canon, exists, visibleParquet}
 
   private def rel(path: String, p: String): String =
     java.nio.file.Paths.get(canon(path))
@@ -102,33 +105,27 @@ object StoreSnapshots {
       case other => sys.error(s"unknown store kind: $other")
     }
 
-  private def exists(p: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(p))
-
-  private def visibleParquet(dir: String): Seq[String] = {
-    val base = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    graft.sources.Layout.listParquet(dir).filterNot { p =>
-      val r = base.relativize(
-        java.nio.file.Paths.get(p).toAbsolutePath.normalize).toString
-      r.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
-    }
-  }
-
   /** The snapshot's content lines for the store's CURRENT state:
     * every existing chained artifact at its current generation, every
     * frozen file with its size, PLUS the previous snapshot's pending
     * file-level commits (`d` lines) whose files the artifact's pinned
-    * generation has not adopted yet — a single-writer commit must
-    * never drop a concurrent writer's committed-but-unfolded batch
-    * (once [[fold]] adopts the files into the chain, the pinned
-    * generation covers them and the `d` lines retire here). */
+    * generation has not adopted yet — a commit must never drop an
+    * append whose chain adoption has not happened (a writer that died
+    * between its snapshot and its chain commit; [[fold]] adopts it).
+    * Once the chain has adopted a `d` file by the pinned generation
+    * (a compaction since then keeps its rows under another name), its
+    * line retires here. Coverage is judged up to the very generation
+    * the `a` line pins, so an adoption racing this read cannot drop a
+    * file. */
   private def entries(kind: String, path: String): Seq[String] = {
     val chained = StoreMaintenance.artifactsOf(kind, path)
       .map(_.dir).filter(exists)
     require(chained.nonEmpty, s"no artifacts under $path for kind $kind")
-    val aLines = chained.map { dir =>
-      val gen = StoreGenerations.currentGen(dir)
+    val pinned = chained.map { dir =>
+      dir -> StoreGenerations.currentGen(dir)
         .getOrElse(throw StoreGenerations.noChain(dir))
+    }
+    val aLines = pinned.map { case (dir, gen) =>
       s"a\t${rel(path, dir)}\t$gen"
     }
     val fLines = frozenOf(kind, path).filter(exists).flatMap { fdir =>
@@ -137,9 +134,8 @@ object StoreSnapshots {
       }
     }
     val dLines = currentGen(path).toSeq.flatMap { cur =>
-      val chainCovered: Map[String, Set[String]] = chained.map { dir =>
-        canon(dir) -> StoreGenerations.currentFiles(dir)
-          .getOrElse(Seq.empty).map(canon).toSet
+      val chainCovered: Map[String, Set[String]] = pinned.map {
+        case (dir, gen) => canon(dir) -> StoreGenerations.referenced(dir, gen)
       }.toMap
       io(path).read(s"${mdir(path)}/gen=$cur").getOrElse("")
         .split("\n", -1).toSeq.filter(_.startsWith("d\t"))
@@ -161,10 +157,9 @@ object StoreSnapshots {
     val stored = io(path).read(target).getOrElse("")
     if (stored != content)
       throw new graft.sources.LostPublishRace(
-        s"lost publish race on store snapshot $path gen=$gen — a second " +
-          "writer is committing to the same store (single-writer contract " +
-          "for multi-artifact mutations; [[commit]] itself retries, since " +
-          "a snapshot only pins the store's current state)")
+        s"lost publish race on store snapshot $path gen=$gen — another " +
+          "writer committed the same snapshot number (both commit " +
+          "routes re-base and retry up to their attempt bound)")
   }
 
   private def noChain(path: String) = new IllegalStateException(
@@ -196,24 +191,19 @@ object StoreSnapshots {
     }
 
   /** Publish the next snapshot pinning the store's CURRENT artifact
-    * generations — THE atomic commit point of a multi-artifact append
-    * or compaction: until this publishes, every reader keeps resolving
-    * the previous snapshot's mutually-consistent generations. Skips
+    * generations — the commit point of maintenance (compaction,
+    * [[fold]]): until this publishes, every reader keeps resolving
+    * the previous snapshot's mutually-consistent generations. It also
+    * retires the `d` lines of appends the chains have adopted. Skips
     * publishing (returns the current generation) when nothing moved,
-    * so replayed/idempotent appends cause no snapshot churn.
+    * so an idempotent re-commit causes no snapshot churn.
     *
     * A lost publish race here is RETRIED (bounded): a snapshot commit
     * carries no writer-private content — it pins whatever the store's
     * current artifact generations are — so when another committer wins
     * the generation number, re-reading and re-pinning the (possibly
-    * newer) current state is always sound. This is what lets the
-    * single-accreting-artifact concurrent appenders
-    * ([[StoreGenerations.commitOwn]], e.g. the vector store's codes
-    * chain) each snapshot-commit after their chain commit without
-    * coordinating. The single-writer contract REMAINS for
-    * multi-artifact mutations (a sig/BM25 append spans chains, and
-    * concurrent interleavings could snapshot a torn cross-artifact
-    * state — see [[SignatureStore.append]]'s scaladoc). */
+    * newer) current state is always sound. Appends never call this:
+    * their commit is [[commitLanded]]. */
   def commit(kind: String, path: String): Long = {
     var attempt = 0
     while (true) {
@@ -234,14 +224,14 @@ object StoreSnapshots {
     sys.error("unreachable")
   }
 
-  /** FILE-LEVEL store commit — the multi-writer append primitive for
-    * MULTI-ARTIFACT stores, where per-chain commits cannot work
-    * ([[SignatureStore.append]]'s scaladoc has the torn-state
-    * argument): the snapshot manifest itself becomes the lone commit
-    * point. The writer lands its batch PRIVATELY in every artifact
-    * ([[StoreGenerations.landOwn]]/[[landOwnBucketed]] — untouched
-    * chains, invisible files), then CAS-publishes the next snapshot =
-    * the current snapshot's lines + one `d` entry per landed file.
+  /** FILE-LEVEL store commit — the publish step of every append
+    * ([[commitLanded]]): the snapshot manifest itself is the lone
+    * commit point, because per-chain commits of a multi-artifact batch
+    * could interleave across writers and pin a torn cross-artifact
+    * state. The writer lands its batch in every artifact
+    * ([[StoreGenerations.land]] — untouched chains, invisible files),
+    * then CAS-publishes the next snapshot = the current snapshot's
+    * lines + one `d` entry per landed file.
     * One conditional create spans ALL artifacts, so a reader pins
     * either the whole batch or none of it — bands always with their
     * sets, postings always with their df; and a lost race re-bases on
@@ -249,13 +239,11 @@ object StoreSnapshots {
     * retries, so every surviving snapshot differs from its parent by
     * exactly one writer's whole cross-artifact batch.
     *
-    * The chains stay behind deliberately: [[fold]] (run from the
-    * exclusive maintenance path) adopts pending `d` files into each
-    * artifact's chain and retires the `d` lines — compaction and
-    * vacuum then see them as ordinary chained files. Replaying a
-    * commit whose files are all covered (as `d` lines or folded into
-    * the pinned chains) returns the current snapshot unchanged;
-    * partial foreign coverage fails loudly. */
+    * The chains do not move here: [[commitLanded]] adopts the files
+    * right after this publish, and the `d` lines retire at the next
+    * [[commit]]. Replaying a commit whose files are all covered (as
+    * `d` lines or in the pinned chains) returns the current snapshot
+    * unchanged; partial foreign coverage fails loudly. */
   def commitOwnStore(kind: String, path: String,
                      filesByArtifact: Map[String, Seq[String]],
                      maxAttempts: Int = 16): Long = {
@@ -291,8 +279,7 @@ object StoreSnapshots {
         case l if l.startsWith("a\t") =>
           val Array(_, r, g) = l.split("\t", 3)
           val dir = canon(s"$path/$r")
-          dir -> StoreGenerations.filesAt(dir, g.toLong)
-            .getOrElse(Seq.empty).map(canon).toSet
+          dir -> StoreGenerations.referenced(dir, g.toLong)
       }.toMap
       val covered = mine.zip(myLines).count { case ((d, f), l) =>
         coveredD.contains(l) ||
@@ -322,7 +309,32 @@ object StoreSnapshots {
     sys.error("unreachable")
   }
 
-  /** Adopt every pending file-level commit into its artifact's chain
+  /** THE append commit: publish a writer's landed files
+    * (`landed`: artifact directory → the files [[StoreGenerations
+    * .land]] put there) in ONE store snapshot ([[commitOwnStore]]),
+    * then adopt them into each artifact's chain
+    * ([[StoreGenerations.commitOwn]]) so per-artifact readers
+    * ([[StoreGenerations.read]]) see the batch at once. The adoption
+    * publishes no second snapshot: the pinned generation plus the `d`
+    * lines already resolve the same files, and the next [[commit]]
+    * retires the lines. Artifacts that landed no file are left out; an
+    * empty batch publishes nothing. A crash between the snapshot and
+    * the adoption loses nothing (readers resolve the `d` lines;
+    * [[fold]] or a replay adopts them). Returns the store snapshot
+    * generation that carries the batch. */
+  private[ext] def commitLanded(kind: String, path: String,
+                                landed: Map[String, Seq[String]]): Long = {
+    val files = landed.filter(_._2.nonEmpty)
+    if (files.isEmpty) currentGen(path).getOrElse(throw noChain(path))
+    else {
+      val gen = commitOwnStore(kind, path, files)
+      files.foreach { case (dir, fs) => StoreGenerations.commitOwn(dir, fs) }
+      gen
+    }
+  }
+
+  /** Adopt every pending file-level commit the chains do not cover yet
+    * (a writer that died between its snapshot and its chain adoption)
     * and publish the snapshot that retires the `d` lines — run from
     * the EXCLUSIVE maintenance path before compaction/vacuum, so
     * those only ever see ordinary chained files. Returns the current
@@ -340,7 +352,9 @@ object StoreSnapshots {
     if (pending.isEmpty) cur
     else {
       pending.foreach { case (dir, files) =>
-        StoreGenerations.commitOwn(dir, files)
+        val adopted = StoreGenerations.referenced(dir)
+        val unfolded = files.filterNot(f => adopted.contains(canon(f)))
+        if (unfolded.nonEmpty) StoreGenerations.commitOwn(dir, unfolded)
       }
       commit(kind, path) // entries() drops the now-chain-covered d lines
     }

@@ -136,87 +136,42 @@ object VectorIndexStore {
   /** Fold new vectors into the index under the STORE's frozen
     * geometry (snapshot semantics — see the class doc). Caller
     * guarantees new ids; the store has no dedup of its own.
-    * `autoMaintain`: the in-band lifecycle knob — see
-    * [[SignatureStore.append]]. */
+    *
+    * The one append route (see [[SignatureStore.append]]): the batch
+    * encodes under the frozen geometry, lands one file per populated
+    * cell bucket ([[StoreGenerations.land]]), and ONE conditional
+    * snapshot create publishes exactly those files
+    * ([[StoreSnapshots.commitLanded]]). Any number of writers may
+    * append at once — every surviving snapshot differs from its parent
+    * by exactly one writer's whole batch. `batch = Some((batchId,
+    * runTag))` lands under the canonical per-batch names, the
+    * replay-safe streaming form: a replayed micro-batch overwrites its
+    * own files and publishes nothing. `autoMaintain`: the in-band
+    * lifecycle knob — see [[SignatureStore.append]]. Returns the
+    * store snapshot generation that carries the batch. */
   def append(newVectors: DataFrame, idCol: String, vecCol: String,
              path: String,
-             autoMaintain: Option[StoreMaintenance.AutoMaintain] = None)
-      : Unit = {
+             autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
+             batch: Option[(Long, String)] = None): Long = {
     val spark = newVectors.sparkSession
     val (numSub, subDim, cellBuckets) = params(spark, path)
-    encode(newVectors, idCol, vecCol,
+    val gen = commitCodes(path, encode(newVectors, idCol, vecCol,
       stored(spark, path, "centroids", idCol, vecCol),
       stored(spark, path, "codebook", idCol, vecCol),
-      numSub, subDim, cellBuckets)
-      .repartition(col("cell_bucket"))
-      .write.partitionBy("cell_bucket").mode(SaveMode.Append)
-      .parquet(s"$path/codes.parquet")
-    StoreGenerations.commitAppend(s"$path/codes.parquet")
-    StoreSnapshots.commit("vector", path)
+      numSub, subDim, cellBuckets), batch)
     autoMaintain.foreach(am =>
       StoreMaintenance.maintainIfNeeded(spark, "vector", path, am))
-  }
-
-  /** REPLAY-SAFE append for a STREAMING ingest — exactly-once store
-    * state from idempotence, the merge-sink argument applied to the
-    * vector store: the batch encodes under the frozen geometry into a
-    * batch-scratch, lands as ONE canonical file per populated bucket
-    * (`cell_bucket=X/gb<batchId>.parquet` — the bucket-clustered
-    * repartition guarantees one file per bucket, enforced), and the
-    * chain adopts exactly the unreferenced files. A REPLAYED batch
-    * overwrites its own canonical files (REPLACE_EXISTING — nothing
-    * else ever carries its name) and its commit finds nothing
-    * unreferenced, so the chain — and every reader — is untouched: a
-    * mid-batch crash leaves only unreferenced files the replay
-    * overwrites and the vacuum would sweep. Single-writer contract
-    * unchanged (the streaming sink's serial batches ARE it). */
-  def appendCanonical(newVectors: DataFrame, idCol: String, vecCol: String,
-                      path: String, batchId: Long,
-                      runTag: String = ""): Unit = {
-    val spark = newVectors.sparkSession
-    val codes = s"$path/codes.parquet"
-    val (numSub, subDim, cellBuckets) = params(spark, path)
-    StoreGenerations.landCanonicalBucketed(
-      encode(newVectors, idCol, vecCol,
-        stored(spark, path, "centroids", idCol, vecCol),
-        stored(spark, path, "codebook", idCol, vecCol),
-        numSub, subDim, cellBuckets),
-      codes, "cell_bucket", batchId, runTag)
-    StoreSnapshots.commit("vector", path)
-  }
-
-  /** CONCURRENT append — any number of writers fold batches into the
-    * index AT ONCE. The vector store is the index store where this is
-    * sound without a cross-artifact protocol: its frozen geometry
-    * (centroids/codebook/params) never changes on append, so `codes`
-    * is the ONLY accreting artifact and a single chain commit is the
-    * whole consistency unit. Each writer encodes under the frozen
-    * geometry, lands its files privately
-    * ([[StoreGenerations.landOwnBucketed]] — one file per populated
-    * bucket, invisible until committed), then races the exact-file-set
-    * CAS commit ([[StoreGenerations.commitOwn]]): the loser re-bases
-    * on the winner's generation, so every surviving generation differs
-    * from its parent by exactly one writer's whole batch — no torn
-    * batches, no double adoption, pinned readers untouched. The
-    * snapshot commit retries the same way; it pins
-    * current state, so losing that race just means pinning a newer
-    * consistent state. Caller guarantees new ids, as for [[append]].
-    * Returns the codes-chain generation this writer's commit
-    * published. */
-  def appendOwn(newVectors: DataFrame, idCol: String, vecCol: String,
-                path: String, writerTag: String): Long = {
-    val spark = newVectors.sparkSession
-    val codes = s"$path/codes.parquet"
-    val (numSub, subDim, cellBuckets) = params(spark, path)
-    val landed = StoreGenerations.landOwnBucketed(
-      encode(newVectors, idCol, vecCol,
-        stored(spark, path, "centroids", idCol, vecCol),
-        stored(spark, path, "codebook", idCol, vecCol),
-        numSub, subDim, cellBuckets),
-      codes, "cell_bucket", writerTag)
-    val gen = StoreGenerations.commitOwn(codes, landed)
-    StoreSnapshots.commit("vector", path)
     gen
+  }
+
+  /** [[append]]'s land + commit tail over an encoded batch — shared
+    * with [[appendOrRebuild]], which encodes from its own assignment
+    * pass. */
+  private def commitCodes(path: String, codes: DataFrame,
+                          batch: Option[(Long, String)]): Long = {
+    val dir = s"$path/codes.parquet"
+    StoreSnapshots.commitLanded("vector", path,
+      Map(dir -> StoreGenerations.land(codes, dir, Some("cell_bucket"), batch)))
   }
 
   /** REBUILD: re-fit the index geometry over the CURRENT corpus and
@@ -379,15 +334,10 @@ object VectorIndexStore {
       .agg(avg("distortion")).head().getDouble(0)
     val cal = calibration(spark, path)
     // the same effect as append(newVectors, ...) minus its re-derived
-    // assignment: encode from the shared residuals, then the
-    // documented commit tail
-    encodeAssigned(assigned, codebook, idCol, vecCol,
-        numSub, subDim, cellBuckets)
-      .repartition(col("cell_bucket"))
-      .write.partitionBy("cell_bucket").mode(SaveMode.Append)
-      .parquet(s"$path/codes.parquet")
-    StoreGenerations.commitAppend(s"$path/codes.parquet")
-    StoreSnapshots.commit("vector", path)
+    // assignment: encode from the shared residuals, then append's
+    // land + commit tail
+    commitCodes(path, encodeAssigned(assigned, codebook, idCol, vecCol,
+      numSub, subDim, cellBuckets), None)
     if (batchMean > factor * cal) {
       // re-calibrate from the rebuild's OWN checkpointed assignment —
       // value-identical to calibrate(corpus, ...) over the rebuilt

@@ -2282,9 +2282,9 @@ object ExtQueries {
   /** MULTI-WRITER append on the MULTI-ARTIFACT signature store — the
     * file-level snapshot commit under real concurrency: batch A
     * (q_incr_stored's append) splits in two, TWO writers race
-    * [[SignatureStore.appendOwn]] (land bands+sets privately in both
-    * artifacts → ONE conditional create names the whole cross-artifact
-    * batch → re-base on a lost race), then batch B probes the store.
+    * [[SignatureStore.append]] (land bands+sets in both artifacts →
+    * ONE conditional create names the whole cross-artifact batch →
+    * re-base on a lost race), then batch B probes the store.
     * Same oracle as q_incr_stored: however the two commits interleave,
     * the probe must see base ∪ all of batch A with every candidate's
     * verification set present — the atomicity the snapshot-as-lone-
@@ -2307,8 +2307,7 @@ object ExtQueries {
     Await.result(Future.sequence(Seq(0, 13).map { m =>
       Future {
         barrier.await()
-        SignatureStore.appendOwn(half(m), "doc_id", "text", store,
-          writerTag = s"sc$m")
+        SignatureStore.append(half(m), "doc_id", "text", store)
       }
     }), 10.minutes)
     SignatureStore.ingest(spark, store, batchB, "doc_id", "text")
@@ -2316,9 +2315,8 @@ object ExtQueries {
 
   /** MULTI-WRITER append on the BM25 store — the store the file-level
     * commit exists for: two writers race [[RetrievalIndexStore
-    * .appendOwn]] (postings, df deltas, and the stats row land
-    * privately, ONE conditional create publishes each writer's whole
-    * batch), then q_bm25_topk's query batch runs against the store.
+    * .append]] (postings, df deltas, and the stats row land, ONE
+    * conditional create publishes each writer's whole batch), then q_bm25_topk's query batch runs against the store.
     * Same oracle as q_bm25_stored: new postings are NEVER scored
     * against document frequencies that don't include them, whatever
     * the interleaving — wrong df means wrong SCORES, which the
@@ -2337,9 +2335,9 @@ object ExtQueries {
     Await.result(Future.sequence(Seq(0, 7).map { m =>
       Future {
         barrier.await()
-        RetrievalIndexStore.appendOwn(
+        RetrievalIndexStore.append(
           corpus.filter(col("doc_id") % 14 === m),
-          "doc_id", "text", path, writerTag = s"bc$m")
+          "doc_id", "text", path)
       }
     }), 10.minutes)
     RetrievalIndexStore.query(spark, path, bm25Queries(d),
@@ -2437,16 +2435,14 @@ object ExtQueries {
       "vec_id", "embedding", k = 3, nprobe = 3)
   }
 
-  /** MULTI-WRITER lifecycle on the vector store — the gate that
-    * retires the single-writer assumption where it is sound to: build
-    * on a fifth of the corpus, then FOUR writers race
-    * [[VectorIndexStore.appendOwn]] (land privately → exact-file-set
-    * CAS commit → re-base on a lost race; the snapshot chain advances
-    * through its own retrying commit) for the other four fifths
+  /** MULTI-WRITER lifecycle on the vector store: build on a fifth of
+    * the corpus, then FOUR writers race [[VectorIndexStore.append]]
+    * (land → one conditional snapshot create naming exactly the landed
+    * files → re-base on a lost race) for the other four fifths
     * CONCURRENTLY, then answer q_ann_topk's exact query batch from
     * the store. Same oracle as q_ann_compact (`ivfPqTopkSql`): the
     * interleaving is nondeterministic, the ANSWER must not be — every
-    * surviving generation is one writer's whole batch, and the final
+    * surviving snapshot adds one writer's whole batch, and the final
     * state is the union regardless of commit order. */
   def annConcurrent(spark: SparkSession, dir: String): DataFrame = {
     import scala.concurrent.{Await, Future}
@@ -2462,8 +2458,8 @@ object ExtQueries {
     Await.result(Future.sequence((1 to 4).map { m =>
       Future {
         barrier.await()
-        VectorIndexStore.appendOwn(cands.filter(col("vec_id") % 5 === m),
-          "vec_id", "embedding", path, writerTag = s"cw$m")
+        VectorIndexStore.append(cands.filter(col("vec_id") % 5 === m),
+          "vec_id", "embedding", path)
       }
     }), 10.minutes)
     VectorIndexStore.query(spark, path, queries,

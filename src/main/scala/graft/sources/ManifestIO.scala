@@ -26,10 +26,11 @@ package graft.sources
   * machinery runs through conditional-PUT semantics unchanged. */
 /** A conditional-create publish found the target generation already
   * written by ANOTHER writer — the typed signal of a lost commit
-  * race. Under the single-writer contract this is a loud failure;
-  * [[graft.ext.StoreGenerations.commitOwn]]'s optimistic-concurrency
-  * loop catches exactly this type and re-bases on the winner's
-  * generation instead. */
+  * race. Under the merge sink's single-writer contract this is a
+  * loud failure; the store commits' optimistic-concurrency loops
+  * ([[graft.ext.StoreGenerations.commitOwn]],
+  * [[graft.ext.StoreSnapshots.commitOwnStore]]) catch exactly this
+  * type and re-base on the winner's generation instead. */
 final class LostPublishRace(msg: String)
   extends IllegalStateException(msg)
 

@@ -630,24 +630,11 @@ object StreamingOps {
           s"lost publish race on $root gen=$gen: the generation " +
             "stored is not this writer's — a second writer is publishing " +
             "to the same manifest root (single-writer contract; " +
-            "concurrent appenders go through StoreGenerations.commitOwn)")
+            "store appends commit through StoreGenerations.commitOwn)")
     }
   }
 
 
-  /** Streaming INGEST into the persisted vector index — the write
-    * sibling of the stream-probe face: each micro-batch encodes under
-    * the store's frozen geometry and lands via [[graft.ext
-    * .VectorIndexStore.appendCanonical]] (one canonical
-    * `gb<batchId>` file per populated bucket, adopted by the codes
-    * artifact's generation chain). Exactly-once store state from
-    * idempotence, the merge-sink argument: a replayed batch
-    * overwrites its own canonical files and its commit finds nothing
-    * unreferenced, so the chain never moves twice for one batch —
-    * MID-BATCH CRASHES INCLUDED (unreferenced leftovers are
-    * overwritten by the replay; the vacuum would sweep orphans).
-    * Readers keep resolving their pinned generation throughout; the
-    * sink's serial batches are the store's single writer. */
   /** Deterministic run tag for a streaming ingest's canonical file
     * names ([[graft.ext.StoreGenerations.canonicalName]]): a hash of
     * the canonical checkpoint path. Same checkpoint → same tag, so a
@@ -660,6 +647,19 @@ object StreamingOps {
       java.nio.file.Paths.get(checkpoint)
         .toAbsolutePath.normalize.toString)}%08x"
 
+  /** Streaming INGEST into the persisted vector index — the write
+    * sibling of the stream-probe face: each micro-batch encodes under
+    * the store's frozen geometry and lands through the store's one
+    * [[graft.ext.VectorIndexStore.append]] with `batch = Some((batchId,
+    * runTag))` (one canonical `[r<tag>-]gb<batchId>` file per
+    * populated bucket, published by one snapshot commit that names
+    * exactly those files). Exactly-once store state from idempotence,
+    * the merge-sink argument: a replayed batch overwrites its own
+    * canonical files and its commit finds them already published, so
+    * the store never moves twice for one batch — MID-BATCH CRASHES
+    * INCLUDED (leftovers are overwritten by the replay, never adopted
+    * by another commit; the vacuum sweeps orphans). Readers keep
+    * resolving their pinned snapshot throughout. */
   def runVectorIngestSink(updates: DataFrame, path: String,
                           idCol: String, vecCol: String,
                           checkpoint: String)
@@ -669,8 +669,9 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        graft.ext.VectorIndexStore.appendCanonical(batch.toDF(),
-          idCol, vecCol, path, batchId, tag)
+        graft.ext.VectorIndexStore.append(batch.toDF(),
+          idCol, vecCol, path, batch = Some((batchId, tag)))
+        ()
       }
       .start()
   }
@@ -678,7 +679,8 @@ object StreamingOps {
   /** Streaming INGEST into the persisted signature store — the FOLD
     * side of the incremental near-dup loop as a stream: each
     * micro-batch's bands/sets derive under the store's config and
-    * land canonically ([[graft.ext.SignatureStore.appendCanonical]]),
+    * land canonically ([[graft.ext.SignatureStore.append]] with
+    * `batch = Some((batchId, runTag))`),
     * so tomorrow's probes see today's stream exactly once, across
     * crashes and replays. A production loop that also wants per-batch
     * CANDIDATES runs `SignatureStore.ingest` first inside its own
@@ -693,8 +695,9 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        graft.ext.SignatureStore.appendCanonical(batch.toDF(),
-          idCol, textCol, path, batchId, tag)
+        graft.ext.SignatureStore.append(batch.toDF(),
+          idCol, textCol, path, batch = Some((batchId, tag)))
+        ()
       }
       .start()
   }
@@ -703,9 +706,10 @@ object StreamingOps {
     * member of the streaming-ingest family ([[runVectorIngestSink]],
     * [[runSigIngestSink]]): each micro-batch's postings/df/stats (and
     * positions on a positional store) land canonically under the
-    * store's bucket fn, adopted by the artifacts' generation chains —
-    * exactly-once serving state across crashes and replays, readers
-    * pinned throughout. */
+    * store's bucket fn through [[graft.ext.RetrievalIndexStore.append]]
+    * with `batch = Some((batchId, runTag))`, one snapshot commit
+    * naming exactly those files — exactly-once serving state across
+    * crashes and replays, readers pinned throughout. */
   def runRetrievalIngestSink(updates: DataFrame, path: String,
                              idCol: String, textCol: String,
                              checkpoint: String)
@@ -715,8 +719,9 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        graft.ext.RetrievalIndexStore.appendCanonical(batch.toDF(),
-          idCol, textCol, path, batchId, tag)
+        graft.ext.RetrievalIndexStore.append(batch.toDF(),
+          idCol, textCol, path, batch = Some((batchId, tag)))
+        ()
       }
       .start()
   }
@@ -727,7 +732,7 @@ object StreamingOps {
     * seen-hash probe → exact keeper → near-dup vs the store with
     * index-match propagation → benchmark decon → frozen-model quality
     * routing → pack/shard/card), with the fold landing CANONICALLY
-    * (`[r<tag>-]gb<batchId>` files adopted by the generation chains)
+    * (`[r<tag>-]gb<batchId>` files published by one snapshot commit)
     * so batch N+1 probes batch N's fold and a replayed batch commits
     * nothing — the daily release loop, exactly-once, as a stream.
     * [[runSigIngestSink]] is the fold alone; this is the loop.

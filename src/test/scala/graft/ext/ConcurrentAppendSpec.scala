@@ -10,15 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The multi-writer append protocol ([[StoreGenerations.landOwn]] +
-  * [[StoreGenerations.commitOwn]] — land privately, CAS-commit the
-  * exact file set, re-base on a lost race): N genuinely racing
-  * writers must each get their WHOLE batch onto the chain exactly
-  * once, every surviving generation must differ from its parent by
-  * exactly one writer's batch (no torn batches, ever), pinned
-  * readers must be untouched, and the vector store's concurrent face
-  * ([[VectorIndexStore.appendOwn]]) must be invisible in the answer
-  * (== the direct IVFADC chain over the same logical corpus). */
+/** The multi-writer append protocol ([[StoreGenerations.land]] +
+  * [[StoreGenerations.commitOwn]] — land, CAS-commit the exact file
+  * set, re-base on a lost race): N genuinely racing writers must each
+  * get their WHOLE batch onto the chain exactly once, every surviving
+  * generation must differ from its parent by exactly one writer's
+  * batch (no torn batches, ever), pinned readers must be untouched,
+  * an append must never publish a file it did not land, and the
+  * stores' one `append` must be invisible in the answer under
+  * concurrency (== the direct chains over the same logical corpus). */
 class ConcurrentAppendSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -42,6 +42,9 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     StoreGenerations.enable(path)
   }
 
+  private def canon(p: String): String =
+    java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
+
   private def chainIds(path: String): Set[Long] =
     StoreGenerations.read(spark, path)
       .collect().map(_.getLong(0)).toSet
@@ -56,13 +59,13 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val landed = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
     val futures = (1 to writers).map { w =>
       Future {
-        // two rows per writer, landed as two private files (two
-        // lands, one commit — commitOwn takes the combined set)
+        // two rows per writer, landed as two files (two lands, one
+        // commit — commitOwn takes the combined set)
         val files =
-          StoreGenerations.landOwn(Seq(w * 100L).toDF("id").coalesce(1),
-            path, writerTag = s"t$w") ++
-          StoreGenerations.landOwn(Seq(w * 100L + 1L).toDF("id").coalesce(1),
-            path, writerTag = s"t$w")
+          StoreGenerations.land(Seq(w * 100L).toDF("id").coalesce(1),
+            path, None, None) ++
+          StoreGenerations.land(Seq(w * 100L + 1L).toDF("id").coalesce(1),
+            path, None, None)
         landed.put(s"t$w", files)
         barrier.await() // maximize genuine commit contention
         StoreGenerations.commitOwn(path, files)
@@ -81,15 +84,17 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     // exactly that writer's whole landed batch — atomic visibility
     val cur = StoreGenerations.currentGen(path).get
     assert(cur == writers.toLong)
-    val wTag = "w(t\\d+)-u".r
+    import scala.jdk.CollectionConverters._
+    val owner: Map[String, String] = landed.asScala.toSeq.flatMap {
+      case (w, fs) => fs.map(f => canon(f) -> w)
+    }.toMap
     (1L to cur).foreach { g =>
       val prev = StoreGenerations.filesAt(path, g - 1).get.toSet
       val now = StoreGenerations.filesAt(path, g).get.toSet
       assert(prev.subsetOf(now), s"gen $g dropped files")
       val added = (now -- prev).toSeq
-      val tags = added.flatMap(p =>
-        wTag.findFirstMatchIn(p.substring(p.lastIndexOf('/') + 1))
-          .map(_.group(1))).distinct
+      val tags = added.map(p => owner.getOrElse(canon(p),
+        fail(s"gen $g adopted a file no writer landed: $p"))).distinct
       assert(tags.length == 1,
         s"gen $g mixes writers' files: $added")
       assert(added.toSet == landed.get(tags.head).toSet,
@@ -105,8 +110,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val pinnedGen = StoreGenerations.currentGen(path).get
     val futures = (1 to 3).map { w =>
       Future {
-        StoreGenerations.commitOwn(path, StoreGenerations.landOwn(
-          Seq(w + 10L).toDF("id"), path, writerTag = s"p$w"))
+        StoreGenerations.commitOwn(path, StoreGenerations.land(
+          Seq(w + 10L).toDF("id"), path, None, None))
       }
     }
     Await.result(Future.sequence(futures), 5.minutes)
@@ -121,11 +126,11 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val path = "/tmp/graft_concspec_rebase"
     freshChain(path, Seq(0L))
     import spark.implicits._
-    val filesA = StoreGenerations.landOwn(
-      Seq(100L).toDF("id"), path, writerTag = "a")
+    val filesA = StoreGenerations.land(
+      Seq(100L).toDF("id"), path, None, None)
     // writer B lands AND commits while A sits between land and commit
-    StoreGenerations.commitOwn(path, StoreGenerations.landOwn(
-      Seq(200L).toDF("id"), path, writerTag = "b"))
+    StoreGenerations.commitOwn(path, StoreGenerations.land(
+      Seq(200L).toDF("id"), path, None, None))
     val genA = StoreGenerations.commitOwn(path, filesA)
     assert(genA == 2L)
     assert(chainIds(path) == Set(0L, 100L, 200L))
@@ -135,8 +140,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val path = "/tmp/graft_concspec_replay"
     freshChain(path, Seq(0L))
     import spark.implicits._
-    val files = StoreGenerations.landOwn(
-      Seq(7L).toDF("id"), path, writerTag = "r")
+    val files = StoreGenerations.land(
+      Seq(7L).toDF("id"), path, None, None)
     val gen = StoreGenerations.commitOwn(path, files)
     assert(StoreGenerations.commitOwn(path, files) == gen)
     assert(StoreGenerations.currentGen(path).get == gen)
@@ -148,10 +153,10 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     freshChain(path, Seq(0L))
     import spark.implicits._
     val files =
-      StoreGenerations.landOwn(Seq(1L).toDF("id").coalesce(1),
-        path, writerTag = "x") ++
-      StoreGenerations.landOwn(Seq(2L).toDF("id").coalesce(1),
-        path, writerTag = "x")
+      StoreGenerations.land(Seq(1L).toDF("id").coalesce(1),
+        path, None, None) ++
+      StoreGenerations.land(Seq(2L).toDF("id").coalesce(1),
+        path, None, None)
     assert(files.length == 2)
     // a foreign commit adopts ONE of the writer's two files
     StoreGenerations.publish(path, 1L,
@@ -162,24 +167,6 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     assert(e.getMessage.contains("PARTIALLY referenced"))
   }
 
-  test("the adopt-everything commitAppend never adopts a concurrent " +
-    "writer's landed-uncommitted files") {
-    val path = "/tmp/graft_concspec_mixed"
-    freshChain(path, Seq(0L))
-    import spark.implicits._
-    val landed = StoreGenerations.landOwn(
-      Seq(50L).toDF("id"), path, writerTag = "z")
-    // a plain append lands an untagged file and commits; the
-    // concurrent writer's private file must stay invisible
-    Seq(60L).toDF("id").coalesce(1)
-      .write.mode("append").parquet(path)
-    StoreGenerations.commitAppend(path)
-    assert(chainIds(path) == Set(0L, 60L))
-    // the concurrent writer's own commit then lands its whole batch
-    StoreGenerations.commitOwn(path, landed)
-    assert(chainIds(path) == Set(0L, 50L, 60L))
-  }
-
   // ---- multi-artifact stores: the file-level snapshot commit ----
 
   private def docs: DataFrame =
@@ -188,6 +175,65 @@ class ConcurrentAppendSpec extends AnyFunSuite {
   private def snapDocIds(path: String, artifact: String, gen: Long): Set[Long] =
     StoreSnapshots.pinAt(spark, path, gen).read(s"$path/$artifact")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+
+  private def bm25Rows(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  test("an append never publishes files it did not land: a crashed " +
+    "append's leftovers and another writer's uncommitted files stay out") {
+    val path = "/tmp/graft_concspec_strays"
+    deleteTree(path)
+    val corpus = docs.filter(col("doc_id") >= 20 && col("doc_id") < 300)
+    val base = corpus.filter(col("doc_id") % 2 === 0)
+    val batch = corpus.filter(col("doc_id") % 2 === 1)
+    RetrievalIndexStore.build(base, "doc_id", "text", path, tokBuckets = 16)
+    val postings = s"$path/postings.parquet"
+    val stats = s"$path/stats.parquet"
+    // the store's own derivation of a document set: bucketed postings
+    // and the one (N, T) stats row
+    def postRows(b: DataFrame): DataFrame =
+      Retrieval.postings(b, "doc_id", "text")
+        .select(col("doc_id").cast("long").as("doc_id"), col("tok"),
+          col("tf"), col("dl"))
+        .withColumn("tok_bucket", pmod(xxhash64(col("tok")), lit(16L)))
+    def statsRow(post: DataFrame): DataFrame =
+      post.groupBy("doc_id").agg(max("dl").as("__dl"))
+        .agg(count(lit(1)).as("n_docs"), sum("__dl").as("total_dl"))
+    // stray 1: a crashed append of THIS batch — its postings and stats
+    // written into the artifact directories (part files under the
+    // tok_bucket=* dirs, as a direct append writes them), never
+    // committed. A retry must not publish the batch twice.
+    val crashed = postRows(batch).localCheckpoint()
+    crashed.repartition(col("tok_bucket")).write.partitionBy("tok_bucket")
+      .mode("append").parquet(postings)
+    statsRow(crashed).coalesce(1).write.mode("append").parquet(stats)
+    // stray 2: another writer's landed-but-uncommitted batch
+    val other = docs.filter(col("doc_id") >= 300 && col("doc_id") < 340)
+      .select((col("doc_id") + 900000L).as("doc_id"), col("text"))
+    val otherPost = postRows(other).localCheckpoint()
+    val otherFiles =
+      StoreGenerations.land(otherPost, postings, Some("tok_bucket"), None) ++
+        StoreGenerations.land(statsRow(otherPost), stats, None, None)
+    assert(otherFiles.nonEmpty)
+    assert(graft.sources.Layout.listParquet(postings)
+      .exists(_.contains("tok_bucket=")), "strays must sit in bucket dirs")
+
+    RetrievalIndexStore.append(batch, "doc_id", "text", path)
+
+    val want = base.count() + batch.count()
+    def nDocs(df: DataFrame): Long =
+      df.agg(sum("n_docs")).collect()(0).getLong(0)
+    assert(nDocs(StoreGenerations.read(spark, stats)) == want)
+    assert(nDocs(StoreSnapshots.reader(spark, path)(stats)) == want)
+    val queries = docs.filter(col("doc_id") < 10)
+      .select(col("doc_id").as("query_id"),
+        array(lit("dup"), lit("vector"), lit("line")).as("terms"))
+    val stored = bm25Rows(RetrievalIndexStore.query(spark, path, queries,
+      "query_id", "terms", k = 5))
+    assert(stored.nonEmpty)
+    assert(stored == bm25Rows(Retrieval.bm25TopK(queries, "query_id",
+      "terms", base.unionByName(batch), "doc_id", "text", 5)))
+  }
 
   test("racing sig-store writers commit bands and sets ATOMICALLY: " +
     "every surviving snapshot's bands cover exactly its sets") {
@@ -204,8 +250,7 @@ class ConcurrentAppendSpec extends AnyFunSuite {
           .filter(col("doc_id") >= 200 && col("doc_id") % writers === w - 1)
           .select((col("doc_id") + 10000L * w).as("doc_id"), col("text"))
         barrier.await()
-        SignatureStore.appendOwn(batch, "doc_id", "text", path,
-          writerTag = s"sw$w")
+        SignatureStore.append(batch, "doc_id", "text", path)
       }
     }
     Await.result(Future.sequence(futures), 10.minutes)
@@ -240,24 +285,24 @@ class ConcurrentAppendSpec extends AnyFunSuite {
       StoreSnapshots.currentGen(path).get)
     val batch = docs.filter(col("doc_id") >= 100 && col("doc_id") < 150)
     val (shingleN, numHashes) = SignatureStore.params(spark, path)
-    // land privately (the writer's first half-step)…
-    val bands = StoreGenerations.landOwn(
+    // land (the writer's first half-step)…
+    val bands = StoreGenerations.land(
       Dedup.nativeBands(batch, "doc_id", "text", shingleN, numHashes)
         .select(col("doc_id").cast("long").as("doc_id"),
           col("band"), col("bkey")),
-      s"$path/bands.parquet", "half")
+      s"$path/bands.parquet", None, None)
     // …a reader pinning NOW sees the pre-batch store exactly
     val mid = StoreSnapshots.pin(spark, path)
     assert(mid.read(s"$path/bands.parquet")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
       == before)
     // finish the batch and commit it as one snapshot
-    val sets = StoreGenerations.landOwn(
+    val sets = StoreGenerations.land(
       Dedup.shingleRows(batch, "doc_id", "text", shingleN)
         .groupBy(col("doc_id"))
         .agg(collect_list(col("shingle")).as("shingles"))
         .select(col("doc_id").cast("long").as("doc_id"), col("shingles")),
-      s"$path/sets.parquet", "half")
+      s"$path/sets.parquet", None, None)
     StoreSnapshots.commitOwnStore("sig", path, Map(
       s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets))
     val cur = StoreSnapshots.currentGen(path).get
@@ -279,7 +324,10 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     StoreSnapshots.enable("sig", path)
     val batch = docs.filter(col("doc_id") >= 200 && col("doc_id") < 260)
       .select((col("doc_id") + 600000L).as("doc_id"), col("text"))
-    SignatureStore.appendOwn(batch, "doc_id", "text", path, "fw")
+    // a writer that published its snapshot and died before adopting
+    // the files into the chains: the d-lines are all that names them
+    StoreSnapshots.commitOwnStore("sig", path,
+      SignatureStore.land(batch, "doc_id", "text", path, None))
     val probe = docs.filter(col("doc_id") >= 260 && col("doc_id") < 290)
       .select((col("doc_id") + 800000L).as("doc_id"), col("text"))
     def answers(): Set[(Long, Long)] =
@@ -308,7 +356,10 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     StoreSnapshots.enable("sig", path)
     val batch = docs.filter(col("doc_id") >= 150 && col("doc_id") < 200)
       .select((col("doc_id") + 600000L).as("doc_id"), col("text"))
-    SignatureStore.appendOwn(batch, "doc_id", "text", path, "vw")
+    // published, never adopted (a writer that died between its
+    // snapshot and its chain commits) — see the fold test
+    StoreSnapshots.commitOwnStore("sig", path,
+      SignatureStore.land(batch, "doc_id", "text", path, None))
     // keep only the newest snapshot: its d-files must survive the
     // artifact vacuums even though NO chain references them
     StoreSnapshots.vacuum("sig", path, keepGens = 1)
@@ -330,9 +381,9 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val futures = Seq(1, 2).map { m =>
       Future {
         barrier.await()
-        RetrievalIndexStore.appendOwn(
+        RetrievalIndexStore.append(
           corpus.filter(col("doc_id") % 3 === m),
-          "doc_id", "text", path, writerTag = s"bw$m")
+          "doc_id", "text", path)
       }
     }
     Await.result(Future.sequence(futures), 10.minutes)
@@ -369,12 +420,12 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val fCanon = Future {
       barrier.await()
       // what runSigIngestSink does per micro-batch
-      SignatureStore.appendCanonical(canonical, "doc_id", "text", path,
-        batchId = 0L, runTag = "ip")
+      SignatureStore.append(canonical, "doc_id", "text", path,
+        batch = Some((0L, "ip")))
     }
     val fOwn = Future {
       barrier.await()
-      SignatureStore.appendOwn(own, "doc_id", "text", path, "ipw")
+      SignatureStore.append(own, "doc_id", "text", path)
     }
     Await.result(Future.sequence(Seq(fCanon, fOwn)), 10.minutes)
     val cur = StoreSnapshots.currentGen(path).get
@@ -392,8 +443,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     assert(snapDocIds(path, "bands.parquet", cur) == want)
     // a replayed micro-batch overwrites its own canonical files and
     // commits nothing — no new snapshot, state unchanged
-    SignatureStore.appendCanonical(canonical, "doc_id", "text", path,
-      batchId = 0L, runTag = "ip")
+    SignatureStore.append(canonical, "doc_id", "text", path,
+      batch = Some((0L, "ip")))
     assert(StoreSnapshots.currentGen(path).get == cur)
     assert(snapDocIds(path, "bands.parquet", cur) == want)
   }
@@ -431,9 +482,9 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val futures = Seq(1, 2).map { m =>
       Future {
         barrier.await()
-        VectorIndexStore.appendOwn(
+        VectorIndexStore.append(
           cands.filter(col("vec_id") % 3 === m),
-          "vec_id", "embedding", path, writerTag = s"vw$m")
+          "vec_id", "embedding", path)
       }
     }
     Await.result(Future.sequence(futures), 5.minutes)
@@ -445,11 +496,14 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     assert(stored == direct)
     assert(stored.nonEmpty)
     // the snapshot chain caught up to a consistent current state:
-    // its pinned codes generation is the chain's current one
+    // the pin resolves exactly the codes chain's current file set
+    // (its pinned generation's files plus its d files)
     val pin = StoreSnapshots.pin(spark, path)
     val codesDir = s"$path/codes.parquet"
-    assert(pin.pinnedGens(java.nio.file.Paths.get(codesDir)
-      .toAbsolutePath.normalize.toString) ==
-      StoreGenerations.currentGen(codesDir).get)
+    val key = canon(codesDir)
+    val pinned = (StoreGenerations.filesAt(codesDir, pin.pinnedGens(key)).get ++
+      pin.pinnedDFiles.getOrElse(key, Seq.empty)).map(canon)
+    val current = StoreGenerations.currentFiles(codesDir).get.map(canon)
+    assert(pinned.sorted == current.sorted)
   }
 }

@@ -154,7 +154,7 @@ abstract class StoreGenerationsBehavior(tag: String, objectStore: Boolean)
     assert(!StoreGenerations.currentFiles(bands).get.contains(dead))
     assert(rows(SignatureStore.ingest(spark, store,
       batch.limit(0), "doc_id", "text")).isEmpty) // sanity: runs
-    StoreGenerations.vacuum(bands, keepGens = 1)
+    StoreMaintenance.vacuumStore("sig", store, keepGens = 1)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dead)))
     // answers over the surviving generation are coherent
     assert(rows(SignatureStore.ingest(spark, store, batch,

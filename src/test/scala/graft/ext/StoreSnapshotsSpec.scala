@@ -1,13 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 /** The store-level snapshot must make a multi-artifact append ATOMIC
-  * to readers: a query interleaved between the per-artifact commits
+  * to readers: a query interleaved between the per-artifact landings
   * sees the all-old store (never new postings against stale df), the
   * post-commit query sees all-new; frozen seed files verify at
   * resolve time (missing/modified fails loudly BEFORE any scan);
@@ -28,6 +28,21 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  private def canon(p: String): String =
+    java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
+
+  /** Landed files exist on disk, and the store's current pin resolves
+    * none of them for `artifact`. */
+  private def landedButUnpublished(path: String, artifact: String,
+                                   landed: Seq[String]): Unit = {
+    assert(landed.nonEmpty && landed.forall(f =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(f))))
+    val resolved = StoreSnapshots.reader(spark, path)(artifact).inputFiles
+      .map(f => canon(new java.net.URI(f).getPath)).toSet
+    assert(landed.forall(f => !resolved.contains(canon(f))),
+      "the pin must resolve none of the landed files before the commit")
+  }
 
   private def fresh(path0: String): String = {
     val path = s"${path0}_$tag"
@@ -62,8 +77,8 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
         array(lit("dup"), lit("vector"), lit("line")).as("terms"))
 
   /** The exact per-artifact derivations [[RetrievalIndexStore.append]]
-    * runs, exposed stepwise so the test can COMMIT BETWEEN THEM — the
-    * interleaving a crash or a slow writer produces. */
+    * runs, exposed stepwise so the test can READ BETWEEN THEIR
+    * LANDINGS — the interleaving a crash or a slow writer produces. */
   private def postRows(b: DataFrame, tokBuckets: Int): DataFrame =
     Retrieval.postings(b, "doc_id", "text")
       .select(col("doc_id").cast("long").as("doc_id"), col("tok"),
@@ -80,36 +95,32 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
       "query_id", "terms", k = 5))
     assert(base.nonEmpty)
 
-    // HALF-APPEND: batch postings land and their artifact generation
-    // commits — but df/stats have not moved yet. Without the store
-    // snapshot, a reader here would score batchB's postings against
-    // corpus-only document frequencies.
+    // HALF-APPEND: batch postings land in their artifact — but df/stats
+    // have not landed yet. Were the postings visible here, a reader
+    // would score batchB's postings against corpus-only document
+    // frequencies.
     val tokBuckets = RetrievalIndexStore.params(spark, path)
     val post = postRows(batchB, tokBuckets).localCheckpoint()
-    post.repartition(col("tok_bucket")).write.partitionBy("tok_bucket")
-      .mode(SaveMode.Append).parquet(s"$path/postings.parquet")
-    StoreGenerations.commitAppend(s"$path/postings.parquet")
-    assert(StoreGenerations.currentGen(s"$path/postings.parquet").get >
-      StoreSnapshots.pin(spark, path)
-        .pinnedGens(java.nio.file.Paths.get(s"$path/postings.parquet")
-          .toAbsolutePath.normalize.toString),
-      "the half-append must have advanced the artifact chain")
+    val landedPost = StoreGenerations.land(post, s"$path/postings.parquet",
+      Some("tok_bucket"), None)
+    landedButUnpublished(path, s"$path/postings.parquet", landedPost)
     val interleaved = rows(RetrievalIndexStore.query(spark, path, queries,
       "query_id", "terms", k = 5))
     assert(interleaved == base,
       "a reader between artifact commits must see the ALL-OLD store")
 
-    // finish the append: df + stats commits, then the atomic point
-    post.groupBy("tok", "tok_bucket").agg(count(lit(1)).as("df"))
-      .repartition(col("tok_bucket")).write.partitionBy("tok_bucket")
-      .mode(SaveMode.Append).parquet(s"$path/df.parquet")
-    StoreGenerations.commitAppend(s"$path/df.parquet")
-    post.groupBy("doc_id").agg(max("dl").as("__dl"))
-      .agg(count(lit(1)).as("n_docs"), sum("__dl").as("total_dl"))
-      .coalesce(1).write.mode(SaveMode.Append)
-      .parquet(s"$path/stats.parquet")
-    StoreGenerations.commitAppend(s"$path/stats.parquet")
-    StoreSnapshots.commit("retrieval", path)
+    // finish the append: df + stats land, then the atomic point
+    val landedDf = StoreGenerations.land(
+      post.groupBy("tok", "tok_bucket").agg(count(lit(1)).as("df")),
+      s"$path/df.parquet", Some("tok_bucket"), None)
+    val landedStats = StoreGenerations.land(
+      post.groupBy("doc_id").agg(max("dl").as("__dl"))
+        .agg(count(lit(1)).as("n_docs"), sum("__dl").as("total_dl")),
+      s"$path/stats.parquet", None, None)
+    StoreSnapshots.commitOwnStore("retrieval", path, Map(
+      s"$path/postings.parquet" -> landedPost,
+      s"$path/df.parquet" -> landedDf,
+      s"$path/stats.parquet" -> landedStats))
 
     val after = rows(RetrievalIndexStore.query(spark, path, queries,
       "query_id", "terms", k = 5))
@@ -189,10 +200,8 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
             d.select(col("doc_id"), lit("kept").as("disposition")), p)
         },
         // the fold's signature step under the release's one chain
-        p => {
-          SignatureStore.appendChains(probe, "doc_id", "text", s"$p/sig")
-          StoreSnapshots.commit("release", p)
-        },
+        p => StoreSnapshots.commitLanded("release", p,
+          SignatureStore.land(probe, "doc_id", "text", s"$p/sig", None)),
         p => {
           val rd = StoreSnapshots.readerAt(spark, p, 0L)
           rows(rd(s"$p/urls.parquet")) ++
@@ -234,24 +243,26 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
       "doc_id", "text"))
     // half-append: bands only (the exact first half of append())
     val (shingleN, numHashes) = SignatureStore.params(spark, path)
-    Dedup.nativeBands(wave, "doc_id", "text", shingleN, numHashes)
-      .select(col("doc_id").cast("long").as("doc_id"),
-        col("band"), col("bkey"))
-      .write.mode(SaveMode.Append).parquet(s"$path/bands.parquet")
-    StoreGenerations.commitAppend(s"$path/bands.parquet")
+    val bands = StoreGenerations.land(
+      Dedup.nativeBands(wave, "doc_id", "text", shingleN, numHashes)
+        .select(col("doc_id").cast("long").as("doc_id"),
+          col("band"), col("bkey")),
+      s"$path/bands.parquet", None, None)
+    landedButUnpublished(path, s"$path/bands.parquet", bands)
     assert(rows(SignatureStore.ingest(spark, path, probe,
       "doc_id", "text")) == before,
       "a reader between bands and sets commits must see the all-old " +
         "store — a new band row without its verification set would " +
         "silently drop the pair instead")
     // finish: sets + the atomic commit
-    Dedup.shingleRows(wave, "doc_id", "text", shingleN)
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("shingle")).as("shingles"))
-      .select(col("doc_id").cast("long").as("doc_id"), col("shingles"))
-      .write.mode(SaveMode.Append).parquet(s"$path/sets.parquet")
-    StoreGenerations.commitAppend(s"$path/sets.parquet")
-    StoreSnapshots.commit("sig", path)
+    val sets = StoreGenerations.land(
+      Dedup.shingleRows(wave, "doc_id", "text", shingleN)
+        .groupBy(col("doc_id"))
+        .agg(collect_list(col("shingle")).as("shingles"))
+        .select(col("doc_id").cast("long").as("doc_id"), col("shingles")),
+      s"$path/sets.parquet", None, None)
+    StoreSnapshots.commitOwnStore("sig", path, Map(
+      s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets))
     SignatureStore.append(wave, "doc_id", "text", twin)
     assert(rows(SignatureStore.ingest(spark, path, probe,
       "doc_id", "text")) ==

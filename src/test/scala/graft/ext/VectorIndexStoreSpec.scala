@@ -116,13 +116,15 @@ class VectorIndexStoreSpec extends AnyFunSuite {
       rows(VectorIndexStore.query(spark, path, queries,
         "vec_id", "embedding", k = 3, nprobe = 3))
     val b1 = cands.filter(col("vec_id") % 5 === 1)
-    VectorIndexStore.appendCanonical(b1, "vec_id", "embedding", path, 0L)
+    VectorIndexStore.append(b1, "vec_id", "embedding", path,
+      batch = Some((0L, "")))
     val afterB1 = ask()
     val gen1 = StoreGenerations.currentGen(codesDir).get
     val files1 = StoreGenerations.currentFiles(codesDir).get.toSet
     // REPLAY of batch 0: same canonical names, nothing unreferenced —
     // the chain does not move and the answers do not change
-    VectorIndexStore.appendCanonical(b1, "vec_id", "embedding", path, 0L)
+    VectorIndexStore.append(b1, "vec_id", "embedding", path,
+      batch = Some((0L, "")))
     assert(StoreGenerations.currentGen(codesDir).get == gen1)
     assert(StoreGenerations.currentFiles(codesDir).get.toSet == files1)
     assert(ask() == afterB1)
@@ -134,7 +136,8 @@ class VectorIndexStoreSpec extends AnyFunSuite {
     java.nio.file.Files.copy(java.nio.file.Paths.get(seed),
       java.nio.file.Paths.get(dead))
     val b2 = cands.filter(col("vec_id") % 5 === 2)
-    VectorIndexStore.appendCanonical(b2, "vec_id", "embedding", path, 1L)
+    VectorIndexStore.append(b2, "vec_id", "embedding", path,
+      batch = Some((1L, "")))
     val gen2 = StoreGenerations.currentGen(codesDir).get
     assert(gen2 == gen1 + 1)
     // batches accumulate: the store now answers like a batch append

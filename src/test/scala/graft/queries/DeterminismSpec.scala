@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,20 +64,28 @@ class DeterminismSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (n, _) => graft.SparkEntry.streamingQueries(n) }
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    def snapshot(fn: (org.apache.spark.sql.SparkSession, String) => DataFrame,
-                 fanOut: String): Seq[String] = {
-      spark.conf.set(key, fanOut)
-      fn(spark, sfDir).collect().map(_.toString).sorted.toSeq
+    // one session per fan-out, each with its own SQLConf: the shared
+    // TestSpark session's conf is never touched, so suites running
+    // alongside this sweep keep the fan-out they were written against
+    def session(fanOut: String): SparkSession = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", fanOut)
+      s
     }
-    try {
-      val diverged = batch.flatMap { case (name, fn) =>
-        val a = snapshot(fn, "3")
-        val b = snapshot(fn, "11")
-        if (a == b) None else Some(name)
-      }
-      assert(diverged.isEmpty, s"fan-out-dependent results: $diverged")
-    } finally spark.conf.set(key, prev)
+    val (s3, s11) = (session("3"), session("11"))
+    def snapshot(fn: (SparkSession, String) => DataFrame,
+                 s: SparkSession): Seq[String] = {
+      val prevActive = SparkSession.getActiveSession
+      SparkSession.setActiveSession(s)
+      try fn(s, sfDir).collect().map(_.toString).sorted.toSeq
+      finally prevActive.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
+    }
+    val diverged = batch.flatMap { case (name, fn) =>
+      val a = snapshot(fn, s3)
+      val b = snapshot(fn, s11)
+      if (a == b) None else Some(name)
+    }
+    assert(diverged.isEmpty, s"fan-out-dependent results: $diverged")
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,14 +20,16 @@ class LayoutSpec extends AnyFunSuite {
     val right = (1 to 200).map(i => (i.toLong % 50, s"tag$i")).toDF("k", "tag")
     Layout.writeBucketed(left, "bucketed_l", Seq("k"), 8, Seq("k"))
     Layout.writeBucketed(right, "bucketed_r", Seq("k"), 8, Seq("k"))
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // plain plan (no AQE re-writes), no broadcast: a bucket-aligned
+    // SMJ must need zero ShuffleExchange nodes. The flags go on a
+    // session of its own, never on the shared TestSpark session.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.setActiveSession(s)
     try {
-      // plain plan (no AQE re-writes), no broadcast: a bucket-aligned
-      // SMJ must need zero ShuffleExchange nodes
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bucketed_l").join(spark.table("bucketed_r"), "k")
+      val joined = s.table("bucketed_l").join(s.table("bucketed_r"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
@@ -34,8 +37,8 @@ class LayoutSpec extends AnyFunSuite {
       assert(joined.count() ===
         left.join(right, "k").count())
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+      prevActive.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
       spark.sql("DROP TABLE IF EXISTS bucketed_l")
       spark.sql("DROP TABLE IF EXISTS bucketed_r")
     }
