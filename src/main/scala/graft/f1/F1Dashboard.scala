@@ -15,9 +15,12 @@ import graft.sources.F1Tables
   *
   * The two catalog picks collect — deliberately and safely: they are
   * the same bounded (name, key) dropdown catalogs the reference
-  * renders as UI options (helper_functions.py:33-53). All lap-scale
-  * data stays in the distributed plan until ChartSink's bounded
-  * one-session render.
+  * renders as UI options (helper_functions.py:33-53). Each catalog is
+  * a filtered dim of a few dozen rows, coalesced to one partition
+  * before its `distinct` so the dedup plans without a shuffle (the
+  * filter is still pushed into the scan) — the same one-session,
+  * one-partition rule as F1Session. All lap-scale data stays in the
+  * session's plans until ChartSink's bounded one-session render.
   */
 object F1Dashboard {
 
@@ -27,7 +30,7 @@ object F1Dashboard {
   def weekends(spark: SparkSession, year: Int,
                dir: String = F1Tables.FixtureDir): DataFrame =
     F1Tables.meetings(spark, dir)
-      .filter(col("year") === year)
+      .filter(col("year") === year).coalesce(1)
       .select("meeting_official_name", "meeting_key").distinct()
 
   /** (session_name, session_key) catalog for a weekend —
@@ -35,7 +38,7 @@ object F1Dashboard {
   def sessionsInWeekend(spark: SparkSession, meetingKey: Long,
                         dir: String = F1Tables.FixtureDir): DataFrame =
     F1Tables.sessions(spark, dir)
-      .filter(col("meeting_key") === meetingKey)
+      .filter(col("meeting_key") === meetingKey).coalesce(1)
       .select("session_name", "session_key").distinct()
 
   /** The composed drill-down: year → weekend (by official name) →
@@ -61,12 +64,12 @@ object F1Dashboard {
           ss.map(_.getString(0)).mkString(", ")))
     val session = new F1Session(spark, sessionKey, dir)
     try {
-      val info = session.info
-        .select("circuit_short_name", "session_name", "session_type")
-        .limit(1).collect().head
+      val info = session.infoRow.getOrElse(throw new NoSuchElementException(
+        s"session $sessionKey has no sessions row"))
+      def field(name: String) = info.getAs[String](name)
       ChartSink.comparisonSvg(session.comparisonFrame,
-        s"Circuit ${info.getString(0)} - ${info.getString(1)} fastest lap times",
-        qualifying = info.getString(2) == "Qualifying")
+        s"Circuit ${field("circuit_short_name")} - ${field("session_name")} fastest lap times",
+        qualifying = field("session_type") == "Qualifying")
     } finally session.release()
   }
 }

@@ -1,10 +1,10 @@
 package graft.f1
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.F1Functions
-import graft.operators.AsOfJoin
 import graft.sources.F1Tables
 
 /** The reference's `Session` object re-expressed as a lazy facade —
@@ -15,31 +15,51 @@ import graft.sources.F1Tables
   * the first action materializes each plan once and Spark's cache
   * serves every later chart from memory. Nothing collects to the
   * driver except what a caller explicitly displays.
+  *
+  * One session = one partition. Every table the facade reads is
+  * filtered to its session key and coalesced to a single partition,
+  * so the frames built on them — the enrichment as-of, the cached
+  * laps and info, the argmin, the qualifying windows and their union,
+  * the matrix pivot/join/sort, the telemetry nearest as-of and a
+  * chart's `orderBy` — all plan without a shuffle: a single partition
+  * already satisfies every clustered and ordered distribution. This
+  * is safe because each frame is bounded by one session (a few
+  * thousand laps, a few laps of telemetry), and cheap because the
+  * session filter, and any filter above it, is still pushed through
+  * the coalesce into the parquet scan. The whole-dataset pipelines
+  * (`F1Pipelines` over many sessions, `F1Queries`) keep their
+  * partition-parallel plans; only this one-session facade narrows.
   */
 class F1Session(spark: SparkSession, sessionKey: Long,
                 dir: String = F1Tables.FixtureDir) {
 
   private def only(df: DataFrame): DataFrame =
-    df.filter(col("session_key") === sessionKey)
+    df.filter(col("session_key") === sessionKey).coalesce(1)
 
-  // only frames a caller actually touched get cached — and released
-  private val materializedCaches =
+  // Spark's cache is keyed by plan, so two sessions on one key share
+  // their cached frames: a session releases only the frames it cached
+  // itself, never one a live session on the same key still serves
+  private val ownedCaches =
     scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private def tracked(df: DataFrame): DataFrame = synchronized {
-    materializedCaches += df
-    df
+  private def cached(df: DataFrame): DataFrame = synchronized {
+    if (df.storageLevel == StorageLevel.NONE) ownedCaches += df
+    df.cache()
   }
 
   /** Session metadata row (circuit, name, type, start/end). */
-  lazy val info: DataFrame = tracked(only(F1Tables.sessions(spark, dir)).cache())
+  lazy val info: DataFrame = cached(only(F1Tables.sessions(spark, dir)))
+
+  /** The session's one info row, read once for every scalar probe
+    * (chart title, qualifying branch); None for an unknown key. */
+  private[f1] lazy val infoRow: Option[Row] = info.limit(1).collect().headOption
 
   /** E1 — enriched laps: actual_lap_time, driver dim, stint compound /
     * tire age via the backward as-of join.
     * Ref: /root/reference/src/session_object.py:135-154. */
-  lazy val laps: DataFrame = tracked(F1Pipelines.enrichLaps(
+  lazy val laps: DataFrame = cached(F1Pipelines.enrichLaps(
     only(F1Tables.laps(spark, dir)),
     only(F1Tables.stints(spark, dir)),
-    only(F1Tables.drivers(spark, dir))).cache())
+    only(F1Tables.drivers(spark, dir))))
 
   /** E1 — fastest lap per driver (whole-row argmin).
     * Ref: /root/reference/src/session_object.py:156-174. */
@@ -71,8 +91,11 @@ class F1Session(spark: SparkSession, sessionKey: Long,
         .filter(col("driver_number") === driverNumber)
         .crossJoin(broadcast(lap)),
       col("__ls"), col("__le")).drop("__ls", "__le")
+    // location narrowed to the as-of `by` key's one driver: the
+    // nearest match never crosses drivers, so the answer is unchanged
     F1Pipelines.telemetryWithTrackPosition(windowed,
-      only(F1Tables.location(spark, dir)))
+      only(F1Tables.location(spark, dir))
+        .filter(col("driver_number") === driverNumber))
   }
 
   /** classes.py surface — per-(driver, compound) averages and the
@@ -85,14 +108,14 @@ class F1Session(spark: SparkSession, sessionKey: Long,
     * comparison chart: qualifying sessions plot in grid order, any
     * other session in fastest-lap order with one bar per driver.
     * The branch is the reference's own `if self.session_type ==
-    * "Qualifying"` — a one-row scalar read from the cached session
-    * info (bounded driver-side control flow, not a data collect).
+    * "Qualifying"` — read from the session's one info row (bounded
+    * driver-side control flow, not a data collect).
     * Ref: /root/reference/src/session_object.py:259-311. */
   lazy val comparisonFrame: DataFrame = {
-    // headOption, not head(): an unknown session key must yield an
-    // empty frame like every other member, not throw on the empty info
-    val isQualifying = info.select("session_type").limit(1).collect()
-      .headOption.exists(_.getString(0) == "Qualifying")
+    // an unknown session key has no info row: it must yield an empty
+    // frame like every other member, not throw
+    val isQualifying = infoRow
+      .exists(_.getAs[String]("session_type") == "Qualifying")
     if (isQualifying)
       F1Pipelines.comparisonFrame(qualifyingGrid, Seq(col("grid_position").asc))
     else
@@ -100,11 +123,12 @@ class F1Session(spark: SparkSession, sessionKey: Long,
         Seq(col("actual_lap_time").asc_nulls_last, col("date_start").asc))
   }
 
-  /** Release the cached frames a caller actually materialized (a
+  /** Release the cached frames this session cached itself (a
     * dashboard switching sessions). Untouched lazy members are not
-    * forced just to be unpersisted. */
+    * forced just to be unpersisted, and frames another session on the
+    * same key cached first stay cached for it. */
   def release(): Unit = synchronized {
-    materializedCaches.foreach(_.unpersist())
-    materializedCaches.clear()
+    ownedCaches.foreach(_.unpersist())
+    ownedCaches.clear()
   }
 }

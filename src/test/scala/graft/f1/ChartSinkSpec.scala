@@ -2,6 +2,7 @@ package graft.f1
 
 import java.nio.file.{Files, Paths}
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -12,9 +13,13 @@ import graft.TestSpark
   * re-run with GRAFT_REGEN_GOLDENS=1 to re-record, then review the
   * SVG diff in the commit.
   */
-class ChartSinkSpec extends AnyFunSuite {
+class ChartSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   private lazy val session = new F1Session(spark, FixtureGen.SessionKey)
+
+  // the session's cached frames would otherwise outlive the suite and
+  // be served to (and owned by none of) the next suite's sessions
+  override def afterAll(): Unit = session.release()
 
   private val goldenDir = Paths.get("fixtures/f1/golden")
   private def checkGolden(name: String, svg: String): Unit = {

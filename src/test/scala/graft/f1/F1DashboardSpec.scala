@@ -36,8 +36,9 @@ class F1DashboardSpec extends AnyFunSuite {
     // F1Session(key).comparisonFrame through ChartSink with the
     // reference's title shape and the qualifying branch taken
     val session = new F1Session(spark, FixtureGen.SessionKey)
-    val direct = ChartSink.comparisonSvg(session.comparisonFrame,
+    val direct = try ChartSink.comparisonSvg(session.comparisonFrame,
       "Circuit TestRing - Qualifying fastest lap times", qualifying = true)
+    finally session.release()
     assert(svg === direct, "drill-down diverged from its parts")
     if (sys.env.get("GRAFT_REGEN_GOLDENS").contains("1")) {
       ChartSink.writeSvg(goldenPath, svg)

@@ -1,18 +1,47 @@
 package graft.f1
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
 /** The Session facade must serve the same results as the raw
-  * pipelines, filter strictly to its session, and cache-release
-  * cleanly — the dashboard usage contract.
+  * pipelines, filter strictly to its session, plan without shuffles
+  * (one session = one partition), and cache-release cleanly — the
+  * dashboard usage contract.
   */
-class F1SessionSpec extends AnyFunSuite {
+class F1SessionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   private lazy val session = new F1Session(spark, FixtureGen.SessionKey)
+
+  /** Every node of a frame's executed plan (run first, so AQE's plan is
+    * final), including the plans its cached relations were built by. */
+  private def nodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    def walk(plan: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(plan) {
+      case s: InMemoryTableScanExec => s +: walk(s.relation.cachedPlan)
+      case p => Seq(p)
+    }.flatten
+    walk(df.queryExecution.executedPlan)
+  }
+
+  private def shuffles(df: DataFrame): Seq[SparkPlan] =
+    nodes(df).collect { case e: ShuffleExchangeExec => e }
+
+  /** PushedFilters of every scan of `table` in a frame's plan. */
+  private def pushedFilters(df: DataFrame, table: String): Seq[String] =
+    nodes(df).collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") =>
+        s.metadata("PushedFilters")
+    }
 
   test("facade laps equal the raw enrichment pipeline") {
     val raw = F1Pipelines.enrichLaps(
@@ -83,10 +112,54 @@ class F1SessionSpec extends AnyFunSuite {
     ghost.release()
   }
 
+  test("one session = one partition: no frame of the facade or the dashboard catalogs shuffles") {
+    val frames = Seq(
+      "laps" -> session.laps,
+      "fastestLaps" -> session.fastestLaps,
+      "qualifyingGrid" -> session.qualifyingGrid,
+      "avgLapMatrix" -> session.avgLapMatrix(Seq("SOFT", "MEDIUM", "HARD")),
+      // as ChartSink renders them: its orderBy is part of the plan
+      "comparisonFrame" -> session.comparisonFrame.orderBy("bar_order"),
+      "lapTelemetry" -> session.lapTelemetry(7L, 7L).orderBy("seconds_from_lap_start"),
+      "weekends" -> F1Dashboard.weekends(spark, 2024),
+      "sessionsInWeekend" -> F1Dashboard.sessionsInWeekend(spark, 77L))
+    frames.foreach { case (name, df) =>
+      val ex = shuffles(df)
+      assert(ex.isEmpty, s"$name plans ${ex.size} shuffle(s):\n${ex.mkString("\n")}")
+    }
+  }
+
+  test("the session filter is still pushed into the laps and telemetry scans") {
+    val lapScans = pushedFilters(session.laps, "laps")
+    assert(lapScans.nonEmpty && lapScans.forall(_.contains("session_key")), lapScans)
+    val t = session.lapTelemetry(7L, 7L)
+    for (table <- Seq("car_data", "location")) {
+      val scans = pushedFilters(t, table)
+      assert(scans.nonEmpty && scans.forall(f =>
+        f.contains("session_key") && f.contains("driver_number")), s"$table: $scans")
+    }
+  }
+
   test("release unpersists the cached frames") {
     session.laps.count() // materialize cache
     session.release()
     assert(session.laps.storageLevel ===
       org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("a drill-down on the held session's key keeps the held session's cache") {
+    // frames cached by the held session must outlive a second session
+    // on the same key (Spark's cache is keyed by plan, so they share it)
+    session.release()
+    val held = new F1Session(spark, FixtureGen.SessionKey)
+    try {
+      held.laps.count(); held.info.count()
+      val svg = F1Dashboard.drillDown(spark, 2024, "Test Grand Prix", "Qualifying")
+      assert(svg.contains("class=\"bar\""))
+      assert(held.laps.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      assert(held.info.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    } finally held.release()
+    assert(held.laps.storageLevel === StorageLevel.NONE,
+      "the session that cached a frame releases it")
   }
 }

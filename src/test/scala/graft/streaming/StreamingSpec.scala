@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +33,7 @@ class StreamingSpec extends AnyFunSuite {
       .format("memory").queryName(name).outputMode(mode).start()
     try batches.foreach { b => stream.addData(b); q.processAllAvailable() }
     finally q.stop()
-    spark.table(name)
+    q.sparkSession.table(name)
   }
 
   test("streaming tumbling window (complete mode) equals the batch aggregation") {
@@ -342,24 +342,23 @@ class StreamingSpec extends AnyFunSuite {
       Ev(1, ts(5), 1, "view", 1.0), Ev(2, ts(8), 1, "view", 1.0),
       Ev(3, ts(40), 1, "view", 1.0), Ev(4, ts(6), 2, "view", 1.0),
       Ev(5, ts(300), 9, "view", 1.0)) // watermark pusher
+    // each provider runs on a session of its own: the provider class
+    // never touches the shared TestSpark session's conf
     def run(name: String, provider: Option[String]): Set[(Long, Timestamp, Timestamp, Long)] = {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      provider.foreach(p => spark.conf.set(key, p))
+      val s = spark.newSession()
+      provider.foreach(s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+      val prevActive = SparkSession.getActiveSession
+      SparkSession.setActiveSession(s)
       try {
-        val stream = MemoryStream[Ev]
+        val stream = MemoryStream[Ev](implicitly[Encoder[Ev]], s.sqlContext)
         runToTable(stream, name, "append",
           df => StreamingOps.customSessions(df.select("ts", "user_id")).toDF(),
           Seq(events.take(2), events.drop(2)))
           .collect()
           .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))
           .toSet
-      } finally {
-        prev match {
-          case Some(p) => spark.conf.set(key, p)
-          case None => spark.conf.unset(key)
-        }
-      }
+      } finally prevActive.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
     }
     val viaDefault = run("t_ss_default", None)
     val viaRocks = run("t_ss_rocksdb", Some(
