@@ -3,7 +3,7 @@
 
 Usage:
     python3 scripts/perfbench_ab.py --parent <rev> --workload <w> \\
-        --seeds 11 12 13 [--seconds 8] [--trace 0] [--workdir DIR] [--json OUT]
+        --seeds 11 12 13 [--trace 0] [--workdir DIR]
 
 The parent is exported with `git archive <rev>` into a fresh directory
 (under --workdir, default a new temporary directory) and builds there
@@ -11,14 +11,17 @@ from scratch: copying `target/` between trees would let sbt's
 incremental compiler delete the other tree's classes. Each seed is one
 pair: both sides run the unchanged `perfbench/run.py` of their own tree
 with that seed, and the side that runs first alternates from pair to
-pair so neither side always gets the warmer host.
+pair so neither side always gets the warmer host. Each run has the
+benchmark's own length (run.py's default, BENCHMARK.json's
+`run_seconds`).
 
 Prints, for every metric both sides report: the parent's and the
 change's median and quartiles, the median change in percent, the
 parent's quartile spread (q3 - q1) as a share of its median, and the
-pairs the change won (direction from BENCHMARK.json's `better`). A
-run that fails or reports `correct: false` is listed and left out of
-the figures. Exits 1 when any run failed.
+pairs the change won out of every seed run (direction from
+BENCHMARK.json's `better`). A run that fails or reports
+`correct: false` is listed; its pair is left out of the quartiles and
+counts as not won. Exits 1 when any run failed.
 """
 
 import argparse
@@ -48,10 +51,10 @@ def export_parent(rev, workdir):
     return tree, sha
 
 
-def run_side(tree, workload, seed, seconds, trace):
+def run_side(tree, workload, seed, trace):
     cmd = [sys.executable, os.path.join(tree, "perfbench", "run.py"),
            "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", str(trace)]
+           "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if not lines:
@@ -77,8 +80,9 @@ def directions():
             for m in bench["end_to_end"] + bench["per_layer"]}
 
 
-def summarize(pairs, better):
-    """pairs: [(parent_metrics, change_metrics)] -> {metric: figures}."""
+def summarize(pairs, seeds_run, better):
+    """pairs: [(parent_metrics, change_metrics)] of the seeds where both
+    sides ran -> {metric: figures}; wins are out of all `seeds_run`."""
     out = {}
     names = sorted(set.intersection(*(set(p) & set(c) for p, c in pairs)))
     for name in names:
@@ -94,7 +98,7 @@ def summarize(pairs, better):
             "median_delta_pct": (100.0 * (cq[1] - pq[1]) / pq[1]
                                  if pq[1] else None),
             "parent_spread": ((pq[2] - pq[0]) / pq[1] if pq[1] else None),
-            "wins": wins, "pairs": len(pairs)}
+            "wins": wins, "pairs": seeds_run}
     return out
 
 
@@ -107,10 +111,8 @@ def main():
     ap.add_argument("--parent", required=True, help="git revision to compare")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=int, nargs="+")
-    ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--workdir", help="where the parent tree is exported")
-    ap.add_argument("--json", help="also write every run and the summary here")
     args = ap.parse_args()
 
     workdir = args.workdir or tempfile.mkdtemp(prefix="perfbench_ab-")
@@ -119,16 +121,14 @@ def main():
     print("perfbench_ab: parent %s at %s; change = %s" % (sha[:12], parent, ROOT),
           file=sys.stderr)
 
-    pairs, runs, failures = [], [], []
+    pairs, failures = [], []
     for i, seed in enumerate(args.seeds):
         order = [("parent", parent), ("change", ROOT)]
         if i % 2:
             order.reverse()
         got = {}
         for side, tree in order:
-            m, err = run_side(tree, args.workload, seed, args.seconds, args.trace)
-            runs.append({"pair": i, "seed": seed, "side": side,
-                         "metrics": m, "error": err})
+            m, err = run_side(tree, args.workload, seed, args.trace)
             if err:
                 failures.append("%s seed %d: %s" % (side, seed, err))
             got[side] = m
@@ -137,7 +137,7 @@ def main():
         if got["parent"] and got["change"]:
             pairs.append((got["parent"], got["change"]))
 
-    summary = summarize(pairs, directions()) if pairs else {}
+    summary = summarize(pairs, len(args.seeds), directions()) if pairs else {}
     print("%-32s %6s  %-26s %-26s %8s %7s %5s" % (
         "metric", "better", "parent q1/med/q3", "change q1/med/q3",
         "delta%", "spread", "wins"))
@@ -151,11 +151,6 @@ def main():
             s["wins"], s["pairs"]))
     for f in failures:
         print("FAILED " + f)
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump({"parent": sha, "workload": args.workload,
-                       "seeds": args.seeds, "trace": args.trace,
-                       "runs": runs, "summary": summary}, f, indent=1)
     sys.exit(1 if failures else 0)
 
 

@@ -22,13 +22,22 @@ import graft.sources.F1Tables
   * laps and info, the argmin, the qualifying windows and their union,
   * the matrix pivot/join/sort, the telemetry nearest as-of and a
   * chart's `orderBy` — all plan without a shuffle: a single partition
-  * already satisfies every clustered and ordered distribution. This
-  * is safe because each frame is bounded by one session (a few
-  * thousand laps, a few laps of telemetry), and cheap because the
-  * session filter, and any filter above it, is still pushed through
-  * the coalesce into the parquet scan. The whole-dataset pipelines
-  * (`F1Pipelines` over many sessions, `F1Queries`) keep their
-  * partition-parallel plans; only this one-session facade narrows.
+  * already satisfies every clustered and ordered distribution. The
+  * frames after the filter are bounded by one session (a few thousand
+  * laps, a few laps of telemetry), and the session filter, and any
+  * filter above it, is still pushed through the coalesce into the
+  * parquet scan. The whole-dataset pipelines (`F1Pipelines` over many
+  * sessions, `F1Queries`) keep their partition-parallel plans; only
+  * this one-session facade narrows.
+  *
+  * Precondition: `coalesce(1)` is a narrow dependency, so it also
+  * collapses the scan under it into one task. That task reads every
+  * row group the pushed filter cannot skip, so one partition is cheap
+  * only while each table's scan is small (the fixtures, the benchmark's
+  * single-file tables) or its files are clustered by `session_key` so
+  * the filter prunes row groups. On a large, unclustered, multi-file
+  * table one task would read the whole table where a parallel scan
+  * split it; that case is not measured.
   */
 class F1Session(spark: SparkSession, sessionKey: Long,
                 dir: String = F1Tables.FixtureDir) {
@@ -125,8 +134,19 @@ class F1Session(spark: SparkSession, sessionKey: Long,
 
   /** Release the cached frames this session cached itself (a
     * dashboard switching sessions). Untouched lazy members are not
-    * forced just to be unpersisted, and frames another session on the
-    * same key cached first stay cached for it. */
+    * forced just to be unpersisted.
+    *
+    * Ownership is first-come: a frame belongs to whichever session on
+    * its key cached it first, and a later session on the same key owns
+    * nothing. So releasing the later session keeps the earlier one's
+    * cache, but releasing the earlier one also drops the cache the later
+    * one is still reading (it re-reads the scans on its next action),
+    * and the later one's `release()` then does nothing. Whether a
+    * session owns its frames thus depends on which session cached
+    * first; a session that is never released keeps ownership for the
+    * rest of the Spark session. The ownership check is synchronized
+    * per instance only, so two sessions on one key caching on different
+    * threads at once can both claim a frame. */
   def release(): Unit = synchronized {
     ownedCaches.foreach(_.unpersist())
     ownedCaches.clear()
