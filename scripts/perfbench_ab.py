@@ -19,7 +19,11 @@ Prints, for every metric both sides report: the parent's and the
 change's median and quartiles, the median change in percent, the
 parent's quartile spread (q3 - q1) as a share of its median, and the
 pairs the change won out of every seed run (direction from
-BENCHMARK.json's `better`). A run that fails or reports
+BENCHMARK.json's `better`). Besides the benchmark's own metrics, each
+run contributes its per-op-kind latency medians, `op.<kind>_p50_ms`
+(ingest / rq / vq / maintain, and the f1 kinds), read from the
+`result.json` run.py keeps, so an untraced A/B shows which layer
+moved. A run that fails or reports
 `correct: false` is listed; its pair is left out of the quartiles and
 counts as not won. Exits 1 when any run failed.
 """
@@ -62,7 +66,23 @@ def run_side(tree, workload, seed, trace):
     res = json.loads(lines[-1])
     if not res.get("correct"):
         return None, "correct=false, failed=%s" % res.get("failed")
-    return {k: v["value"] for k, v in res["metrics"].items()}, None
+    figures = {k: v["value"] for k, v in res["metrics"].items()}
+    figures.update(kind_medians(tree, workload, seed, trace))
+    return figures, None
+
+
+def kind_medians(tree, workload, seed, trace):
+    """Median latency per operation kind of the run's measured operations,
+    from the result.json run.py keeps in the tree's work directory."""
+    path = os.path.join(tree, ".perfbench_work",
+                        "%s-%d-t%d" % (workload, seed, trace), "result.json")
+    with open(path) as f:
+        ops = json.load(f)["ops"]
+    by_kind = {}
+    for o in ops:
+        by_kind.setdefault(o["kind"], []).append(o["ms"])
+    return {"op.%s_p50_ms" % k: statistics.median(v)
+            for k, v in by_kind.items()}
 
 
 def quartiles(xs):

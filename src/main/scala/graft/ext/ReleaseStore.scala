@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The release's FULL derived-state artifact + the daily loop that
   * consumes it: release N ships everything release N+1's batch needs,
@@ -62,6 +63,15 @@ object ReleaseStore {
 
   private val cleanDispositions =
     Seq("kept", "quality_drop", "quality_review")
+
+  /** Declared schemas of the frozen quality models (what their writers
+    * in [[build]] infer to; StoreSchemasSpec pins them). */
+  private[ext] val LmSchema: StructType = StructType(Seq(
+    StructField("tok", StringType), StructField("c", LongType)))
+  private[ext] val LmTotSchema: StructType = StructType(Seq(
+    StructField("n", LongType), StructField("v", LongType)))
+  private[ext] val ProfilesSchema: StructType = StructType(Seq(
+    StructField("lang", StringType), StructField("prof", ArrayType(StringType))))
 
   /** Ship the artifact from a finished release (corpus = the release
     * INPUT with url/lang/source; ledger = the release's per-doc
@@ -142,7 +152,8 @@ object ReleaseStore {
     // list, so an in-band compaction (autoMaintain) never disturbs a
     // probe already planned; urls/hashes/sig all resolve from the
     // SAME snapshot (and the frozen quality models verify)
-    val rd = StoreSnapshots.reader(spark, path)
+    val pin = StoreSnapshots.pin(spark, path)
+    val rd = pin.read _
     val seenUrls = rd(s"$path/urls.parquet")
       .join(broadcast(nb.select(col("__nu").as("norm_url")).distinct()),
         Seq("norm_url"))
@@ -180,7 +191,7 @@ object ReleaseStore {
     // index-match propagation through batch components --------------
     val ingest = SignatureStore.ingest(spark, s"$path/sig",
       se.select("doc_id", "text"), "doc_id", "text",
-      maxBucketSize = maxBucketSize, resolve = Some(rd))
+      maxBucketSize = maxBucketSize, resolve = Some(pin))
     val im = ingest.select(col("new_id").as("id")).distinct()
     val bp = Dedup.nearDupPairs(se.select("doc_id", "text"),
       "doc_id", "text", maxBucketSize = maxBucketSize)
@@ -214,11 +225,11 @@ object ReleaseStore {
     // --- i5: quality routing under the FROZEN release models — the
     // two per-row scorers (gopher, langId) run as ONE pass over the
     // batch ([[TextOps.qualityFlags]], value-identical fusion) -------
-    val uni = spark.read.parquet(s"$path/lm.parquet")
+    val uni = pin.frozen(s"$path/lm.parquet", LmSchema)
       .select(col("tok"), col("c").as("__c"))
-    val tot = spark.read.parquet(s"$path/lm_tot.parquet")
+    val tot = pin.frozen(s"$path/lm_tot.parquet", LmTotSchema)
       .select(col("n").as("__n"), col("v").as("__v"))
-    val profiles = spark.read.parquet(s"$path/profiles.parquet")
+    val profiles = pin.frozen(s"$path/profiles.parquet", ProfilesSchema)
       .select(col("lang").as("__lang"), col("prof").as("__prof"))
     val flags = TextOps.qualityFlags(clean, "doc_id", "text", "lang",
       profiles, minTokens = 30)
@@ -297,7 +308,8 @@ object ReleaseStore {
       // today's fold across sig/urls/hashes all at once, never partially
       val landed = Par.map(Seq[() => Map[String, Seq[String]]](
         () => SignatureStore.land(fin.select("doc_id", "text"),
-          "doc_id", "text", s"$path/sig", canonicalBatch),
+          "doc_id", "text", s"$path/sig",
+          SignatureStore.paramsAt(pin, s"$path/sig"), canonicalBatch),
         () => Map(s"$path/urls.parquet" -> StoreGenerations.land(
           nb.select(col("__nu").as("norm_url")).distinct(),
           s"$path/urls.parquet", None, canonicalBatch)),

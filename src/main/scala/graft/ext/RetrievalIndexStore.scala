@@ -1,7 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted BM25 inverted index — the lexical sibling of
   * [[SignatureStore]] (near-dup) and [[VectorIndexStore]] (ANN),
@@ -33,12 +36,12 @@ import org.apache.spark.sql.functions._
   *
   * The layout IS the probe structure: every posting of a token lives
   * in that token's bucket directory, so [[query]] plans the batch's
-  * probed buckets first (one tiny job over the query terms — the
-  * bounded-collect class) and Spark's file index prunes every other
-  * directory at planning time. A batch whose vocabulary hits b of B
-  * buckets scans ~b/B of the corpus postings — the inverted-file
-  * promise kept at the file level, pinned by the spec on the executed
-  * scan's numFiles metric. Within scanned buckets, the query terms
+  * probed buckets first — on the driver, from the query batch it
+  * collects once (the bounded-collect class) — and Spark's file index
+  * prunes every other directory at planning time. A batch whose
+  * vocabulary hits b of B buckets scans ~b/B of the corpus postings —
+  * the inverted-file promise kept at the file level, pinned by the spec
+  * on the executed scan's numFiles metric. Within scanned buckets, the query terms
   * broadcast to the scan, so non-query tokens sharing a bucket drop
   * in the first (shuffle-free) join; df and the score join then run
   * over candidate postings only — bounded by Σ_t df(t), the classic
@@ -200,11 +203,31 @@ object RetrievalIndexStore {
     java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$path/positions.parquet"))
 
+  /** Declared schema of the frozen `params.parquet` seed. */
+  private[ext] val ParamsSchema: StructType =
+    StructType(Seq(StructField("tok_buckets", IntegerType)))
+
   /** The store's layout config — 1 row, driver-side (bounded-collect
     * class: one int). */
   def params(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/params.parquet").head()
-      .getAs[Int]("tok_buckets")
+    paramsAt(StoreSnapshots.pin(spark, path), path)
+
+  private def paramsAt(p: StoreSnapshots.Pin, path: String): Int =
+    p.seed(s"$path/params.parquet", ParamsSchema)(
+      _.head().getAs[Int]("tok_buckets"))
+
+  /** The distinct query tokens as a local relation (`tok`) and their
+    * sorted buckets — evaluated over the local relation, so the hash
+    * is Spark's own and no job runs. */
+  private def probe(spark: SparkSession, toks: Seq[String],
+                    tokBuckets: Int): (DataFrame, Array[Long]) = {
+    val qtoks = spark.createDataFrame(toks.distinct.map(Row(_)).asJava,
+      StructType(Seq(StructField("tok", StringType))))
+    val buckets = qtoks
+      .select(pmod(xxhash64(col("tok")), lit(tokBuckets.toLong)))
+      .collect().map(_.getLong(0)).distinct.sorted
+    (qtoks, buckets)
+  }
 
   /** Fold a new document batch into the index (append-only; the
     * batch's postings land under the STORE's bucket fn, its df
@@ -261,8 +284,8 @@ object RetrievalIndexStore {
 
   /** Exact-phrase top-k against the STORED positional index (build
     * with `positional = true`): plan the two-term batch's probed
-    * buckets (one tiny job over the query phrases — bounded-collect
-    * class), scan ONLY those partitions of positions.parquet, drop
+    * buckets on the driver (from the batch collected once, as in
+    * [[query]]), scan ONLY those partitions of positions.parquet, drop
     * non-query tokens via a broadcast join at the scan, then run
     * [[Retrieval.phraseFromPostings]] — the adjacency join + ranking
     * stage the direct route uses, over a pruned scan complete for
@@ -278,16 +301,15 @@ object RetrievalIndexStore {
     require(hasPositions(path),
       s"$path has no positional face; build(positional = true)")
     // resolve FIRST — seed verification before any scan (see query)
-    val rd = StoreSnapshots.reader(spark, path)
-    val tokBuckets = params(spark, path)
-    val q = queries.select(col(queryIdCol).as("query_id"),
-      col(t1Col).as("__t1"), col(t2Col).as("__t2")).localCheckpoint()
-    val qtoks = q.select(explode(array(col("__t1"), col("__t2"))).as("tok"))
-      .distinct().localCheckpoint()
-    val buckets = qtoks
-      .select(pmod(xxhash64(col("tok")), lit(tokBuckets.toLong)).as("__b"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    val post = rd(s"$path/positions.parquet")
+    val p = StoreSnapshots.pin(spark, path)
+    val batch = queries.select(col(queryIdCol).as("query_id"),
+      col(t1Col).as("__t1"), col(t2Col).as("__t2"))
+    val rows = batch.collect().toSeq
+    val q = spark.createDataFrame(rows.asJava, batch.schema)
+    val (qtoks, buckets) = probe(spark,
+      rows.flatMap(r => Seq(r.getString(1), r.getString(2))),
+      paramsAt(p, path))
+    val post = p.read(s"$path/positions.parquet")
       .filter(col("tok_bucket").isin(buckets: _*))
       .join(broadcast(qtoks), Seq("tok"))
       .select(col("doc_id"), col("pos"), col("tok"))
@@ -296,13 +318,19 @@ object RetrievalIndexStore {
   }
 
   /** BM25 top-k against the stored index: plan the batch's probed
-    * buckets (the query vocabulary's hash buckets — one tiny job),
-    * scan ONLY those partitions, drop non-query tokens via a
-    * broadcast join at the scan, then run [[Retrieval
-    * .bm25FromPostings]] — the scoring stage the direct route uses,
-    * over inputs exact for every query token. Output identical to
-    * `Retrieval.bm25TopK` on the same logical corpus:
-    * (query_id, doc_id, rank, score_q). */
+    * buckets (the query vocabulary's hash buckets) on the driver, scan
+    * ONLY those partitions, drop non-query tokens via a broadcast join
+    * at the scan, then run [[Retrieval.bm25FromPostings]] — the
+    * scoring stage the direct route uses, over inputs exact for every
+    * query token. Output identical to `Retrieval.bm25TopK` on the same
+    * logical corpus: (query_id, doc_id, rank, score_q).
+    *
+    * The query batch (bounded class, like an ingest batch) is
+    * collected ONCE — a local relation collects with no job — and its
+    * distinct (query_id, term) pairs, tokens and buckets are built on
+    * the driver as local relations; the layout config resolves through
+    * the [[SeedMemo]]. With a warm memo this returns its lazy frame
+    * without firing a job; the final action scans and scores. */
   def query(spark: SparkSession, path: String, queries: DataFrame,
             queryIdCol: String, termsCol: String, k: Int,
             asOf: Option[Long] = None): DataFrame = {
@@ -312,40 +340,35 @@ object RetrievalIndexStore {
     // consistent artifact generations (historical postings scored
     // with the HISTORICAL df and (N, T)) — within the vacuum keep
     // window, loud outside it
-    val rd = asOf.map(g => StoreSnapshots.readerAt(spark, path, g))
-      .getOrElse(StoreSnapshots.reader(spark, path))
-    val tokBuckets = params(spark, path)
-    // the query batch's distinct terms: small by definition (same
-    // bounded class as an ingest batch); checkpointed because it
-    // feeds the bucket plan, the scan join, and the score join
-    val qterms = queries
-      .select(col(queryIdCol).as("query_id"),
-        explode(col(termsCol)).as("tok"))
-      .distinct().localCheckpoint()
-    val buckets = qterms
-      .select(pmod(xxhash64(col("tok")), lit(tokBuckets.toLong)).as("__b"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    val qtoks = qterms.select("tok").distinct()
-    // candidate postings = probed buckets ∩ query tokens; checkpoint
-    // so dfreq and the score join share one scan
-    // reads through ONE resolver: postings/df/stats all resolve from
-    // the SAME snapshot — a batch's new postings are never scored
-    // against the previous generation's df/(N,T) however the reader
+    val p = asOf.fold(StoreSnapshots.pin(spark, path))(
+      StoreSnapshots.pinAt(spark, path, _))
+    // the batch's distinct (query_id, tok) pairs — explode + distinct
+    // on the driver (NULL term arrays yield no row, as explode does)
+    val batch = queries.select(col(queryIdCol).as("query_id"), col(termsCol))
+    val pairs = batch.collect().toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).toSeq.flatten.map(t => Row(r.get(0), t))
+    }.distinct
+    val qterms = spark.createDataFrame(pairs.asJava, StructType(Seq(
+      batch.schema("query_id"), StructField("tok", StringType))))
+    val (qtoks, buckets) = probe(spark, pairs.map(_.getString(1)),
+      paramsAt(p, path))
+    // reads through ONE pin: postings/df/stats all resolve from the
+    // SAME snapshot — a batch's new postings are never scored against
+    // the previous generation's df/(N,T) however the reader
     // interleaves with an in-flight append (bucket-dir pruning kept
-    // via basePath)
-    val post = rd(s"$path/postings.parquet")
+    // via basePath). Candidate postings = probed buckets ∩ query tokens
+    val post = p.read(s"$path/postings.parquet")
       .filter(col("tok_bucket").isin(buckets: _*))
       .join(broadcast(qtoks), Seq("tok"))
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
-      .localCheckpoint()
     // df from the persisted table (summed deltas), NOT from counting
     // the scan: on a pruned store the scan undercounts by design;
     // on an unpruned store the two are identical (spec-pinned)
-    val dfreq = rd(s"$path/df.parquet")
+    val dfreq = p.read(s"$path/df.parquet")
       .filter(col("tok_bucket").isin(buckets: _*))
       .join(broadcast(qtoks), Seq("tok"))
       .groupBy("tok").agg(sum("df").as("__df"))
-    val tot = rd(s"$path/stats.parquet")
+    val tot = p.read(s"$path/stats.parquet")
       .agg(sum("n_docs").as("__n"), sum("total_dl").as("__t"))
     Retrieval.bm25FromPostings(qterms, post, dfreq, tot, "doc_id", k)
   }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted MinHash signature store — the artifact that makes the
   * daily incremental near-dup check O(batch), not O(corpus).
@@ -102,12 +103,23 @@ object SignatureStore {
         .write.mode(SaveMode.Overwrite).parquet(s"$path/params.parquet"))
   }
 
+  /** Declared schema of the frozen `params.parquet` seed. */
+  private[ext] val ParamsSchema: StructType = StructType(Seq(
+    StructField("shingle_n", IntegerType), StructField("num_hashes", IntegerType)))
+
   /** The store's signature config — 1 row, driver-side (the
     * bounded-collect class: two ints). */
-  def params(spark: SparkSession, path: String): (Int, Int) = {
-    val row = spark.read.parquet(s"$path/params.parquet").head()
-    (row.getAs[Int]("shingle_n"), row.getAs[Int]("num_hashes"))
-  }
+  def params(spark: SparkSession, path: String): (Int, Int) =
+    paramsAt(StoreSnapshots.pin(spark, path), path)
+
+  /** The config of the signature index at `path` through a pin of the
+    * store that inventories it — the index's own store, or the release
+    * store whose `sig/` member it is. */
+  private[ext] def paramsAt(p: StoreSnapshots.Pin, path: String): (Int, Int) =
+    p.seed(s"$path/params.parquet", ParamsSchema) { df =>
+      val row = df.head()
+      (row.getAs[Int]("shingle_n"), row.getAs[Int]("num_hashes"))
+    }
 
   /** Fold a verified batch into the store (append-only; the batch's
     * bands/sets are derived under the STORE's config, so an appended
@@ -137,7 +149,8 @@ object SignatureStore {
              autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
              batch: Option[(Long, String)] = None): Long = {
     val gen = StoreSnapshots.commitLanded("sig", path,
-      land(incoming, idCol, textCol, path, batch))
+      land(incoming, idCol, textCol, path, params(incoming.sparkSession, path),
+        batch))
     autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(
       incoming.sparkSession, "sig", path, am))
     gen
@@ -150,9 +163,10 @@ object SignatureStore {
     * directory → landed files. */
   private[ext] def land(incoming: DataFrame, idCol: String,
                         textCol: String, path: String,
+                        params: (Int, Int),
                         batch: Option[(Long, String)])
       : Map[String, Seq[String]] = {
-    val (shingleN, numHashes) = params(incoming.sparkSession, path)
+    val (shingleN, numHashes) = params
     val Seq(bands, sets) = Par.map(Seq(
       () => StoreGenerations.land(
         bandsOf(incoming, idCol, textCol, shingleN, numHashes),
@@ -177,11 +191,12 @@ object SignatureStore {
              minJaccard: Double = 0.5,
              maxBucketSize: Int = Int.MaxValue,
              broadcastBatch: Boolean = true,
-             resolve: Option[String => DataFrame] = None): DataFrame = {
+             resolve: Option[StoreSnapshots.Pin] = None): DataFrame = {
     // resolve FIRST: the pin verifies the frozen seeds (params)
     // loudly before any scan plans
-    val rd = resolve.getOrElse(StoreSnapshots.reader(spark, path))
-    val (shingleN, numHashes) = params(spark, path)
+    val pin = resolve.getOrElse(StoreSnapshots.pin(spark, path))
+    val rd = pin.read _
+    val (shingleN, numHashes) = paramsAt(pin, path)
     val mark = if (broadcastBatch) (df: DataFrame) => broadcast(df)
                else identity[DataFrame] _
     val bN = bandsOf(incoming, idCol, textCol, shingleN, numHashes)

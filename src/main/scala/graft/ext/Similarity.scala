@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Embedding similarity operators (brief §ext): exact cosine, brute
   * top-k (broadcast query set), and sign-bucket LSH for near-dup
@@ -368,6 +369,27 @@ object Similarity {
         .agg(transform(
           array_sort(collect_list(struct(col("sid"), col("sv")))),
           c => c.getField("sv")).as("__cb")))
+
+  /** [[centroidRow]] and [[pqCodebook]] built on the DRIVER from
+    * vectors already held there — (id, vector) pairs, the frozen seeds
+    * a store read memoizes ([[SeedMemo]]): the same one row each
+    * (id-ascending, double vectors) as a broadcast local relation, so
+    * no aggregate job runs to build it. */
+  private[ext] def centroidRowOf(spark: SparkSession,
+                                 cents: Seq[(Long, Seq[Double])]): DataFrame =
+    broadcast(oneRow(spark, "__cents", ArrayType(StructType(Seq(
+        StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))),
+      cents.sortBy(_._1).map { case (c, v) => Row(c, v) }))
+
+  private[ext] def pqCodebookOf(spark: SparkSession,
+                                seeds: Seq[(Long, Seq[Double])]): DataFrame =
+    broadcast(oneRow(spark, "__cb", ArrayType(ArrayType(DoubleType)),
+      seeds.sortBy(_._1).map(_._2)))
+
+  private def oneRow(spark: SparkSession, name: String, t: DataType,
+                     v: Any): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(v)),
+      StructType(Seq(StructField(name, t))))
 
   /** Native per-subspace argmin over the broadcast codebook — see
     * [[graft.catalyst.NearestCentroid]] for the bit-equality
@@ -897,10 +919,21 @@ object Similarity {
                       queries: DataFrame, centroids: DataFrame,
                       seeds: DataFrame, idCol: String, vecCol: String,
                       k: Int, nprobe: Int, numSub: Int,
-                      subDim: Int): DataFrame = {
+                      subDim: Int): DataFrame =
+    adcFromRows(codes, queries, centroidRow(centroids, idCol, vecCol),
+      pqCodebook(seeds, idCol, vecCol), idCol, vecCol, k, nprobe,
+      numSub, subDim)
+
+  /** [[adcFromCodes]] over the one-row centroid (`__cents`) and codebook
+    * (`__cb`) relations, however they were built — aggregated from
+    * frames ([[centroidRow]]/[[pqCodebook]]) or on the driver
+    * ([[centroidRowOf]]/[[pqCodebookOf]], the stored route). */
+  private[ext] def adcFromRows(codes: DataFrame, queries: DataFrame,
+                               cents: DataFrame, cb: DataFrame,
+                               idCol: String, vecCol: String, k: Int,
+                               nprobe: Int, numSub: Int,
+                               subDim: Int): DataFrame = {
     require(numSub >= 1 && subDim >= 1)
-    val cents = centroidRow(centroids, idCol, vecCol)
-    val cb = pqCodebook(seeds, idCol, vecCol)
     // nprobe nearest cells per query, each with the query's residual
     // against that cell's centroid
     val qScored = queries

@@ -155,8 +155,19 @@ object StoreGenerations {
     // publish refuses empty lists, so an empty generation means a
     // corrupted chain
     require(files.nonEmpty, s"empty manifest under $dir — corrupted chain")
-    spark.read.option("basePath", dir).parquet(files: _*)
+    scan(spark, dir, files)
   }
+
+  /** One scan of an explicit file list of the artifact at `dir`, under
+    * its declared schema ([[StoreMaintenance.schemaOf]] — no footer-
+    * inference job) and with `basePath`, so bucket-partition
+    * directories keep yielding their partition column and partition
+    * pruning. Chain reads and [[StoreSnapshots.Pin]] reads both resolve
+    * through it. */
+  private[ext] def scan(spark: SparkSession, dir: String,
+                        files: Seq[String]): DataFrame =
+    StoreMaintenance.schemaOf(dir).fold(spark.read)(spark.read.schema)
+      .option("basePath", dir).parquet(files: _*)
 
   private[ext] def noChain(dir: String) = new IllegalStateException(
     s"$dir has no generation chain — every store build starts one; " +

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Maintenance for the persisted stores ([[SignatureStore]],
   * [[VectorIndexStore]], [[RetrievalIndexStore]], [[ReleaseStore]]),
@@ -62,12 +63,55 @@ object StoreMaintenance {
                                   rowsAfter: Long)
 
   /** One artifact's maintenance recipe: where it lives, whether its
-    * layout is bucket-partitioned (and must stay that way), the
-    * semantic fold (identity for row-preserving artifacts), and the
-    * bounded invariant that gates promotion. */
+    * layout is bucket-partitioned (and must stay that way), its
+    * declared schema ([[schemaOf]]), the semantic fold (identity for
+    * row-preserving artifacts), and the bounded invariant that gates
+    * promotion. */
   final case class ArtifactSpec(dir: String, bucketCol: Option[String],
+                                schema: StructType,
                                 fold: DataFrame => DataFrame,
                                 invariant: DataFrame => DataFrame)
+
+  /** Every accreting artifact's DECLARED schema, by artifact directory
+    * name (one vocabulary across the four stores: the release store's
+    * `sig/` bands and sets are the signature store's). It is exactly
+    * what `spark.read.parquet(dir).schema` infers from the writers —
+    * every column nullable, the bucket partition column last and typed
+    * int, as partition discovery types it — and StoreSchemasSpec pins
+    * that after build, append and compaction, so a writer change that
+    * drifts a type fails there instead of silently retyping reads.
+    * Every store read passes it to `spark.read.schema` (the
+    * [[graft.sources.F1Tables]] contract), which skips the footer-
+    * inference job a schemaless parquet read fires. The frozen seeds
+    * declare theirs beside their writers (their `params.parquet`
+    * names differ per store). */
+  private val declared: Map[String, StructType] = {
+    def s(fields: (String, DataType)*) =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    Map(
+      "bands.parquet" -> s("doc_id" -> LongType, "band" -> IntegerType,
+        "bkey" -> StringType),
+      "sets.parquet" -> s("doc_id" -> LongType,
+        "shingles" -> ArrayType(StringType)),
+      "urls.parquet" -> s("norm_url" -> StringType),
+      "hashes.parquet" -> s("h" -> StringType),
+      "postings.parquet" -> s("doc_id" -> LongType, "tok" -> StringType,
+        "tf" -> LongType, "dl" -> LongType, "tok_bucket" -> IntegerType),
+      "df.parquet" -> s("tok" -> StringType, "df" -> LongType,
+        "tok_bucket" -> IntegerType),
+      "stats.parquet" -> s("n_docs" -> LongType, "total_dl" -> LongType),
+      "positions.parquet" -> s("doc_id" -> LongType, "pos" -> IntegerType,
+        "tok" -> StringType, "tok_bucket" -> IntegerType),
+      "codes.parquet" -> s("neighbor_id" -> LongType, "cell" -> LongType,
+        "codes" -> ArrayType(s("sub_id" -> LongType, "code" -> LongType)),
+        "cell_bucket" -> IntegerType))
+  }
+
+  /** The declared schema of the artifact directory `dir`, if it is one
+    * of the stores' accreting artifacts (None: infer, e.g. a bare
+    * chain a spec builds). */
+  private[ext] def schemaOf(dir: String): Option[StructType] =
+    declared.get(java.nio.file.Paths.get(dir).getFileName.toString)
 
   /** Audit-triggered in-band maintenance config (the store-side
     * mirror of the merge sink's `maintainEvery`): after an ingest
@@ -93,7 +137,8 @@ object StoreMaintenance {
   private def spec(dir: String, bucketCol: Option[String] = None,
                    fold: DataFrame => DataFrame = rowIdentity,
                    invariant: DataFrame => DataFrame = countInvariant)
-      : ArtifactSpec = ArtifactSpec(dir, bucketCol, fold, invariant)
+      : ArtifactSpec = ArtifactSpec(dir, bucketCol, schemaOf(dir).getOrElse(
+    sys.error(s"no declared schema for store artifact $dir")), fold, invariant)
 
   private def scratchOf(dir: String) = s"$dir.__compact"
 
@@ -168,7 +213,8 @@ object StoreMaintenance {
         folded.repartition(nOut)
           .write.mode("overwrite").parquet(scratch)
     }
-    val after = invariant(spark.read.parquet(scratch)).collect().toSeq
+    val after = invariant(schemaOf(dir).fold(spark.read)(spark.read.schema)
+      .parquet(scratch)).collect().toSeq
     require(before == after,
       s"invariant mismatch compacting $dir: $before -> $after; " +
         "scratch NOT promoted — the live artifact is untouched")

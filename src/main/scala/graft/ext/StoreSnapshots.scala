@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** STORE-LEVEL atomic commit — one manifest spanning ALL of a store's
   * artifacts, so a reader never observes a half-committed append.
@@ -366,13 +367,15 @@ object StoreSnapshots {
     * mutually consistent however many commits land meanwhile. */
   final class Pin private[StoreSnapshots] (
       spark: SparkSession, storePath: String, val gen: Long,
-      pins: Map[String, Long], dFiles: Map[String, Seq[String]]) {
+      pins: Map[String, Long], dFiles: Map[String, Seq[String]],
+      seedLines: Seq[String]) {
 
     /** The artifact at ITS PINNED GENERATION — never the current one —
       * PLUS any file-level commit entries this snapshot carries for it
       * (a concurrent writer's batch the chain has not folded yet):
-      * one combined file list, one scan, `basePath` preserved so
-      * bucket-partition directories keep their partition column. */
+      * one combined file list, one declared-schema scan, `basePath`
+      * preserved so bucket-partition directories keep their partition
+      * column ([[StoreGenerations.scan]]). */
     def read(artifactDir: String): DataFrame =
       pins.get(canon(artifactDir)) match {
         case Some(g) =>
@@ -382,13 +385,39 @@ object StoreSnapshots {
                 s"snapshot gen=$gen pins outside the artifact's vacuum " +
                 "keep window — re-pin to a kept snapshot"))
           val extra = dFiles.getOrElse(canon(artifactDir), Seq.empty)
-          spark.read.option("basePath", artifactDir)
-            .parquet((chainFiles ++ extra): _*)
+          StoreGenerations.scan(spark, artifactDir, chainFiles ++ extra)
         case None => throw new IllegalStateException(
           s"$artifactDir is not pinned by store snapshot gen=$gen of " +
             s"$storePath — the artifact did not exist when the snapshot " +
             "committed (re-commit the store to adopt it)")
       }
+
+    /** The `f` lines of the frozen seed at `seedDir` (verified when
+      * this pin resolved). */
+    private def seedOf(seedDir: String): Seq[String] = {
+      val prefix = rel(storePath, seedDir) + "/"
+      val lines = seedLines.filter(_.split("\t", 3)(1).startsWith(prefix))
+      if (lines.isEmpty) throw new IllegalStateException(
+        s"$seedDir is not a frozen seed of store snapshot gen=$gen of " +
+          s"$storePath")
+      lines
+    }
+
+    /** The frozen seed at `seedDir` under its declared `schema`: a scan
+      * of exactly the files this snapshot inventories for it. */
+    private[ext] def frozen(seedDir: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(seedOf(seedDir).map { l =>
+        s"$storePath/${l.split("\t", 3)(1)}"
+      }: _*)
+
+    /** The frozen seed at `seedDir` decoded to a driver value, through
+      * the JVM-wide [[SeedMemo]] keyed by the store and the seed's `f`
+      * lines: a miss decodes [[frozen]] (one small job), a hit fires
+      * none. `decode` must be the one decoder of that seed. */
+    private[ext] def seed[T](seedDir: String, schema: StructType)
+                            (decode: DataFrame => T): T =
+      SeedMemo.shared((canon(storePath), seedOf(seedDir)))(
+        decode(frozen(seedDir, schema)))
 
     private[ext] def pinnedGens: Map[String, Long] = pins
     private[ext] def pinnedDFiles: Map[String, Seq[String]] = dFiles
@@ -397,13 +426,18 @@ object StoreSnapshots {
   /** Resolve the CURRENT snapshot: parse its artifact pins and verify
     * every frozen-seed entry (existence + size) LOUDLY, before any
     * scan. One listing + one manifest read + seed stats — driver-side,
-    * kilobytes. */
+    * kilobytes, no Spark job. The read hook every store face uses: ONE
+    * pin per face call, so every artifact it reads is mutually
+    * consistent. */
   def pin(spark: SparkSession, path: String): Pin =
     pinAt(spark, path, currentGen(path).getOrElse(throw noChain(path)))
 
-  /** [[pin]] at an explicit snapshot generation (time travel within
-    * the vacuum keep window — same contract as the chain layer's
-    * `readAt`: a vacuumed pin fails loudly). */
+  /** [[pin]] at an explicit snapshot generation — store-level TIME
+    * TRAVEL within the vacuum keep window: every artifact resolves at
+    * the generation snapshot `gen` pinned (for BM25 the historical
+    * postings score against the HISTORICAL df and (N, T), not
+    * today's), seeds verified; a vacuumed pin fails loudly (the chain
+    * layer's `readAt` contract). */
   def pinAt(spark: SparkSession, path: String, gen: Long): Pin = {
     val content = io(path).read(s"${mdir(path)}/gen=$gen")
       .getOrElse(throw new IllegalStateException(
@@ -437,26 +471,7 @@ object StoreSnapshots {
               "artifacts must not change outside a rebuild")
       case _ => ()
     }
-    new Pin(spark, path, gen, pins, dFiles)
-  }
-
-  /** The read hook every store face uses: ONE pin per face call, so
-    * every artifact it reads is mutually consistent. */
-  def reader(spark: SparkSession, path: String): String => DataFrame = {
-    val p = pin(spark, path)
-    dir => p.read(dir)
-  }
-
-  /** [[reader]] pinned to an EXPLICIT snapshot generation — store-level
-    * TIME TRAVEL: every artifact resolves at the generation snapshot
-    * `gen` pinned (mutually consistent by construction — for BM25 that
-    * means the historical postings score against the HISTORICAL df and
-    * (N, T), not today's), seeds verified, and a vacuumed generation
-    * fails loudly at resolve ([[pinAt]]'s contract). */
-  def readerAt(spark: SparkSession, path: String,
-               gen: Long): String => DataFrame = {
-    val p = pinAt(spark, path, gen)
-    dir => p.read(dir)
+    new Pin(spark, path, gen, pins, dFiles, lines.filter(_.startsWith("f\t")))
   }
 
   /** Snapshot-aware store vacuum: retire store snapshots beyond the

@@ -1,7 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted IVFADC index — the ANN sibling of [[SignatureStore]]:
   * the trained structure AND the corpus's codes live on disk, so a
@@ -20,12 +23,13 @@ import org.apache.spark.sql.functions._
   *
   * The layout IS the probe structure: codes are partitioned by
   * cell-bucket, and [[query]] plans the batch's probed cells first
-  * (one tiny job over the broadcast centroid row — q·K scores), then
-  * reads codes.parquet filtered to those buckets/cells. Spark's file
-  * index prunes unprobed directories at planning time, so a batch
-  * that probes w of K cells SCANS ~w/K of the corpus codes — the
-  * inverted-file promise kept at the file level, visible in the
-  * plan's PartitionFilters and pinned by the spec on `inputFiles`.
+  * (q·K scores on the driver, against the frozen centroids the seed
+  * memo holds — no job), then reads codes.parquet filtered to those
+  * buckets/cells. Spark's file index prunes unprobed directories at
+  * planning time, so a batch that probes w of K cells SCANS ~w/K of
+  * the corpus codes — the inverted-file promise kept at the file
+  * level, visible in the plan's PartitionFilters and pinned by the
+  * spec on `inputFiles`.
   * `cell_buckets` bounds the directory fan-out (a √N-cell index at
   * corpus scale would otherwise mint millions of partitions); pruning
   * granularity degrades gracefully to the bucket, and the row-level
@@ -121,17 +125,46 @@ object VectorIndexStore {
     StoreSnapshots.start("vector", path)
   }
 
-  /** The index config — 1 row, driver-side (bounded-collect class). */
-  def params(spark: SparkSession, path: String): (Int, Int, Int) = {
-    val row = spark.read.parquet(s"$path/params.parquet").head()
-    (row.getAs[Int]("num_sub"), row.getAs[Int]("sub_dim"),
-      row.getAs[Int]("cell_buckets"))
-  }
+  /** Declared schemas of the frozen seeds (what their writers above
+    * infer to; StoreSchemasSpec pins them). */
+  private[ext] val ParamsSchema: StructType = StructType(Seq(
+    StructField("num_sub", IntegerType), StructField("sub_dim", IntegerType),
+    StructField("cell_buckets", IntegerType)))
+  private[ext] val VectorsSchema: StructType = StructType(Seq(
+    StructField("cid", LongType), StructField("vector", ArrayType(DoubleType))))
 
-  private def stored(spark: SparkSession, path: String, part: String,
-                     idCol: String, vecCol: String): DataFrame =
-    spark.read.parquet(s"$path/$part.parquet")
-      .select(col("cid").as(idCol), col("vector").as(vecCol))
+  /** The index config — 1 row, driver-side (bounded-collect class). */
+  def params(spark: SparkSession, path: String): (Int, Int, Int) =
+    paramsAt(StoreSnapshots.pin(spark, path), path)
+
+  private def paramsAt(p: StoreSnapshots.Pin, path: String): (Int, Int, Int) =
+    p.seed(s"$path/params.parquet", ParamsSchema) { df =>
+      val row = df.head()
+      (row.getAs[Int]("num_sub"), row.getAs[Int]("sub_dim"),
+        row.getAs[Int]("cell_buckets"))
+    }
+
+  /** A frozen vector seed (`centroids` or `codebook`) as id-ascending
+    * (id, vector) pairs — driver values through the seed memo. */
+  private def vectorsAt(p: StoreSnapshots.Pin, path: String,
+                        part: String): Seq[(Long, Seq[Double])] =
+    p.seed(s"$path/$part.parquet", VectorsSchema) { df =>
+      df.collect().toSeq.map { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1) &&
+          !r.getSeq[Any](1).contains(null),
+          s"null id or vector element in $path/$part.parquet")
+        (r.getLong(0), r.getSeq[Double](1).toVector: Seq[Double])
+      }.sortBy(_._1)
+    }
+
+  /** A frozen vector seed as a local relation (idCol, vecCol). */
+  private def stored(spark: SparkSession, p: StoreSnapshots.Pin,
+                     path: String, part: String, idCol: String,
+                     vecCol: String): DataFrame =
+    spark.createDataFrame(
+      vectorsAt(p, path, part).map { case (c, v) => Row(c, v) }.asJava,
+      StructType(Seq(StructField(idCol, LongType),
+        StructField(vecCol, ArrayType(DoubleType)))))
 
   /** Fold new vectors into the index under the STORE's frozen
     * geometry (snapshot semantics — see the class doc). Caller
@@ -154,10 +187,11 @@ object VectorIndexStore {
              autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
              batch: Option[(Long, String)] = None): Long = {
     val spark = newVectors.sparkSession
-    val (numSub, subDim, cellBuckets) = params(spark, path)
+    val p = StoreSnapshots.pin(spark, path)
+    val (numSub, subDim, cellBuckets) = paramsAt(p, path)
     val gen = commitCodes(path, encode(newVectors, idCol, vecCol,
-      stored(spark, path, "centroids", idCol, vecCol),
-      stored(spark, path, "codebook", idCol, vecCol),
+      stored(spark, p, path, "centroids", idCol, vecCol),
+      stored(spark, p, path, "codebook", idCol, vecCol),
       numSub, subDim, cellBuckets), batch)
     autoMaintain.foreach(am =>
       StoreMaintenance.maintainIfNeeded(spark, "vector", path, am))
@@ -248,11 +282,12 @@ object VectorIndexStore {
   def encodeDistortion(vectors: DataFrame, idCol: String, vecCol: String,
                        path: String): DataFrame = {
     val spark = vectors.sparkSession
-    val (numSub, subDim, _) = params(spark, path)
+    val p = StoreSnapshots.pin(spark, path)
+    val (numSub, subDim, _) = paramsAt(p, path)
     distortionOfAssigned(
       Similarity.ivfResiduals(vectors,
-        stored(spark, path, "centroids", idCol, vecCol), idCol, vecCol),
-      stored(spark, path, "codebook", idCol, vecCol),
+        stored(spark, p, path, "centroids", idCol, vecCol), idCol, vecCol),
+      stored(spark, p, path, "codebook", idCol, vecCol),
       idCol, vecCol, numSub, subDim)
   }
 
@@ -317,8 +352,9 @@ object VectorIndexStore {
                       k: Int, iters: Int): Boolean = {
     require(factor >= 1.0, s"trigger factor must be >= 1, got $factor")
     val spark = newVectors.sparkSession
-    val (numSub, subDim, cellBuckets) = params(spark, path)
-    val codebook = stored(spark, path, "codebook", idCol, vecCol)
+    val p = StoreSnapshots.pin(spark, path)
+    val (numSub, subDim, cellBuckets) = paramsAt(p, path)
+    val codebook = stored(spark, p, path, "codebook", idCol, vecCol)
     // ONE frozen-geometry assignment pass (guide §1.3): the monitor's
     // distortion and the append's encode both consume the batch's
     // residuals under the store's centroids — previously each ran its
@@ -327,7 +363,7 @@ object VectorIndexStore {
     // below cannot observe its own append. Values unchanged: this is
     // exactly encodeDistortion + append's derivation, shared.
     val assigned = Similarity.ivfResiduals(newVectors,
-        stored(spark, path, "centroids", idCol, vecCol), idCol, vecCol)
+        stored(spark, p, path, "centroids", idCol, vecCol), idCol, vecCol)
       .localCheckpoint()
     val batchMean = distortionOfAssigned(assigned, codebook,
         idCol, vecCol, numSub, subDim)
@@ -355,51 +391,76 @@ object VectorIndexStore {
   }
 
   /** ADC top-k against the stored index: plan the batch's probed
-    * cells (q·nprobe longs to the driver — bounded-collect class),
-    * scan ONLY their partitions, score. Output identical to
-    * `Similarity.ivfPqTopK` on the same logical corpus:
-    * (query_id, neighbor_id, rank, adc_dist2). */
+    * cells on the driver, scan ONLY their partitions, score. Output
+    * identical to `Similarity.ivfPqTopK` on the same logical corpus:
+    * (query_id, neighbor_id, rank, adc_dist2).
+    *
+    * The query batch (bounded class, like an ingest batch) is
+    * collected ONCE — a local relation collects with no job — and
+    * everything before the scan is planned from it on the driver: the
+    * probed cells ([[probedCells]]) and the one-row centroid/codebook
+    * relations the scoring stage broadcasts, built from the frozen
+    * seeds the pin resolves through the [[SeedMemo]]. With a warm memo
+    * this returns its lazy frame without firing a job; the final
+    * action scans and scores. */
   def query(spark: SparkSession, path: String, queries: DataFrame,
             idCol: String, vecCol: String, k: Int, nprobe: Int,
             asOf: Option[Long] = None): DataFrame = {
     // resolve FIRST: the pin verifies the frozen seeds
     // (centroids/codebook/params) loudly before any scan plans.
-    // `asOf` = store-level time travel (StoreSnapshots.readerAt):
-    // the codes resolve at the generation snapshot `asOf` pinned —
-    // the index as it stood at that commit, frozen geometry verified
-    val rd = asOf.map(g => StoreSnapshots.readerAt(spark, path, g))
-      .getOrElse(StoreSnapshots.reader(spark, path))
-    val (numSub, subDim, cellBuckets) = params(spark, path)
-    val centroids = stored(spark, path, "centroids", idCol, vecCol)
-    val codebook = stored(spark, path, "codebook", idCol, vecCol)
-    // probed-cell plan: rank all K cells per query (queries are few;
-    // this is the same O(q·K) pick adcFromCodes repeats exactly), keep
-    // the distinct union — a SUPERSET per query, which adcFromCodes'
-    // own per-query probe join then narrows to exactly nprobe
-    val cents = broadcast(centroids.select(col(idCol).as("__cell"),
-      col(vecCol).as("__ccv")))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("__qd").asc, col("__cell").asc)
-    val probedCells = queries
-      .select(col(idCol).as("query_id"), Similarity.toDouble(col(vecCol)).as("__qv"))
-      .crossJoin(cents)
-      .select(col("query_id"), col("__cell"),
-        Similarity.dist2(col("__qv"), col("__ccv")).as("__qd"))
-      .withColumn("__pr", row_number().over(wp))
-      .filter(col("__pr") <= nprobe)
-      .select("__cell").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val buckets = probedCells.map(_ % cellBuckets).distinct
+    // `asOf` = store-level time travel (StoreSnapshots.pinAt): the
+    // codes resolve at the generation snapshot `asOf` pinned — the
+    // index as it stood at that commit, frozen geometry verified
+    val p = asOf.fold(StoreSnapshots.pin(spark, path))(
+      StoreSnapshots.pinAt(spark, path, _))
+    val (numSub, subDim, cellBuckets) = paramsAt(p, path)
+    val cents = vectorsAt(p, path, "centroids")
+    val batch = queries.select(col(idCol), col(vecCol))
+    val qs = spark.createDataFrame(batch.collect().toSeq.asJava, batch.schema)
+    val cells = probedCells(qs, cents, idCol, vecCol, nprobe)
+    val buckets = cells.map(_ % cellBuckets).distinct
     // the probe resolves a pinned file list (bucket-dir partition
     // pruning preserved via basePath), so compaction never blocks
     // queries
-    val codes = rd(s"$path/codes.parquet")
+    val codes = p.read(s"$path/codes.parquet")
       .filter(col("cell_bucket").isin(buckets: _*) &&
-        col("cell").isin(probedCells: _*))
+        col("cell").isin(cells: _*))
       .select(col("neighbor_id"), col("cell").as("__cell"),
         col("codes").as("__codes"))
-    Similarity.adcFromCodes(codes, queries, centroids, codebook,
+    Similarity.adcFromRows(codes, qs, Similarity.centroidRowOf(spark, cents),
+      Similarity.pqCodebookOf(spark, vectorsAt(p, path, "codebook")),
       idCol, vecCol, k, nprobe, numSub, subDim)
+  }
+
+  /** The batch's probed cells, sorted: per query id, the `nprobe`
+    * nearest centroids by (dist2, cell) — the very pick the scoring
+    * stage's probe window repeats (same left-to-right double sum, NULL
+    * distances first, ids grouped as its window partitions them) —
+    * unioned. A SUPERSET per query, which the scoring stage's own probe
+    * join narrows to exactly nprobe. `qs` is a local relation, so the
+    * double projection collects with no job. */
+  private def probedCells(qs: DataFrame, cents: Seq[(Long, Seq[Double])],
+                          idCol: String, vecCol: String,
+                          nprobe: Int): Array[Long] = {
+    // zip_with pads a shorter array with NULLs, and a NULL term makes
+    // the whole sum NULL
+    def dist2(q: Seq[Any], c: Seq[Double]): Option[Double] =
+      if (q == null || q.length != c.length || q.contains(null)) None
+      else Some(q.iterator.zip(c.iterator).foldLeft(0.0) {
+        case (acc, (x, y)) =>
+          val d = x.asInstanceOf[Double] - y
+          acc + d * d
+      })
+    // Spark's double order: NaN last, 0.0 == -0.0
+    val byDist: Ordering[(Option[Double], Long)] = Ordering.Tuple2(
+      Ordering.Option(Ordering.fromLessThan[Double]((a, b) =>
+        a != b && java.lang.Double.compare(a, b) < 0)),
+      Ordering.Long)
+    qs.select(col(idCol), Similarity.toDouble(col(vecCol))).collect()
+      .groupBy(r => Option(r.get(0))).values
+      .flatMap(_.flatMap(r => cents.map { case (cell, cv) =>
+          (dist2(if (r.isNullAt(1)) null else r.getSeq[Any](1), cv), cell)
+        }).sorted(byDist).take(nprobe).map(_._2))
+      .toArray.distinct.sorted
   }
 }

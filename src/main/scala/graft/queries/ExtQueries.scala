@@ -2411,7 +2411,7 @@ object ExtQueries {
     SignatureStore.build(d, "doc_id", "text", store)
     SignatureStore.append(batchA, "doc_id", "text", store)
     SignatureStore.ingest(spark, store, batchB, "doc_id", "text",
-      resolve = Some(StoreSnapshots.readerAt(spark, store, 0L)))
+      resolve = Some(StoreSnapshots.pinAt(spark, store, 0L)))
   }
 
   /** The vector store through its full lifecycle including

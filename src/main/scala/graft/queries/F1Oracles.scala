@@ -9,7 +9,7 @@ package graft.queries
   */
 object F1Oracles {
 
-  private val F = "/root/repo/fixtures/f1"
+  private val F = s"${graft.sources.Fixtures.root}/f1"
 
   private val enrichCte =
     s"""WITH f_laps AS (SELECT * FROM read_parquet('$F/laps.parquet/*.parquet')),

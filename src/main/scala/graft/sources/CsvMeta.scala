@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   */
 object CsvMeta {
 
-  val FixtureFile = "/root/repo/fixtures/corpus/meta.csv"
+  val FixtureFile: String = s"${Fixtures.root}/corpus/meta.csv"
 
   val schema: StructType = StructType(Seq(
     StructField("id", LongType),

@@ -9,7 +9,7 @@ import graft.f1.F1Schemas
   * schema-stable regardless of what the files infer to.
   */
 object F1Tables {
-  val FixtureDir = "/root/repo/fixtures/f1"
+  val FixtureDir: String = s"${Fixtures.root}/f1"
 
   private def load(spark: SparkSession, name: String,
                    schema: org.apache.spark.sql.types.StructType,

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types._
   */
 object JsonlCorpus {
 
-  val FixtureFile = "/root/repo/fixtures/corpus/docs.jsonl"
+  val FixtureFile: String = s"${Fixtures.root}/corpus/docs.jsonl"
 
   /** Declared once — the no-inference rule. */
   val schema: StructType = StructType(Seq(

@@ -224,7 +224,7 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     def nDocs(df: DataFrame): Long =
       df.agg(sum("n_docs")).collect()(0).getLong(0)
     assert(nDocs(StoreGenerations.read(spark, stats)) == want)
-    assert(nDocs(StoreSnapshots.reader(spark, path)(stats)) == want)
+    assert(nDocs(StoreSnapshots.pin(spark, path).read(stats)) == want)
     val queries = docs.filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"),
         array(lit("dup"), lit("vector"), lit("line")).as("terms"))
@@ -327,7 +327,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     // a writer that published its snapshot and died before adopting
     // the files into the chains: the d-lines are all that names them
     StoreSnapshots.commitOwnStore("sig", path,
-      SignatureStore.land(batch, "doc_id", "text", path, None))
+      SignatureStore.land(batch, "doc_id", "text", path,
+        SignatureStore.params(spark, path), None))
     val probe = docs.filter(col("doc_id") >= 260 && col("doc_id") < 290)
       .select((col("doc_id") + 800000L).as("doc_id"), col("text"))
     def answers(): Set[(Long, Long)] =
@@ -359,7 +360,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     // published, never adopted (a writer that died between its
     // snapshot and its chain commits) — see the fold test
     StoreSnapshots.commitOwnStore("sig", path,
-      SignatureStore.land(batch, "doc_id", "text", path, None))
+      SignatureStore.land(batch, "doc_id", "text", path,
+        SignatureStore.params(spark, path), None))
     // keep only the newest snapshot: its d-files must survive the
     // artifact vacuums even though NO chain references them
     StoreSnapshots.vacuum("sig", path, keepGens = 1)

@@ -81,7 +81,7 @@ class IncrReleaseSpec extends AnyFunSuite {
     val direct = SignatureStore.ingest(spark, s"$path/sig",
       mkBatch(Seq((900002L, b, "en"))).select("doc_id", "text"),
       "doc_id", "text",
-      resolve = Some(StoreSnapshots.reader(spark, path))).collect()
+      resolve = Some(StoreSnapshots.pin(spark, path))).collect()
     assert(direct.isEmpty, s"B matched the index directly: ${direct.toSeq}")
     assert(led(900002L) == "near",
       s"B should drop through A's component, got ${led(900002L)}")

@@ -71,18 +71,9 @@ class RetrievalIndexStoreSpec extends AnyFunSuite {
       case s: QueryStageExec => flat(s.plan)
       case o => o +: o.children.flatMap(flat)
     }
-    // query() checkpoints the pruned scan, so the executed evidence
-    // lives on the checkpoint SOURCE plan: re-run the same pruned
-    // read here and measure its scan (identical filters, same files)
-    val tokBuckets = RetrievalIndexStore.params(spark, path)
-    val buckets = queries.limit(1)
-      .select(explode(col("terms")).as("tok"))
-      .select(pmod(xxhash64(col("tok")), lit(tokBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0))
-    val pruned = spark.read.parquet(s"$path/postings.parquet")
-      .filter(col("tok_bucket").isin(buckets: _*))
-    pruned.collect()
-    val scanned = flat(pruned.queryExecution.executedPlan).collect {
+    // the probe's own executed postings scan (the df scan is the other
+    // file scan of the plan)
+    val scanned = flat(probe.queryExecution.executedPlan).collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
           if s.relation.location.rootPaths.exists(
             _.toString.contains("graft_ristore_spec3/postings.parquet")) =>

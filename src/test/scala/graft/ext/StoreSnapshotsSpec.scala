@@ -38,7 +38,7 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
                                    landed: Seq[String]): Unit = {
     assert(landed.nonEmpty && landed.forall(f =>
       java.nio.file.Files.exists(java.nio.file.Paths.get(f))))
-    val resolved = StoreSnapshots.reader(spark, path)(artifact).inputFiles
+    val resolved = StoreSnapshots.pin(spark, path).read(artifact).inputFiles
       .map(f => canon(new java.net.URI(f).getPath)).toSet
     assert(landed.forall(f => !resolved.contains(canon(f))),
       "the pin must resolve none of the landed files before the commit")
@@ -143,7 +143,7 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     StoreMaintenance.vacuumStore("retrieval", path, 1)
     // the current pin names the compacted generation: every file it
     // resolves carries the compaction's gen<N>- stamp
-    val files = StoreSnapshots.reader(spark, path)(
+    val files = StoreSnapshots.pin(spark, path).read(
       s"$path/postings.parquet").inputFiles
     assert(files.nonEmpty &&
       files.forall(f => "/gen\\d+-[^/]*$".r.findFirstIn(f).isDefined),
@@ -177,7 +177,7 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
           "doc_id", "text", p),
         p => SignatureStore.append(probe, "doc_id", "text", p),
         p => rows(SignatureStore.ingest(spark, p, probe, "doc_id", "text",
-          resolve = Some(StoreSnapshots.readerAt(spark, p, 0L))))),
+          resolve = Some(StoreSnapshots.pinAt(spark, p, 0L))))),
       Kind("retrieval",
         (p, h) => RetrievalIndexStore.build(half(corpus, "doc_id", h),
           "doc_id", "text", p),
@@ -201,9 +201,11 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
         },
         // the fold's signature step under the release's one chain
         p => StoreSnapshots.commitLanded("release", p,
-          SignatureStore.land(probe, "doc_id", "text", s"$p/sig", None)),
+          SignatureStore.land(probe, "doc_id", "text", s"$p/sig",
+            SignatureStore.paramsAt(StoreSnapshots.pin(spark, p), s"$p/sig"),
+            None)),
         p => {
-          val rd = StoreSnapshots.readerAt(spark, p, 0L)
+          val rd = StoreSnapshots.pinAt(spark, p, 0L).read _
           rows(rd(s"$p/urls.parquet")) ++
             rows(rd(s"$p/sig/sets.parquet").select("doc_id"))
         }))
