@@ -621,8 +621,8 @@ object ScaleBench {
       bm25FragQuery(s, d, path, compact = true)
     }),
     // round 14: the SELF-MAINTAINING store — q_bm25_frag_query's
-    // exact 16-wave append history, but the store carries a
-    // generation chain and every append runs with autoMaintain
+    // exact 16-wave append history, but every append runs with
+    // autoMaintain
     // (ratio 3: compact+vacuum in-band when an artifact's live file
     // count crosses 3× its fresh-build ideal). ZERO external
     // maintenance ticks. The timed query face must sit at

@@ -12,7 +12,6 @@ import graft.ext.StoreMaintenance
   *   run_main.sh graft.StoreMaintain retrieval <storePath>
   *   run_main.sh graft.StoreMaintain release   <storePath>
   *   run_main.sh graft.StoreMaintain enable    <kind> <storePath>
-  *   run_main.sh graft.StoreMaintain fold      <kind> <storePath>
   *   run_main.sh graft.StoreMaintain vacuum    <kind> <storePath> <keepGens>
   *
   * `audit` prints the footer-only health inventory (zero data read —
@@ -20,15 +19,15 @@ import graft.ext.StoreMaintenance
   * print one JSON line per artifact with the before/after arithmetic
   * plus the wall seconds — the line an operator's log retention
   * actually wants. `enable` adopts a store directory written without
-  * a snapshot chain (idempotent: a no-op on any store a `build`
-  * wrote).
+  * a store log (idempotent: a no-op on any store a `build` wrote; a
+  * directory of the older per-artifact-chain layout fails loudly and
+  * must be rebuilt).
   *
-  * Concurrency contract: every store is snapshotted from its build,
-  * so compaction is ONLINE — readers keep resolving their pinned
-  * snapshot while the compacted generations publish under one new
-  * snapshot, and only `vacuum` retires bytes. Maintenance runs
-  * exclusively; appends may race each other (one conditional
-  * snapshot create per append). */
+  * Concurrency contract: every store keeps one log from its build.
+  * Appends and compactions are ordinary writers — each publishes one
+  * conditional create of the log, and a compaction racing an append
+  * re-bases onto it — so readers keep resolving their pinned entry
+  * throughout. Only `vacuum` deletes bytes, and it runs exclusively. */
 object StoreMaintain {
 
   /** Minimal JSON string escaping — paths can carry quotes or
@@ -46,13 +45,12 @@ object StoreMaintain {
     "usage: StoreMaintain audit <artifactDir>... | " +
       "<sig|vector|retrieval|release> <storePath> | " +
       "enable <kind> <storePath> | " +
-      "fold <kind> <storePath> | " +
       "vacuum <kind> <storePath> <keepGens>"
 
   def main(args: Array[String]): Unit = {
     // per-subcommand arity up front: a short invocation dies with the
     // usage line, never an ArrayIndexOutOfBoundsException
-    val arity = Map("audit" -> 2, "enable" -> 3, "fold" -> 3, "vacuum" -> 4,
+    val arity = Map("audit" -> 2, "enable" -> 3, "vacuum" -> 4,
       "sig" -> 2, "vector" -> 2, "retrieval" -> 2, "release" -> 2)
     require(args.nonEmpty && arity.contains(args(0)) &&
       args.length >= arity(args(0)), Usage)
@@ -70,12 +68,6 @@ object StoreMaintain {
       case "enable" =>
         val gen = graft.ext.StoreSnapshots.enable(args(1), args(2))
         println(s"""{"enabled":${jstr(args(2))},"kind":${jstr(args(1))},"gen":$gen}""")
-      case "fold" =>
-        // adopt pending file-level commits (concurrent writers'
-        // batches) into the artifact chains without compacting —
-        // the standalone face of what every compaction does first
-        val gen = graft.ext.StoreSnapshots.fold(args(1), args(2))
-        println(s"""{"folded":${jstr(args(2))},"kind":${jstr(args(1))},"gen":$gen}""")
       case "vacuum" =>
         val (nf, nm) = StoreMaintenance.vacuumStore(args(1), args(2),
           args(3).toInt)

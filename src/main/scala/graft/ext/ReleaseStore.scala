@@ -50,10 +50,10 @@ import org.apache.spark.sql.types._
   * batch probes today's — the loop closes. Every shuffle is
   * batch-sized or a broadcast probe into one store scan.
   *
-  * The release store is ONE snapshot chain at `<path>`: the `sig/`
-  * member's bands and sets are artifacts of the release snapshot, so
-  * every probe resolves urls, hashes and the signature index through
-  * one pin, and every fold publishes one release snapshot.
+  * The release store is ONE log at `<path>`: the `sig/` member's
+  * bands and sets are artifacts of the release log, so every probe
+  * resolves urls, hashes and the signature index through one pin, and
+  * every fold publishes one entry.
   *
   * Gate `q_incr_release` checks the batch ledger against a DuckDB
   * oracle that replays the full release chain to its kept set and
@@ -77,8 +77,8 @@ object ReleaseStore {
     * INPUT with url/lang/source; ledger = the release's per-doc
     * dispositions). One pass per store member; the sig build is the
     * same two aggregations the direct incremental route pays PER
-    * ingest run. Ends by publishing release snapshot 0 (a rebuild
-    * starts a fresh chain). */
+    * ingest run. Ends by publishing entry 0 of the release log (a
+    * rebuild restarts it). */
   def build(corpus: DataFrame, ledger: DataFrame, path: String): Unit = {
     val kept = corpus.join(
       ledger.filter(col("disposition") === "kept").select("doc_id"),
@@ -128,14 +128,12 @@ object ReleaseStore {
     * appends). Production runs keep the default true — the loop
     * closes by folding today's batch into tomorrow's probes.
     *
-    * `canonicalBatch = Some((batchId, runTag))`: the STREAMING fold —
-    * every i6 write lands as one canonical `[r<tag>-]gb<batchId>`
-    * file per artifact ([[StoreGenerations.land]]), so a replayed
-    * micro-batch overwrites its own bytes and commits nothing: the
-    * whole daily loop becomes
-    * exactly-once per micro-batch, the merge-sink argument applied to
-    * the release store. The probe/route stages are reads and are
-    * replay-idempotent by construction. */
+    * `streamBatch = Some((batchId, runTag))`: the STREAMING fold —
+    * every i6 write lands as one file per artifact and the commit
+    * records the run's `t` line ([[StoreSnapshots.commitLanded]]), so
+    * a replayed micro-batch commits nothing: the whole daily loop
+    * becomes exactly-once per micro-batch. The probe/route stages are
+    * reads and are replay-idempotent by construction. */
   def incrementalRelease(spark: SparkSession, path: String,
                          batch: DataFrame, benchmark: DataFrame,
                          packTokens: Int = 512, shardTokens: Long = 2000L,
@@ -143,7 +141,7 @@ object ReleaseStore {
                          foldBatch: Boolean = true,
                          autoMaintain: Option[StoreMaintenance.AutoMaintain]
                            = None,
-                         canonicalBatch: Option[(Long, String)] = None)
+                         streamBatch: Option[(Long, String)] = None)
       : CorpusRelease.Bundle = {
     // --- i1: seen-URL probe + within-batch url keeper -------------
     val nb = batch.withColumn("__nu", UrlOps.normalize(col("url")))
@@ -309,14 +307,14 @@ object ReleaseStore {
       val landed = Par.map(Seq[() => Map[String, Seq[String]]](
         () => SignatureStore.land(fin.select("doc_id", "text"),
           "doc_id", "text", s"$path/sig",
-          SignatureStore.paramsAt(pin, s"$path/sig"), canonicalBatch),
+          SignatureStore.paramsAt(pin, s"$path/sig"), streamBatch.isDefined),
         () => Map(s"$path/urls.parquet" -> StoreGenerations.land(
           nb.select(col("__nu").as("norm_url")).distinct(),
-          s"$path/urls.parquet", None, canonicalBatch)),
+          s"$path/urls.parquet", None, streamBatch.isDefined)),
         () => Map(s"$path/hashes.parquet" -> StoreGenerations.land(
           nb.select(md5(col("text")).as("h")).distinct(),
-          s"$path/hashes.parquet", None, canonicalBatch)))).reduce(_ ++ _)
-      StoreSnapshots.commitLanded("release", path, landed)
+          s"$path/hashes.parquet", None, streamBatch.isDefined)))).reduce(_ ++ _)
+      StoreSnapshots.commitLanded(path, landed, streamBatch)
       // in-band lifecycle knob (see SignatureStore.append): a daily
       // loop with autoMaintain set needs no external compaction tick
       autoMaintain.foreach(am =>

@@ -146,8 +146,8 @@ object RetrievalIndexStore {
     * from many weak term hits; the win is a per-token bound on what
     * any future query scans — the flat-at-any-scale serving index.
     * Default MaxValue = no pruning = bit-equal to the direct chain.
-    * Ends by publishing store snapshot 0 (a rebuild starts a fresh
-    * chain). */
+    * Ends by publishing entry 0 of the store log (a rebuild restarts
+    * it). */
   def build(corpus: DataFrame, idCol: String, textCol: String,
             path: String, tokBuckets: Int = 256,
             maxPostingsPerToken: Int = Int.MaxValue,
@@ -243,14 +243,14 @@ object RetrievalIndexStore {
     * The one append route (see [[SignatureStore.append]]): postings,
     * df deltas, the stats row and — on a positional store — positions
     * land in their artifacts ([[StoreGenerations.land]]), then ONE
-    * conditional snapshot create publishes exactly those files
+    * conditional create of the store log publishes exactly those files
     * ([[StoreSnapshots.commitLanded]]). A reader can never score the
     * batch's postings against document frequencies that don't include
     * them (all-old or all-new, however many writers race), and a
     * failed append's leftovers are never published — a plain retry
-    * converges. `batch = Some((batchId, runTag))` lands under the
-    * canonical per-batch names, the replay-safe streaming form.
-    * Returns the store snapshot generation that carries the batch. */
+    * converges. `batch = Some((batchId, runTag))` is the replay-safe
+    * streaming form (see [[SignatureStore.append]]). Returns the store
+    * log generation that carries the batch. */
   def append(incoming: DataFrame, idCol: String, textCol: String,
              path: String,
              autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
@@ -266,7 +266,7 @@ object RetrievalIndexStore {
       hasPositions(path))
     def landIn(artifact: String, df: DataFrame, bucketCol: Option[String]) =
       () => s"$path/$artifact" ->
-        StoreGenerations.land(df, s"$path/$artifact", bucketCol, batch)
+        StoreGenerations.land(df, s"$path/$artifact", bucketCol, batch.isDefined)
     val tb = Some("tok_bucket")
     // the artifact landings are independent — overlap them (guide
     // §2.6); the one commit follows once every file has landed
@@ -275,7 +275,7 @@ object RetrievalIndexStore {
       landIn("df.parquet", dfOf(post), tb),
       landIn("stats.parquet", statsOf(post).coalesce(1), None)) ++
       positions.map(landIn("positions.parquet", _, tb))).toMap
-    val gen = StoreSnapshots.commitLanded("retrieval", path, landed)
+    val gen = StoreSnapshots.commitLanded(path, landed, batch)
     // in-band lifecycle knob — see SignatureStore.append
     autoMaintain.foreach(am =>
       StoreMaintenance.maintainIfNeeded(spark, "retrieval", path, am))

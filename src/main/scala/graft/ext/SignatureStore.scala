@@ -76,7 +76,7 @@ object SignatureStore {
   /** Build (or rebuild — overwrite) the store from the current index.
     * One signature pass and one shingle-set pass over the corpus; both
     * are the same aggregations the direct route pays PER RUN. Ends by
-    * publishing store snapshot 0 (a rebuild starts a fresh chain). */
+    * publishing entry 0 of the store log (a rebuild restarts it). */
   def build(index: DataFrame, idCol: String, textCol: String, path: String,
             shingleN: Int = 3, numHashes: Int = 8): Unit = {
     writeArtifacts(index, idCol, textCol, path, shingleN, numHashes)
@@ -84,7 +84,7 @@ object SignatureStore {
   }
 
   /** [[build]]'s artifact writes alone — the release store builds its
-    * `sig/` member through this, under the release's own chain. */
+    * `sig/` member through this, under the release's own log. */
   private[ext] def writeArtifacts(index: DataFrame, idCol: String,
                                   textCol: String, path: String,
                                   shingleN: Int = 3, numHashes: Int = 8)
@@ -128,29 +128,29 @@ object SignatureStore {
     * its own (same contract as the direct route's id-disjointness).
     *
     * The one append route: the batch's bands and sets land in both
-    * artifacts ([[land]]), then ONE conditional snapshot create names
-    * exactly those files across both ([[StoreSnapshots
+    * artifacts ([[land]]), then ONE conditional create of the store
+    * log names exactly those files across both ([[StoreSnapshots
     * .commitLanded]]) — a reader pins the whole batch or none of it
     * (bands always with their verification sets), and nothing the
     * append did not land is ever published. Any number of writers may
-    * append at once: a lost race re-bases on the winner's snapshot.
+    * append at once: a lost race re-bases on the winner's entry.
     *
     * `batch = Some((batchId, runTag))` is the replay-safe STREAMING
-    * form: the files land under the canonical `[r<tag>-]gb<batchId>`
-    * names, so a replayed micro-batch overwrites its own bytes and
-    * publishes nothing ([[StoreGenerations.land]]). `autoMaintain` is
+    * form: the commit records the run's `t` line, so a replayed
+    * micro-batch publishes nothing, and flat artifacts land as one
+    * file per batch ([[StoreGenerations.land]]). `autoMaintain` is
     * the in-band lifecycle knob (the store-side mirror of the merge
     * sink's `maintainEvery`): consult the filesystem-metadata trigger
     * after the commit and compact+vacuum exactly the artifacts whose
-    * file count crossed the ratio. Returns the store snapshot
-    * generation that carries the batch. */
+    * file count crossed the ratio. Returns the store log generation
+    * that carries the batch. */
   def append(incoming: DataFrame, idCol: String, textCol: String,
              path: String,
              autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
              batch: Option[(Long, String)] = None): Long = {
-    val gen = StoreSnapshots.commitLanded("sig", path,
+    val gen = StoreSnapshots.commitLanded(path,
       land(incoming, idCol, textCol, path, params(incoming.sparkSession, path),
-        batch))
+        batch.isDefined), batch)
     autoMaintain.foreach(am => StoreMaintenance.maintainIfNeeded(
       incoming.sparkSession, "sig", path, am))
     gen
@@ -163,17 +163,16 @@ object SignatureStore {
     * directory → landed files. */
   private[ext] def land(incoming: DataFrame, idCol: String,
                         textCol: String, path: String,
-                        params: (Int, Int),
-                        batch: Option[(Long, String)])
+                        params: (Int, Int), stream: Boolean)
       : Map[String, Seq[String]] = {
     val (shingleN, numHashes) = params
     val Seq(bands, sets) = Par.map(Seq(
       () => StoreGenerations.land(
         bandsOf(incoming, idCol, textCol, shingleN, numHashes),
-        s"$path/bands.parquet", None, batch),
+        s"$path/bands.parquet", None, stream),
       () => StoreGenerations.land(
         setsOf(incoming, idCol, textCol, shingleN),
-        s"$path/sets.parquet", None, batch)))
+        s"$path/sets.parquet", None, stream)))
     Map(s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets)
   }
 

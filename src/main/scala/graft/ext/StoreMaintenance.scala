@@ -5,52 +5,39 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Maintenance for the persisted stores ([[SignatureStore]],
-  * [[VectorIndexStore]], [[RetrievalIndexStore]], [[ReleaseStore]]),
-  * all of which run in the one snapshotted mode: fold the parquet
-  * files their append-only ingest accretes back into a fresh-build
-  * layout, verify from footers + bounded invariants, and retire the
-  * superseded bytes — the same compact-then-vacuum lifecycle the
-  * manifest table got in [[graft.streaming.StreamingOps
-  * .compactManifest]]/[[graft.streaming.StreamingOps.vacuumManifests]],
-  * applied to the stores a daily-ingest deployment touches every day.
+  * [[VectorIndexStore]], [[RetrievalIndexStore]], [[ReleaseStore]]):
+  * rewrite the parquet files their append-only ingest accretes back
+  * into a fresh-build layout, verify bounded invariants, and retire the
+  * superseded bytes — the compact-then-vacuum lifecycle of the
+  * manifest table ([[graft.streaming.StreamingOps.compactManifest]],
+  * [[graft.streaming.StreamingOps.vacuumManifests]]) applied to the
+  * stores a daily-ingest deployment touches every day.
   *
   * Why it exists: every `append` writes its own parquet files, so a
   * year of daily batches turns each store scan into a 365-file
   * small-files problem and the bucket-pruned query faces quietly decay
   * (a probe still prunes to its buckets, but every bucket is now N
-  * files of open/footer overhead). Compaction is PHYSICAL only — the store's
-  * answers are bit-identical before and after (spec-pinned through
-  * every store's query face), because rewriting rows never changes the
-  * relational content, and the one SEMANTIC fold (summing the BM25
-  * store's df/stats delta rows) preserves the sums readers take.
+  * files of open/footer overhead). Compaction is PHYSICAL only — the
+  * store's answers are bit-identical before and after (spec-pinned
+  * through every store's query face), and the one SEMANTIC fold
+  * (summing the BM25 store's df/stats delta rows) preserves the sums
+  * readers take. Per artifact directory, flat artifacts rewrite into
+  * [[flatFiles]] files; bucket-partitioned ones into ONE file per
+  * bucket directory via the hash inverse
+  * ([[graft.sources.Layout.hashInverse]]), keeping the layout
+  * probe-time pruning depends on (one file per bucket is the
+  * fresh-build bound: the bucket-count knob is how a deployment sizes
+  * buckets to begin with).
   *
-  * The unit of work is one artifact DIRECTORY:
-  *
-  *  - flat artifacts (bands/sets/stats) rewrite into
-  *    ceil(bytes/targetBytes) files (footer arithmetic sizes the
-  *    output — no data read to plan);
-  *  - bucket-partitioned artifacts (codes/postings/df) rewrite into
-  *    ONE file per bucket directory via the hash-inverse probe
-  *    (partition == bucket, the [[graft.sources.Layout
-  *    .compactGroupsFiles]] trick), preserving the directory layout
-  *    the probe-time partition pruning depends on. One file per bucket
-  *    is the fresh-build bound because the store's bucket-count knob
-  *    (cell_buckets / tok_buckets) is how a deployment sizes buckets
-  *    to begin with.
-  *
-  * PROMOTION is ONLINE: the compacted copy builds in
-  * `<dir>.__compact`, is verified (footer inventory + the artifact's
-  * bounded invariant), then its files move INTO the artifact
-  * directory under deterministic generation-stamped names and
-  * generation N+1 of the artifact's [[StoreGenerations]] chain
-  * publishes their list (no-clobber); the store-level compaction
-  * calls then commit one [[StoreSnapshots]] snapshot pinning the
-  * compacted generations. Nothing a live reader references moves or
-  * dies: a reader holding a pinned snapshot completes correctly
-  * THROUGH the compaction, and the superseded bytes retire only when
-  * [[vacuumStore]]'s keep window passes them. A crash anywhere leaves
-  * only unreferenced files (re-running overwrites its own dead
-  * output; the vacuum sweeps whatever remains) — no recovery step.
+  * A compaction is an ORDINARY WRITER of the store log
+  * ([[StoreSnapshots]]): it reads the files one pinned entry names,
+  * lands its verified output under writer-unique names, and publishes
+  * current − the exact files it read + its output ([[commitRewrites]]).
+  * An append that commits meanwhile stays in the entry; a rival
+  * compaction that already rewrote the same inputs makes it fail
+  * loudly, leaving only unreferenced files — a plain re-run converges.
+  * Superseded bytes retire only when [[vacuumStore]]'s keep window
+  * passes them.
   *
   * Reference behavior context: the reference re-reads its corpus per
   * run (no persisted derived state to maintain); this lifecycle is
@@ -62,11 +49,15 @@ object StoreMaintenance {
                                   filesAfter: Long, rowsBefore: Long,
                                   rowsAfter: Long)
 
-  /** One artifact's maintenance recipe: where it lives, whether its
-    * layout is bucket-partitioned (and must stay that way), its
-    * declared schema ([[schemaOf]]), the semantic fold (identity for
-    * row-preserving artifacts), and the bounded invariant that gates
-    * promotion. */
+  /** One artifact's maintenance recipe: where it lives; its bucket
+    * column, when the directory is `partitionBy(c)` laid out and MUST
+    * stay that way (probe-time pruning); its declared schema
+    * ([[schemaOf]]); the semantic fold applied during the rewrite
+    * (identity for row-preserving artifacts, delta-summing for the
+    * BM25 df and stats tables); and the ONE-ROW invariant that must be
+    * equal before and after (row count by default, which is only
+    * correct for identity folds — folding artifacts pin the sums their
+    * readers take). */
   final case class ArtifactSpec(dir: String, bucketCol: Option[String],
                                 schema: StructType,
                                 fold: DataFrame => DataFrame,
@@ -114,13 +105,11 @@ object StoreMaintenance {
     declared.get(java.nio.file.Paths.get(dir).getFileName.toString)
 
   /** Audit-triggered in-band maintenance config (the store-side
-    * mirror of the merge sink's `maintainEvery`): after an ingest
-    * fold, any artifact whose live file count exceeds `ratio` × its
-    * fresh-build ideal (one file per populated bucket; bytes /
-    * `targetBytes` for flat artifacts) compacts in-band, and the
-    * store vacuums beyond `keepGens` snapshots. The
-    * trigger reads filesystem metadata only (file names + sizes):
-    * zero data, zero footers, so a no-op tick costs microseconds. */
+    * mirror of the merge sink's `maintainEvery`): after an append, any
+    * artifact whose live file count exceeds `ratio` × its fresh-build
+    * ideal (one file per populated bucket; [[flatFiles]] for flat
+    * artifacts) compacts in-band, and the store vacuums beyond
+    * `keepGens` log entries ([[maintainIfNeeded]]). */
   final case class AutoMaintain(ratio: Double = 3.0,
                                 targetBytes: Long = 128L << 20,
                                 keepGens: Int = 2) {
@@ -129,54 +118,38 @@ object StoreMaintenance {
     require(keepGens >= 1, s"keepGens must be >= 1")
   }
 
-  private def rowIdentity(df: DataFrame): DataFrame = df
-
-  private def countInvariant(df: DataFrame): DataFrame =
-    df.agg(count(lit(1)).as("n_rows"))
-
   private def spec(dir: String, bucketCol: Option[String] = None,
-                   fold: DataFrame => DataFrame = rowIdentity,
-                   invariant: DataFrame => DataFrame = countInvariant)
-      : ArtifactSpec = ArtifactSpec(dir, bucketCol, schemaOf(dir).getOrElse(
-    sys.error(s"no declared schema for store artifact $dir")), fold, invariant)
+                   fold: DataFrame => DataFrame = identity,
+                   invariant: DataFrame => DataFrame =
+                     _.agg(count(lit(1)).as("n_rows"))): ArtifactSpec =
+    ArtifactSpec(dir, bucketCol, schemaOf(dir).get, fold, invariant)
 
-  private def scratchOf(dir: String) = s"$dir.__compact"
+  /** The fresh-build file count of a flat artifact holding `files`:
+    * ceil(total file length / targetBytes), at least 1. File lengths,
+    * not footers: sizing reads no data and runs no job. */
+  private def flatFiles(files: Seq[String], targetBytes: Long): Int = {
+    val bytes = files.map(p => java.nio.file.Files.size(
+      java.nio.file.Paths.get(p))).sum
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+  }
 
-  import StoreGenerations.{deleteTree, exists}
-
-  /** Compact one artifact directory in place (see class doc).
-    *
-    * `bucketCol` — Some(c): the directory is `partitionBy(c)` laid out
-    * and MUST stay that way (probe-time pruning); rewrite = one file
-    * per bucket. None: flat; rewrite = ceil(bytes/targetBytes) files.
-    *
-    * `fold` — the semantic fold applied during the rewrite (identity
-    * for row-preserving artifacts; delta-summing for the BM25 df and
-    * stats tables). `invariant` — a ONE-ROW aggregate that must be
-    * equal on the artifact before and after (defaults to row count,
-    * which is only correct for identity folds; folding callers pass
-    * the sums their readers take).
-    *
-    * Publishes the artifact's next generation only; the store-level
-    * calls below commit the snapshot that makes it visible. Run it
-    * through them: they fold and commit the store first, which
-    * retires the `d` lines of the appends this compaction rewrites. */
-  def compactArtifact(spark: SparkSession, dir: String,
-                      bucketCol: Option[String],
-                      fold: DataFrame => DataFrame = rowIdentity,
-                      invariant: DataFrame => DataFrame = countInvariant,
-                      targetBytes: Long = 128L << 20): ArtifactReport = {
-    val scratch = scratchOf(dir)
-    deleteTree(scratch) // a dead attempt's unverified output
-    val srcFiles = StoreGenerations.currentFiles(dir)
-      .getOrElse(throw StoreGenerations.noChain(dir))
-    val src = StoreGenerations.read(spark, dir)
-    val before = invariant(src).collect().toSeq
-    val rowsBefore = graft.sources.Layout
-      .parquetFileStatsFiles(spark, srcFiles)
+  private def footerRows(spark: SparkSession, files: Seq[String]): Long =
+    graft.sources.Layout.parquetFileStatsFiles(spark, files)
       .agg(sum("n_rows")).collect()(0).getLong(0)
-    val folded = fold(src)
-    bucketCol match {
+
+  /** Rewrite one artifact as `pin` names it — fold, one file per
+    * bucket (or [[flatFiles]] files), landed but NOT committed, the
+    * invariant verified on the landed output. Returns the report, the
+    * files read and the files landed. */
+  private[ext] def rewrite(spark: SparkSession, pin: StoreSnapshots.Pin,
+                      s: ArtifactSpec, targetBytes: Long)
+      : (ArtifactReport, Seq[String], Seq[String]) = {
+    val srcFiles = pin.files(s.dir)
+    val src = pin.read(s.dir)
+    val before = s.invariant(src).collect().toSeq
+    val rowsBefore = footerRows(spark, srcFiles)
+    val folded = s.fold(src)
+    val out = s.bucketCol match {
       case Some(c) =>
         // bucket values from the DIRECTORY NAMES (control-plane, zero
         // data read) — the same values probe-time pruning keys on
@@ -184,83 +157,64 @@ object StoreMaintenance {
         val vals = srcFiles
           .flatMap(p => rx.findFirstMatchIn(p).map(_.group(1).toLong))
           .distinct.sorted
-        require(vals.nonEmpty, s"no $c= partition dirs under $dir")
-        val nV = vals.length
-        // partition == bucket via the hash-inverse probe (the
-        // compactGroupsFiles trick): each bucket's rows land alone in
-        // one task, so partitionBy emits exactly one file per bucket.
-        // The value→pid map is bucket-count-sized (the store's layout
-        // knob, thousands at most — bounded-collect class).
-        val inv: Map[Long, Long] = spark.range(nV * 64L)
-          .select(col("id"),
-            pmod(hash(col("id")), lit(nV)).cast("long").as("b"))
-          .groupBy("b").agg(min("id").as("pid"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        require(inv.size == nV,
-          s"hash-inverse probe found ${inv.size} of $nV partitions")
+        // partition == bucket: each bucket's rows land alone in one
+        // task, so partitionBy emits exactly one file per bucket
+        val inv = graft.sources.Layout.hashInverse(vals.length)
         val pidMap = map(vals.zipWithIndex.flatMap { case (v, i) =>
-          Seq(lit(v), lit(inv(i.toLong))) }: _*)
-        folded
+          Seq(lit(v), lit(inv(i))) }: _*)
+        StoreGenerations.landWritten(folded
           .withColumn("__pid", element_at(pidMap, col(c).cast("long")))
-          .repartition(nV, col("__pid"))
-          .drop("__pid")
-          .write.mode("overwrite").partitionBy(c).parquet(scratch)
+          .repartition(vals.length, col("__pid"))
+          .drop("__pid"), s.dir, Some(c))
       case None =>
-        val bytes = graft.sources.Layout
-          .parquetFileStatsFiles(spark, srcFiles)
-          .agg(sum("file_bytes")).collect()(0).getLong(0)
-        val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-        folded.repartition(nOut)
-          .write.mode("overwrite").parquet(scratch)
+        StoreGenerations.landWritten(
+          folded.repartition(flatFiles(srcFiles, targetBytes)), s.dir, None)
     }
-    val after = invariant(schemaOf(dir).fold(spark.read)(spark.read.schema)
-      .parquet(scratch)).collect().toSeq
+    val after = s.invariant(StoreSnapshots.scan(spark, s.dir, out))
+      .collect().toSeq
     require(before == after,
-      s"invariant mismatch compacting $dir: $before -> $after; " +
-        "scratch NOT promoted — the live artifact is untouched")
-    val outFiles = graft.sources.Layout.listParquet(scratch)
-    val rowsAfter = graft.sources.Layout
-      .parquetFileStatsFiles(spark, outFiles)
-      .agg(sum("n_rows")).collect()(0).getLong(0)
-    // move the verified scratch files INTO the live directory under
-    // deterministic generation-stamped names (REPLACE_EXISTING
-    // overwrites only this compaction's own dead prior attempt — the
-    // names embed the target generation, and nothing references them
-    // until the publish below), then publish their list as the next
-    // generation. Readers pinned to any surviving generation are
-    // untouched; old bytes retire at the next vacuum.
-    val gen = StoreGenerations.currentGen(dir).get + 1
-    val rxb = bucketCol.map(c =>
-      (java.util.regex.Pattern.quote(s"$c=") + "(-?\\d+)/").r)
-    val moved = outFiles.sorted.zipWithIndex.map { case (p, i) =>
-      val tgt = rxb.flatMap(_.findFirstMatchIn(p)) match {
-        case Some(m) =>
-          s"$dir/${bucketCol.get}=${m.group(1)}/gen$gen-c.parquet"
-        case None => s"$dir/gen$gen-p$i.parquet"
-      }
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(tgt).getParent)
-      java.nio.file.Files.move(java.nio.file.Paths.get(p),
-        java.nio.file.Paths.get(tgt),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      tgt
-    }
-    StoreGenerations.publish(dir, gen, moved)
-    deleteTree(scratch)
-    ArtifactReport(dir, srcFiles.length.toLong, outFiles.length.toLong,
-      rowsBefore, rowsAfter)
+      s"invariant mismatch compacting ${s.dir}: $before -> $after; " +
+        "output NOT committed — the live artifact is untouched")
+    (ArtifactReport(s.dir, srcFiles.length.toLong, out.length.toLong,
+      rowsBefore, footerRows(spark, out)), srcFiles, out)
   }
 
-  private def compact(spark: SparkSession, s: ArtifactSpec,
-                      targetBytes: Long = 128L << 20): ArtifactReport =
-    compactArtifact(spark, s.dir, s.bucketCol, s.fold, s.invariant,
-      targetBytes)
+  /** Rewrite `specs` concurrently (each directory is its own unit —
+    * overlapped via Par, guide §2.6) from ONE pinned entry, then
+    * publish all of them in one commit ([[commitRewrites]]). */
+  private def compactAll(spark: SparkSession, path: String,
+                         specs: Seq[ArtifactSpec], targetBytes: Long)
+      : Seq[ArtifactReport] = {
+    val pin = StoreSnapshots.pin(spark, path)
+    val done = Par.map(specs.map(s => () => rewrite(spark, pin, s, targetBytes)))
+    commitRewrites(path, done)
+    done.map(_._1)
+  }
+
+  /** The compaction commit: current − the files each rewrite read +
+    * its output, re-based onto whatever committed since its pin. Fails
+    * loudly when a rival compaction already removed any input. */
+  private[ext] def commitRewrites(path: String,
+      done: Seq[(ArtifactReport, Seq[String], Seq[String])]): Long =
+    StoreSnapshots.commit(path) { e =>
+      e.copy(parts = e.parts ++ done.map { case (r, in, out) =>
+        val a = StoreSnapshots.rel(path, r.artifact)
+        val live = e.parts.getOrElse(a, Set.empty[String])
+        val read = in.map(StoreSnapshots.rel(r.artifact, _)).toSet
+        if (!read.subsetOf(live)) throw new IllegalStateException(
+          s"compaction of ${r.artifact} lost to a concurrent compaction: " +
+            s"${(read -- live).size} of the ${read.size} files it read are " +
+            "gone; its output stays unreferenced (the vacuum sweeps it) — " +
+            "re-run the compaction")
+        a -> (live -- read ++ out.map(StoreSnapshots.rel(r.artifact, _)))
+      })
+    }
 
   /** Footer-only health audit — the number that tells a deployment
     * WHEN to compact, at footer-read cost (zero data scanned): one
     * row per artifact directory with its file/byte/row inventory and
-    * bytes-per-file — the LIVE inventory (the current generation's
-    * files when the artifact carries a chain; retired-but-unvacuumed
+    * bytes-per-file — the LIVE inventory (the current entry's files
+    * when a store log names the artifact; retired-but-unvacuumed
     * bytes are not small-files decay, they are the keep window). A
     * store whose n_files grows daily while bytes_per_file shrinks is
     * accreting the decay the compaction path reverses; a deployment
@@ -269,7 +223,7 @@ object StoreMaintenance {
     import spark.implicits._
     dirs.map { d =>
       val files =
-        if (!exists(d)) Seq.empty
+        if (!StoreGenerations.exists(d)) Seq.empty
         else StoreGenerations.currentFiles(d)
           .getOrElse(graft.sources.Layout.listParquet(d))
       if (files.isEmpty) (d, 0L, 0L, 0L, 0L)
@@ -282,80 +236,45 @@ object StoreMaintenance {
     }.toDF("artifact", "n_files", "bytes", "rows", "bytes_per_file")
   }
 
-  /** The in-band maintenance tick ([[AutoMaintain]]) for the store
-    * at `path` (`kind` ∈ sig | vector | retrieval | release): adopt
-    * pending file-level commits ([[StoreSnapshots.fold]]), compact
-    * exactly the artifacts whose live file count crossed ratio ×
-    * ideal, then — when anything compacted — commit ONE snapshot
-    * pinning the post-compaction generations and vacuum
-    * snapshot-aware beyond `keepGens`. Returns the reports of what
-    * actually compacted (usually empty — that is the point of a
-    * threshold). The trigger is pure filesystem metadata; sizing the
-    * flat ideal uses file lengths, not footers, so a quiet tick
-    * launches zero Spark jobs. */
+  /** The in-band maintenance tick ([[AutoMaintain]]) for the store at
+    * `path` (`kind` ∈ sig | vector | retrieval | release): compact, in
+    * one commit, exactly the artifacts whose live file count crossed
+    * ratio × ideal, then vacuum beyond `keepGens` — exclusive, so the
+    * tick belongs to a single-writer loop. Returns what compacted
+    * (usually nothing); the trigger reads one log entry and file
+    * lengths, so a quiet tick launches zero Spark jobs. */
   def maintainIfNeeded(spark: SparkSession, kind: String, path: String,
                        am: AutoMaintain): Seq[ArtifactReport] = {
-    // fold FIRST: the trigger below counts chain files, and
-    // compaction rewrites chain files — an append a dead writer never
-    // adopted would be invisible to both, and the fold's commit
-    // retires the d-entries the chains already cover (maintenance
-    // runs exclusively, so nothing lands while this folds)
-    StoreSnapshots.fold(kind, path)
-    val reports = artifactsOf(kind, path).flatMap { s =>
-      val files = StoreGenerations.currentFiles(s.dir)
-        .getOrElse(throw StoreGenerations.noChain(s.dir))
+    val log = StoreSnapshots.latest(path)._2
+    val due = artifactsOf(kind, path).filter { s =>
+      val files = log.files(path, s.dir)
       val ideal = s.bucketCol match {
-        case Some(_) =>
-          // fresh-build bound: one file per POPULATED bucket dir
-          math.max(1L,
-            files.map(p => p.substring(0, p.lastIndexOf('/')))
-              .distinct.length.toLong)
-        case None =>
-          val bytes = files.map(p => java.nio.file.Files.size(
-            java.nio.file.Paths.get(p))).sum
-          math.max(1L, (bytes + am.targetBytes - 1) / am.targetBytes)
+        // fresh-build bound: one file per POPULATED bucket dir
+        case Some(_) => math.max(1,
+          files.map(p => p.substring(0, p.lastIndexOf('/'))).distinct.length)
+        case None => flatFiles(files, am.targetBytes)
       }
-      if (files.length <= am.ratio * ideal) None
-      else Some(compact(spark, s, am.targetBytes))
+      files.length > am.ratio * ideal
     }
-    if (reports.nonEmpty) {
-      StoreSnapshots.commit(kind, path)
+    if (due.isEmpty) Nil
+    else {
+      val reports = compactAll(spark, path, due, am.targetBytes)
       StoreSnapshots.vacuum(kind, path, am.keepGens)
+      reports
     }
-    reports
   }
 
-  /** Adopt a store directory written without a chain
+  /** Adopt a store directory written without a log
     * ([[StoreSnapshots.enable]]) — a no-op on any store a `build`
-    * wrote, since every build starts its chain. */
+    * wrote, since every build starts its log. */
   def enableStoreGenerations(kind: String, path: String): Unit =
     StoreSnapshots.enable(kind, path)
 
-  /** Snapshot-aware vacuum of the store ([[StoreSnapshots.vacuum]]):
-    * keep the newest `keepGens` snapshots and every artifact
-    * generation they pin; returns (files deleted, manifests deleted)
-    * summed. */
+  /** The store vacuum ([[StoreSnapshots.vacuum]]): keep the newest
+    * `keepGens` log entries and every file they name; returns (files
+    * deleted, entries deleted). */
   def vacuumStore(kind: String, path: String, keepGens: Int): (Int, Int) =
     StoreSnapshots.vacuum(kind, path, keepGens)
-
-  /** Compact every artifact of the store at `path` and commit the
-    * snapshot that publishes the result: pending file-level commits
-    * fold first, the artifacts compact concurrently and
-    * independently (each directory is its own unit — overlapped via
-    * Par, guide §2.6), and ONE snapshot then pins every compacted
-    * generation. A crash before the commit leaves the previous
-    * snapshot live (compacted generations published but unpinned);
-    * re-running resumes (already-compacted artifacts fold to
-    * themselves). */
-  private def compactStore(spark: SparkSession, kind: String, path: String,
-                           targetBytes: Long = 128L << 20)
-      : Seq[ArtifactReport] = {
-    StoreSnapshots.fold(kind, path)
-    val reports = Par.map(artifactsOf(kind, path).map(s =>
-      () => compact(spark, s, targetBytes)))
-    StoreSnapshots.commit(kind, path)
-    reports
-  }
 
   private[graft] def artifactsOf(kind: String, path: String)
       : Seq[ArtifactSpec] = kind match {
@@ -366,14 +285,6 @@ object StoreMaintenance {
     case other => sys.error(s"unknown store kind: $other")
   }
 
-  /** Reports as a frame, for specs/gates that want to assert on the
-    * arithmetic relationally. */
-  def reportDF(spark: SparkSession, reports: Seq[ArtifactReport])
-      : DataFrame = {
-    import spark.implicits._
-    reports.toDF()
-  }
-
   /** [[SignatureStore]] artifacts: bands + sets (flat, row-
     * preserving; params is one immutable file and never accretes). */
   private def sigArtifacts(path: String): Seq[ArtifactSpec] = Seq(
@@ -382,7 +293,7 @@ object StoreMaintenance {
   def compactSignatureStore(spark: SparkSession, path: String,
                             targetBytes: Long = 128L << 20)
       : Seq[ArtifactReport] =
-    compactStore(spark, "sig", path, targetBytes)
+    compactAll(spark, path, sigArtifacts(path), targetBytes)
 
   /** [[VectorIndexStore]] artifacts: codes (cell-bucketed, row-
     * preserving — the layout probe-time pruning keys on is preserved
@@ -393,7 +304,7 @@ object StoreMaintenance {
 
   def compactVectorIndexStore(spark: SparkSession, path: String)
       : Seq[ArtifactReport] =
-    compactStore(spark, "vector", path)
+    compactAll(spark, path, vectorArtifacts(path), 128L << 20)
 
   /** [[ReleaseStore]] artifacts: the three the daily loop APPENDS
     * to — the signature index (bands/sets) plus the seen-url /
@@ -414,7 +325,7 @@ object StoreMaintenance {
 
   def compactReleaseStore(spark: SparkSession, path: String)
       : Seq[ArtifactReport] =
-    compactStore(spark, "release", path)
+    compactAll(spark, path, releaseArtifacts(path), 128L << 20)
 
   /** [[RetrievalIndexStore]] artifacts: postings (token-bucketed,
     * row-preserving), df (token-bucketed, delta rows SUMMED into one
@@ -423,15 +334,8 @@ object StoreMaintenance {
     * the positional face — positions (token-bucketed, row-
     * preserving). The invariants pin exactly what scoring consumes:
     * Σdf and the distinct token count for df; ΣN and ΣT for stats.
-    *
-    * The store's 3–4 artifacts compact CONCURRENTLY and
-    * INDEPENDENTLY: a crash mid-way leaves some artifacts with an
-    * unpinned compacted generation and the previous snapshot live —
-    * harmless (compaction is physical-only per artifact, and the fold
-    * preserves what readers consume), and re-running the store-level
-    * call resumes: already-compacted artifacts fold to themselves
-    * (idempotent), an interrupted one overwrites its dead scratch,
-    * the rest compact fresh. */
+    * A crash before the one commit leaves only unreferenced output;
+    * re-running compacts from the live entry. */
   private def retrievalArtifacts(path: String): Seq[ArtifactSpec] = {
     val base = Seq(
       spec(s"$path/postings.parquet", Some("tok_bucket")),
@@ -446,12 +350,12 @@ object StoreMaintenance {
           sum("total_dl").as("total_dl")),
         invariant = d => d.agg(sum("n_docs").as("n"),
           sum("total_dl").as("t"))))
-    if (exists(s"$path/positions.parquet"))
+    if (StoreGenerations.exists(s"$path/positions.parquet"))
       base :+ spec(s"$path/positions.parquet", Some("tok_bucket"))
     else base
   }
 
   def compactRetrievalIndexStore(spark: SparkSession, path: String)
       : Seq[ArtifactReport] =
-    compactStore(spark, "retrieval", path)
+    compactAll(spark, path, retrievalArtifacts(path), 128L << 20)
 }

@@ -121,7 +121,7 @@ object VectorIndexStore {
         .repartition(col("cell_bucket"))
         .write.partitionBy("cell_bucket").mode(SaveMode.Overwrite)
         .parquet(s"$path/codes.parquet"))
-    // a (re)build starts a fresh chain at store snapshot 0
+    // a (re)build restarts the store log at entry 0
     StoreSnapshots.start("vector", path)
   }
 
@@ -173,15 +173,15 @@ object VectorIndexStore {
     * The one append route (see [[SignatureStore.append]]): the batch
     * encodes under the frozen geometry, lands one file per populated
     * cell bucket ([[StoreGenerations.land]]), and ONE conditional
-    * snapshot create publishes exactly those files
+    * create of the store log publishes exactly those files
     * ([[StoreSnapshots.commitLanded]]). Any number of writers may
-    * append at once — every surviving snapshot differs from its parent
+    * append at once — every surviving entry differs from its parent
     * by exactly one writer's whole batch. `batch = Some((batchId,
-    * runTag))` lands under the canonical per-batch names, the
-    * replay-safe streaming form: a replayed micro-batch overwrites its
-    * own files and publishes nothing. `autoMaintain`: the in-band
-    * lifecycle knob — see [[SignatureStore.append]]. Returns the
-    * store snapshot generation that carries the batch. */
+    * runTag))` is the replay-safe streaming form: a replayed
+    * micro-batch publishes nothing (see [[SignatureStore.append]]).
+    * `autoMaintain`: the in-band lifecycle knob — see
+    * [[SignatureStore.append]]. Returns the store log generation that
+    * carries the batch. */
   def append(newVectors: DataFrame, idCol: String, vecCol: String,
              path: String,
              autoMaintain: Option[StoreMaintenance.AutoMaintain] = None,
@@ -204,8 +204,8 @@ object VectorIndexStore {
   private def commitCodes(path: String, codes: DataFrame,
                           batch: Option[(Long, String)]): Long = {
     val dir = s"$path/codes.parquet"
-    StoreSnapshots.commitLanded("vector", path,
-      Map(dir -> StoreGenerations.land(codes, dir, Some("cell_bucket"), batch)))
+    StoreSnapshots.commitLanded(path,
+      Map(dir -> StoreGenerations.land(codes, dir, Some("cell_bucket"))), batch)
   }
 
   /** REBUILD: re-fit the index geometry over the CURRENT corpus and
@@ -220,8 +220,8 @@ object VectorIndexStore {
     * rebuild IS a fresh build over base + appends, so its output is
     * bit-identical to one (spec-pinned), and the layout config
     * (num_sub, sub_dim, cell_buckets) carries over from the store.
-    * Overwrites the store; like any rebuild, it starts a fresh chain
-    * at store snapshot 0. */
+    * Overwrites the store; like any rebuild, it restarts the store log
+    * at entry 0. */
   def rebuild(corpus: DataFrame, idCol: String, vecCol: String,
               path: String, k: Int, iters: Int): Unit = {
     rebuildReturning(corpus, idCol, vecCol, path, k, iters)

@@ -2301,9 +2301,9 @@ object ExtOracles {
     // probe planning and the store itself invisible in the completed
     // stream (top-k is per query; ids are disjoint across triggers)
     "q_stream_ann" -> ivfPqTopkSql,
-    // the streaming INGEST face: canonical per-batch landing + the
-    // generation chain must be invisible — the post-stream store
-    // answers the direct chain over the full corpus
+    // the streaming INGEST face: per-batch landing + the store log
+    // must be invisible — the post-stream store answers the direct
+    // chain over the full corpus
     "q_stream_ann_ingest" -> ivfPqTopkSql,
     // the ORGANIC-head stored route replays the same direct chain on
     // the token-profile fixture: store plumbing, the append, and

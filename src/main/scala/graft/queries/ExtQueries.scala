@@ -2175,14 +2175,14 @@ object ExtQueries {
 
   /** The GENERATIONAL store lifecycle through the gate — q_sig_compact
     * with the probe PLANNED BEFORE the online compaction runs: build
-    * (chain at 0) → append batch A → plan the ingest of batch B (its
+    * (log at 0) → append batch A → plan the ingest of batch B (its
     * file index resolves the pre-compaction generation NOW) →
     * [[StoreMaintenance.compactSignatureStore]] (publishes the next
     * generation, moves nothing a reader holds) →
     * [[StoreMaintenance.vacuumStore]] with a keep window of 2
     * (retains the reader's generation) → RETURN the pinned frame,
     * which the driver collects only after the whole cycle completed.
-    * Same oracle as q_incr_stored: the chain, the online compaction,
+    * Same oracle as q_incr_stored: the log, the online compaction,
     * and the vacuum must all be invisible in a concurrent reader's
     * answer. */
   def sigGen(spark: SparkSession, dir: String): DataFrame = {
@@ -2207,12 +2207,12 @@ object ExtQueries {
   /** The STORE-LEVEL snapshot lifecycle on the signature store —
     * q_sig_gen one layer up: build (snapshot 0: one manifest pinning
     * bands+sets+params together) → append batch A (ONE atomic commit
-    * spanning both artifact generations) → plan the ingest of batch
+    * spanning both artifacts) → plan the ingest of batch
     * B (it resolves the snapshot NOW — bands and sets from the same
     * commit, so a candidate surfaced by the band probe always has its
     * verification set) → online compaction (ends with its snapshot
-    * commit) → snapshot-aware vacuum (keeps every artifact generation
-    * the surviving snapshots pin) → collect the pinned frame. Same
+    * commit) → vacuum (keeps every file the surviving snapshots
+    * name) → collect the pinned frame. Same
     * oracle as q_incr_stored: the snapshot layer must be invisible
     * in the answer. */
   def sigSnapshot(spark: SparkSession, dir: String): DataFrame = {
@@ -2280,7 +2280,7 @@ object ExtQueries {
   }
 
   /** MULTI-WRITER append on the MULTI-ARTIFACT signature store — the
-    * file-level snapshot commit under real concurrency: batch A
+    * one-commit append under real concurrency: batch A
     * (q_incr_stored's append) splits in two, TWO writers race
     * [[SignatureStore.append]] (land bands+sets in both artifacts →
     * ONE conditional create names the whole cross-artifact batch →
@@ -3597,14 +3597,14 @@ object ExtQueries {
     * source directory sequentially so trigger order is pinned), each
     * running the FULL chain per batch via [[graft.streaming
     * .StreamingOps.runReleaseSink]] (probe → within-batch cascade →
-    * decon → frozen-model routing → CANONICAL fold), batch 1 probing
+    * decon → frozen-model routing → fold), batch 1 probing
     * batch 0's fold. Returns the union of the per-batch ledgers,
     * which must equal the single-batch loop's — q_incr_release's
-    * DuckDB oracle VERBATIM: the stream, the replay-safe canonical
-    * landing, and the per-batch fold all invisible in every
-    * disposition. Store + chains rebuilt per call; fresh checkpoint
-    * per call (its run tag keeps even a stale store's files
-    * non-colliding) — Bench-idempotent. */
+    * DuckDB oracle VERBATIM: the stream, the replay-safe store-log
+    * commit, and the per-batch fold all invisible in every
+    * disposition. Store + log rebuilt per call; fresh checkpoint
+    * per call (a fresh run tag, so no batch reads as a replay) —
+    * Bench-idempotent. */
   def streamRelease(spark: SparkSession, dir: String): DataFrame = {
     val tail = dir.split('/').filter(_.nonEmpty).last
     val store = s"/tmp/graft_relstore_sr_$tail"

@@ -794,11 +794,11 @@ object StarQueries {
 
   // §2.11 × ext — STREAMING INGEST into the persisted BM25 index:
   // every 7th corpus doc arrives as a file-source stream in four
-  // micro-batch triggers (postings/df/stats landing canonically under
-  // the store's bucket fn, adopted by the generation chains); the
-  // post-stream query batch must answer the direct BM25 chain over
-  // the FULL corpus — q_bm25_stored's oracle verbatim: the stream,
-  // the chains, and the per-batch delta landing all invisible.
+  // micro-batch triggers (postings/df/stats landing under the store's
+  // bucket fn, one store-log commit per batch); the post-stream query
+  // batch must answer the direct BM25 chain over the FULL corpus —
+  // q_bm25_stored's oracle verbatim: the stream, the store log, and
+  // the per-batch delta landing all invisible.
   def streamBm25IngestQuery(spark: SparkSession, dir: String): DataFrame = {
     val tail = dir.split('/').filter(_.nonEmpty).last
     val store = s"/tmp/graft_ristore_si_$tail"
@@ -831,12 +831,12 @@ object StarQueries {
   // §2.11 × ext — STREAMING INGEST into the persisted SIGNATURE
   // store: two clone waves arrive as a file-source stream in four
   // micro-batch triggers, each landing through the replay-safe
-  // canonical append (bands + sets, one gb<batchId> file per artifact
-  // per batch, adopted by the generation chains); the post-stream
+  // streaming append (bands + sets, one file per artifact per batch,
+  // one store-log commit carrying the run's `t` line); the post-stream
   // probe batch must see the base corpus AND both streamed waves —
   // the DuckDB oracle replays the direct MinHash chain over
-  // documents ∪ wave1 ∪ wave2, so the stream, the chains, and the
-  // canonical landing are all invisible in the probe's answer.
+  // documents ∪ wave1 ∪ wave2, so the stream, the store log, and the
+  // per-batch landing are all invisible in the probe's answer.
   def streamSigIngestQuery(spark: SparkSession, dir: String): DataFrame = {
     val tail = dir.split('/').filter(_.nonEmpty).last
     val store = s"/tmp/graft_sigstore_si_$tail"
@@ -874,11 +874,10 @@ object StarQueries {
   // §2.11 × ext — STREAMING INGEST into the persisted vector store:
   // every 5th-mod-2 candidate arrives as a file-source stream in four
   // genuine micro-batch triggers; each lands through the replay-safe
-  // canonical append (one gb<batchId> file per bucket, adopted by the
-  // codes artifact's generation chain), and the post-stream store
-  // query over the standard batch must equal the direct IVFADC chain
-  // over the FULL corpus — q_ivf_pq_topk's oracle verbatim: the
-  // stream, the chain, and the canonical landing all invisible.
+  // streaming append (one file per bucket, one store-log commit), and
+  // the post-stream store query over the standard batch must equal the
+  // direct IVFADC chain over the FULL corpus — q_ivf_pq_topk's oracle
+  // verbatim: the stream, the store log, and the landing all invisible.
   def streamAnnIngestQuery(spark: SparkSession, dir: String): DataFrame = {
     val tail = dir.split('/').filter(_.nonEmpty).last
     val path = s"/tmp/graft_vindex_si_$tail"

@@ -11,6 +11,29 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
+  /** The HASH INVERSE for `repartition(n, col)` over a long column:
+    * element b is the smallest id >= 0 that Spark's hash partitioning
+    * places in partition b (`pmod(murmur3(id, 42), n)` — the
+    * `HashPartitioning` expression, evaluated with Spark's own
+    * `Murmur3_x86_32` on the driver, no job). Feeding each group
+    * through its inverse as the repartition key makes partition ==
+    * group, so a partitioned write emits exactly one file per group.
+    * Searches the first n·64 ids, as the Spark-side probe did. */
+  def hashInverse(n: Int): Array[Long] = {
+    require(n >= 1, s"hash inverse needs n >= 1, got $n")
+    val inv = Array.fill(n)(-1L)
+    var found = 0
+    var id = 0L
+    while (found < n && id < n * 64L) {
+      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(id, 42)
+      val b = ((h % n) + n) % n
+      if (inv(b) < 0) { inv(b) = id; found += 1 }
+      id += 1
+    }
+    require(found == n, s"hash-inverse probe found $found of $n partitions")
+    inv
+  }
+
   /** Directory-partitioned parquet: scans with equality/range
     * predicates on `partitionCols` prune whole directories. */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
@@ -84,21 +107,12 @@ object Layout {
     val width = math.max(1L, (1L << (2 * bits)) / numFiles)
     // repartition(n, key) places a row at pmod(murmur3(key), n), so
     // raw buckets would COLLIDE into shared files (two disjoint
-    // z-ranges in one file = wide min/max = no pruning). The probe
-    // below inverts the hash once per bucket (data-independent,
-    // driver-side, <= numFiles rows — the bounded-collect pattern):
-    // feeding the bucket through its inverse makes partition ==
-    // bucket, so every file carries exactly one contiguous z-range.
-    val spark = df.sparkSession
-    val inv: Map[Long, Long] = spark.range(numFiles * 64L)
-      .select(col("id"),
-        pmod(hash(col("id")), lit(numFiles)).cast("long").as("b"))
-      .groupBy("b").agg(min("id").as("pid"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    require(inv.size == numFiles,
-      s"hash-inverse probe found ${inv.size} of $numFiles partitions")
-    val pidMap = map(inv.toSeq.sortBy(_._1)
-      .flatMap { case (b, p) => Seq(lit(b), lit(p)) }: _*)
+    // z-ranges in one file = wide min/max = no pruning). Feeding the
+    // bucket through its hash inverse ([[hashInverse]], driver-side)
+    // makes partition == bucket, so every file carries exactly one
+    // contiguous z-range.
+    val pidMap = map(hashInverse(numFiles).toSeq.zipWithIndex
+      .flatMap { case (p, b) => Seq(lit(b.toLong), lit(p)) }: _*)
     // the sort suffixes every payload column so equal-z rows can't
     // permute with the input layout either (row-group stats must not
     // depend on which partition a tie arrived from)
@@ -497,14 +511,9 @@ object Layout {
     // bucket index per group (contiguous 0..nG-1 even when group ids
     // skip — a file larger than targetBytes advances the id by >1)
     val gIdx = groups.zipWithIndex.toMap
-    // partition == bucket via the hash-inverse probe (writeZOrdered)
-    val inv: Map[Long, Long] = spark.range(nG * 64L)
-      .select(col("id"), pmod(hash(col("id")), lit(nG)).cast("long").as("b"))
-      .groupBy("b").agg(min("id").as("pid"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    require(inv.size == nG,
-      s"hash-inverse probe found ${inv.size} of $nG partitions")
-    val fileToPid = assign.map { case (f, g) => f -> inv(gIdx(g).toLong) }
+    // partition == bucket via the hash inverse (writeZOrdered)
+    val inv = hashInverse(nG)
+    val fileToPid = assign.map { case (f, g) => f -> inv(gIdx(g)) }
     val pidMap = map(fileToPid.toSeq
       .flatMap { case (f, p) => Seq(lit(f), lit(p)) }: _*)
     val fileToGroup = map(assign.toSeq

@@ -2,8 +2,8 @@ package graft.sources
 
 /** Storage seam for the MANIFEST layer — the small-control-file IO
   * under every generation chain ([[graft.streaming.StreamingOps]]'s
-  * merge-sink table, [[graft.ext.StoreGenerations]]'s per-artifact
-  * chains, [[graft.ext.StoreSnapshots]]'s store-level snapshots).
+  * merge-sink table, [[graft.ext.StoreSnapshots]]'s one log per
+  * store).
   *
   * Why a seam: a manifest publish needs exactly three primitives —
   * list a directory of generation files, read one, and CREATE ONE
@@ -27,10 +27,10 @@ package graft.sources
 /** A conditional-create publish found the target generation already
   * written by ANOTHER writer — the typed signal of a lost commit
   * race. Under the merge sink's single-writer contract this is a
-  * loud failure; the store commits' optimistic-concurrency loops
-  * ([[graft.ext.StoreGenerations.commitOwn]],
-  * [[graft.ext.StoreSnapshots.commitOwnStore]]) catch exactly this
-  * type and re-base on the winner's generation instead. */
+  * loud failure; the store log's optimistic-concurrency commit
+  * ([[graft.ext.StoreSnapshots.commit]], under every append and
+  * compaction) catches exactly this type and re-bases on the winner's
+  * generation instead. */
 final class LostPublishRace(msg: String)
   extends IllegalStateException(msg)
 

@@ -97,21 +97,16 @@ object Merge {
       .select("file_name").collect().map(_.getString(0)).sorted
     val carrySet = (byBase.keySet -- touched).toSeq.sorted
     // rewrite units: 0 = the batch ('__new__'), i >= 1 = touched file
-    // i−1. One output file per unit via the hash-inverse probe
-    // (partition == unit — the compactGroups/writeZOrdered trick).
+    // i−1. One output file per unit via the hash inverse
+    // (partition == unit — [[Layout.hashInverse]]).
     val units = "__new__" +: touched
     val nU = units.length
-    val inv: Map[Long, Long] = spark.range(nU * 64L)
-      .select(col("id"), pmod(hash(col("id")), lit(nU)).cast("long").as("b"))
-      .groupBy("b").agg(min("id").as("pid"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    require(inv.size == nU,
-      s"hash-inverse probe found ${inv.size} of $nU partitions")
+    val inv = Layout.hashInverse(nU)
     val unitOf = units.zipWithIndex.map { case (u, i) => u -> i.toLong }.toMap
     val unitMap = map(unitOf.toSeq
       .flatMap { case (u, i) => Seq(lit(u), lit(i)) }: _*)
     val pidMap = map(unitOf.toSeq
-      .flatMap { case (u, i) => Seq(lit(i), lit(inv(i))) }: _*)
+      .flatMap { case (u, i) => Seq(lit(i), lit(inv(i.toInt))) }: _*)
     val survivors = updates.filter(!col(deleteCol)).drop(deleteCol)
       .withColumn("unit", lit(0L))
     val carried =

@@ -630,18 +630,17 @@ object StreamingOps {
           s"lost publish race on $root gen=$gen: the generation " +
             "stored is not this writer's — a second writer is publishing " +
             "to the same manifest root (single-writer contract; " +
-            "store appends commit through StoreGenerations.commitOwn)")
+            "concurrent store writers commit through the store log)")
     }
   }
 
 
-  /** Deterministic run tag for a streaming ingest's canonical file
-    * names ([[graft.ext.StoreGenerations.canonicalName]]): a hash of
-    * the canonical checkpoint path. Same checkpoint → same tag, so a
-    * replay overwrites its own files; a DIFFERENT checkpoint (a second
-    * stream whose batch ids restart at 0) lands under names of its own
-    * and accumulates instead of silently overwriting the first run's
-    * committed bytes. */
+  /** Deterministic run tag of a streaming ingest — the key of its `t`
+    * line in the store log ([[graft.ext.StoreSnapshots.commitLanded]]):
+    * a hash of the normalized checkpoint path. Same checkpoint → same
+    * tag, so a replayed batch id is recognised and commits nothing; a
+    * DIFFERENT checkpoint (a second stream whose batch ids restart at
+    * 0) has a line of its own and accumulates. */
   private[graft] def checkpointRunTag(checkpoint: String): String =
     f"${scala.util.hashing.MurmurHash3.stringHash(
       java.nio.file.Paths.get(checkpoint)
@@ -651,15 +650,14 @@ object StreamingOps {
     * sibling of the stream-probe face: each micro-batch encodes under
     * the store's frozen geometry and lands through the store's one
     * [[graft.ext.VectorIndexStore.append]] with `batch = Some((batchId,
-    * runTag))` (one canonical `[r<tag>-]gb<batchId>` file per
-    * populated bucket, published by one snapshot commit that names
-    * exactly those files). Exactly-once store state from idempotence,
-    * the merge-sink argument: a replayed batch overwrites its own
-    * canonical files and its commit finds them already published, so
-    * the store never moves twice for one batch — MID-BATCH CRASHES
-    * INCLUDED (leftovers are overwritten by the replay, never adopted
-    * by another commit; the vacuum sweeps orphans). Readers keep
-    * resolving their pinned snapshot throughout. */
+    * runTag))` (one file per populated bucket, published by one
+    * commit of the store log that names exactly those files and the
+    * run's `t` line). Exactly-once store state: a replayed batch finds
+    * its id in the run's `t` line and commits nothing, so the store
+    * never moves twice for one batch — MID-BATCH CRASHES INCLUDED, and
+    * after any compaction or vacuum (a crashed attempt's files are
+    * never named by a commit; the vacuum sweeps them). Readers keep
+    * resolving their pinned entry throughout. */
   def runVectorIngestSink(updates: DataFrame, path: String,
                           idCol: String, vecCol: String,
                           checkpoint: String)
@@ -679,8 +677,8 @@ object StreamingOps {
   /** Streaming INGEST into the persisted signature store — the FOLD
     * side of the incremental near-dup loop as a stream: each
     * micro-batch's bands/sets derive under the store's config and
-    * land canonically ([[graft.ext.SignatureStore.append]] with
-    * `batch = Some((batchId, runTag))`),
+    * land through [[graft.ext.SignatureStore.append]] with
+    * `batch = Some((batchId, runTag))`,
     * so tomorrow's probes see today's stream exactly once, across
     * crashes and replays. A production loop that also wants per-batch
     * CANDIDATES runs `SignatureStore.ingest` first inside its own
@@ -705,9 +703,9 @@ object StreamingOps {
   /** Streaming INGEST into the persisted BM25 index — the lexical
     * member of the streaming-ingest family ([[runVectorIngestSink]],
     * [[runSigIngestSink]]): each micro-batch's postings/df/stats (and
-    * positions on a positional store) land canonically under the
-    * store's bucket fn through [[graft.ext.RetrievalIndexStore.append]]
-    * with `batch = Some((batchId, runTag))`, one snapshot commit
+    * positions on a positional store) land under the store's bucket
+    * fn through [[graft.ext.RetrievalIndexStore.append]] with
+    * `batch = Some((batchId, runTag))`, one commit of the store log
     * naming exactly those files — exactly-once serving state across
     * crashes and replays, readers pinned throughout. */
   def runRetrievalIngestSink(updates: DataFrame, path: String,
@@ -731,10 +729,10 @@ object StreamingOps {
     * micro-batch (seen-url probe → within-batch url keeper →
     * seen-hash probe → exact keeper → near-dup vs the store with
     * index-match propagation → benchmark decon → frozen-model quality
-    * routing → pack/shard/card), with the fold landing CANONICALLY
-    * (`[r<tag>-]gb<batchId>` files published by one snapshot commit)
-    * so batch N+1 probes batch N's fold and a replayed batch commits
-    * nothing — the daily release loop, exactly-once, as a stream.
+    * routing → pack/shard/card), with the fold published by one
+    * commit of the store log carrying the run's `t` line, so batch N+1
+    * probes batch N's fold and a replayed batch commits nothing — the
+    * daily release loop, exactly-once, as a stream.
     * [[runSigIngestSink]] is the fold alone; this is the loop.
     *
     * `benchmark` is the
@@ -758,7 +756,7 @@ object StreamingOps {
           batch.sparkSession, path, batch.toDF(), benchmark,
           packTokens = packTokens, shardTokens = shardTokens,
           maxBucketSize = maxBucketSize,
-          canonicalBatch = Some((batchId, tag)))
+          streamBatch = Some((batchId, tag)))
         onBatch(bundle, batchId)
       }
       .start()

@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Test-only: the Spark jobs a block fires, by short call site
-  * ("parquet at StoreGenerations.scala:123", the result stage's name). Jobs queued before the
+  * ("parquet at StoreSnapshots.scala:123", the result stage's name). Jobs queued before the
   * block are drained first, so they are not counted. */
 object SparkJobs {
   def fired[T](spark: SparkSession)(f: => T): (T, Seq[String]) = {

@@ -10,15 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The multi-writer append protocol ([[StoreGenerations.land]] +
-  * [[StoreGenerations.commitOwn]] — land, CAS-commit the exact file
+/** The multi-writer protocol of the store log ([[StoreGenerations.land]]
+  * + [[StoreSnapshots.commitLanded]] — land, CAS-commit the exact file
   * set, re-base on a lost race): N genuinely racing writers must each
-  * get their WHOLE batch onto the chain exactly once, every surviving
+  * get their WHOLE batch into the log exactly once, every surviving
   * generation must differ from its parent by exactly one writer's
   * batch (no torn batches, ever), pinned readers must be untouched,
-  * an append must never publish a file it did not land, and the
-  * stores' one `append` must be invisible in the answer under
-  * concurrency (== the direct chains over the same logical corpus). */
+  * an append must never publish a file it did not land, a compaction
+  * racing an append must keep the append, a streaming replay must
+  * publish nothing even after compaction and vacuum, and the stores'
+  * one `append` must be invisible in the answer under concurrency
+  * (== the direct chains over the same logical corpus). */
 class ConcurrentAppendSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
@@ -35,24 +37,31 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     }
   }
 
-  private def freshChain(path: String, baseRows: Seq[Long]): Unit = {
+  /** A bare one-artifact store at `path`: `ids.parquet` holding
+    * `baseRows`, its log at entry 0. Returns the artifact directory. */
+  private def freshChain(path: String, baseRows: Seq[Long]): String = {
     import spark.implicits._
     deleteTree(path)
-    baseRows.toDF("id").coalesce(1).write.parquet(path)
-    StoreGenerations.enable(path)
+    val ids = s"$path/ids.parquet"
+    baseRows.toDF("id").coalesce(1).write.parquet(ids)
+    StoreSnapshots.publish(path, 0L, StoreSnapshots.inventory(path, Seq(ids), Nil))
+    ids
   }
 
   private def canon(p: String): String =
     java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
 
-  private def chainIds(path: String): Set[Long] =
-    StoreGenerations.read(spark, path)
+  private def chainIds(ids: String): Set[Long] =
+    StoreGenerations.read(spark, ids)
       .collect().map(_.getLong(0)).toSet
+
+  private def commit(path: String, ids: String, files: Seq[String]): Long =
+    StoreSnapshots.commitLanded(path, Map(ids -> files), None)
 
   test("racing writers each commit their whole batch exactly once, " +
     "and every generation adds exactly one writer's batch") {
     val path = "/tmp/graft_concspec_race"
-    freshChain(path, Seq(0L))
+    val ids0 = freshChain(path, Seq(0L))
     import spark.implicits._
     val writers = 6
     val barrier = new java.util.concurrent.CyclicBarrier(writers)
@@ -60,114 +69,108 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     val futures = (1 to writers).map { w =>
       Future {
         // two rows per writer, landed as two files (two lands, one
-        // commit — commitOwn takes the combined set)
+        // commit of the combined set)
         val files =
           StoreGenerations.land(Seq(w * 100L).toDF("id").coalesce(1),
-            path, None, None) ++
+            ids0, None) ++
           StoreGenerations.land(Seq(w * 100L + 1L).toDF("id").coalesce(1),
-            path, None, None)
+            ids0, None)
         landed.put(s"t$w", files)
         barrier.await() // maximize genuine commit contention
-        StoreGenerations.commitOwn(path, files)
+        commit(path, ids0, files)
       }
     }
     Await.result(Future.sequence(futures), 5.minutes)
     // every writer's rows present exactly once
-    val ids = StoreGenerations.read(spark, path)
+    val ids = StoreGenerations.read(spark, ids0)
       .groupBy(col("id")).count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (Seq(0L) ++
       (1 to writers).flatMap(w => Seq(w * 100L, w * 100L + 1L))).toSet
     assert(ids.keySet == expected)
     assert(ids.values.forall(_ == 1L), s"duplicated rows: $ids")
-    // chain shape: base gen + one generation per writer, each adding
+    // log shape: base gen + one generation per writer, each adding
     // exactly that writer's whole landed batch — atomic visibility
-    val cur = StoreGenerations.currentGen(path).get
+    val cur = StoreSnapshots.currentGen(path).get
     assert(cur == writers.toLong)
     import scala.jdk.CollectionConverters._
     val owner: Map[String, String] = landed.asScala.toSeq.flatMap {
       case (w, fs) => fs.map(f => canon(f) -> w)
     }.toMap
+    def filesAt(g: Long) = StoreSnapshots.pinAt(spark, path, g).files(ids0).toSet
     (1L to cur).foreach { g =>
-      val prev = StoreGenerations.filesAt(path, g - 1).get.toSet
-      val now = StoreGenerations.filesAt(path, g).get.toSet
+      val prev = filesAt(g - 1)
+      val now = filesAt(g)
       assert(prev.subsetOf(now), s"gen $g dropped files")
       val added = (now -- prev).toSeq
       val tags = added.map(p => owner.getOrElse(canon(p),
         fail(s"gen $g adopted a file no writer landed: $p"))).distinct
       assert(tags.length == 1,
         s"gen $g mixes writers' files: $added")
-      assert(added.toSet == landed.get(tags.head).toSet,
+      assert(added.map(canon).toSet == landed.get(tags.head).map(canon).toSet,
         s"gen $g carries a PARTIAL batch for ${tags.head}")
     }
   }
 
   test("a reader pinned before the race resolves its exact state") {
     val path = "/tmp/graft_concspec_pin"
-    freshChain(path, Seq(1L, 2L))
+    val ids = freshChain(path, Seq(1L, 2L))
     import spark.implicits._
-    val before = chainIds(path)
-    val pinnedGen = StoreGenerations.currentGen(path).get
+    val before = chainIds(ids)
+    val pinnedGen = StoreSnapshots.currentGen(path).get
     val futures = (1 to 3).map { w =>
       Future {
-        StoreGenerations.commitOwn(path, StoreGenerations.land(
-          Seq(w + 10L).toDF("id"), path, None, None))
+        commit(path, ids, StoreGenerations.land(Seq(w + 10L).toDF("id"), ids, None))
       }
     }
     Await.result(Future.sequence(futures), 5.minutes)
-    val pinned = StoreGenerations.readAt(spark, path, pinnedGen)
+    val pinned = StoreSnapshots.pinAt(spark, path, pinnedGen).read(ids)
       .collect().map(_.getLong(0)).toSet
     assert(pinned == before)
-    assert(chainIds(path) == before ++ Set(11L, 12L, 13L))
+    assert(chainIds(ids) == before ++ Set(11L, 12L, 13L))
   }
 
   test("re-base without a race: a commit on a stale base adopts the " +
     "interleaved writer's generation as its parent") {
     val path = "/tmp/graft_concspec_rebase"
-    freshChain(path, Seq(0L))
+    val ids = freshChain(path, Seq(0L))
     import spark.implicits._
-    val filesA = StoreGenerations.land(
-      Seq(100L).toDF("id"), path, None, None)
+    val filesA = StoreGenerations.land(Seq(100L).toDF("id"), ids, None)
     // writer B lands AND commits while A sits between land and commit
-    StoreGenerations.commitOwn(path, StoreGenerations.land(
-      Seq(200L).toDF("id"), path, None, None))
-    val genA = StoreGenerations.commitOwn(path, filesA)
+    commit(path, ids, StoreGenerations.land(Seq(200L).toDF("id"), ids, None))
+    val genA = commit(path, ids, filesA)
     assert(genA == 2L)
-    assert(chainIds(path) == Set(0L, 100L, 200L))
+    assert(chainIds(ids) == Set(0L, 100L, 200L))
   }
 
   test("replaying a commit of already-chained files is a no-op") {
     val path = "/tmp/graft_concspec_replay"
-    freshChain(path, Seq(0L))
+    val ids = freshChain(path, Seq(0L))
     import spark.implicits._
-    val files = StoreGenerations.land(
-      Seq(7L).toDF("id"), path, None, None)
-    val gen = StoreGenerations.commitOwn(path, files)
-    assert(StoreGenerations.commitOwn(path, files) == gen)
-    assert(StoreGenerations.currentGen(path).get == gen)
-    assert(chainIds(path) == Set(0L, 7L))
+    val files = StoreGenerations.land(Seq(7L).toDF("id"), ids, None)
+    val gen = commit(path, ids, files)
+    assert(commit(path, ids, files) == gen)
+    assert(StoreSnapshots.currentGen(path).get == gen)
+    assert(chainIds(ids) == Set(0L, 7L))
   }
 
   test("a foreign partial adoption of a writer's batch fails loudly") {
     val path = "/tmp/graft_concspec_torn"
-    freshChain(path, Seq(0L))
+    val ids = freshChain(path, Seq(0L))
     import spark.implicits._
     val files =
-      StoreGenerations.land(Seq(1L).toDF("id").coalesce(1),
-        path, None, None) ++
-      StoreGenerations.land(Seq(2L).toDF("id").coalesce(1),
-        path, None, None)
+      StoreGenerations.land(Seq(1L).toDF("id").coalesce(1), ids, None) ++
+      StoreGenerations.land(Seq(2L).toDF("id").coalesce(1), ids, None)
     assert(files.length == 2)
     // a foreign commit adopts ONE of the writer's two files
-    StoreGenerations.publish(path, 1L,
-      StoreGenerations.currentFiles(path).get :+ files.head)
+    commit(path, ids, files.take(1))
     val e = intercept[IllegalArgumentException] {
-      StoreGenerations.commitOwn(path, files)
+      commit(path, ids, files)
     }
-    assert(e.getMessage.contains("PARTIALLY referenced"))
+    assert(e.getMessage.contains("PARTIALLY"))
   }
 
-  // ---- multi-artifact stores: the file-level snapshot commit ----
+  // ---- multi-artifact stores: one commit spans every artifact ----
 
   private def docs: DataFrame =
     graft.sources.Tables.documents(spark, dir).select("doc_id", "text")
@@ -212,8 +215,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
       .select((col("doc_id") + 900000L).as("doc_id"), col("text"))
     val otherPost = postRows(other).localCheckpoint()
     val otherFiles =
-      StoreGenerations.land(otherPost, postings, Some("tok_bucket"), None) ++
-        StoreGenerations.land(statsRow(otherPost), stats, None, None)
+      StoreGenerations.land(otherPost, postings, Some("tok_bucket")) ++
+        StoreGenerations.land(statsRow(otherPost), stats, None)
     assert(otherFiles.nonEmpty)
     assert(graft.sources.Layout.listParquet(postings)
       .exists(_.contains("tok_bucket=")), "strays must sit in bucket dirs")
@@ -290,7 +293,7 @@ class ConcurrentAppendSpec extends AnyFunSuite {
       Dedup.nativeBands(batch, "doc_id", "text", shingleN, numHashes)
         .select(col("doc_id").cast("long").as("doc_id"),
           col("band"), col("bkey")),
-      s"$path/bands.parquet", None, None)
+      s"$path/bands.parquet", None)
     // …a reader pinning NOW sees the pre-batch store exactly
     val mid = StoreSnapshots.pin(spark, path)
     assert(mid.read(s"$path/bands.parquet")
@@ -302,9 +305,9 @@ class ConcurrentAppendSpec extends AnyFunSuite {
         .groupBy(col("doc_id"))
         .agg(collect_list(col("shingle")).as("shingles"))
         .select(col("doc_id").cast("long").as("doc_id"), col("shingles")),
-      s"$path/sets.parquet", None, None)
-    StoreSnapshots.commitOwnStore("sig", path, Map(
-      s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets))
+      s"$path/sets.parquet", None)
+    StoreSnapshots.commitLanded(path, Map(
+      s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets), None)
     val cur = StoreSnapshots.currentGen(path).get
     val after = snapDocIds(path, "bands.parquet", cur)
     assert(after == before ++ batch.collect().map(_.getLong(0)))
@@ -313,62 +316,6 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     assert(mid.read(s"$path/bands.parquet")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
       == before)
-  }
-
-  test("fold adopts pending file-level commits into the chains and " +
-    "compaction answers unchanged") {
-    val path = "/tmp/graft_concspec_sigfold"
-    deleteTree(path)
-    SignatureStore.build(docs.filter(col("doc_id") < 200),
-      "doc_id", "text", path)
-    StoreSnapshots.enable("sig", path)
-    val batch = docs.filter(col("doc_id") >= 200 && col("doc_id") < 260)
-      .select((col("doc_id") + 600000L).as("doc_id"), col("text"))
-    // a writer that published its snapshot and died before adopting
-    // the files into the chains: the d-lines are all that names them
-    StoreSnapshots.commitOwnStore("sig", path,
-      SignatureStore.land(batch, "doc_id", "text", path,
-        SignatureStore.params(spark, path), None))
-    val probe = docs.filter(col("doc_id") >= 260 && col("doc_id") < 290)
-      .select((col("doc_id") + 800000L).as("doc_id"), col("text"))
-    def answers(): Set[(Long, Long)] =
-      SignatureStore.ingest(spark, path, probe, "doc_id", "text")
-        .select("new_id", "index_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val beforeFold = answers()
-    // the current snapshot carries d-lines; compaction folds them
-    // into the chains first, then compacts — answers unchanged and
-    // the post-compaction snapshot carries no d-lines
-    StoreMaintenance.compactSignatureStore(spark, path)
-    StoreSnapshots.commit("sig", path)
-    assert(answers() == beforeFold)
-    val io = graft.sources.ManifestIO.forPath(path)
-    val cur = StoreSnapshots.currentGen(path).get
-    val content = io.read(s"$path/_store_manifests/gen=$cur").get
-    assert(!content.contains("d\t"),
-      s"post-fold snapshot still carries file-level entries:\n$content")
-  }
-
-  test("snapshot vacuum spares unfolded file-level commits") {
-    val path = "/tmp/graft_concspec_sigvac"
-    deleteTree(path)
-    SignatureStore.build(docs.filter(col("doc_id") < 150),
-      "doc_id", "text", path)
-    StoreSnapshots.enable("sig", path)
-    val batch = docs.filter(col("doc_id") >= 150 && col("doc_id") < 200)
-      .select((col("doc_id") + 600000L).as("doc_id"), col("text"))
-    // published, never adopted (a writer that died between its
-    // snapshot and its chain commits) — see the fold test
-    StoreSnapshots.commitOwnStore("sig", path,
-      SignatureStore.land(batch, "doc_id", "text", path,
-        SignatureStore.params(spark, path), None))
-    // keep only the newest snapshot: its d-files must survive the
-    // artifact vacuums even though NO chain references them
-    StoreSnapshots.vacuum("sig", path, keepGens = 1)
-    val cur = StoreSnapshots.currentGen(path).get
-    val ids = snapDocIds(path, "bands.parquet", cur)
-    assert(batch.collect().map(_.getLong(0)).toSet.subsetOf(ids))
-    assert(snapDocIds(path, "sets.parquet", cur) == ids)
   }
 
   test("racing BM25 writers never let postings outrun df/stats: at " +
@@ -404,6 +351,113 @@ class ConcurrentAppendSpec extends AnyFunSuite {
       .select("doc_id").distinct().count() == corpus.count())
   }
 
+  private def bm25Queries: DataFrame =
+    docs.filter(col("doc_id") < 10)
+      .select(col("doc_id").as("query_id"),
+        array(lit("dup"), lit("vector"), lit("line")).as("terms"))
+
+  test("a compaction racing an append keeps the append: no row lost, " +
+    "the batch published once, BM25 df/stats sums exact") {
+    val path = "/tmp/graft_concspec_cptrace"
+    deleteTree(path)
+    val corpus = docs.filter(col("doc_id") >= 20 && col("doc_id") < 300)
+    val base = corpus.filter(col("doc_id") % 3 =!= 0)
+    val batch = corpus.filter(col("doc_id") % 3 === 0)
+    RetrievalIndexStore.build(base.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", path, tokBuckets = 16)
+    RetrievalIndexStore.append(base.filter(col("doc_id") % 2 === 1),
+      "doc_id", "text", path)
+    // the compaction reads one pinned entry and lands its output…
+    val pin = StoreSnapshots.pin(spark, path)
+    val done = StoreMaintenance.artifactsOf("retrieval", path)
+      .map(StoreMaintenance.rewrite(spark, pin, _, 128L << 20))
+    // …an append commits between its read and its publish…
+    val appended = RetrievalIndexStore.append(batch, "doc_id", "text", path)
+    // …and the compaction's commit re-bases onto it
+    assert(StoreMaintenance.commitRewrites(path, done) == appended + 1)
+    val now = StoreSnapshots.pin(spark, path)
+    val post = Retrieval.postings(corpus, "doc_id", "text")
+    assert(now.read(s"$path/stats.parquet").agg(sum("n_docs"))
+      .head().getLong(0) == corpus.count())
+    assert(now.read(s"$path/postings.parquet").count() == post.count())
+    assert(bm25Rows(now.read(s"$path/df.parquet").groupBy("tok")
+      .agg(sum("df").as("df"))) ==
+      bm25Rows(post.groupBy("tok").agg(count(lit(1)).as("df"))))
+    assert(bm25Rows(RetrievalIndexStore.query(spark, path, bm25Queries,
+      "query_id", "terms", k = 5)) == bm25Rows(Retrieval.bm25TopK(
+      bm25Queries, "query_id", "terms", corpus, "doc_id", "text", 5)))
+  }
+
+  test("two racing compactions: the loser fails loudly leaving only " +
+    "unreferenced files, and a plain retry converges") {
+    val path = "/tmp/graft_concspec_cptcpt"
+    deleteTree(path)
+    SignatureStore.build(docs.filter(col("doc_id") < 200),
+      "doc_id", "text", path)
+    SignatureStore.append(docs.filter(col("doc_id") >= 200 &&
+      col("doc_id") < 260).select((col("doc_id") + 600000L).as("doc_id"),
+      col("text")), "doc_id", "text", path)
+    val probe = docs.filter(col("doc_id") >= 260 && col("doc_id") < 290)
+      .select((col("doc_id") + 800000L).as("doc_id"), col("text"))
+    def answers(): Set[Seq[Any]] = bm25Rows(
+      SignatureStore.ingest(spark, path, probe, "doc_id", "text"))
+    val before = answers()
+    val specs = StoreMaintenance.artifactsOf("sig", path)
+    val pin = StoreSnapshots.pin(spark, path)
+    val a = specs.map(StoreMaintenance.rewrite(spark, pin, _, 128L << 20))
+    val b = specs.map(StoreMaintenance.rewrite(spark, pin, _, 128L << 20))
+    val won = StoreMaintenance.commitRewrites(path, a)
+    val e = intercept[IllegalStateException] {
+      StoreMaintenance.commitRewrites(path, b)
+    }
+    assert(e.getMessage.contains("concurrent compaction"))
+    assert(StoreSnapshots.currentGen(path).contains(won))
+    // the loser's output is on disk and no entry names it
+    val loser = b.flatMap(_._3).map(canon)
+    val named = (0L to won).flatMap(g => specs.flatMap(s =>
+      StoreSnapshots.pinAt(spark, path, g).files(s.dir))).map(canon).toSet
+    assert(loser.nonEmpty && loser.forall(f =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(f))))
+    assert(loser.forall(f => !named.contains(f)))
+    assert(answers() == before)
+    // a plain retry converges, and the vacuum sweeps the loser's files
+    StoreMaintenance.compactSignatureStore(spark, path)
+    assert(answers() == before)
+    specs.foreach(s =>
+      assert(StoreGenerations.currentFiles(s.dir).get.length == 1, s.dir))
+    StoreMaintenance.vacuumStore("sig", path, 1)
+    assert(loser.forall(f =>
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(f))))
+  }
+
+  test("a streaming replay after compaction and a keep-1 vacuum " +
+    "publishes nothing: row counts unchanged") {
+    val path = "/tmp/graft_concspec_replaycpt"
+    deleteTree(path)
+    val corpus = docs.filter(col("doc_id") >= 20 && col("doc_id") < 300)
+    val wave = corpus.filter(col("doc_id") % 2 === 1)
+    RetrievalIndexStore.build(corpus.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", path, tokBuckets = 16)
+    def counts(): (Long, Long) = {
+      val p = StoreSnapshots.pin(spark, path)
+      (p.read(s"$path/stats.parquet").agg(sum("n_docs")).head().getLong(0),
+        p.read(s"$path/postings.parquet").count())
+    }
+    RetrievalIndexStore.append(wave, "doc_id", "text", path,
+      batch = Some((0L, "rt")))
+    val after = counts()
+    assert(after._1 == corpus.count())
+    StoreMaintenance.compactRetrievalIndexStore(spark, path)
+    StoreMaintenance.vacuumStore("retrieval", path, 1)
+    val gen = StoreSnapshots.currentGen(path).get
+    // the same micro-batch again: a crash after the store commit and
+    // before the stream's own commit log replays it
+    RetrievalIndexStore.append(wave, "doc_id", "text", path,
+      batch = Some((0L, "rt")))
+    assert(counts() == after)
+    assert(StoreSnapshots.currentGen(path).contains(gen))
+  }
+
   test("a streaming canonical append and a concurrent file-level " +
     "writer coexist: both batches land, every snapshot consistent, " +
     "replay still commits nothing") {
@@ -431,9 +485,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
     }
     Await.result(Future.sequence(Seq(fCanon, fOwn)), 10.minutes)
     val cur = StoreSnapshots.currentGen(path).get
-    // every surviving snapshot is cross-artifact consistent, however
-    // the chain commits, the snapshot commit, and the file-level CAS
-    // interleaved
+    // every surviving generation is cross-artifact consistent,
+    // however the two commits interleaved
     (0L to cur).foreach { g =>
       assert(snapDocIds(path, "bands.parquet", g)
         == snapDocIds(path, "sets.parquet", g), s"snapshot $g torn")
@@ -443,8 +496,8 @@ class ConcurrentAppendSpec extends AnyFunSuite {
       canonical.collect().map(_.getLong(0)) ++
       own.collect().map(_.getLong(0))
     assert(snapDocIds(path, "bands.parquet", cur) == want)
-    // a replayed micro-batch overwrites its own canonical files and
-    // commits nothing — no new snapshot, state unchanged
+    // a replayed micro-batch finds its run's `t` line and commits
+    // nothing — no new generation, state unchanged
     SignatureStore.append(canonical, "doc_id", "text", path,
       batch = Some((0L, "ip")))
     assert(StoreSnapshots.currentGen(path).get == cur)
@@ -497,14 +550,10 @@ class ConcurrentAppendSpec extends AnyFunSuite {
       numSub = numSub, subDim = subDim))
     assert(stored == direct)
     assert(stored.nonEmpty)
-    // the snapshot chain caught up to a consistent current state:
-    // the pin resolves exactly the codes chain's current file set
-    // (its pinned generation's files plus its d files)
-    val pin = StoreSnapshots.pin(spark, path)
+    // the log caught up to a consistent current state: the pin
+    // resolves exactly the codes artifact's current file set
     val codesDir = s"$path/codes.parquet"
-    val key = canon(codesDir)
-    val pinned = (StoreGenerations.filesAt(codesDir, pin.pinnedGens(key)).get ++
-      pin.pinnedDFiles.getOrElse(key, Seq.empty)).map(canon)
+    val pinned = StoreSnapshots.pin(spark, path).files(codesDir).map(canon)
     val current = StoreGenerations.currentFiles(codesDir).get.map(canon)
     assert(pinned.sorted == current.sorted)
   }

@@ -171,7 +171,7 @@ class IncrReleaseSpec extends AnyFunSuite {
     // the chained artifacts stayed at fresh-build file counts with
     // zero external ticks, and the chain is live (generations moved)
     val urls = s"$gen/urls.parquet"
-    assert(StoreGenerations.currentGen(urls).get > 0L)
+    assert(StoreSnapshots.currentGen(gen).get > 0L)
     assert(StoreGenerations.currentFiles(urls).get.length <= 2)
   }
 
@@ -230,7 +230,7 @@ class IncrReleaseSpec extends AnyFunSuite {
     // store state after batch 0 — the replay below must not move it
     def chainState: Map[String, (Long, Int)] =
       StoreMaintenance.artifactsOf("release", streamed).map(_.dir)
-        .map(d => d -> ((StoreGenerations.currentGen(d).get,
+        .map(d => d -> ((StoreSnapshots.currentGen(streamed).get,
           StoreGenerations.currentFiles(d).get.length))).toMap
     val afterA = chainState
     // restart on the same checkpoint: the recovered source REPLAYS

@@ -25,6 +25,15 @@ class StoreCompactionSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
+  /** A retrieval compaction that committed its postings rewrite only —
+    * the state a run killed after its first artifact would leave. */
+  private def compactPostingsOnly(store: String): Unit = {
+    val postings = StoreMaintenance.artifactsOf("retrieval", store)
+      .filter(_.dir.endsWith("postings.parquet"))
+    StoreMaintenance.commitRewrites(store, postings.map(StoreMaintenance
+      .rewrite(spark, StoreSnapshots.pin(spark, store), _, 128L << 20)))
+  }
+
   test("signature store: answers bit-identical across compaction, files shrink") {
     val store = "/tmp/graft_cptspec_sig"
     val d = docs
@@ -233,8 +242,7 @@ class StoreCompactionSpec extends AnyFunSuite {
       "query_id", "terms", k = 5))
     assert(expected.nonEmpty)
     // "crash" after artifact 1 of the sequence: only postings compacted
-    StoreMaintenance.compactArtifact(spark, s"$store/postings.parquet",
-      Some("tok_bucket"))
+    compactPostingsOnly(store)
     // the mixed-compaction store is fully serviceable (each artifact
     // is independently consistent — compaction is physical per dir)
     assert(rows(RetrievalIndexStore.query(spark, store, probes,
@@ -279,11 +287,10 @@ class StoreCompactionSpec extends AnyFunSuite {
       phrases, "query_id", "t1", "t2", k = 5))
     assert(expQ.nonEmpty && expP.nonEmpty)
     // kill #1: the sequence completed its FIRST artifact only
-    StoreMaintenance.compactArtifact(spark, s"$store/postings.parquet",
-      Some("tok_bucket"))
+    compactPostingsOnly(store)
     // kill #2: the NEXT run died inside the df artifact's compaction
     // BEFORE verification — an unverified scratch directory is on
-    // disk (the dead attempt the next compaction overwrites)
+    // disk beside the artifact (the dead attempt the vacuum sweeps)
     val deadScratch = s"$store/df.parquet.__compact"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(deadScratch))
@@ -295,8 +302,8 @@ class StoreCompactionSpec extends AnyFunSuite {
     // a reader lists)
     assert(rows(RetrievalIndexStore.query(spark, store, probes,
       "query_id", "terms", k = 5)) == expQ)
-    // ONE re-run heals everything: the dead scratch is overwritten,
-    // the compacted artifact folds to itself, the rest compact fresh
+    // ONE re-run heals everything: the compacted artifact folds to
+    // itself, the rest compact fresh
     StoreMaintenance.compactRetrievalIndexStore(spark, store)
     assert(rows(RetrievalIndexStore.query(spark, store, probes,
       "query_id", "terms", k = 5)) == expQ)

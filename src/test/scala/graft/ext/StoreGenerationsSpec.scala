@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The generation chain must make store compaction ONLINE: a reader
+/** The store log must make store compaction ONLINE: a reader
   * holding a pre-compaction DataFrame completes correctly DURING a
   * compact-and-vacuum cycle, pinned reads fail loudly only beyond
   * the keep window, appends publish generations, crashed-compaction
@@ -16,7 +16,7 @@ import graft.TestSpark
   *
   * The behavior runs TWICE: once on the default POSIX manifest
   * transport and once with every store root registered against
-  * [[graft.sources.ObjectStoreManifestIO]] — the chain protocol must
+  * [[graft.sources.ObjectStoreManifestIO]] — the log protocol must
   * need nothing beyond list/read/conditional-create (the object-store
   * primitive set), so the whole suite passing under both transports
   * is the portability proof. */
@@ -65,7 +65,7 @@ abstract class StoreGenerationsBehavior(tag: String, objectStore: Boolean)
     SignatureStore.append(d.filter(col("doc_id") % 3 === 2),
       "doc_id", "text", store)
     val bands = s"$store/bands.parquet"
-    val genBefore = StoreGenerations.currentGen(bands).get
+    val genBefore = StoreSnapshots.currentGen(store).get
     // the reader: a probe planned over the PRE-compaction generation
     // (its file index resolves now; rows are read at collect time)
     val pinnedIngest = SignatureStore.ingest(spark, store, batch,
@@ -84,13 +84,13 @@ abstract class StoreGenerationsBehavior(tag: String, objectStore: Boolean)
     assert(rows(SignatureStore.ingest(spark, store, batch,
       "doc_id", "text")) == expected)
     // pinned read INSIDE the window resolves the named state
-    assert(StoreGenerations.readAt(spark, bands, genBefore)
+    assert(StoreSnapshots.pinAt(spark, store, genBefore).read(bands)
       .count() == nRowsBefore)
     // a second cycle with keepGens = 1 passes the old pin: loud fail
     StoreMaintenance.compactSignatureStore(spark, store)
     StoreMaintenance.vacuumStore("sig", store, keepGens = 1)
     val e = intercept[IllegalStateException] {
-      StoreGenerations.readAt(spark, bands, genBefore)
+      StoreSnapshots.pinAt(spark, store, genBefore).read(bands)
     }
     assert(e.getMessage.contains("keep window"))
     // after the vacuum, disk inventory == live generation exactly
@@ -165,15 +165,13 @@ abstract class StoreGenerationsBehavior(tag: String, objectStore: Boolean)
       "generation is intact") {
     val store = fresh("/tmp/graft_genspec_race")
     SignatureStore.build(docs.limit(50), "doc_id", "text", store)
-    val bands = s"$store/bands.parquet"
-    StoreGenerations.enable(bands)
-    val cur = StoreGenerations.currentFiles(bands).get
-    StoreGenerations.publish(bands, 1L, cur)
+    val cur = StoreSnapshots.latest(store)._2
+    StoreSnapshots.publish(store, 1L, cur)
     val e = intercept[IllegalStateException] {
-      StoreGenerations.publish(bands, 1L, cur.take(1))
+      StoreSnapshots.publish(store, 1L, cur.copy(runs = Map("x" -> 0L)))
     }
     assert(e.getMessage.contains("race"))
-    assert(StoreGenerations.filesAt(bands, 1L).get.toSet == cur.toSet)
+    assert(StoreSnapshots.latest(store)._2 == cur)
   }
 
   test("auto-maintenance fires exactly at its threshold; answers " +

@@ -6,15 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The store-level snapshot must make a multi-artifact append ATOMIC
-  * to readers: a query interleaved between the per-artifact landings
+/** The store log must make a multi-artifact append ATOMIC to
+  * readers: a query interleaved between the per-artifact landings
   * sees the all-old store (never new postings against stale df), the
   * post-commit query sees all-new; frozen seed files verify at
-  * resolve time (missing/modified fails loudly BEFORE any scan);
-  * snapshot-aware vacuum keeps every artifact generation a surviving
-  * snapshot pins; every build publishes snapshot 0 (a rebuild
-  * restarts the chain) and every library compaction publishes its
-  * own snapshot; and the whole protocol runs unchanged on the
+  * resolve time (missing/modified fails loudly BEFORE any scan); the
+  * vacuum keeps every file a surviving entry names; every build
+  * publishes entry 0 (a rebuild restarts the log) and every library
+  * compaction publishes its own entry; a store of the older layout
+  * fails loudly; and the whole protocol runs unchanged on the
   * object-store manifest transport. */
 abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     extends AnyFunSuite {
@@ -102,7 +102,7 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     val tokBuckets = RetrievalIndexStore.params(spark, path)
     val post = postRows(batchB, tokBuckets).localCheckpoint()
     val landedPost = StoreGenerations.land(post, s"$path/postings.parquet",
-      Some("tok_bucket"), None)
+      Some("tok_bucket"))
     landedButUnpublished(path, s"$path/postings.parquet", landedPost)
     val interleaved = rows(RetrievalIndexStore.query(spark, path, queries,
       "query_id", "terms", k = 5))
@@ -112,15 +112,15 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     // finish the append: df + stats land, then the atomic point
     val landedDf = StoreGenerations.land(
       post.groupBy("tok", "tok_bucket").agg(count(lit(1)).as("df")),
-      s"$path/df.parquet", Some("tok_bucket"), None)
+      s"$path/df.parquet", Some("tok_bucket"))
     val landedStats = StoreGenerations.land(
       post.groupBy("doc_id").agg(max("dl").as("__dl"))
         .agg(count(lit(1)).as("n_docs"), sum("__dl").as("total_dl")),
-      s"$path/stats.parquet", None, None)
-    StoreSnapshots.commitOwnStore("retrieval", path, Map(
+      s"$path/stats.parquet", None)
+    StoreSnapshots.commitLanded(path, Map(
       s"$path/postings.parquet" -> landedPost,
       s"$path/df.parquet" -> landedDf,
-      s"$path/stats.parquet" -> landedStats))
+      s"$path/stats.parquet" -> landedStats), None)
 
     val after = rows(RetrievalIndexStore.query(spark, path, queries,
       "query_id", "terms", k = 5))
@@ -139,15 +139,21 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     val before = rows(RetrievalIndexStore.query(spark, path, queries,
       "query_id", "terms", k = 5))
     assert(before.nonEmpty)
+    val postings = s"$path/postings.parquet"
+    def resolved(): Seq[String] = StoreSnapshots.pin(spark, path)
+      .read(postings).inputFiles.toSeq.map(f => canon(new java.net.URI(f).getPath))
+    val appended = resolved()
     StoreMaintenance.compactRetrievalIndexStore(spark, path)
     StoreMaintenance.vacuumStore("retrieval", path, 1)
-    // the current pin names the compacted generation: every file it
-    // resolves carries the compaction's gen<N>- stamp
-    val files = StoreSnapshots.pin(spark, path).read(
-      s"$path/postings.parquet").inputFiles
-    assert(files.nonEmpty &&
-      files.forall(f => "/gen\\d+-[^/]*$".r.findFirstIn(f).isDefined),
+    // the current pin names the compacted output: none of the files
+    // the append left, one file per bucket dir, all of them on disk
+    val files = resolved()
+    assert(files.nonEmpty && files.forall(f => !appended.contains(f)),
       files.mkString(", "))
+    assert(files.groupBy(f => f.substring(0, f.lastIndexOf('/')))
+      .values.forall(_.length == 1))
+    assert(graft.sources.Layout.listParquet(postings).map(canon).toSet ==
+      files.toSet)
     assert(rows(RetrievalIndexStore.query(spark, path, queries,
       "query_id", "terms", k = 5)) == before)
   }
@@ -200,10 +206,10 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
             d.select(col("doc_id"), lit("kept").as("disposition")), p)
         },
         // the fold's signature step under the release's one chain
-        p => StoreSnapshots.commitLanded("release", p,
+        p => StoreSnapshots.commitLanded(p,
           SignatureStore.land(probe, "doc_id", "text", s"$p/sig",
             SignatureStore.paramsAt(StoreSnapshots.pin(spark, p), s"$p/sig"),
-            None)),
+            stream = false), None),
         p => {
           val rd = StoreSnapshots.pinAt(spark, p, 0L).read _
           rows(rd(s"$p/urls.parquet")) ++
@@ -249,7 +255,7 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
       Dedup.nativeBands(wave, "doc_id", "text", shingleN, numHashes)
         .select(col("doc_id").cast("long").as("doc_id"),
           col("band"), col("bkey")),
-      s"$path/bands.parquet", None, None)
+      s"$path/bands.parquet", None)
     landedButUnpublished(path, s"$path/bands.parquet", bands)
     assert(rows(SignatureStore.ingest(spark, path, probe,
       "doc_id", "text")) == before,
@@ -262,14 +268,42 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
         .groupBy(col("doc_id"))
         .agg(collect_list(col("shingle")).as("shingles"))
         .select(col("doc_id").cast("long").as("doc_id"), col("shingles")),
-      s"$path/sets.parquet", None, None)
-    StoreSnapshots.commitOwnStore("sig", path, Map(
-      s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets))
+      s"$path/sets.parquet", None)
+    StoreSnapshots.commitLanded(path, Map(
+      s"$path/bands.parquet" -> bands, s"$path/sets.parquet" -> sets), None)
     SignatureStore.append(wave, "doc_id", "text", twin)
     assert(rows(SignatureStore.ingest(spark, path, probe,
       "doc_id", "text")) ==
       rows(SignatureStore.ingest(spark, twin, probe, "doc_id", "text")),
       "the committed snapshot equals a normal append's store")
+  }
+
+  test("a store of the older two-layer layout fails loudly: its log is " +
+      "rejected, and enable adopts nothing") {
+    val path = fresh("/tmp/graft_snapspec_old")
+    SignatureStore.build(docs.filter(col("doc_id") < 100), "doc_id", "text",
+      path)
+    val probe = docs.filter(col("doc_id") < 5)
+    val io = graft.sources.ManifestIO.forPath(path)
+    // an `a`/`d` snapshot, as the older layout wrote it
+    io.put(s"$path/_store_manifests/gen=0",
+      "a\tbands.parquet\t0\na\tsets.parquet\t0\n" +
+        "d\tbands.parquet\tbands.parquet/gb0.parquet")
+    val e1 = intercept[IllegalStateException] {
+      SignatureStore.ingest(spark, path, probe, "doc_id", "text")
+    }
+    assert(e1.getMessage.contains("rebuild the store"), e1.getMessage)
+    intercept[IllegalStateException](StoreSnapshots.enable("sig", path))
+    // no log, but an artifact still carrying its own `_manifests` chain
+    // (its un-vacuumed compaction inputs would double its rows)
+    io.delete(s"$path/_store_manifests/gen=0")
+    io.put(s"$path/bands.parquet/_manifests/gen=0",
+      graft.sources.Layout.listParquet(s"$path/bands.parquet").mkString("\n"))
+    val e2 = intercept[IllegalStateException] {
+      StoreSnapshots.enable("sig", path)
+    }
+    assert(e2.getMessage.contains("rebuild the store"), e2.getMessage)
+    assert(StoreSnapshots.currentGen(path).isEmpty, "enable adopted files")
   }
 
   test("frozen seeds verify at resolve time: a modified or missing " +
@@ -378,9 +412,9 @@ abstract class StoreSnapshotsBehavior(tag: String, objectStore: Boolean)
     assert(StoreGenerations.currentFiles(bands).get.length <= 3)
     val pin = StoreSnapshots.pin(spark, path)
     assert(pin.read(bands).count() > 0)
-    // idempotent commit: nothing moved, so no snapshot churn
+    // a commit that changes nothing publishes nothing: no churn
     val g = StoreSnapshots.currentGen(path).get
-    assert(StoreSnapshots.commit("sig", path) == g)
+    assert(StoreSnapshots.commit(path)(identity) == g)
   }
 }
 

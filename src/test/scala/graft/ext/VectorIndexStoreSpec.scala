@@ -111,7 +111,6 @@ class VectorIndexStoreSpec extends AnyFunSuite {
       "vec_id", "embedding", path, cents, codebook.localCheckpoint(),
       numSub, subDim)
     val codesDir = s"$path/codes.parquet"
-    StoreGenerations.enable(codesDir)
     def ask(): Set[(Long, Long, Int, Double)] =
       rows(VectorIndexStore.query(spark, path, queries,
         "vec_id", "embedding", k = 3, nprobe = 3))
@@ -119,18 +118,18 @@ class VectorIndexStoreSpec extends AnyFunSuite {
     VectorIndexStore.append(b1, "vec_id", "embedding", path,
       batch = Some((0L, "")))
     val afterB1 = ask()
-    val gen1 = StoreGenerations.currentGen(codesDir).get
+    val gen1 = StoreSnapshots.currentGen(path).get
     val files1 = StoreGenerations.currentFiles(codesDir).get.toSet
-    // REPLAY of batch 0: same canonical names, nothing unreferenced —
-    // the chain does not move and the answers do not change
+    // REPLAY of batch 0: the run's `t` line already holds it — the
+    // log does not move and the answers do not change
     VectorIndexStore.append(b1, "vec_id", "embedding", path,
       batch = Some((0L, "")))
-    assert(StoreGenerations.currentGen(codesDir).get == gen1)
+    assert(StoreSnapshots.currentGen(path).get == gen1)
     assert(StoreGenerations.currentFiles(codesDir).get.toSet == files1)
     assert(ask() == afterB1)
-    // a mid-batch crash window: batch 1's canonical file exists but
-    // was never committed (simulated by planting an unreferenced
-    // gb1 file) — the replay overwrites it and commits exactly once
+    // a mid-batch crash window: a file of batch 1 exists but was
+    // never committed (simulated by planting an unreferenced file) —
+    // the retry never names it and commits exactly once
     val seed = files1.head
     val dead = s"${seed.substring(0, seed.lastIndexOf('/'))}/gb1.parquet"
     java.nio.file.Files.copy(java.nio.file.Paths.get(seed),
@@ -138,7 +137,7 @@ class VectorIndexStoreSpec extends AnyFunSuite {
     val b2 = cands.filter(col("vec_id") % 5 === 2)
     VectorIndexStore.append(b2, "vec_id", "embedding", path,
       batch = Some((1L, "")))
-    val gen2 = StoreGenerations.currentGen(codesDir).get
+    val gen2 = StoreSnapshots.currentGen(path).get
     assert(gen2 == gen1 + 1)
     // batches accumulate: the store now answers like a batch append
     // of b1 ∪ b2 onto the same base

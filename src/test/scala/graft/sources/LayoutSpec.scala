@@ -200,4 +200,22 @@ class LayoutSpec extends AnyFunSuite {
     assert(scan.contains("PartitionFilters: [isnotnull(part"),
       s"expected partition filters in:\n$scan")
   }
+
+  test("the driver-side hash inverse equals Spark's own hash-partitioning " +
+      "probe for n in 1..512") {
+    // the probe the inverse replaces: over ids 0 until n*64, the
+    // smallest id per pmod(hash(id), n) — one job for every n at once
+    val probe = spark.range(1, 513).select(col("id").cast("int").as("n"))
+      .select(col("n"), explode(sequence(lit(0L), col("n").cast("long") * 64 - 1)).as("id"))
+      .groupBy(col("n"), pmod(hash(col("id")), col("n")).as("b"))
+      .agg(min("id").as("pid"))
+      .collect().groupBy(_.getInt(0)).map { case (n, rs) =>
+        n -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
+      }
+    assert(probe.keySet == (1 to 512).toSet)
+    (1 to 512).foreach { n =>
+      assert(probe(n).length == n, s"n=$n: the probe missed a partition")
+      assert(Layout.hashInverse(n).toSeq == probe(n), s"n=$n")
+    }
+  }
 }
