@@ -97,11 +97,13 @@ object FormatLapTime {
     (FunctionIdentifier("format_lap_time"), info, build)
 }
 
-/** SparkSessionExtensions hook: injects the engine's native functions
-  * at session build (`--conf spark.sql.extensions=graft.catalyst.GraftExtensions`). */
+/** SparkSessionExtensions hook: injects the engine's native functions,
+  * its optimizer rule and its planner strategy at session build
+  * (`--conf spark.sql.extensions=graft.catalyst.GraftExtensions`). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectFunction(FormatLapTime.description)
     ext.injectOptimizerRule(_ => BandedLevenshteinRule)
+    ext.injectPlannerStrategy(_ => SinglePartitionScan)
   }
 }

@@ -227,15 +227,22 @@ object Dedup {
     // per-band keys just index it. A NULL signature (doc with fewer
     // than shingleN tokens) flows to a NULL bkey, which the equi-join
     // drops -- same semantics as filtering, without re-evaluating the
-    // call in a pushed-down predicate. The repartition is the
-    // deliberate exchange the band self-join reuses for both sides.
-    val bands = sig
+    // call in a pushed-down predicate. On multi-partition input the
+    // repartition is the deliberate exchange the band self-join reuses
+    // for both sides. A one-partition input (a batch-sized checkpoint,
+    // graft.catalyst.SinglePartitionScan) already satisfies the join's
+    // distribution: forcing the exchange would re-fan the batch to
+    // spark.sql.shuffle.partitions and make every step after it shuffle.
+    val banded = sig
       .select(col(idCol), col("__sig"),
         explode(sequence(lit(0), lit(numHashes / 2 - 1))).as("band"))
       .select(col(idCol), col("band"),
         expr("concat(__sig[CAST(band * 2 AS INT)], __sig[CAST(band * 2 + 1 AS INT)])")
           .as("bkey"))
-      .repartition(col("band"), col("bkey"))
+    val bands =
+      if (TextOps.estPartitions(df.queryExecution.optimizedPlan,
+          df.sparkSession) > 1) banded.repartition(col("band"), col("bkey"))
+      else banded
     val cand = lshCandidates(bands, idCol, maxBucketSize)
     // verification shingles via the Generate-protected explode path —
     // its distinct doubles as the exchange all three jaccard consumers

@@ -159,17 +159,6 @@ object ReleaseStore {
     val uk = nb.join(seenUrls, Seq("__nu"), "left_anti")
       .withColumn("__uk", min("doc_id").over(Window.partitionBy("__nu")))
       .filter(col("doc_id") === col("__uk"))
-    // drop frames are checkpointed BEFORE the i6 store-fold writes:
-    // they (transitively) read the store's urls/hashes/sig files, and
-    // a lazy frame re-evaluated after the fold appends would observe
-    // post-append store state (exactly-once only by the grace of
-    // Spark's pinned file listing, which REFRESH breaks)
-    // (the drop frames stay LAZY; the LEDGER below is checkpointed
-    // once before the i6 fold, which pins all of them together —
-    // three checkpoint jobs become one, same pre-fold pinning)
-    val uDropped = nb.select("doc_id")
-      .join(uk.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("url").as("disposition"))
 
     // --- i2: seen-hash probe + within-batch exact keeper ----------
     val hk = uk.withColumn("__h", md5(col("text"))).localCheckpoint()
@@ -179,9 +168,6 @@ object ReleaseStore {
     val ek = hk.join(seenH, Seq("__h"), "left_anti")
       .withColumn("__ek", min("doc_id").over(Window.partitionBy("__h")))
       .filter(col("doc_id") === col("__ek"))
-    val eDropped = hk.select("doc_id")
-      .join(ek.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("exact").as("disposition"))
     val se = ek.select("doc_id", "text", "url", "lang", "source")
       .localCheckpoint()
 
@@ -207,16 +193,12 @@ object ReleaseStore {
       .unionByName(compAll.filter(col("id") =!= col("component"))
         .select("id"))
       .distinct()
-    val nDropped = nearIds
-      .select(col("id").as("doc_id"), lit("near").as("disposition"))
     val afterNear = se.join(nearIds.select(col("id").as("doc_id")),
       Seq("doc_id"), "left_anti").localCheckpoint()
 
     // --- i4: benchmark decontamination (batch-sized) ---------------
     val contamIds = Dedup.decontaminate(afterNear, benchmark,
       "doc_id", "text", n = 5, minOverlap = 3).select("doc_id")
-    val cDropped = contamIds.select(col("doc_id"),
-      lit("contaminated").as("disposition"))
     val clean = afterNear.join(contamIds, Seq("doc_id"), "left_anti")
       .localCheckpoint()
 
@@ -241,21 +223,25 @@ object ReleaseStore {
             "quality_review")
           .otherwise("kept").as("disposition"))
       .localCheckpoint()
-    // fin and the LEDGER are independent derivations over the
-    // checkpointed upstream frames — overlap their materializations
-    // (guide §2.6). The single ledger checkpoint pins every drop frame
-    // (they transitively read the store's urls/hashes/sig files, and a
-    // lazy frame re-evaluated after the i6 fold appends would observe
-    // post-append store state) — it replaces the three per-frame
-    // checkpoints above, and the manifest's count rows read it instead
-    // of re-deriving the chains.
+    // The LEDGER reads only the stages' checkpoints: each drop set is
+    // the anti-join of two adjacent checkpointed frames (hk is uk plus
+    // a column, se a projection of ek, afterNear = se − nearIds, clean
+    // = afterNear − contamIds), so it scans no store file and is pinned
+    // before the i6 fold by construction. fin and the ledger are
+    // independent derivations — overlap their materializations (guide
+    // §2.6); the manifest's count rows read the ledger.
+    def dropped(from: DataFrame, to: DataFrame, disp: String): DataFrame =
+      from.select("doc_id").join(to.select("doc_id"), Seq("doc_id"),
+        "left_anti").select(col("doc_id"), lit(disp).as("disposition"))
     val Seq(fin, ledger) = Par.map(Seq[() => DataFrame](
       () => clean.join(routed.filter(col("disposition") === "kept"),
           Seq("doc_id"))
         .select("doc_id", "text", "lang", "source")
         .localCheckpoint(),
-      () => uDropped.unionByName(eDropped).unionByName(nDropped)
-        .unionByName(cDropped).unionByName(routed)
+      () => Seq(dropped(nb, hk, "url"), dropped(hk, se, "exact"),
+          dropped(se, afterNear, "near"),
+          dropped(afterNear, clean, "contaminated"), routed)
+        .reduce(_ unionByName _)
         .localCheckpoint()))
 
     // --- i6: delta artifacts over the batch's kept set -------------

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -54,14 +54,14 @@ object StoreMaintenance {
     * stay that way (probe-time pruning); its declared schema
     * ([[schemaOf]]); the semantic fold applied during the rewrite
     * (identity for row-preserving artifacts, delta-summing for the
-    * BM25 df and stats tables); and the ONE-ROW invariant that must be
-    * equal before and after (row count by default, which is only
-    * correct for identity folds — folding artifacts pin the sums their
-    * readers take). */
+    * BM25 df and stats tables); and the invariant, aggregate columns
+    * whose values must be equal before and after (row count by
+    * default, which is only correct for identity folds — folding
+    * artifacts pin the sums their readers take). */
   final case class ArtifactSpec(dir: String, bucketCol: Option[String],
                                 schema: StructType,
                                 fold: DataFrame => DataFrame,
-                                invariant: DataFrame => DataFrame)
+                                invariant: Seq[Column])
 
   /** Every accreting artifact's DECLARED schema, by artifact directory
     * name (one vocabulary across the four stores: the release store's
@@ -120,8 +120,7 @@ object StoreMaintenance {
 
   private def spec(dir: String, bucketCol: Option[String] = None,
                    fold: DataFrame => DataFrame = identity,
-                   invariant: DataFrame => DataFrame =
-                     _.agg(count(lit(1)).as("n_rows"))): ArtifactSpec =
+                   invariant: Seq[Column] = Seq(count(lit(1)))): ArtifactSpec =
     ArtifactSpec(dir, bucketCol, schemaOf(dir).get, fold, invariant)
 
   /** The fresh-build file count of a flat artifact holding `files`:
@@ -133,9 +132,20 @@ object StoreMaintenance {
     math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
   }
 
-  private def footerRows(spark: SparkSession, files: Seq[String]): Long =
-    graft.sources.Layout.parquetFileStatsFiles(spark, files)
-      .agg(sum("n_rows")).collect()(0).getLong(0)
+  /** The fresh-build file count of an artifact holding `files`: one
+    * file per POPULATED bucket directory, or [[flatFiles]] files. */
+  private def idealFiles(s: ArtifactSpec, files: Seq[String],
+                         targetBytes: Long): Int = s.bucketCol match {
+    case Some(_) => math.max(1,
+      files.map(p => p.substring(0, p.lastIndexOf('/'))).distinct.length)
+    case None => flatFiles(files, targetBytes)
+  }
+
+  /** One pass over `df`: its row count and the spec's invariant. */
+  private def measure(df: DataFrame, s: ArtifactSpec): (Long, Seq[Any]) = {
+    val r = df.agg(count(lit(1)), s.invariant: _*).head()
+    (r.getLong(0), r.toSeq.tail)
+  }
 
   /** Rewrite one artifact as `pin` names it — fold, one file per
     * bucket (or [[flatFiles]] files), landed but NOT committed, the
@@ -146,8 +156,7 @@ object StoreMaintenance {
       : (ArtifactReport, Seq[String], Seq[String]) = {
     val srcFiles = pin.files(s.dir)
     val src = pin.read(s.dir)
-    val before = s.invariant(src).collect().toSeq
-    val rowsBefore = footerRows(spark, srcFiles)
+    val (rowsBefore, before) = measure(src, s)
     val folded = s.fold(src)
     val out = s.bucketCol match {
       case Some(c) =>
@@ -170,25 +179,33 @@ object StoreMaintenance {
         StoreGenerations.landWritten(
           folded.repartition(flatFiles(srcFiles, targetBytes)), s.dir, None)
     }
-    val after = s.invariant(StoreSnapshots.scan(spark, s.dir, out))
-      .collect().toSeq
+    val (rowsAfter, after) = measure(StoreSnapshots.scan(spark, s.dir, out), s)
     require(before == after,
       s"invariant mismatch compacting ${s.dir}: $before -> $after; " +
         "output NOT committed — the live artifact is untouched")
     (ArtifactReport(s.dir, srcFiles.length.toLong, out.length.toLong,
-      rowsBefore, footerRows(spark, out)), srcFiles, out)
+      rowsBefore, rowsAfter), srcFiles, out)
   }
 
-  /** Rewrite `specs` concurrently (each directory is its own unit —
-    * overlapped via Par, guide §2.6) from ONE pinned entry, then
-    * publish all of them in one commit ([[commitRewrites]]). */
+  /** Rewrite, concurrently (each directory is its own unit — overlapped
+    * via Par, guide §2.6) and from ONE pinned entry, those of `specs`
+    * holding more files than their fresh-build layout ([[idealFiles]]),
+    * then publish all of them in one commit ([[commitRewrites]]).
+    * Returns what compacted; with nothing due it publishes no entry. */
   private def compactAll(spark: SparkSession, path: String,
                          specs: Seq[ArtifactSpec], targetBytes: Long)
       : Seq[ArtifactReport] = {
     val pin = StoreSnapshots.pin(spark, path)
-    val done = Par.map(specs.map(s => () => rewrite(spark, pin, s, targetBytes)))
-    commitRewrites(path, done)
-    done.map(_._1)
+    val due = specs.filter { s =>
+      val files = pin.files(s.dir)
+      files.length > idealFiles(s, files, targetBytes)
+    }
+    if (due.isEmpty) Nil
+    else {
+      val done = Par.map(due.map(s => () => rewrite(spark, pin, s, targetBytes)))
+      commitRewrites(path, done)
+      done.map(_._1)
+    }
   }
 
   /** The compaction commit: current − the files each rewrite read +
@@ -248,13 +265,7 @@ object StoreMaintenance {
     val log = StoreSnapshots.latest(path)._2
     val due = artifactsOf(kind, path).filter { s =>
       val files = log.files(path, s.dir)
-      val ideal = s.bucketCol match {
-        // fresh-build bound: one file per POPULATED bucket dir
-        case Some(_) => math.max(1,
-          files.map(p => p.substring(0, p.lastIndexOf('/'))).distinct.length)
-        case None => flatFiles(files, am.targetBytes)
-      }
-      files.length > am.ratio * ideal
+      files.length > am.ratio * idealFiles(s, files, am.targetBytes)
     }
     if (due.isEmpty) Nil
     else {
@@ -319,9 +330,9 @@ object StoreMaintenance {
   private def releaseArtifacts(path: String): Seq[ArtifactSpec] =
     sigArtifacts(s"$path/sig") ++ Seq(
       spec(s"$path/urls.parquet", fold = _.distinct(),
-        invariant = _.agg(countDistinct("norm_url").as("n_urls"))),
+        invariant = Seq(countDistinct("norm_url"))),
       spec(s"$path/hashes.parquet", fold = _.distinct(),
-        invariant = _.agg(countDistinct("h").as("n_hashes"))))
+        invariant = Seq(countDistinct("h"))))
 
   def compactReleaseStore(spark: SparkSession, path: String)
       : Seq[ArtifactReport] =
@@ -343,13 +354,11 @@ object StoreMaintenance {
         fold = d => d.groupBy("tok", "tok_bucket")
           .agg(sum("df").as("df"))
           .select("tok", "df", "tok_bucket"),
-        invariant = d => d.agg(sum("df").as("sum_df"),
-          countDistinct("tok").as("n_tok"))),
+        invariant = Seq(sum("df"), countDistinct("tok"))),
       spec(s"$path/stats.parquet",
         fold = d => d.agg(sum("n_docs").as("n_docs"),
           sum("total_dl").as("total_dl")),
-        invariant = d => d.agg(sum("n_docs").as("n"),
-          sum("total_dl").as("t"))))
+        invariant = Seq(sum("n_docs"), sum("total_dl"))))
     if (StoreGenerations.exists(s"$path/positions.parquet"))
       base :+ spec(s"$path/positions.parquet", Some("tok_bucket"))
     else base

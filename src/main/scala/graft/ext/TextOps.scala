@@ -69,8 +69,11 @@ object TextOps {
     // exchange (measured: +1 s over q_incr_release when fired); at
     // production scale a checkpoint of corpus-sized data keeps its
     // wide upstream partitioning and never reaches this branch (the
-    // estimate is already >= p). Scans and local relations still fire
-    // — the guard's documented target (the 4-5x trigram case).
+    // estimate is already >= p). graft.catalyst.SinglePartitionScan
+    // rests on the same precondition: a one-partition checkpoint is
+    // batch-sized, so its downstream work stays in its one task.
+    // Scans and local relations still fire — the guard's documented
+    // target (the 4-5x trigram case).
     val ckptOnly = {
       val leaves = plan.collectLeaves()
       leaves.nonEmpty && leaves.forall(

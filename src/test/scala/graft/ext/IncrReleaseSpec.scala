@@ -1,10 +1,14 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkJobs, TestSpark}
 
 /** The incremental release must (a) drop through the same gates the
   * full release would, including the index-match PROPAGATION rule (a
@@ -14,7 +18,7 @@ import graft.TestSpark
   * (batch N's survivors are probe-able by batch N+1 through the
   * appended stores), and (d) score under the FROZEN release models
   * with the unseen-token smoothing path. */
-class IncrReleaseSpec extends AnyFunSuite {
+class IncrReleaseSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -252,5 +256,83 @@ class IncrReleaseSpec extends AnyFunSuite {
     // batch B's fold advanced every accreting artifact exactly once
     chainState.foreach { case (d, (g, _)) =>
       assert(g == afterA(d)._1 + 1, s"$d at gen $g") }
+  }
+
+  /** q_incr_release's five batch families over the spec corpus (url
+    * re-crawl, near clone, exact clone, benchmark excerpt, reversed
+    * text), checkpointed in one partition like a one-file micro-batch. */
+  private def familyBatch: DataFrame = {
+    def fresh(p: String) = concat(lit(s"https://batch.example/$p/"),
+      col("doc_id").cast("string"))
+    val c = corpus
+    Seq(
+      c.filter(col("doc_id") % 21 === 0).select(
+        (col("doc_id") + 400000).as("doc_id"),
+        concat(col("text"), lit(" graftrecrawl")).as("text"),
+        col("lang"), col("source"), col("url")),
+      c.filter(col("doc_id") % 17 === 0).select(
+        (col("doc_id") + 420000).as("doc_id"),
+        concat(col("text"), lit(" graftbatch end")).as("text"),
+        col("lang"), col("source"), fresh("n").as("url")),
+      c.filter(col("doc_id") % 23 === 0).select(
+        (col("doc_id") + 410000).as("doc_id"), col("text"),
+        col("lang"), col("source"), fresh("b").as("url")),
+      c.filter(col("doc_id") % 37 === 0).select(
+        (col("doc_id") + 430000).as("doc_id"),
+        array_join(slice(TextOps.tokens(col("text")), 1, 12), " ")
+          .as("text"), col("lang"), col("source"), fresh("c").as("url")),
+      c.filter(col("doc_id") % 29 === 0).select(
+        (col("doc_id") + 440000).as("doc_id"),
+        array_join(reverse(TextOps.tokens(col("text"))), " ").as("text"),
+        col("lang"), col("source"), fresh("f").as("url")))
+      .reduce(_ unionByName _).coalesce(1).localCheckpoint()
+  }
+
+  test("the fold's ledger reads only its stages' checkpoints; " +
+      "its jobs and its ledger and manifest rows are pinned") {
+    val path = "/tmp/graft_relstore_spec_pin"
+    freshStore(path)
+    val (batch, b) = (familyBatch, bench)
+    // every localCheckpoint's executed plan, as its action ran it
+    val ckpts = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") ckpts.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (bundle, jobs) = try SparkJobs.fired(spark)(
+      ReleaseStore.incrementalRelease(spark, path, batch, b,
+        maxBucketSize = 64))
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    // the ledger is the one checkpoint over a union of dispositions
+    val ledgerPlans = ckpts.asScala.toSeq.map(_.executedPlan)
+      .filter(p => p.output.map(_.name) == Seq("doc_id", "disposition") &&
+        find(p)(_.isInstanceOf[UnionExec]).isDefined)
+    assert(ledgerPlans.length == 1, ledgerPlans.mkString("\n"))
+    assert(collect(ledgerPlans.head) { case s: FileSourceScanExec => s }
+      .isEmpty, s"the ledger scanned files:\n${ledgerPlans.head}")
+    // 111 jobs while the ledger re-derived its drop sets from the store
+    // probes and one-partition checkpoints still shuffled; 75 or 76 now
+    // (AQE's runtime join conversions inside the connected-components
+    // loop vary by one stage job from run to run)
+    assert(jobs.length <= 76, jobs.mkString("\n"))
+    // the rows that re-derived ledger gave: 108 dispositions, manifest
+    val ledger = bundle.ledger.collect()
+      .map(r => s"${r.getLong(0)}:${r.getString(1)}").sorted
+    assert(ledger.length == 108)
+    assert(java.security.MessageDigest.getInstance("MD5")
+      .digest(ledger.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString == "a01fd4aa2d941ba8cb671621a0e50fcc")
+    val manifest = bundle.manifest.collect()
+      .map(r => s"${r.getString(0)}/${r.getString(1)}=${r.getLong(2)}/" +
+        r.getString(3)).sorted.toSeq
+    assert(manifest == Seq("0_input/n_docs=108/exact",
+      "1_url/n_dropped=24/exact", "2_exact/n_dropped=22/exact",
+      "3_near/n_dropped=5/lsh_capped", "4_decon/n_dropped=8/exact",
+      "5_quality/n_drop=23/frozen_models", "5_quality/n_keep=1/frozen_models",
+      "5_quality/n_review=25/frozen_models", "6_pack/n_packs=1/exact",
+      "7_shard/n_shards=1/exact"))
   }
 }

@@ -56,9 +56,15 @@ class StoreCompactionSpec extends AnyFunSuite {
     assert(nFiles(s"$store/bands.parquet") < fBefore)
     // row counts preserved (identity artifacts)
     reports.foreach(r => assert(r.rowsAfter == r.rowsBefore, r))
-    // idempotent: a second compaction changes nothing observable
-    val again = StoreMaintenance.compactSignatureStore(spark, store)
-    assert(again.map(_.filesAfter) == reports.map(_.filesAfter))
+    // idempotent: a second compaction finds both artifacts at their
+    // fresh-build layout, rewrites no file and publishes no entry
+    def onDisk(a: String): Set[String] = graft.sources.Layout
+      .listParquet(s"$store/$a").toSet
+    val gen = StoreSnapshots.currentGen(store)
+    val disk = Seq("bands.parquet", "sets.parquet").map(onDisk)
+    assert(StoreMaintenance.compactSignatureStore(spark, store).isEmpty)
+    assert(StoreSnapshots.currentGen(store) == gen)
+    assert(Seq("bands.parquet", "sets.parquet").map(onDisk) == disk)
     assert(rows(SignatureStore.ingest(spark, store, batch,
       "doc_id", "text")) == before)
   }
