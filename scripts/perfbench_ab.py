@@ -26,11 +26,24 @@ run contributes its per-op-kind latency medians, `op.<kind>_p50_ms`
 moved. A run that fails or reports
 `correct: false` is listed; its pair is left out of the quartiles and
 counts as not won. Exits 1 when any run failed.
+
+Per-query mode, for plan changes that a few named queries exercise:
+
+    python3 scripts/perfbench_ab.py --parent <rev> \\
+        --benchone q_a,q_b --sf /path/to/sf0.1 [--pairs 5] [--reps 3]
+
+compiles both trees with sbt once, then runs `graft.BenchOne <sf> <queries>
+<reps>` (through scripts/run_main.sh, SPARK_GRAFT_CPUS passed through)
+once per side per pair, alternating which side runs first exactly as above.
+One BenchOne run is one pair: each query's figure is the `med=` of its
+`[benchone] name: min= med= max=` line, lower is better, and the table
+reports each query's parent and change medians, quartiles and pairs won.
 """
 
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -85,6 +98,53 @@ def kind_medians(tree, workload, seed, trace):
             for k, v in by_kind.items()}
 
 
+BENCHONE_LINE = re.compile(
+    r"^\[benchone\] (\S+): min=([0-9.]+) med=([0-9.]+) max=([0-9.]+)$")
+
+
+def parse_benchone(text):
+    """{query: med seconds} from BenchOne's stdout."""
+    out = {}
+    for line in text.splitlines():
+        m = BENCHONE_LINE.match(line.strip())
+        if m:
+            out[m.group(1)] = float(m.group(3))
+    return out
+
+
+def sbt_env():
+    env = dict(os.environ)
+    env.setdefault("COURSIER_MODE", "offline")
+    env.setdefault("SBT_OPTS", "-Dsbt.override.build.repos=true "
+                   "-Dsbt.repository.config=%s "
+                   "-Dsbt.offline=true -Xmx2g" %
+                   os.path.expanduser("~/.sbt/repositories"))
+    return env
+
+
+def compile_tree(tree):
+    # run_main.sh reads the classes directory, so resources (the openf1
+    # data source registration) must be copied there too
+    p = subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true",
+                        "compile", "Compile/copyResources"], cwd=tree,
+                       env=sbt_env(), capture_output=True, text=True)
+    if p.returncode != 0:
+        sys.exit("perfbench_ab: sbt compile failed in %s: %s" % (
+            tree, p.stdout.strip()[-400:]))
+
+
+def run_benchone(tree, sf, queries, reps):
+    cmd = ["bash", os.path.join(tree, "scripts", "run_main.sh"),
+           "graft.BenchOne", sf, ",".join(queries), str(reps)]
+    p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
+    meds = parse_benchone(p.stdout)
+    missing = [q for q in queries if q not in meds]
+    if p.returncode != 0 or missing:
+        return None, "exit %d, missing %s: %s" % (
+            p.returncode, ",".join(missing) or "-", p.stderr.strip()[-400:])
+    return meds, None
+
+
 def quartiles(xs):
     xs = sorted(xs)
     if len(xs) < 2:
@@ -129,11 +189,22 @@ def fmt(v):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="git revision to compare")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, type=int, nargs="+")
+    ap.add_argument("--workload")
+    ap.add_argument("--seeds", type=int, nargs="+")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--benchone", help="comma-separated query names")
+    ap.add_argument("--sf", help="scale-factor directory for --benchone")
+    ap.add_argument("--pairs", type=int, default=5,
+                    help="BenchOne runs per side (--benchone)")
+    ap.add_argument("--reps", type=int, default=3,
+                    help="BenchOne's timed repetitions per run (--benchone)")
     ap.add_argument("--workdir", help="where the parent tree is exported")
     args = ap.parse_args()
+    if args.benchone:
+        if not args.sf:
+            ap.error("--benchone needs --sf")
+    elif not (args.workload and args.seeds):
+        ap.error("--workload and --seeds are required without --benchone")
 
     workdir = args.workdir or tempfile.mkdtemp(prefix="perfbench_ab-")
     os.makedirs(workdir, exist_ok=True)
@@ -141,23 +212,36 @@ def main():
     print("perfbench_ab: parent %s at %s; change = %s" % (sha[:12], parent, ROOT),
           file=sys.stderr)
 
+    if args.benchone:
+        queries = args.benchone.split(",")
+        for tree in (parent, ROOT):
+            compile_tree(tree)
+        labels = ["run %d" % (i + 1) for i in range(args.pairs)]
+        run = lambda tree, _: run_benchone(tree, args.sf, queries, args.reps)
+        better = {}
+    else:
+        labels = ["seed %d" % s for s in args.seeds]
+        run = lambda tree, i: run_side(tree, args.workload, args.seeds[i],
+                                       args.trace)
+        better = directions()
+
     pairs, failures = [], []
-    for i, seed in enumerate(args.seeds):
+    for i, label in enumerate(labels):
         order = [("parent", parent), ("change", ROOT)]
         if i % 2:
             order.reverse()
         got = {}
         for side, tree in order:
-            m, err = run_side(tree, args.workload, seed, args.trace)
+            m, err = run(tree, i)
             if err:
-                failures.append("%s seed %d: %s" % (side, seed, err))
+                failures.append("%s %s: %s" % (side, label, err))
             got[side] = m
-            print("perfbench_ab: pair %d seed %d %s %s" % (
-                i + 1, seed, side, err or "ok"), file=sys.stderr)
+            print("perfbench_ab: pair %d %s %s %s" % (
+                i + 1, label, side, err or "ok"), file=sys.stderr)
         if got["parent"] and got["change"]:
             pairs.append((got["parent"], got["change"]))
 
-    summary = summarize(pairs, len(args.seeds), directions()) if pairs else {}
+    summary = summarize(pairs, len(labels), better) if pairs else {}
     print("%-32s %6s  %-26s %-26s %8s %7s %5s" % (
         "metric", "better", "parent q1/med/q3", "change q1/med/q3",
         "delta%", "spread", "wins"))

@@ -24,13 +24,11 @@ import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan, Spark
   * Precondition: the rule keeps a one-partition checkpoint's downstream
   * work in ONE task. That is cheap because such a checkpoint holds at
   * most one input split or one AQE-coalesced partition (a batch-sized
-  * frame). The CPU-heavy consumers keep their own spread: a multi-pass
-  * one (KMeans) still rebalances a checkpoint first
-  * ([[graft.ext.TextOps.rebalanceMultiPass]]), and a single-pass one
-  * runs it in place, the trade [[graft.ext.TextOps.rebalance]]'s
-  * checkpoint skip rests on. A join with a wider input does not
-  * collapse the wide side: `SinglePartition` cannot create a
-  * partitioning for it, so both sides hash-shuffle as before.
+  * frame) — the same precondition under which
+  * [[graft.ext.TextOps.rebalance]] never re-spreads a checkpoint. A
+  * join with a wider input does not collapse the wide side:
+  * `SinglePartition` cannot create a partitioning for it, so both
+  * sides hash-shuffle as before.
   *
   * Everything else plans exactly as Spark's `BasicOperators` does:
   * RDDs with zero or several partitions, known partitionings, and

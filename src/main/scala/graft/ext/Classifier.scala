@@ -111,11 +111,10 @@ object Classifier {
     require(scale > 0 && scale <= (1L << 20),
       s"scale must be in (0, 2^20] to keep the integer domain exact, got $scale")
     val dims = numBuckets + 1
-    // unsplittable-input guard (TextOps.rebalanceMultiPass — this fit
-    // is a MULTI-PASS consumer: the checkpointed feature table keeps
-    // its partitioning for all `iters` gradient aggregations, so the
-    // spread is amortized and fires on checkpoint-rooted inputs too)
-    val feat = TextOps.rebalanceMultiPass(df).select(
+    // unsplittable-input guard (TextOps.rebalance): the checkpointed
+    // feature table keeps its partitioning for all `iters` gradient
+    // aggregations
+    val feat = TextOps.rebalance(df).select(
       hashedFeatures(col(textCol), numBuckets, biasGain).as("__x"),
       col(labelCol).cast("long").as("__y"))
       .localCheckpoint()

@@ -227,12 +227,13 @@ object Dedup {
     // per-band keys just index it. A NULL signature (doc with fewer
     // than shingleN tokens) flows to a NULL bkey, which the equi-join
     // drops -- same semantics as filtering, without re-evaluating the
-    // call in a pushed-down predicate. On multi-partition input the
-    // repartition is the deliberate exchange the band self-join reuses
-    // for both sides. A one-partition input (a batch-sized checkpoint,
-    // graft.catalyst.SinglePartitionScan) already satisfies the join's
-    // distribution: forcing the exchange would re-fan the batch to
-    // spark.sql.shuffle.partitions and make every step after it shuffle.
+    // call in a pushed-down predicate. The repartition is the
+    // deliberate exchange the band self-join reuses for both sides,
+    // except over a one-partition checkpoint: graft.catalyst
+    // .SinglePartitionScan plans that input as SinglePartition, which
+    // already satisfies the join's distribution, so the exchange would
+    // only re-fan the batch to spark.sql.shuffle.partitions and make
+    // every step after it shuffle.
     val banded = sig
       .select(col(idCol), col("__sig"),
         explode(sequence(lit(0), lit(numHashes / 2 - 1))).as("band"))
@@ -240,9 +241,8 @@ object Dedup {
         expr("concat(__sig[CAST(band * 2 AS INT)], __sig[CAST(band * 2 + 1 AS INT)])")
           .as("bkey"))
     val bands =
-      if (TextOps.estPartitions(df.queryExecution.optimizedPlan,
-          df.sparkSession) > 1) banded.repartition(col("band"), col("bkey"))
-      else banded
+      if (TextOps.onOnePartitionCheckpoint(df)) banded
+      else banded.repartition(col("band"), col("bkey"))
     val cand = lshCandidates(bands, idCol, maxBucketSize)
     // verification shingles via the Generate-protected explode path —
     // its distinct doubles as the exchange all three jaccard consumers

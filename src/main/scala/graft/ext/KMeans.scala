@@ -123,7 +123,7 @@ object KMeans {
     require(k >= 1 && numSub >= 1 && subDim >= 1 && iters >= 1)
     // unsplittable-input guard (TextOps.rebalance): the checkpointed
     // quantized corpus keeps its partitioning for EVERY assign pass
-    val df = TextOps.rebalanceMultiPass(rawDf)
+    val df = TextOps.rebalance(rawDf)
     // |component|·scale < 2^20 keeps d2 < 2^46 and corpus sums < 2^52
     // for any realistic corpus — embedding components are O(1)
     require(scale > 0 && scale <= (1L << 20),

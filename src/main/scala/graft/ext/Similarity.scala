@@ -47,12 +47,9 @@ object Similarity {
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       toDouble(col(vecCol)).as("__qv")))
     // the per-pair distance compute runs MAP-SIDE at the candidates'
-    // partitioning, so a batch-sized (often checkpoint-rooted, AQE-
-    // coalesced-to-1) candidate frame serializes the whole scan —
-    // force-spread small inputs (no-op on corpus-wide scans, where
-    // the estimate is already >= parallelism); values are partition-
-    // invariant (full (score, neighbor_id) tie order in the window)
-    val c = TextOps.rebalanceMultiPass(candidates)
+    // partitioning; values are partition-invariant (full (score,
+    // neighbor_id) tie order in the window)
+    val c = TextOps.rebalance(candidates)
       .select(col(idCol).as("neighbor_id"),
       toDouble(col(vecCol)).as("__cv"))
     val scored = c.crossJoin(q)
@@ -418,8 +415,7 @@ object Similarity {
       toDouble(col(vecCol)).as("__qv")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("dist2").asc, col("neighbor_id").asc)
-    // force-spread small candidate frames — see bruteTopK
-    TextOps.rebalanceMultiPass(candidates)
+    TextOps.rebalance(candidates)
       .select(col(idCol).as("neighbor_id"),
         toDouble(col(vecCol)).as("__cv"))
       .crossJoin(q)
@@ -449,9 +445,7 @@ object Similarity {
                vecCol: String, numSub: Int, subDim: Int): DataFrame = {
     require(numSub >= 1 && subDim >= 1)
     val cb = pqCodebook(seeds, idCol, vecCol)
-    // force-spread batch-sized inputs: the per-subspace argmin is the
-    // map-side hot loop — see ivfResiduals
-    TextOps.rebalanceMultiPass(df)
+    TextOps.rebalance(df)
       .select(col(idCol), toDouble(col(vecCol)).as("__v"))
       .crossJoin(cb)
       .select(col(idCol),
@@ -693,11 +687,9 @@ object Similarity {
     val cents = centroidArrays(centroids, idCol, vecCol)
     graft.catalyst.NearestCentroid.register(candidates.sparkSession)
     // the O(K)-per-row argmin runs map-side at the candidates'
-    // partitioning — force-spread batch-sized (checkpoint-rooted,
-    // AQE-coalesced) frames so the assignment uses every core; no-op
-    // on corpus-wide scans, values partition-invariant (pure per-row
-    // projection). Downstream encodes inherit the spread.
-    TextOps.rebalanceMultiPass(candidates)
+    // partitioning; values are partition-invariant (pure per-row
+    // projection), and downstream encodes inherit the partitioning
+    TextOps.rebalance(candidates)
       .select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("__v"))
       .crossJoin(cents)
       // native full-width L2 argmin (ties to the smallest index = the
@@ -815,8 +807,7 @@ object Similarity {
         struct(best.getField("d2").as("d2"), r.cast("int").as("pr"),
           p.getField("tpos").as("tpos"), best.getField("j").as("j"))
       })
-    // force-spread batch-sized candidate frames — see ivfResiduals
-    TextOps.rebalanceMultiPass(candidates)
+    TextOps.rebalance(candidates)
       .select(col(idCol).as("neighbor_id"), toDouble(col(vecCol)).as("__v"))
       .crossJoin(structure)
       .withColumn("__probes", slice(array_sort(topScores), 1, w))
@@ -886,9 +877,7 @@ object Similarity {
                                 numSub: Int, subDim: Int): DataFrame = {
     require(numSub >= 1 && subDim >= 1)
     val cb = pqCodebook(seeds, idCol, vecCol)
-    // force-spread batch-sized inputs: the per-subspace argmin fold is
-    // the map-side hot loop — see ivfResiduals
-    TextOps.rebalanceMultiPass(assigned)
+    TextOps.rebalance(assigned)
       .crossJoin(cb)
       .select(col("neighbor_id").as(idCol),
         aggregate(sequence(lit(0), lit(numSub - 1)), lit(0.0),

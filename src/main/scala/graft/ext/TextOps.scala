@@ -2,8 +2,11 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate,
-  Except, GlobalLimit, HintInfo, Intersect, Join, LocalRelation, LogicalPlan,
-  Range, RepartitionOperation, Sort, Union, Window => LogicalWindow}
+  GlobalLimit, HintInfo, Join, LocalRelation, LogicalPlan,
+  RepartitionOperation, Sort, Union, Window => LogicalWindow}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for the large-scale training-data pipeline
@@ -25,124 +28,103 @@ object TextOps {
     * literal-space split is exact and locale-free. */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Round-robin rebalance applied ONLY when the input would execute
-    * in fewer partitions than the session's parallelism — the
-    * unsplittable-small-input remedy (single-row-group parquet, a
-    * gzip member, one small file) so CPU-bound per-row stages use
-    * every core instead of one. The guard makes it a no-op decision
-    * at corpus scale, where scans split naturally into >= parallelism
-    * partitions; when it does fire, the shuffle it inserts moves the
-    * RAW rows once, upstream of the expensive projection — measured
-    * 4-5× on the trigram passes (one task exploding 1.5M rows vs 32).
-    * Every operator here is partitioning-invariant by construction
-    * (spec-pinned), so values are unchanged.
+  /** The one spread rule: round-robin `df` into the session's
+    * `defaultParallelism` partitions iff it is not streaming, is not
+    * checkpoint-rooted ([[checkpointRooted]]), and is estimated to run
+    * in fewer partitions than that ([[estPartitions]]). It targets the
+    * unsplittable small input (single-row-group parquet, a gzip
+    * member, one small file, a local relation) feeding a CPU-bound
+    * per-row stage: the shuffle moves the RAW rows once, upstream of
+    * the expensive projection, so that stage uses every core instead
+    * of one (measured 4-5× on the trigram passes: one task exploding
+    * 1.5M rows vs 32). At corpus scale scans split into >= parallelism
+    * partitions and the rule is a no-op. Every consumer is
+    * partitioning-invariant by construction (spec-pinned), so values
+    * never depend on the decision.
     *
-    * The partition count is ESTIMATED from the logical plan
-    * ([[estPartitions]]) — no physical planning, no codegen. The two
-    * rejected alternatives, both measured: `df.rdd.getNumPartitions`
-    * pays ~0.35 s of full physical planning + codegen per probe
-    * (6.8-7.7 s inside one q_incr_release run, r15 §1); the r15
-    * size-estimate-only guard repartitioned shuffle outputs that were
-    * already `spark.sql.shuffle.partitions` wide, inserting a
-    * redundant Exchange per call site (the 33-query regression
-    * cluster in the r15 verdict). */
-  private[ext] def rebalance(df: DataFrame): DataFrame =
-    rebalanceBy(df, forced = false)
-
-  /** [[rebalance]] for MULTI-PASS consumers (KMeans.fit checkpoints
-    * its input and re-reads it every Lloyd round): the spread is paid
-    * once and amortized over every pass, so it fires on checkpointed
-    * (LogicalRDD-rooted) frames too — the single-pass default below
-    * skips those (measured net-negative: a batch-sized checkpoint's
-    * one CPU pass finishes faster than the extra exchange costs). */
-  private[ext] def rebalanceMultiPass(df: DataFrame): DataFrame =
-    rebalanceBy(df, forced = true)
-
-  private def rebalanceBy(df: DataFrame, forced: Boolean): DataFrame = {
+    * Precondition, shared with [[graft.catalyst.SinglePartitionScan]]:
+    * a checkpoint is batch-sized (one input split or one AQE-coalesced
+    * partition of a batch), so its downstream pass stays in its own
+    * partitions, single- or multi-pass consumer alike — re-spreading
+    * such a checkpoint was measured net-negative (+1 s over
+    * q_incr_release). A checkpoint of corpus-sized data keeps its wide
+    * upstream partitioning and needs no spread either.
+    *
+    * The decision reads the LOGICAL plan only: `df.rdd.getNumPartitions`
+    * pays ~0.35 s of physical planning + codegen per probe (6.8-7.7 s
+    * inside one q_incr_release run, r15 §1). */
+  private[ext] def rebalance(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batches size themselves
     val p = df.sparkSession.sparkContext.defaultParallelism
     val plan = df.queryExecution.optimizedPlan
-    if (estPartitions(plan, df.sparkSession) >= p) return df
-    // Checkpoint-rooted frames (every leaf a LogicalRDD) skip unless
-    // forced: at gate scale such frames are AQE-coalesced batch-sized
-    // intermediates whose one downstream pass is cheaper than the
-    // exchange (measured: +1 s over q_incr_release when fired); at
-    // production scale a checkpoint of corpus-sized data keeps its
-    // wide upstream partitioning and never reaches this branch (the
-    // estimate is already >= p). graft.catalyst.SinglePartitionScan
-    // rests on the same precondition: a one-partition checkpoint is
-    // batch-sized, so its downstream work stays in its one task.
-    // Scans and local relations still fire — the guard's documented
-    // target (the 4-5x trigram case).
-    val ckptOnly = {
-      val leaves = plan.collectLeaves()
-      leaves.nonEmpty && leaves.forall(
-        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    }
-    if (!forced && ckptOnly) df else df.repartition(p)
+    if (checkpointRooted(plan) ||
+        estPartitions(plan, df.sparkSession).forall(_ >= p)) df
+    else df.repartition(p)
   }
 
-  /** Estimate how many partitions a frame will execute with, from the
-    * LOGICAL plan only, mirroring Spark's own physical rules:
-    * shuffle-producing nodes (Aggregate / Window / global Sort /
-    * Repartition / Deduplicate / set ops / non-broadcast Join) come
-    * out `spark.sql.shuffle.partitions` wide (pre-AQE width — the same
-    * number the old physical probe read); a join with one side under
-    * the broadcast threshold (or hinted) inherits the streamed side's
-    * partitioning; Union sums its children; narrow nodes inherit
-    * their child; leaves read their real layout (LogicalRDD — e.g. a
-    * localCheckpoint — reads its RDD's count for free, file relations
-    * apply the scan-split formula, local relations parallelize to
-    * min(rows, parallelism)). Unknown shapes estimate WIDE — this
-    * guard must never insert a shuffle on a plan it cannot read. */
-  private[ext] def estPartitions(plan0: LogicalPlan,
-                                 spark: SparkSession): Int = {
+  /** True iff `df` runs as ONE partition because it is a narrow chain
+    * over a one-partition checkpoint — the input
+    * [[graft.catalyst.SinglePartitionScan]] plans as `SinglePartition`,
+    * which already satisfies every downstream distribution. */
+  private[ext] def onOnePartitionCheckpoint(df: DataFrame): Boolean =
+    !df.isStreaming && {
+      val plan = df.queryExecution.optimizedPlan
+      checkpointRooted(plan) && estPartitions(plan, df.sparkSession).contains(1)
+    }
+
+  /** Every leaf a `LogicalRDD` (a checkpoint). */
+  private def checkpointRooted(plan: LogicalPlan): Boolean = {
+    val leaves = plan.collectLeaves()
+    leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD])
+  }
+
+  /** How many partitions a frame will execute with, from the LOGICAL
+    * plan, or None for a WIDE frame that is never spread. Leaves read
+    * their real layout: a checkpoint its RDD's partition count (free),
+    * a local relation min(rows, parallelism), a file scan the
+    * scan-split formula. Narrow nodes inherit their child, `Union`
+    * sums its children, a join with one side under the broadcast
+    * threshold (or hinted) inherits the streamed side. Everything else
+    * is wide: aggregates, windows, distincts, repartitions, global
+    * sorts, limits, non-broadcast joins and unknown leaves. A shuffle
+    * output is already shuffle-wide, so re-spreading it only adds an
+    * Exchange (the r15 33-query regression cluster). */
+  private def estPartitions(plan0: LogicalPlan,
+                            spark: SparkSession): Option[Int] = {
     val conf = spark.sessionState.conf
     val p = math.max(1, spark.sparkContext.defaultParallelism)
-    val sp = math.max(1, conf.numShufflePartitions)
-    def hintedBcast(h: Option[HintInfo]): Boolean =
-      h.exists(_.strategy.exists(_.toString.toLowerCase.contains("broadcast")))
-    def smallEnough(side: LogicalPlan): Boolean =
-      conf.autoBroadcastJoinThreshold >= 0 &&
-        side.stats.sizeInBytes <= BigInt(conf.autoBroadcastJoinThreshold)
-    def est(plan: LogicalPlan): Int = plan match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.getNumPartitions
-      case l: LocalRelation => math.max(1, math.min(l.data.length, p))
-      case r: Range => r.numSlices.getOrElse(p)
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            // FilePartition.maxSplitBytes, minus per-file open costs —
-            // an over-estimate of split size, i.e. an under-estimate
-            // of partitions, which errs toward repartitioning exactly
-            // like the old physical probe did on small scans
-            val total = math.max(1L, fs.location.sizeInBytes)
-            val minPart = conf.filesMinPartitionNum.getOrElse(p)
-            val maxSplit = math.max(1L,
-              math.min(conf.filesMaxPartitionBytes,
-                math.max(conf.filesOpenCostInBytes,
-                  total / math.max(1, minPart))))
-            math.min(Int.MaxValue.toLong,
-              (total + maxSplit - 1) / maxSplit).toInt
-          case _ => p // non-file source: assume wide, never add a shuffle
-        }
-      case _: Aggregate | _: LogicalWindow | _: Deduplicate | _: Intersect |
-           _: Except | _: RepartitionOperation => sp
-      case s: Sort if s.global => sp
-      case _: GlobalLimit => 1 // physical CollectLimit/GlobalLimit: 1 partition
-      case j: Join =>
-        val bRight = hintedBcast(j.hint.rightHint) || smallEnough(j.right)
-        val bLeft = hintedBcast(j.hint.leftHint) || smallEnough(j.left)
-        if (bRight) est(j.left)
-        else if (bLeft) est(j.right)
-        else sp
-      case u: Union => u.children.map(est).sum
+    def broadcastable(side: LogicalPlan, hint: Option[HintInfo]): Boolean =
+      hint.exists(_.strategy.exists(_.toString.toLowerCase.contains("broadcast"))) ||
+        (conf.autoBroadcastJoinThreshold >= 0 &&
+          side.stats.sizeInBytes <= BigInt(conf.autoBroadcastJoinThreshold))
+    def est(plan: LogicalPlan): Option[Int] = plan match {
+      case r: LogicalRDD => Some(r.rdd.getNumPartitions)
+      case l: LocalRelation => Some(math.max(1, math.min(l.data.length, p)))
+      case LogicalRelationWithTable(fs: HadoopFsRelation, _) =>
+        // FilePartition.maxSplitBytes, minus per-file open costs — an
+        // over-estimate of split size, i.e. an under-estimate of
+        // partitions, which errs toward spreading small scans
+        val total = math.max(1L, fs.location.sizeInBytes)
+        val minPart = conf.filesMinPartitionNum.getOrElse(p)
+        val maxSplit = math.max(1L,
+          math.min(conf.filesMaxPartitionBytes,
+            math.max(conf.filesOpenCostInBytes,
+              total / math.max(1, minPart))))
+        Some(math.min(Int.MaxValue.toLong,
+          (total + maxSplit - 1) / maxSplit).toInt)
+      case _: Aggregate | _: LogicalWindow | _: Deduplicate |
+           _: RepartitionOperation | _: GlobalLimit => None
+      case s: Sort if s.global => None
+      case j: Join if broadcastable(j.right, j.hint.rightHint) => est(j.left)
+      case j: Join if broadcastable(j.left, j.hint.leftHint) => est(j.right)
+      case u: Union => u.children.map(est).foldLeft(Option(0)) {
+        case (Some(a), Some(b)) => Some(a + b)
+        case _ => None
+      }
       case o if o.children.size == 1 => est(o.children.head)
-      case o if o.children.nonEmpty => o.children.map(est).max
-      case _ => p // unknown leaf (OneRowRelation is 1 row — harmless wide)
+      case _ => None
     }
-    math.max(1, est(plan0))
+    est(plan0)
   }
 
   /** First 15 hex chars of md5 as a non-negative long. */

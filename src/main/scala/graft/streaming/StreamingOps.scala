@@ -333,8 +333,9 @@ object StreamingOps {
     * batch pays the merge's measured shape (footer plan over the
     * current file list + touched-file rewrite — q_merge_narrow's
     * flat-rewrite curve), so sink cost tracks the batch's key
-    * locality, not table size. */
-  /** `maintainEvery = Some((k, targetBytes, keepGens))` makes the
+    * locality, not table size.
+    *
+    * `maintainEvery = Some((k, targetBytes, keepGens))` makes the
     * table SELF-MAINTAINING — legal without quiescing because the
     * foreachBatch sink IS the table's single writer and runs its
     * batches serially. On a maintenance batch (id a positive multiple
@@ -752,11 +753,20 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
                        batchId: Long) =>
-        val bundle = graft.ext.ReleaseStore.incrementalRelease(
-          batch.sparkSession, path, batch.toDF(), benchmark,
-          packTokens = packTokens, shardTokens = shardTokens,
-          maxBucketSize = maxBucketSize,
-          streamBatch = Some((batchId, tag)))
+        // the stream thread carries start()'s call site as an override
+        // (SparkContext's callSite.short/long local properties) that
+        // would name every fold job after this file; clear it around
+        // the fold so each job names its own line, then restore it
+        val sc = batch.sparkSession.sparkContext
+        val callSite = Seq("callSite.short", "callSite.long")
+          .map(k => k -> sc.getLocalProperty(k))
+        callSite.foreach { case (k, _) => sc.setLocalProperty(k, null) }
+        val bundle = try graft.ext.ReleaseStore.incrementalRelease(
+            batch.sparkSession, path, batch.toDF(), benchmark,
+            packTokens = packTokens, shardTokens = shardTokens,
+            maxBucketSize = maxBucketSize,
+            streamBatch = Some((batchId, tag)))
+          finally callSite.foreach { case (k, v) => sc.setLocalProperty(k, v) }
         onBatch(bundle, batchId)
       }
       .start()
@@ -794,19 +804,6 @@ object StreamingOps {
       .groupBy("new_id", "index_id")
       .agg(count(lit(1)).as("n_bands"))
 
-  /** Streaming perceptual media dedup — the media face of
-    * [[streamNearDupCandidates]]: incoming payloads hash through the
-    * one-pass [[graft.catalyst.Phash64]] projection (streaming-legal
-    * by construction), band into 8 bytes, and join the STATIC
-    * corpus's persisted band index; pairs within `maxHamming` are
-    * counted per (new, index) in complete/update mode. Same posture:
-    * the stream-static join is stateless, the only state is the
-    * bounded pair count, and the Hamming filter runs BEFORE the
-    * aggregation so non-matching collisions never enter state.
-    *
-    * `indexBands` must carry (index_id, band, nib, h_index) —
-    * persist the banded [[graft.ext.Multimodal.phash]] output at
-    * ingest time, exactly like the MinHash band index. */
   /** Streaming exact-substring contamination check — the suffix face
     * of [[streamNearDupCandidates]] and the ingest-time form of
     * benchmark decontamination: each incoming document explodes into
@@ -835,6 +832,19 @@ object StreamingOps {
       .groupBy("new_id", "index_id")
       .agg(count(lit(1)).as("n_positions"))
 
+  /** Streaming perceptual media dedup — the media face of
+    * [[streamNearDupCandidates]]: incoming payloads hash through the
+    * one-pass [[graft.catalyst.Phash64]] projection (streaming-legal
+    * by construction), band into 8 bytes, and join the STATIC
+    * corpus's persisted band index; pairs within `maxHamming` are
+    * counted per (new, index) in complete/update mode. Same posture:
+    * the stream-static join is stateless, the only state is the
+    * bounded pair count, and the Hamming filter runs BEFORE the
+    * aggregation so non-matching collisions never enter state.
+    *
+    * `indexBands` must carry (index_id, band, nib, h_index) —
+    * persist the banded [[graft.ext.Multimodal.phash]] output at
+    * ingest time, exactly like the MinHash band index. */
   def streamPhashCandidates(stream: DataFrame, indexBands: DataFrame,
                             hdrLen: Column,
                             idCol: String = "doc_id",

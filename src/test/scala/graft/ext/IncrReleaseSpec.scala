@@ -288,6 +288,31 @@ class IncrReleaseSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .reduce(_ unionByName _).coalesce(1).localCheckpoint()
   }
 
+  test("streamed fold jobs name their own code, not the stream's start()") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val path = "/tmp/graft_relstore_spec_callsite"
+    freshStore(path)
+    val (kid, t) = keptDoc(path)
+    val lang = corpus.filter(col("doc_id") === kid)
+      .select("lang").head().getString(0)
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-relsink-cs").toString
+    val src = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[RelUp]
+    val q = graft.streaming.StreamingOps.runReleaseSink(src.toDF(), path,
+      bench, ckpt, maxBucketSize = 64)
+    val (_, jobs) = try SparkJobs.fired(spark) {
+      src.addData(RelUp(950001L, t.split(" ").reverse.mkString(" "), lang,
+        "batch", "https://batch.example/x/950001"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(jobs.nonEmpty)
+    assert(!jobs.exists(_.startsWith("start at StreamingOps")),
+      jobs.mkString("\n"))
+    assert(jobs.exists(_.contains("ReleaseStore.scala")), jobs.mkString("\n"))
+  }
+
   test("the fold's ledger reads only its stages' checkpoints; " +
       "its jobs and its ledger and manifest rows are pinned") {
     val path = "/tmp/graft_relstore_spec_pin"

@@ -1,88 +1,117 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Pins the rebalance guard's partition estimator (TextOps
-  * .estPartitions): it must read the logical plan only and mirror the
-  * physical rules — shuffle outputs are already
-  * `spark.sql.shuffle.partitions` wide (repartitioning them again was
-  * the r15 regression cluster), while small leaf inputs under the
-  * session parallelism still trigger the round-robin spread the guard
-  * exists for.
+/** Pins the one spread rule (TextOps.rebalance): spread round-robin to
+  * the session parallelism iff the frame is not checkpoint-rooted and
+  * its logical plan estimates fewer partitions than that. Leaves read
+  * their real layout, narrow nodes inherit, `Union` sums, a broadcast
+  * join inherits its streamed side, and every shuffle output is wide
+  * and never re-spread (re-spreading those was the r15 regression
+  * cluster). Also pins the band-exchange question the rule shares,
+  * TextOps.onOnePartitionCheckpoint.
   */
 class RebalanceSpec extends AnyFunSuite {
-  // own SQLConf (newSession): DeterminismSpec mutates the shared
-  // session's shuffle.partitions mid-suite, and these asserts compare
-  // against that very conf value
-  private lazy val spark = {
-    val s = TestSpark.spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s
-  }
-  import spark.implicits._
+  private lazy val spark = TestSpark.spark
+  private lazy val p = spark.sparkContext.defaultParallelism
 
-  private def est(df: org.apache.spark.sql.DataFrame): Int =
-    TextOps.estPartitions(df.queryExecution.optimizedPlan, spark)
-
-  private val p = spark.sparkContext.defaultParallelism
-  private val sp = spark.sessionState.conf.numShufflePartitions
-
-  test("localCheckpoint leaf reads its real RDD partition count") {
-    val one = spark.range(100).toDF("id").repartition(2).localCheckpoint()
-    assert(est(one) == 2)
-    assert(est(one.select(col("id") * 2)) == 2) // narrow chain inherits
+  /** True iff rebalance spread `df`; a spread always lands on `p`. */
+  private def spreads(df: DataFrame): Boolean = {
+    val out = TextOps.rebalance(df)
+    if (out eq df) false
+    else { assert(out.rdd.getNumPartitions == p); true }
   }
 
-  test("aggregate and window outputs estimate shuffle-wide (no re-shuffle)") {
-    val base = spark.range(1000).toDF("id").repartition(2).localCheckpoint()
-    val agg = base.groupBy(col("id") % 7).count()
-    assert(est(agg) == sp)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id") % 7).orderBy("id")
-    assert(est(base.withColumn("r", row_number().over(w))) == sp)
-    // and rebalance leaves them alone: no extra Exchange
-    assert(TextOps.rebalance(agg).queryExecution.optimizedPlan
-      .collect { case r: org.apache.spark.sql.catalyst.plans.logical
-        .RepartitionOperation => r }.isEmpty)
+  /** Local relation of `n` (id: long) rows. */
+  private def local(n: Int): DataFrame = {
+    val s = spark
+    import s.implicits._
+    Seq.tabulate(n)(_.toLong).toDF("id")
   }
 
-  test("broadcast-joined frame inherits the streamed side's estimate") {
-    val big = spark.range(1000).toDF("id").repartition(2).localCheckpoint()
-    val small = Seq((1L, "a")).toDF("id", "v")
-    assert(est(big.join(broadcast(small), "id")) == 2)
+  /** One small parquet file: one input split. */
+  private lazy val oneFilePath: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rebalance")
+      .resolve("scan").toString
+    spark.range(20).toDF("id").coalesce(1).write.parquet(dir)
+    dir
+  }
+  private def scan: DataFrame = spark.read.parquet(oneFilePath)
+
+  private def checkpoint(parts: Int): DataFrame = {
+    val c = spark.range(50).toDF("id").repartition(parts).localCheckpoint()
+    assert(c.rdd.getNumPartitions == parts)
+    c
   }
 
-  test("checkpoint-rooted frames skip unless multi-pass-forced") {
-    val ck = spark.range(50).toDF("id").coalesce(1).localCheckpoint()
-    def hasRepartition(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.catalyst.plans.logical
-          .RepartitionOperation => r
-      }.nonEmpty
-    // single-pass default: a batch-sized checkpoint's one downstream
-    // pass is cheaper than the exchange — skip
-    assert(!hasRepartition(TextOps.rebalance(ck.select(col("id") + 1))))
-    // multi-pass consumers (KMeans.fit) amortize the spread — fire
-    assert(hasRepartition(TextOps.rebalanceMultiPass(ck)))
+  test("a checkpoint is never re-spread, at one partition or at three") {
+    assert(3 < p)
+    for (c <- Seq(checkpoint(1), checkpoint(3))) {
+      assert(!spreads(c))
+      assert(!spreads(c.select(col("id") + 1).filter(col("id") > 2)))
+      assert(!spreads(c.join(broadcast(checkpoint(1)), "id")))
+    }
   }
 
   test("small local/leaf inputs under parallelism still rebalance") {
-    val tiny = Seq.tabulate(3)(i => (i.toLong, s"d$i")).toDF("id", "t")
-    assert(est(tiny) < p)
-    assert(TextOps.rebalance(tiny).rdd.getNumPartitions == p)
+    // a narrow chain over a one-file scan or a local relation spreads to p
+    assert(spreads(scan))
+    assert(spreads(scan.select((col("id") * 2).as("x")).filter(col("x") > 3)))
+    assert(spreads(local(3)))
+    assert(spreads(local(3).select(col("id") + 1)))
+    assert(!spreads(local(p))) // min(rows, p) partitions: already p wide
   }
 
   test("union sums children; non-broadcast join estimates shuffle-wide") {
-    val a = spark.range(10).toDF("id").repartition(2).localCheckpoint()
-    val b = spark.range(10).toDF("id").repartition(3).localCheckpoint()
-    assert(est(a.unionByName(b)) == 5)
-    val big1 = spark.range(100000).toDF("id")
-      .withColumn("pad", lit("x" * 200)).localCheckpoint()
-    val big2 = spark.range(100000).toDF("id")
-      .withColumn("pad2", lit("y" * 200)).localCheckpoint()
-    assert(est(big1.join(big2, "id")) == sp)
+    assert(spreads(scan.unionByName(scan))) // 1 + 1 < p
+    assert(spreads(local(p - 1)))
+    assert(!spreads(scan.unionByName(local(p - 1)))) // 1 + (p - 1) = p
+    // without a broadcast side the join is a shuffle: wide
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val a = s.read.parquet(oneFilePath)
+    assert(!spreads(a.join(a.withColumn("v", lit(1)), "id")))
+  }
+
+  test("broadcast-joined frame inherits the streamed side's estimate") {
+    val small = local(1).withColumn("v", lit("a"))
+    assert(spreads(scan.join(broadcast(small), "id")))
+    assert(!spreads(local(p).join(broadcast(small), "id")))
+  }
+
+  test("aggregate and window outputs estimate shuffle-wide (no re-shuffle)") {
+    // and so do distinct, repartition, global sort and limit outputs
+    val tiny = local(3)
+    assert(spreads(tiny))
+    assert(!spreads(tiny.groupBy(col("id") % 2).count()))
+    assert(!spreads(tiny.distinct()))
+    assert(!spreads(tiny.withColumn("r",
+      row_number().over(Window.partitionBy(col("id") % 2).orderBy("id")))))
+    assert(!spreads(tiny.repartition(2)))
+    assert(!spreads(tiny.orderBy("id")))
+    // (a limit over a local relation folds into a smaller local
+    // relation, so the limit runs over the scan)
+    assert(!spreads(scan.limit(2)))
+    assert(!spreads(spark.range(3).toDF("id"))) // unknown leaf: wide
+  }
+
+  test("localCheckpoint leaf reads its real RDD partition count") {
+    // the band-exchange skip: only a narrow chain over a one-partition
+    // checkpoint runs as one partition
+    assert(TextOps.onOnePartitionCheckpoint(checkpoint(1)))
+    assert(TextOps.onOnePartitionCheckpoint(
+      checkpoint(1).select(col("id") * 2).filter(col("id") > 1)))
+    assert(!TextOps.onOnePartitionCheckpoint(checkpoint(3)))
+    assert(!TextOps.onOnePartitionCheckpoint(
+      checkpoint(1).unionByName(checkpoint(1))))
+    assert(!TextOps.onOnePartitionCheckpoint(
+      checkpoint(1).groupBy(col("id") % 2).count()))
+    assert(!TextOps.onOnePartitionCheckpoint(local(1)))
+    assert(!TextOps.onOnePartitionCheckpoint(scan))
   }
 }
